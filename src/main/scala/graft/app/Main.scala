@@ -100,11 +100,9 @@ object Main {
         val incoming = PlaylistJson.importPlaylists(spark, args(2))
           .withColumn("item_count", lit(null).cast("int"))
           .withColumn("last_updated", lit(null).cast("timestamp"))
-        val merged =
-          if (!store.exists("playlists")) incoming
-          else Upserts.insertIfAbsent(store.read(spark, "playlists"), incoming,
-            Seq("playlist_id"))
-        val committed = store.commit(spark, "playlists", merged)
+        val committed = SyncPipeline.mergeInto(spark, store, "playlists")(
+          _.fold(incoming)(Upserts.insertIfAbsent(_, incoming,
+            Seq("playlist_id"))))
         println(s"playlists table now has ${committed.count()} rows")
 
       case "export-playlists" =>
@@ -141,14 +139,14 @@ object Main {
           .withColumn("language", lit("en"))
           .withColumn("last_fetched_timestamp", current_timestamp())
           .select("video_id", "language", "transcript", "last_fetched_timestamp")
-        val merged =
-          if (!store.exists("transcripts")) valid
-          else Upserts.conditionalUpsert(store.read(spark, "transcripts"),
-            valid, Seq("video_id")) { (inc, old) =>
+        // both merges pin to the snapshot they derive from, so a
+        // concurrent sync writing the same tables is never overwritten
+        val committedTx = SyncPipeline.mergeInto(spark, store, "transcripts")(
+          _.fold(valid)(Upserts.conditionalUpsert(_, valid,
+            Seq("video_id")) { (inc, old) =>
             YtFunctions.hasTimestamps(inc("transcript")) ||
               !YtFunctions.hasTimestamps(old("transcript"))
-          }
-        val committedTx = store.commit(spark, "transcripts", merged)
+          }))
         // the reference also inserts a minimal videos row for inbox
         // files whose video is unknown (add_transcripts.py:145-155)
         val minimalVideos = parsed.filter(col("valid"))
@@ -163,10 +161,8 @@ object Main {
             lit(null).cast("string").as("thumbnail_url"),
             col("url").as("video_url"),
             current_timestamp().as("last_scraped_timestamp"))
-        store.commit(spark, "videos",
-          if (!store.exists("videos")) minimalVideos
-          else Upserts.insertIfAbsent(store.read(spark, "videos"),
-            minimalVideos, Seq("video_id")))
+        SyncPipeline.mergeInto(spark, store, "videos")(_.fold(minimalVideos)(
+          Upserts.insertIfAbsent(_, minimalVideos, Seq("video_id"))))
         val rejected = parsed.filter(!col("valid"))
           .select("path", "reject_reason").collect()
         rejected.foreach(r => println(s"rejected ${r.getString(0)}: ${r.getString(1)}"))
@@ -276,7 +272,7 @@ object Main {
           "transcript", dim)
           .select(xxhash64(col("id").cast("string")).as("id"),
             col("id").as("video_id"), col("embedding"))
-        val stored = store.commit(spark, "tx_vectors", vecs)
+        val (stored, _) = store.commit(spark, "tx_vectors", vecs)
         val n = stored.count()
         val (cb, members) = graft.ops.SimilaritySearch.ivfIndexFrames(
           stored.select("id", "embedding"), "id", "embedding",
@@ -540,7 +536,7 @@ object Main {
         val clean = corpus.join(
           staged.select(col("doc_id").as("id")).distinct(),
           Seq("id"), "left_anti")
-        val kept = store.commit(spark, "corpus_clean", clean)
+        val (kept, _) = store.commit(spark, "corpus_clean", clean)
         println(s"corpus_clean: ${kept.count()} of ${corpus.count()} docs kept")
 
       case "compact" =>

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.connectors.YouTubeConnector
-import graft.ops.{ParquetTableStore, Upserts}
+import graft.ops.{Expect, ParquetTableStore, Upserts}
 
 /** The run_me/main_scraper end-to-end shapes (SURVEY §3.1/§3.2) as one
   * declarative pipeline over the versioned store:
@@ -23,6 +23,7 @@ import graft.ops.{ParquetTableStore, Upserts}
   */
 final class SyncPipeline(store: ParquetTableStore, connector: YouTubeConnector,
     refreshDays: Int = 7) {
+  import SyncPipeline.mergeInto
 
   final case class SyncReport(
       playlists: Long, added: Long, removed: Long, scraped: Long)
@@ -30,40 +31,46 @@ final class SyncPipeline(store: ParquetTableStore, connector: YouTubeConnector,
   /** One full channel sync (run_me.py:225-257 equivalent). `now` is
     * injected for reproducibility (F9/U7). */
   def syncChannel(spark: SparkSession, channelRef: String, now: Column): SyncReport = {
-    // Version hygiene: commit() returns the RE-READ frame (reading
-    // the published version's files, not the input's lazy plan), so
-    // it is safe to keep using downstream — even across the next
-    // commit of the same table.
+    // Version hygiene: commits return the RE-READ frame (reading the
+    // published version's files, not the input's lazy plan), so it is
+    // safe to keep using downstream — even across the next commit of
+    // the same table. Every merge is pinned to the snapshot it derives
+    // from ([[SyncPipeline.mergeInto]]), so a concurrent writer on the
+    // same table (ingest-inbox on videos/transcripts) is never lost.
     // S10 + U1: refresh the playlists table
     val remotePl = connector.channelPlaylists(spark, channelRef)
       .withColumn("item_count", lit(null).cast("int"))
       .withColumn("last_updated", lit(null).cast("timestamp"))
-    val playlists = store.commit(spark, "playlists",
-      if (!store.exists("playlists")) remotePl
-      else Upserts.upsertLastWriteWins(store.read(spark, "playlists"), remotePl,
-        Seq("playlist_id")))
+    val playlists = mergeInto(spark, store, "playlists")(_.fold(remotePl)(
+      Upserts.upsertLastWriteWins(_, remotePl, Seq("playlist_id"))))
     val nPlaylists = playlists.count()
     ping(spark, playlists.select(col("playlist_id")), "started", now)
 
     // S8 + U5: reconcile memberships for every playlist in one pass
+    // (the add/remove counts are taken against the pinned base, so a
+    // retry over a competitor's version reports its own diff)
     val remote = connector.playlistContents(spark, playlists)
-    val stored =
-      if (store.exists("playlist_videos")) store.read(spark, "playlist_videos")
-      else remote.limit(0)
-    val sync = Upserts.diffSync(stored, remote, Seq("playlist_id", "video_id"))
-    val nAdds = sync.adds.count()
-    val nRemoves = sync.removes.count()
-    val memberships = store.commit(spark, "playlist_videos", sync.synced)
+    val (memberships, nAdds, nRemoves) = store.withCommitRetries() {
+      val (stored, pin) = store.readPinnedOption(spark, "playlist_videos")
+      val sync = Upserts.diffSync(stored.getOrElse(remote.limit(0)), remote,
+        Seq("playlist_id", "video_id"))
+      val nAdds = sync.adds.count()
+      val nRemoves = sync.removes.count()
+      (store.commit(spark, "playlist_videos", sync.synced,
+        Expect.Pinned(pin))._1, nAdds, nRemoves)
+    }
 
     // U3-equivalent: refresh item_count/last_updated from the sync
     val counts = memberships.groupBy("playlist_id")
       .agg(count(lit(1)).cast("int").as("item_count"))
-    val playlists2 = playlists.drop("item_count")
-      .join(counts, Seq("playlist_id"), "left")
-      .withColumn("item_count", coalesce(col("item_count"), lit(0)))
-      .withColumn("last_updated", now)
-      .select(playlists.columns.map(col).toIndexedSeq: _*)
-    val playlists2Committed = store.commit(spark, "playlists", playlists2)
+    val playlists2Committed = mergeInto(spark, store, "playlists") { cur =>
+      val pl = cur.getOrElse(playlists)
+      pl.drop("item_count")
+        .join(counts, Seq("playlist_id"), "left")
+        .withColumn("item_count", coalesce(col("item_count"), lit(0)))
+        .withColumn("last_updated", now)
+        .select(pl.columns.map(col).toIndexedSeq: _*)
+    }
 
     // work list: member videos never scraped or stale (U7 + J9)
     val memberIds = memberships.select(col("video_id")).distinct()
@@ -88,18 +95,15 @@ final class SyncPipeline(store: ParquetTableStore, connector: YouTubeConnector,
       "publish_date", "duration_seconds", "view_count", "author",
       "channel_id", "thumbnail_url", "video_url", "last_scraped_timestamp")
     val videosNew = scraped.select(videoCols.map(col): _*)
-    store.commit(spark, "videos",
-      if (videosStored == null) videosNew
-      else Upserts.upsertLastWriteWins(videosStored, videosNew, Seq("video_id")))
+    mergeInto(spark, store, "videos")(_.fold(videosNew)(
+      Upserts.upsertLastWriteWins(_, videosNew, Seq("video_id"))))
 
     val transcriptsNew = scraped
       .select(col("video_id"), col("language"), col("transcript"),
         now.as("last_fetched_timestamp"))
       .filter(col("transcript").isNotNull)
-    store.commit(spark, "transcripts",
-      if (!store.exists("transcripts")) transcriptsNew
-      else Upserts.upsertLastWriteWins(store.read(spark, "transcripts"),
-        transcriptsNew, Seq("video_id")))
+    mergeInto(spark, store, "transcripts")(_.fold(transcriptsNew)(
+      Upserts.upsertLastWriteWins(_, transcriptsNew, Seq("video_id"))))
 
     ping(spark, playlists2Committed.select(col("playlist_id")),
       "completed", now)
@@ -115,14 +119,29 @@ final class SyncPipeline(store: ParquetTableStore, connector: YouTubeConnector,
       .withColumn("pinged_timestamp", now)
       .withColumn("status", lit(status))
       .withColumn("phase", lit(if (status == "started") 0 else 1))
-    val log =
-      if (!store.exists("playlist_pings")) batch
-      else store.read(spark, "playlist_pings").unionByName(batch)
-    store.commit(spark, "playlist_pings", log)
+    mergeInto(spark, store, "playlist_pings")(
+      _.fold(batch)(_.unionByName(batch)))
   }
 
   /** The latest-status view over the ping log (W3/U9). */
   def pingStatus(spark: SparkSession): DataFrame =
     Upserts.latestByKey(store.read(spark, "playlist_pings"),
       Seq("playlist_id"), Seq(col("pinged_timestamp"), col("phase")))
+}
+
+object SyncPipeline {
+
+  /** Publish `derive(snapshot)` as `table`'s next version, with the
+    * CAS pinned to the snapshot it derived from (absence when the
+    * table does not exist yet). A competing commit landing between the
+    * read and the publish fails the CAS, and the retry re-reads and
+    * re-derives over the competitor's version instead of overwriting
+    * it. `derive` runs once per attempt, so it only combines frames
+    * the caller already holds — a retry never calls the connector. */
+  private[app] def mergeInto(spark: SparkSession, store: ParquetTableStore,
+      table: String)(derive: Option[DataFrame] => DataFrame): DataFrame =
+    store.withCommitRetries() {
+      val (stored, pin) = store.readPinnedOption(spark, table)
+      store.commit(spark, table, derive(stored), Expect.Pinned(pin))._1
+    }
 }

@@ -107,8 +107,9 @@ object Layout {
     * content) a lost pointer race needs no pin — the retry re-reads
     * the source and re-publishes.
     *
-    * The publish is ZONE-MAPPED on the curve columns
-    * ([[ParquetTableStore.commitZoneMapped]]): the clustering makes
+    * The publish is ZONE-MAPPED on the curve columns (declared via
+    * [[ParquetTableStore.declareZoneColumns]], so the commit writes
+    * the map version-atomically): the clustering makes
     * per-file ranges narrow, the sidecar makes them actionable —
     * [[ParquetTableStore.readZonePruned]] then cuts the file list
     * before the scan instead of relying on footer stats alone (gate
@@ -117,8 +118,11 @@ object Layout {
       store: ParquetTableStore, source: String, target: String,
       cols: Seq[String], numFiles: Int): DataFrame =
     store.withCommitRetries() {
-      store.commitZoneMapped(spark, target,
-        clustered(store.read(spark, source), cols, numFiles), cols)
+      val bound = store.declareZoneColumns(target, cols)
+      require(bound == cols,
+        s"table $target zone columns already declared as $bound")
+      store.commit(spark, target,
+        clustered(store.read(spark, source), cols, numFiles))._1
     }
 
   /** Two-column publish (see the N-column overload). */

@@ -221,12 +221,12 @@ object PageRank {
           // caller), not interleave its three creates with ours
           val (_, edgesPin) = store.readPinnedOption(spark, edgesTable)
           val (_, countsPin) = store.readPinnedOption(spark, countsTable)
-          val (_, ev) = store.upsertBucketedPinnedVersioned(spark, d,
-            Seq("u", "v"), edgesPin, numBuckets)
-          store.upsertBucketedPinned(spark, counts, Seq("id"),
-            countsPin, numBuckets)
-          val (_, mv) = store.commitNewVersioned(spark, metaTable,
-            Seq(ev).toDF("edges_version"))
+          val (_, ev) = store.upsertBucketed(spark, edgesTable, d,
+            Seq("u", "v"), numBuckets, Expect.Pinned(edgesPin))
+          store.upsertBucketed(spark, countsTable, counts, Seq("id"),
+            numBuckets, Expect.Pinned(countsPin))
+          val (_, mv) = store.commit(spark, metaTable,
+            Seq(ev).toDF("edges_version"), Expect.New)
           return (store.read(spark, countsTable), mv)
         } finally counts.unpersist(false)
       } finally d.unpersist(false)
@@ -238,7 +238,7 @@ object PageRank {
     // ConcurrentCommitException before anything double-counts, and
     // the caller re-invokes the fold over the winner's state (the
     // anti-join makes any overlap replay-safe). This is the st2
-    // upsertBucketedPinned discipline; a blanket withCommitRetries
+    // pinned-upsertBucketed discipline; a blanket withCommitRetries
     // would be WRONG here — the pinned closure can only lose again,
     // the retry must re-read and re-derive, i.e. re-enter the fold.
     val (metaDf, metaPin) = store.readPinned(spark, metaTable)
@@ -321,12 +321,12 @@ object PageRank {
         // commit order IS the consistency protocol: edges, then the
         // touched counts, then the version marker (see scaladoc) —
         // each pinned to the snapshot this fold derived from
-        val (_, ev) = store.upsertBucketedPinnedVersioned(spark, deltaNew,
-          Seq("u", "v"), edgesPin, numBuckets)
-        store.upsertBucketedPinned(spark, updated, Seq("id"),
-          countsPin, numBuckets)
-        val (_, mv) = store.commitPinnedVersioned(spark,
-          Seq(ev).toDF("edges_version"), metaPin)
+        val (_, ev) = store.upsertBucketed(spark, edgesTable, deltaNew,
+          Seq("u", "v"), numBuckets, Expect.Pinned(edgesPin))
+        store.upsertBucketed(spark, countsTable, updated, Seq("id"),
+          numBuckets, Expect.Pinned(countsPin))
+        val (_, mv) = store.commit(spark, metaTable,
+          Seq(ev).toDF("edges_version"), Expect.Pinned(metaPin))
         (store.read(spark, countsTable), mv)
       } finally incr.unpersist(false)
     } finally deltaNew.unpersist(false)
@@ -524,11 +524,12 @@ object PageRank {
           nodes.select(col("id"), lit(1.0 / n).as("r")))
         val (_, edgesPin) = store.readPinnedOption(spark, edgesTable)
         val (_, ranksPin) = store.readPinnedOption(spark, ranksTable)
-        val (_, ev) = store.upsertBucketedPinnedVersioned(spark, d,
-          Seq("src", "dst"), edgesPin, numBuckets)
-        store.commitPinned(spark, ranks, ranksPin)
-        val (_, mv) = store.commitNewVersioned(spark, metaTable,
-          Seq((ev, n, it)).toDF("edges_version", "n_nodes", "iters"))
+        val (_, ev) = store.upsertBucketed(spark, edgesTable, d,
+          Seq("src", "dst"), numBuckets, Expect.Pinned(edgesPin))
+        store.commit(spark, ranksTable, ranks, Expect.Pinned(ranksPin))
+        val (_, mv) = store.commit(spark, metaTable,
+          Seq((ev, n, it)).toDF("edges_version", "n_nodes", "iters"),
+          Expect.New)
         return (store.read(spark, ranksTable), mv)
       }
       val (metaDf, metaPin) = store.readPinned(spark, metaTable)
@@ -560,11 +561,12 @@ object PageRank {
         nodes.join(ranksOld, Seq("id"), "left")
           .select(col("id"),
             coalesce(col("r") * lit(scale), lit(1.0 / n)).as("r")))
-      val (_, ev) = store.upsertBucketedPinnedVersioned(spark, deltaNew,
-        Seq("src", "dst"), edgesPin, numBuckets)
-      store.commitPinned(spark, ranks, ranksPin)
-      val (_, mv) = store.commitPinnedVersioned(spark,
-        Seq((ev, n, it)).toDF("edges_version", "n_nodes", "iters"), metaPin)
+      val (_, ev) = store.upsertBucketed(spark, edgesTable, deltaNew,
+        Seq("src", "dst"), numBuckets, Expect.Pinned(edgesPin))
+      store.commit(spark, ranksTable, ranks, Expect.Pinned(ranksPin))
+      val (_, mv) = store.commit(spark, metaTable,
+        Seq((ev, n, it)).toDF("edges_version", "n_nodes", "iters"),
+        Expect.Pinned(metaPin))
       (store.read(spark, ranksTable), mv)
     } finally freeAll()
   }

@@ -76,11 +76,36 @@ import org.apache.spark.sql.functions._
   */
 /** Opaque token pairing a table with the pointer a
   * [[ParquetTableStore.readPinned]] resolved — the CAS expectation a
-  * later [[ParquetTableStore.commitPinned]] publishes against.
+  * later pinned [[ParquetTableStore.commit]] publishes against.
   * Constructed only by the store (the pointer representation is
   * private to the commit protocol). */
 final case class CommitPin private[ops] (table: String,
     private[ops] val pointer: Option[String])
+
+/** What a write's pointer CAS expects to find at publish time — the
+  * one parameter that distinguishes a blind replace, a create and a
+  * derive-then-replace on [[ParquetTableStore.commit]] and
+  * [[ParquetTableStore.upsertBucketed]]. */
+sealed trait Expect
+
+object Expect {
+  /** Any version: the pointer as of the call (a blind replace). A
+    * caller whose frame was DERIVED from an earlier read must not use
+    * this — a competitor landing in between would be overwritten. */
+  case object Head extends Expect
+
+  /** Must be new: the table must not exist at publish time. Every
+    * `exists()`-guarded create branch uses this, so a competitor that
+    * created the table in between fails the publish instead of being
+    * replaced. */
+  case object New extends Expect
+
+  /** The pointer a [[ParquetTableStore.readPinned]] /
+    * [[ParquetTableStore.readPinnedOption]] captured: the publish
+    * fails if ANY commit landed since that read (an absence pin acts
+    * as [[New]]). */
+  final case class Pinned(pin: CommitPin) extends Expect
+}
 
 /** Opaque token for the MULTI-TABLE commit protocol: the (table →
   * version) vector a group marker named when [[ParquetTableStore
@@ -130,6 +155,10 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
   private def dirNameOf(pointer: String): String =
     if (pointer.startsWith("v=")) pointer else s"v=$pointer"
 
+  /** The version dir a pointer names. */
+  private def dirOf(table: String, pointer: String): Path =
+    tableDir(table).resolve(dirNameOf(pointer))
+
   private def versionOf(dirName: String): Long = {
     val core = dirName.stripPrefix("v=")
     val dash = core.indexOf('-')
@@ -140,6 +169,11 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     if (!exists(table)) None
     else Some(new String(Files.readAllBytes(currentFile(table)),
       StandardCharsets.UTF_8).trim)
+
+  /** The live pointer, refusing a table with no committed version. */
+  private def headPointer(table: String): String =
+    currentPointer(table).getOrElse(
+      throw new IllegalStateException(s"table $table has no committed version"))
 
   def exists(table: String): Boolean = Files.exists(currentFile(table))
 
@@ -160,17 +194,13 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * [[read]] would silently mix snapshots ([[readBucketsOf]]'s
     * existing contract, generalized to snapshot tables). */
   def readVersioned(spark: SparkSession, table: String): (DataFrame, Long) = {
-    val p = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
-    (readDir(spark, table, dirNameOf(p)), versionOf(dirNameOf(p)))
+    val d = dirNameOf(headPointer(table))
+    (readDir(spark, table, d), versionOf(d))
   }
 
   /** The live snapshot. The internal bucket column never escapes. */
-  def read(spark: SparkSession, table: String): DataFrame = {
-    val p = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
-    readDir(spark, table, dirNameOf(p))
-  }
+  def read(spark: SparkSession, table: String): DataFrame =
+    readDir(spark, table, dirNameOf(headPointer(table)))
 
   /** The live snapshot read through DIRECTORY LISTING (partition
     * discovery under the canonical schema) — the pre-manifest
@@ -181,9 +211,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * consumer path — it pays the O(files) metadata walk the manifest
     * exists to remove. */
   def readLegacy(spark: SparkSession, table: String): DataFrame = {
-    val p = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
-    val df = readVersionFrame(spark, tableDir(table).resolve(dirNameOf(p)))
+    val df = readVersionFrame(spark, dirOf(table, headPointer(table)))
     if (df.columns.contains(BucketCol)) df.drop(BucketCol) else df
   }
 
@@ -525,8 +553,8 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
   }
 
   /** The rows of the version at `vdir` restricted to buckets `kbs`,
-    * WITH the bucket column (callers keep their residual
-    * filter/drop) — planned from the manifest when present: the
+    * WITH the bucket column (callers drop it) — planned from the
+    * manifest when present: the
     * restriction selects files by their `__kb=N/` prefix on the
     * driver, so only touched buckets' files enter the plan at all
     * and the bucket column carries its REAL per-directory value
@@ -537,19 +565,16 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * versions. A vanished version dir maps to the retryable
     * [[ConcurrentCommitException]], never a silently-empty frame. */
   private def readBucketRestricted(spark: SparkSession, vdir: Path,
-      kbs: Set[Int]): DataFrame =
-    try (storedSchemaOf(vdir),
+      kbs: Set[Int]): DataFrame = {
+    val restricted = try (storedSchemaOf(vdir),
         Files.exists(vdir.resolve(ManifestDir))) match {
       case (Some(s), true) =>
         // bucket layout iff bucket dirs exist (the fileless-empty
         // version writes root files) — an O(buckets) listing, never
         // O(files); the restricted parse then touches ONLY slices
         // whose footer range intersects the requested buckets
-        val bucketLayout = listDir(vdir).exists(p =>
-          Files.isDirectory(p) &&
-            p.getFileName.toString.startsWith(s"$BucketCol="))
         val use =
-          if (!bucketLayout) // root-file (empty) layout: kb is data
+          if (bucketDirs(vdir).isEmpty) // root-file (empty) layout: kb is data
             manifestRowsDirect(vdir).get
           else manifestRowsSliced(vdir,
             Some(kbs.map(b => s"$BucketCol=$b/"))).get
@@ -575,6 +600,8 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
           s"version $vdir pruned during bucket probe — a concurrent " +
             "commit advanced past retention; re-read and retry")
     }
+    restricted.filter(col(BucketCol).isin(kbs.toSeq: _*))
+  }
 
   /** CANONICAL PER-VERSION SCHEMA — the table-format answer to
     * mixed-schema versions: an O(delta) bucketed upsert that EVOLVES
@@ -632,10 +659,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
       version: Option[Long]): StoreScanSpec = {
     val dirName = version match {
       case Some(v) => versionDirNameOf(table, v)
-      case None =>
-        dirNameOf(currentPointer(table).getOrElse(
-          throw new IllegalStateException(
-            s"table $table has no committed version")))
+      case None => dirNameOf(headPointer(table))
     }
     val vdir = tableDir(table).resolve(dirName)
     def remap(e: Throwable): Nothing =
@@ -677,10 +701,13 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
 
   private def keysFile(table: String): Path = tableDir(table).resolve("_KEYS")
 
-  private def stampKeys(table: String, keys: Seq[String]): Unit = {
-    Files.createDirectories(tableDir(table))
-    try Files.write(keysFile(table),
-      keys.mkString(",").getBytes(StandardCharsets.UTF_8),
+  /** Write a table stamp (`_BUCKETS`, `_KEYS`, `_ZONECOLS`) unless
+    * one exists — first writer wins (CREATE_NEW): racing creators
+    * would otherwise overwrite each other's stamp, so losers adopt the
+    * winner's by re-reading it. */
+  private def stampOnce(file: Path, content: String): Unit = {
+    Files.createDirectories(file.getParent)
+    try Files.write(file, content.getBytes(StandardCharsets.UTF_8),
       java.nio.file.StandardOpenOption.CREATE_NEW)
     catch { case _: java.nio.file.FileAlreadyExistsException => () }
   }
@@ -859,23 +886,40 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     catch { case _: ConcurrentCommitException => () } // newer writer won
   }
 
-  /** Write `df` as the next version, atomically publish it, and
-    * return the RE-READ frame. The returned frame reads the committed
-    * files (not the input's lazy plan), so it stays valid across
-    * subsequent commits until its version is pruned — with the
-    * default keepVersions=2 that means "reuse after the next commit"
-    * is always safe, which is the exact sharp edge the old
-    * commit-then-re-read discipline existed to avoid.
+  /** Write `df` as the next version of snapshot table `table`,
+    * atomically publish it, and return the RE-READ frame plus the
+    * version published. The returned frame reads the committed files
+    * (not the input's lazy plan), so it stays valid across subsequent
+    * commits until its version is pruned — with the default
+    * keepVersions=2 that means "reuse after the next commit" is always
+    * safe, which is the exact sharp edge the old commit-then-re-read
+    * discipline existed to avoid. The version lets group commits name
+    * the versions THIS writer committed ([[commitGroup]]) rather than
+    * re-read heads.
     *
-    * CAS caveat: the expectation is the pointer AS OF THIS CALL. A
-    * caller whose `df` was DERIVED from an earlier read of the table
-    * must not use this path — a competitor landing between the read
-    * and this commit would be silently overwritten. Derive-then-
-    * replace flows go through [[readPinned]] + [[commitPinned]]. */
-  def commit(spark: SparkSession, table: String, df: DataFrame): DataFrame = {
+    * `expect` is the pointer CAS expectation ([[Expect]]): the head
+    * as of this call (default), absence ([[Expect.New]] — the create
+    * branch of an exists() check), or the pointer a [[readPinned]]
+    * captured ([[Expect.Pinned]] — derive-then-replace flows; a
+    * competitor landing between the read and this publish raises
+    * [[ConcurrentCommitException]] instead of being overwritten). A
+    * pin must name `table`. */
+  def commit(spark: SparkSession, table: String, df: DataFrame,
+      expect: Expect = Expect.Head): (DataFrame, Long) = {
     requireSnapshot(table, "commit")
-    commitExpecting(spark, table, df, currentPointer(table))._1
+    publishFull(spark, table, df, expected(table, expect))
   }
+
+  /** The pointer an [[Expect]] resolves to for `table`. */
+  private def expected(table: String, expect: Expect): Option[String] =
+    expect match {
+      case Expect.Head => currentPointer(table)
+      case Expect.New => None
+      case Expect.Pinned(pin) =>
+        require(pin.table == table,
+          s"pin was read from table ${pin.table}, not $table")
+        pin.pointer
+    }
 
   /** Bucketed tables must only ever publish through the bucketed
     * path: a snapshot-style commit would write a version with no
@@ -888,59 +932,21 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
       s"table $table is bucketed; $op would publish an unpartitioned " +
         "version and wedge later bucketed upserts — use upsertBucketed")
 
-  /** Create-commit: publish `df` as the FIRST version of `table`,
-    * with the CAS expectation pinned to ABSENCE. If a competitor
-    * created the table between the caller's `exists()` check and this
-    * publish, the commit raises [[ConcurrentCommitException]] (and
-    * the retry re-reads the winner and merges) instead of silently
-    * replacing the competitor's rows — the lost-update class
-    * [[readPinned]]/[[commitPinned]] close for the UPDATE path,
-    * applied to create. Every exists()-guarded create branch must use
-    * this, never [[commit]] (which re-reads the pointer at commit
-    * time and would CAS against the competitor's publish). */
-  def commitNew(spark: SparkSession, table: String, df: DataFrame): DataFrame =
-    commitNewVersioned(spark, table, df)._1
-
-  /** [[commitNew]] returning ALSO the version it published — for
-    * group commits, whose vector must name the versions THIS writer
-    * committed rather than re-read heads (a competitor's newer head
-    * woven into the vector is exactly the mixed state the marker
-    * exists to rule out). */
-  def commitNewVersioned(spark: SparkSession, table: String,
-      df: DataFrame): (DataFrame, Long) = {
-    requireSnapshot(table, "commitNew")
-    commitExpecting(spark, table, df, None)
-  }
-
-  /** The live snapshot plus the version NUMBER its pointer resolved —
-    * for cross-table consistency protocols: a table pair (A, B) where
-    * B's rows record the A-version they were derived from lets a
-    * consumer refuse a torn pair (read A, read B, check B's recorded
-    * version == A's resolved version) instead of silently answering
-    * from mixed snapshots. The stored BM25 index (postings + stats)
-    * is the shipped example. */
-  def readWithVersion(spark: SparkSession, table: String): (DataFrame, Long) = {
-    val p = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
-    (readDir(spark, table, dirNameOf(p)), versionOf(dirNameOf(p)))
-  }
-
   /** Read the live snapshot AND capture the pointer it came from, as
-    * one token for [[commitPinned]]. This is the read half of the
+    * one token for a pinned [[commit]]. This is the read half of the
     * read-derive-replace discipline: any rewrite computed from the
     * returned frame publishes with its CAS pinned to exactly this
     * pointer, so a competing commit landing in between raises
     * [[ConcurrentCommitException]] (→ [[withCommitRetries]] re-reads
     * and re-derives) instead of being silently overwritten. */
   def readPinned(spark: SparkSession, table: String): (DataFrame, CommitPin) = {
-    val p = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
+    val p = headPointer(table)
     (readDir(spark, table, dirNameOf(p)), CommitPin(table, Some(p)))
   }
 
   /** [[readPinned]] tolerating an ABSENT table: the pin then captures
     * absence, so the later pinned publish fails if a competitor
-    * CREATES the table in between (the commitNew discipline for
+    * CREATES the table in between (the [[Expect.New]] discipline for
     * derive-then-replace flows whose first batch starts from
     * nothing). */
   def readPinnedOption(spark: SparkSession,
@@ -949,42 +955,11 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     (p.map(pp => readDir(spark, table, dirNameOf(pp))), CommitPin(table, p))
   }
 
-  /** Commit `df` with the CAS expectation pinned to the pointer a
-    * prior [[readPinned]] captured — the publish fails (and the
-    * staged dir is dropped) if ANY commit landed since that read.
-    * The target table is the one the pin was read from (carrying it
-    * in the pin makes a table mismatch unrepresentable rather than
-    * runtime-checked). */
-  def commitPinned(spark: SparkSession, df: DataFrame,
-      pin: CommitPin): DataFrame =
-    commitPinnedVersioned(spark, df, pin)._1
-
-  /** [[commitPinned]] returning ALSO the version it published (see
-    * [[commitNewVersioned]] for why group commits need it). */
-  def commitPinnedVersioned(spark: SparkSession, df: DataFrame,
-      pin: CommitPin): (DataFrame, Long) = {
-    requireSnapshot(pin.table, "commitPinned")
-    commitExpecting(spark, pin.table, df, pin.pointer)
-  }
-
   /** The version a [[CommitPin]] captured (None = pinned absence) —
     * lets a no-op fold report the version its state corresponds to
     * without re-reading the head. */
   def pinVersion(pin: CommitPin): Option[Long] =
     pin.pointer.map(p => versionOf(dirNameOf(p)))
-
-  /** Commit `df` with the CAS expectation pinned to `expected` — the
-    * pointer the CALLER's computation was based on. Every merge path
-    * must capture the pointer BEFORE reading the snapshot it merges
-    * against and pass it here; re-reading the pointer at publish time
-    * would let a competing commit that landed in between be silently
-    * overwritten (the lost-update the CAS exists to prevent). */
-  private def commitExpecting(spark: SparkSession, table: String,
-      df: DataFrame, expected: Option[String]): (DataFrame, Long) = {
-    val staged = writeVersion(spark, table, df, expected, partitioned = false)
-    publish(table, staged, expected)
-    (readDir(spark, table, staged), versionOf(staged))
-  }
 
   /** ZONE MAPS — a per-file min/max sidecar over DECLARED columns,
     * written INSIDE each staged version dir (`_zonemap/` —
@@ -1019,11 +994,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     require(cols.nonEmpty, "declareZoneColumns needs at least one column")
     require(cols.distinct.size == cols.size,
       s"duplicate zone-map column in $cols")
-    Files.createDirectories(tableDir(table))
-    try Files.write(zoneColsFile(table),
-      cols.mkString(",").getBytes(StandardCharsets.UTF_8),
-      java.nio.file.StandardOpenOption.CREATE_NEW)
-    catch { case _: java.nio.file.FileAlreadyExistsException => () }
+    stampOnce(zoneColsFile(table), cols.mkString(","))
     zoneColumns(table).get
   }
 
@@ -1035,18 +1006,6 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
 
   private def zoneColsFile(table: String): Path =
     tableDir(table).resolve("_ZONECOLS")
-
-  /** Declare + snapshot-commit in one call — the publish shape
-    * [[Layout.zorderPublish]] uses (the artifact is created and
-    * mapped in the same breath). */
-  def commitZoneMapped(spark: SparkSession, table: String, df: DataFrame,
-      statsCols: Seq[String]): DataFrame = {
-    requireSnapshot(table, "commitZoneMapped")
-    val bound = declareZoneColumns(table, statsCols)
-    require(bound == statsCols,
-      s"table $table zone columns already declared as $bound")
-    commitExpecting(spark, table, df, currentPointer(table))._1
-  }
 
   private val ZoneMapDir = "_zonemap"
 
@@ -1088,7 +1047,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
   private def prevZoneMap(spark: SparkSession, table: String,
       prev: Option[String], cols: Seq[String]): Option[DataFrame] =
     prev.flatMap { p =>
-      val zm = tableDir(table).resolve(dirNameOf(p)).resolve(ZoneMapDir)
+      val zm = dirOf(table, p).resolve(ZoneMapDir)
       if (!Files.exists(zm)) None
       else {
         val df = spark.read.parquet(zm.toString)
@@ -1097,14 +1056,14 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
       }
     }
 
-  /** Maintain the sidecar for a staged BUCKETED version: stats for
-    * the rewritten buckets' files (a partition-pruned scan of the
-    * staged dir — by the write protocols, a touched bucket dir holds
-    * ONLY fresh files at this point) plus carried rows for every
-    * untouched bucket. `touched = None` means full recompute (create/
-    * replace/backfill). Call AFTER [[shareUntouchedBuckets]] and
-    * BEFORE [[finalizeStaged]]. */
-  private def maintainZoneMapBucketed(spark: SparkSession, table: String,
+  /** Maintain the sidecar for a staged version: stats for the
+    * rewritten buckets' files (a partition-pruned scan of the staged
+    * dir — by the write protocols, a touched bucket dir holds ONLY
+    * fresh files at this point) plus carried rows for every untouched
+    * bucket. `touched = None` means full recompute (snapshot commits,
+    * bucketed create/replace, backfill). Call AFTER
+    * [[shareUntouchedBuckets]] and BEFORE [[finalizeStaged]]. */
+  private def maintainZoneMap(spark: SparkSession, table: String,
       nextDir: Path, prev: Option[String],
       touched: Option[Set[Int]]): Unit =
     zoneColumns(table).foreach { cols =>
@@ -1135,9 +1094,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * `column` — at scale, a silently unpruned read IS the failure. */
   private def zonePrunedFiles(spark: SparkSession, table: String,
       column: String, lo: Any, hi: Any): (Path, Seq[(String, Long)], Int) = {
-    val p = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
-    val vdir = tableDir(table).resolve(dirNameOf(p))
+    val vdir = dirOf(table, headPointer(table))
     val zmPath = vdir.resolve(ZoneMapDir)
     // the compactBuckets discipline: _CURRENT can transiently name a
     // gc-swept dir (a competitor's publish mid-undo) or retention can
@@ -1162,8 +1119,8 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
       if (!Files.exists(vdir))
         retryable(throw new java.nio.file.NoSuchFileException(vdir.toString))
       throw new IllegalStateException(
-        s"table $table's live version carries no zone map — publish " +
-          "it with commitZoneMapped (or Layout.zorderPublish)")
+        s"table $table's live version carries no zone map — declare " +
+          "zone columns and commit (or Layout.zorderPublish)")
     }
     val zm = retryable(spark.read.parquet(zmPath.toString))
     require(zm.columns.contains(s"min_$column"),
@@ -1202,11 +1159,8 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
         case None =>
           val kept = keptNames.collect().map(_.getString(0)).sorted
             .map(f => (f, Files.size(vdir.resolve(f)))).toSeq
-          val entries = listDir(vdir)
-          val total = entries.count(isDataFile) + entries
-            .filter(p => Files.isDirectory(p) &&
-              p.getFileName.toString.startsWith(s"$BucketCol="))
-            .map(d => listDir(d).count(isDataFile)).sum
+          val total = listDir(vdir).count(isDataFile) +
+            bucketDirs(vdir).map(d => listDir(d).count(isDataFile)).sum
           (vdir, kept, total)
       }
     }
@@ -1216,8 +1170,8 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * [min, max] for `column` intersects [lo, hi], then re-apply the
     * predicate (pruning is an optimization, correctness comes from
     * the residual filter — gate u12 pins pruned ≡ full-scan filter).
-    * Requires a [[commitZoneMapped]]-published version covering
-    * `column`. */
+    * Requires a live version whose zone map covers `column`
+    * ([[declareZoneColumns]] before the write). */
   def readZonePruned(spark: SparkSession, table: String, column: String,
       lo: Any, hi: Any): DataFrame = {
     val (vdir, files, _) = zonePrunedFiles(spark, table, column, lo, hi)
@@ -1360,15 +1314,13 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
         val entries = listDir(dir)
         entries.filter(isDataFile)
           .map(f => (f.getFileName.toString, Files.size(f))) ++
-          entries.filter(p => Files.isDirectory(p) &&
-            p.getFileName.toString.startsWith(s"$BucketCol="))
-            .sortBy(_.getFileName.toString)
+          bucketDirs(dir).sortBy(_.getFileName.toString)
             .flatMap(d => rowsIn(d, d.getFileName.toString + "/"))
     }
   }
 
   /** Full-recompute manifest for a staged dir (everything fresh). */
-  private def writeFullManifest(spark: SparkSession, nextDir: Path): Unit =
+  private def writeFullManifest(nextDir: Path): Unit =
     writeManifestRowsDriver(nextDir, listedManifestRows(nextDir, None))
 
   /** First bucket id in a manifest rel path, if any — the driver-side
@@ -1382,13 +1334,13 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * `touched` buckets' files re-list (their dirs hold only fresh
     * files), every other bucket's rows carry. Falls back to full
     * recompute when the previous version predates manifests. */
-  private def maintainManifestBucketed(spark: SparkSession, table: String,
+  private def maintainManifestBucketed(table: String,
       nextDir: Path, prev: Option[String],
       touched: Option[Set[Int]]): Unit = {
     val carried = for {
       p <- prev
       ts <- touched
-      rows <- manifestRowsDirect(tableDir(table).resolve(dirNameOf(p)))
+      rows <- manifestRowsDirect(dirOf(table, p))
     } yield
       // only bucket-dir files link forward (the sharing walk links
       // kb= DIRS); rewritten buckets' rows are replaced
@@ -1397,26 +1349,21 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
       case Some(c) =>
         writeManifestRowsDriver(nextDir,
           listedManifestRows(nextDir, touched) ++ c)
-      case None => writeFullManifest(spark, nextDir)
+      case None => writeFullManifest(nextDir)
     }
   }
 
   /** The live version's file manifest (file, bytes) — None for
     * versions from before manifests existed. Rows stay distributed;
     * aggregate, don't collect. */
-  def fileManifest(spark: SparkSession, table: String): Option[DataFrame] = {
-    val p = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
-    manifestAt(spark, tableDir(table).resolve(dirNameOf(p)))
-  }
+  def fileManifest(spark: SparkSession, table: String): Option[DataFrame] =
+    manifestAt(spark, dirOf(table, headPointer(table)))
 
   /** (file count, total bytes) of the live version from the manifest
     * — one sidecar read, O(1) driver rows; falls back to a directory
     * walk for pre-manifest versions. */
   def fileStats(spark: SparkSession, table: String): (Long, Long) = {
-    val p = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
-    val vdir = tableDir(table).resolve(dirNameOf(p))
+    val vdir = dirOf(table, headPointer(table))
     // driver-side sidecar parse (cached) — no job round for two longs
     manifestRowsDirect(vdir) match {
       case Some(rows) => (rows.size.toLong, rows.map(_._2).sum)
@@ -1508,8 +1455,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
         case Some(Nil) => full.where(lit(false))
         case Some(kbs) => storedSchemaOf(dir) match {
           case Some(schema) if schema.fieldNames.contains(BucketCol) =>
-            readBucketRestricted(spark, dir, kbs.toSet)
-              .filter(col(BucketCol).isin(kbs: _*)).drop(BucketCol)
+            readBucketRestricted(spark, dir, kbs.toSet).drop(BucketCol)
           case _ => full
         }
       }
@@ -1544,107 +1490,63 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     // must fail our create-commit, not be replaced by it)
     requireSnapshot(table, "upsert")
     val prev = currentPointer(table)
-    prev match {
-      case None => commitExpecting(spark, table, incoming, None)._1
+    val merged = prev match {
+      case None => incoming
       case Some(p) =>
         val (stored, inc) = SchemaEvolution.align(
           readDir(spark, table, dirNameOf(p)), incoming)
-        commitExpecting(spark, table,
-          Upserts.upsertLastWriteWins(stored, inc, keys), prev)._1
+        Upserts.upsertLastWriteWins(stored, inc, keys)
     }
+    publishFull(spark, table, merged, prev)._1
   }
 
   /** LWW-upsert into a key-bucketed table, rewriting only the buckets
     * the delta touches; untouched buckets are hard-linked from the
     * previous version (byte-identical, O(1) per file). `numBuckets`
-    * binds at table creation and is ignored afterwards. */
+    * binds at table creation and is ignored afterwards. Returns the
+    * re-read frame and the version published — for an empty delta,
+    * the version the no-op was based on (never a re-read head).
+    *
+    * `expect` is the publish CAS expectation, as for [[commit]].
+    * [[Expect.Pinned]] serves DERIVED bucketed artifacts: the caller
+    * read a snapshot, computed `incoming` FROM it, and a competitor
+    * landing in between must fail the publish (re-read + re-derive
+    * via [[withCommitRetries]]) rather than be LWW-merged-over with
+    * rows derived from the stale snapshot. The merge reads the
+    * expected version; an absent expectation takes the create path
+    * (CAS to absence — a racing creator loses cleanly). */
   def upsertBucketed(spark: SparkSession, table: String, incoming: DataFrame,
-      keys: Seq[String], numBuckets: Int = 32): DataFrame =
-    upsertBucketedVersioned(spark, table, incoming, keys, numBuckets)._1
-
-  /** [[upsertBucketed]] returning ALSO the version it published (for
-    * an empty delta: the version the no-op was based on) — the group-
-    * commit discipline ([[commitGroup]] wants the versions THIS
-    * writer committed, never re-read heads; see
-    * [[commitNewVersioned]]). */
-  def upsertBucketedVersioned(spark: SparkSession, table: String,
-      incoming: DataFrame, keys: Seq[String],
-      numBuckets: Int = 32): (DataFrame, Long) =
-    upsertBucketedExpecting(spark, table, incoming, keys, numBuckets,
-      currentPointer(table))
-
-  /** [[upsertBucketed]] with the publish CAS pinned to the pointer a
-    * prior [[readPinned]]/[[readPinnedOption]] captured — the
-    * O(delta) twin of [[commitPinned]] for DERIVED bucketed
-    * artifacts: the caller read a snapshot, computed `incoming` FROM
-    * it, and a competitor landing in between must fail the publish
-    * (re-read + re-derive via [[withCommitRetries]]) rather than be
-    * LWW-merged-over with rows derived from the stale snapshot. The
-    * merge reads the PIN's version; an absence pin takes the create
-    * path (CAS to absence — a racing creator loses cleanly). */
-  def upsertBucketedPinned(spark: SparkSession, incoming: DataFrame,
-      keys: Seq[String], pin: CommitPin, numBuckets: Int = 32): DataFrame =
-    upsertBucketedPinnedVersioned(spark, incoming, keys, pin, numBuckets)._1
-
-  /** [[upsertBucketedPinned]] returning ALSO the version it published
-    * (see [[commitNewVersioned]]). */
-  def upsertBucketedPinnedVersioned(spark: SparkSession, incoming: DataFrame,
-      keys: Seq[String], pin: CommitPin,
-      numBuckets: Int = 32): (DataFrame, Long) =
-    upsertBucketedExpecting(spark, pin.table, incoming, keys, numBuckets,
-      pin.pointer)
-
-  private def upsertBucketedExpecting(spark: SparkSession, table: String,
-      incoming: DataFrame, keys: Seq[String], numBuckets: Int,
-      prev: Option[String]): (DataFrame, Long) = {
+      keys: Seq[String], numBuckets: Int = 32,
+      expect: Expect = Expect.Head): (DataFrame, Long) = {
     require(numBuckets >= 1)
-    def bucketed(df: DataFrame, n: Int): DataFrame =
-      df.withColumn(BucketCol, pmod(hash(keys.map(col): _*), lit(n)))
-    if (prev.isEmpty)
-      createBucketed(spark, table, incoming, keys, numBuckets, Nil)
-    else {
-      val n = this.numBuckets(table).getOrElse(throw new IllegalStateException(
-        s"table $table was created as a snapshot table; use upsert"))
-      val curDir = tableDir(table).resolve(dirNameOf(prev.get))
-      // which buckets does the delta touch? (≤ n ints — driver-safe)
-      val inc = bucketed(incoming, n)
-      val touched = guardedAction(s"upsert touched-set of $table") {
-        inc.select(BucketCol).distinct()
-          .collect().map(_.getInt(0)).toSet
-      }
-      // empty delta → version no-op (free — the touched set already
-      // told us): onto an EMPTY table, the merged partitionBy write
-      // would otherwise produce a fileless version and wedge every
-      // later read in schema inference. The reported version is the
-      // base the no-op checked against, never a re-read head.
-      if (touched.isEmpty)
-        return (read(spark, table), versionOf(dirNameOf(prev.get)))
-      // manifest-planned read of just the touched buckets — under
-      // the version's CANONICAL schema: an inferred one could drop a
-      // previously-evolved column and the merge would lose its values
-      val storedTouched = readBucketRestricted(spark, curDir, touched)
-        .filter(col(BucketCol).isin(touched.toSeq: _*))
-      val (stored, incA) = SchemaEvolution.align(
-        storedTouched.drop(BucketCol), incoming)
-      val merged = bucketed(
-        Upserts.upsertLastWriteWins(stored, incA, keys), n)
-      val staged = stagedDirName(versionOf(dirNameOf(prev.get)) + 1)
-      val nextDir = tableDir(table).resolve(tmpName(staged))
-      guardedAction(s"upsert merge of $table") {
-        merged.write.mode("errorifexists")
-          .partitionBy(BucketCol).parquet(nextDir.toString)
-      }
-      writeSchemaFile(nextDir, merged.schema)
-      shareUntouchedBuckets(curDir, nextDir, touched)
-      // O(delta) map maintenance: the touched buckets' fresh files
-      // re-scan (a partition-pruned read — untouched dirs hold only
-      // links, touched dirs only fresh files), everything else
-      // carries from the previous version's map
-      maintainZoneMapBucketed(spark, table, nextDir, prev, Some(touched))
-      maintainManifestBucketed(spark, table, nextDir, prev, Some(touched))
-      finalizeStaged(table, staged)
-      publish(table, staged, prev)
-      (readDir(spark, table, staged), versionOf(staged))
+    expected(table, expect) match {
+      case None => publishBucketed(spark, table, incoming, keys, numBuckets,
+        Nil, None)
+      case Some(prev) =>
+        val n = this.numBuckets(table).getOrElse(throw new IllegalStateException(
+          s"table $table was created as a snapshot table; use upsert"))
+        // which buckets does the delta touch? (≤ n ints — driver-safe)
+        val touched = guardedAction(s"upsert touched-set of $table") {
+          incoming.select(bucketOf(keys, n)).distinct()
+            .collect().map(_.getInt(0)).toSet
+        }
+        // empty delta → version no-op (free — the touched set already
+        // told us): onto an EMPTY table, the merged partitionBy write
+        // would otherwise produce a fileless version and wedge every
+        // later read in schema inference
+        if (touched.isEmpty) (read(spark, table), versionOf(dirNameOf(prev)))
+        else {
+          // manifest-planned read of just the touched buckets — under
+          // the version's CANONICAL schema: an inferred one could drop
+          // a previously-evolved column and the merge would lose its
+          // values
+          val (stored, incA) = SchemaEvolution.align(
+            readBucketRestricted(spark, dirOf(table, prev), touched)
+              .drop(BucketCol), incoming)
+          val merged = Upserts.upsertLastWriteWins(stored, incA, keys)
+          rewriteTouched(spark, table, prev, touched, "upsert merge",
+            merged.withColumn(BucketCol, bucketOf(keys, n)))
+        }
     }
   }
 
@@ -1668,20 +1570,19 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     val n = numBuckets(table).getOrElse(throw new IllegalStateException(
       s"table $table is not bucketed — snapshot tables delete via " +
         "upsert/commit of the filtered frame"))
-    val prev = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
-    val curDir = tableDir(table).resolve(dirNameOf(prev))
+    val prev = headPointer(table)
     val rem = removals.select(keys.map(col): _*).distinct()
     val touched = guardedAction(s"delete touched-set of $table") {
-      rem.select(pmod(hash(keys.map(col): _*), lit(n)).as("kb"))
-        .distinct().collect().map(_.getInt(0)).toSet
+      rem.select(bucketOf(keys, n)).distinct().collect().map(_.getInt(0)).toSet
     }
-    if (touched.isEmpty) return read(spark, table)
-    val kept = readBucketRestricted(spark, curDir, touched)
-      .filter(col(BucketCol).isin(touched.toSeq: _*))
-      .drop(BucketCol)
-      .join(rem, keys, "left_anti")
-    publishTouchedRewrite(spark, table, kept, keys, n, touched, prev)
+    if (touched.isEmpty) read(spark, table)
+    else {
+      val kept = readBucketRestricted(spark, dirOf(table, prev), touched)
+        .drop(BucketCol)
+        .join(rem, keys, "left_anti")
+      rewriteTouched(spark, table, prev, touched, "keyed delete",
+        layoutBuckets(kept, n, keys, Nil))._1
+    }
   }
 
   /** PREDICATE DELETE (`DELETE FROM t WHERE p` — the SQL face's
@@ -1710,33 +1611,30 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
         val any = guardedAction(s"deleteWhere probe of $table")(
           cur.filter(victim).limit(1).count())
         if (any == 0L) cur
-        else commitPinned(spark, cur.filter(!victim), pin)
+        else commit(spark, table, cur.filter(!victim), Expect.Pinned(pin))._1
       case Some(n) =>
         val keys = keyColumns(table).getOrElse(
           throw new IllegalStateException(
             s"table $table has no _KEYS stamp — predicate delete " +
               "re-routes kept rows by key; re-stamp via one " +
               "replaceBucketed"))
-        val prev = currentPointer(table).getOrElse(
-          throw new IllegalStateException(
-            s"table $table has no committed version"))
-        val curDir = tableDir(table).resolve(dirNameOf(prev))
+        val prev = headPointer(table)
         // victims' buckets from ONE zone-skipped scan (≤ n ints):
         // the predicate pushes into the manifest-planned read, so a
         // zone-mapped delete key prices at its file cut, not a full
         // pass
         val touched = guardedAction(s"deleteWhere touched-set of $table") {
           readDir(spark, table, dirNameOf(prev)).filter(victim)
-            .select(pmod(hash(keys.map(col): _*), lit(n)).as("kb"))
-            .distinct().collect().map(_.getInt(0)).toSet
+            .select(bucketOf(keys, n)).distinct()
+            .collect().map(_.getInt(0)).toSet
         }
         if (touched.isEmpty) read(spark, table)
         else {
-          val kept = readBucketRestricted(spark, curDir, touched)
-            .filter(col(BucketCol).isin(touched.toSeq: _*))
+          val kept = readBucketRestricted(spark, dirOf(table, prev), touched)
             .drop(BucketCol)
             .filter(!victim)
-          publishTouchedRewrite(spark, table, kept, keys, n, touched, prev)
+          rewriteTouched(spark, table, prev, touched, "predicate delete",
+            layoutBuckets(kept, n, keys, Nil))._1
         }
     }
   }
@@ -1786,23 +1684,22 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
           s"'${badLabels.headOption.orNull}' — feed rows must be " +
           "insert|update|delete (a mislabeled row would silently vanish)")
     val upserts = changes.filter(col("change") =!= "delete").drop("change")
-    if (!exists(table)) {
-      requireLabels(changes.agg(max(labelAudit)).collect()
-        .flatMap(r => Option(r.getString(0))).toSeq)
-      return createBucketed(spark, table, upserts, keys, numBuckets, Nil)._1
+    val prev = currentPointer(table) match {
+      case Some(p) => p
+      case None =>
+        requireLabels(changes.agg(max(labelAudit)).collect()
+          .flatMap(r => Option(r.getString(0))).toSeq)
+        return publishBucketed(spark, table, upserts, keys, numBuckets,
+          Nil, None)._1
     }
     val n = this.numBuckets(table).getOrElse(throw new IllegalStateException(
       s"table $table was created as a snapshot table; apply feeds to " +
         "bucketed tables"))
-    val prev = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
-    val curDir = tableDir(table).resolve(dirNameOf(prev))
     // one aggregation derives BOTH the touched buckets and the label
     // audit (upsert and delete keys hash identically — every change
     // row marks its bucket)
     val probe = guardedAction(s"change-feed probe of $table") {
-      changes
-        .groupBy(pmod(hash(keys.map(col): _*), lit(n)).as("kb"))
+      changes.groupBy(bucketOf(keys, n).as("kb"))
         .agg(max(labelAudit).as("bad")).collect()
     }
     requireLabels(probe.flatMap(r => Option(r.getString(1))).toSeq)
@@ -1810,51 +1707,47 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
       .select(keys.map(col): _*).distinct()
     val touched = probe.map(_.getInt(0)).toSet
     if (touched.isEmpty) return read(spark, table)
-    val storedTouched = readBucketRestricted(spark, curDir, touched)
-      .filter(col(BucketCol).isin(touched.toSeq: _*))
-      .drop(BucketCol)
-    val (stored, incA) = SchemaEvolution.align(storedTouched, upserts)
+    val (stored, incA) = SchemaEvolution.align(
+      readBucketRestricted(spark, dirOf(table, prev), touched)
+        .drop(BucketCol), upserts)
     val merged = Upserts.upsertLastWriteWins(
       stored.join(delKeys, keys, "left_anti"), incA, keys)
-    publishTouchedRewrite(spark, table, merged, keys, n, touched, prev)
+    rewriteTouched(spark, table, prev, touched, "change-feed apply",
+      layoutBuckets(merged, n, keys, Nil))._1
   }
 
-  /** Shared publish tail for touched-bucket REWRITES whose result can
-    * be empty ([[deleteBucketed]], [[applyChangesBucketed]]): lay out
-    * `rows`, write the touched partitions, link the rest, maintain
-    * zone map + manifest O(delta) — or, when every row is gone
-    * (fileless version), record the empty manifest and drop the zone
-    * map so a later [[readZonePruned]] refuses loudly rather than
-    * serving an unmapped scan. One CAS publish against `prev`. */
-  private def publishTouchedRewrite(spark: SparkSession, table: String,
-      rows: DataFrame, keys: Seq[String], n: Int, touched: Set[Int],
-      prev: String): DataFrame = {
-    val laid = rows
-      .withColumn(BucketCol, pmod(hash(keys.map(col): _*), lit(n)))
-      .repartition(col(BucketCol))
-    val staged = stagedDirName(versionOf(dirNameOf(prev)) + 1)
-    val nextDir = tableDir(table).resolve(tmpName(staged))
-    val curDir = tableDir(table).resolve(dirNameOf(prev))
-    guardedAction(s"touched-bucket rewrite of $table") {
-      laid.write.mode("errorifexists")
-        .partitionBy(BucketCol).parquet(nextDir.toString)
+  /** The touched-bucket rewrite behind [[upsertBucketed]],
+    * [[deleteBucketed]], [[deleteWhere]], [[applyChangesBucketed]] and
+    * compaction: write `laid` (the caller's layout, bucket column
+    * included; `options` are the caller's writer options) partitioned
+    * by bucket, link every other bucket from `prev`, maintain zone map
+    * + manifest O(delta), and publish one version CAS'd against
+    * `prev`. A rewrite that leaves no row anywhere (a fileless
+    * version) records the empty manifest and drops the zone map, so a
+    * later [[readZonePruned]] refuses loudly rather than serving an
+    * unmapped scan. */
+  private def rewriteTouched(spark: SparkSession, table: String,
+      prev: String, touched: Set[Int], what: String, laid: DataFrame,
+      options: Map[String, String] = Map.empty): (DataFrame, Long) = {
+    val curDir = dirOf(table, prev)
+    stageAndPublish(spark, table, Some(prev), s"$what of $table") { dir =>
+      laid.write.mode("errorifexists").options(options)
+        .partitionBy(BucketCol).parquet(dir.toString)
+      writeSchemaFile(dir, laid.schema)
+      shareUntouchedBuckets(curDir, dir, touched)
+      // O(delta) map maintenance: the touched buckets' fresh files
+      // re-scan (a partition-pruned read — untouched dirs hold only
+      // links, touched dirs only fresh files), everything else
+      // carries from the previous version's map
+      if (bucketDirs(dir).nonEmpty) {
+        maintainZoneMap(spark, table, dir, Some(prev), Some(touched))
+        maintainManifestBucketed(table, dir, Some(prev), Some(touched))
+      } else writeManifestRowsDriver(dir, Seq.empty)
     }
-    writeSchemaFile(nextDir, laid.schema)
-    shareUntouchedBuckets(curDir, nextDir, touched)
-    val anyFiles = listDir(nextDir).exists(p => Files.isDirectory(p) &&
-      p.getFileName.toString.startsWith(s"$BucketCol="))
-    if (anyFiles) {
-      maintainZoneMapBucketed(spark, table, nextDir, Some(prev),
-        Some(touched))
-      maintainManifestBucketed(spark, table, nextDir, Some(prev),
-        Some(touched))
-    } else {
-      writeManifestRowsDriver(nextDir, Seq.empty)
-    }
-    finalizeStaged(table, staged)
-    publish(table, staged, Some(prev))
-    readDir(spark, table, staged)
   }
+
+  private def bucketOf(keys: Seq[String], n: Int): Column =
+    pmod(hash(keys.map(col): _*), lit(n))
 
   /** Deterministic write layout for a bucketed version: rows routed
     * to their bucket (one exchange), optionally key-sorted within
@@ -1862,74 +1755,40 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * probes (the inverted-index discipline). */
   private def layoutBuckets(df: DataFrame, n: Int, keys: Seq[String],
       sortWithin: Seq[String]): DataFrame = {
-    val b = df.withColumn(BucketCol, pmod(hash(keys.map(col): _*), lit(n)))
-    val rep = b.repartition(col(BucketCol))
+    val rep = df.withColumn(BucketCol, bucketOf(keys, n))
+      .repartition(col(BucketCol))
     if (sortWithin.isEmpty) rep
     else rep.sortWithinPartitions((BucketCol +: sortWithin).map(col): _*)
   }
 
-  /** Stamp the table's bucket count, first writer wins (CREATE_NEW):
-    * racing creators with different counts would otherwise overwrite
-    * each other and split the table across two bucket functions —
-    * losers adopt the winner's count before writing data. */
-  private def stampBuckets(table: String, numBuckets: Int): Int = {
-    Files.createDirectories(tableDir(table))
-    try Files.write(bucketsFile(table),
-      numBuckets.toString.getBytes(StandardCharsets.UTF_8),
-      java.nio.file.StandardOpenOption.CREATE_NEW)
-    catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    this.numBuckets(table).getOrElse(numBuckets)
+  /** Full-rewrite publish of a bucketed table against `prev` (None =
+    * create, CAS pinned to absence): stamps `_BUCKETS` and `_KEYS`
+    * first-writer-wins — racing creators with different counts would
+    * otherwise split the table across two bucket functions, so losers
+    * adopt the winner's count before writing data. */
+  private def publishBucketed(spark: SparkSession, table: String,
+      df: DataFrame, keys: Seq[String], numBuckets: Int,
+      sortWithin: Seq[String], prev: Option[String]): (DataFrame, Long) = {
+    stampOnce(bucketsFile(table), numBuckets.toString)
+    stampOnce(keysFile(table), keys.mkString(","))
+    val n = this.numBuckets(table).getOrElse(numBuckets)
+    publishFull(spark, table, layoutBuckets(df, n, keys, sortWithin), prev)
   }
 
-  /** A ROWLESS frame written `partitionBy(kb)` produces no partition
-    * dirs and no part files — only _SUCCESS — and every later read of
-    * that version dies in schema inference, wedging the table. Empty
-    * bucketed versions therefore land UNPARTITIONED: one empty part
-    * file that carries the schema (bucket column included, as a plain
-    * column readDir still drops). A later non-empty version writes
-    * partition dirs as usual; the empty version's root file is never
-    * hard-linked forward (the sharing walk links bucket DIRS only),
-    * so layouts never mix within one version.
-    *
-    * Emptiness is detected AFTER the partitioned write (did any kb=
-    * dir appear? — a free driver listing) rather than probed up
-    * front: a limit(1) probe would evaluate the corpus-sized input
-    * plan twice per publish. Only the rare genuinely-empty frame pays
-    * a second (trivially cheap) write. */
-  private def writeBucketedVersion(spark: SparkSession, table: String,
-      df: DataFrame, prev: Option[String]): String = {
-    val staged = stagedDirName(prev.map(p => versionOf(dirNameOf(p))).getOrElse(-1L) + 1)
-    val dir = tableDir(table).resolve(tmpName(staged))
-    guardedAction(s"bucketed commit of $table") {
-      df.write.mode("errorifexists").partitionBy(BucketCol)
-        .parquet(dir.toString)
-    }
-    val hasData = listDir(dir).exists(p => Files.isDirectory(p) &&
-      p.getFileName.toString.startsWith(s"$BucketCol="))
-    if (!hasData) {
-      deleteRecursively(dir)
-      df.write.mode("errorifexists").parquet(dir.toString)
-    }
-    writeSchemaFile(dir, df.schema)
-    // full (re)write: the zone map recomputes whole when declared
-    maintainZoneMapBucketed(spark, table, dir, None, None)
-    writeFullManifest(spark, dir)
-    finalizeStaged(table, staged)
-    staged
-  }
-
-  /** First-version create of a bucketed table (CAS pinned to absence;
-    * the first _BUCKETS writer wins the bucket-count contract — see
-    * [[upsertBucketed]]). */
-  private def createBucketed(spark: SparkSession, table: String,
-      incoming: DataFrame, keys: Seq[String], numBuckets: Int,
-      sortWithin: Seq[String]): (DataFrame, Long) = {
-    val n = stampBuckets(table, numBuckets)
-    stampKeys(table, keys)
-    val staged = writeBucketedVersion(spark, table,
-      layoutBuckets(incoming, n, keys, sortWithin), None)
-    publish(table, staged, None)
-    (readDir(spark, table, staged), versionOf(staged))
+  /** Nullability markers erased recursively — parquet bytes cannot
+    * distinguish them, so schema EQUALITY contracts compare this form
+    * (the public twin of Spark's `private[spark]` `asNullable`). */
+  private def relaxNulls(dt: org.apache.spark.sql.types.DataType)
+      : org.apache.spark.sql.types.DataType = dt match {
+    case org.apache.spark.sql.types.ArrayType(et, _) =>
+      org.apache.spark.sql.types.ArrayType(relaxNulls(et), containsNull = true)
+    case org.apache.spark.sql.types.MapType(k, v, _) =>
+      org.apache.spark.sql.types.MapType(relaxNulls(k), relaxNulls(v),
+        valueContainsNull = true)
+    case st: org.apache.spark.sql.types.StructType =>
+      org.apache.spark.sql.types.StructType(st.fields.map(f =>
+        f.copy(dataType = relaxNulls(f.dataType), nullable = true)))
+    case other => other
   }
 
   /** INSERT-ONLY O(delta) append into a key-bucketed table: the
@@ -1954,35 +1813,26 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * [[compactBuckets]] re-bounds them periodically. `sortWithin`
     * orders rows inside each new file (row-group stat quality for
     * [[readBucketsOf]]-style probes). Publishes through the same CAS
-    * pointer swap as every commit; creates the table if absent. */
-  /** Nullability markers erased recursively — parquet bytes cannot
-    * distinguish them, so schema EQUALITY contracts compare this form
-    * (the public twin of Spark's `private[spark]` `asNullable`). */
-  private def relaxNulls(dt: org.apache.spark.sql.types.DataType)
-      : org.apache.spark.sql.types.DataType = dt match {
-    case org.apache.spark.sql.types.ArrayType(et, _) =>
-      org.apache.spark.sql.types.ArrayType(relaxNulls(et), containsNull = true)
-    case org.apache.spark.sql.types.MapType(k, v, _) =>
-      org.apache.spark.sql.types.MapType(relaxNulls(k), relaxNulls(v),
-        valueContainsNull = true)
-    case st: org.apache.spark.sql.types.StructType =>
-      org.apache.spark.sql.types.StructType(st.fields.map(f =>
-        f.copy(dataType = relaxNulls(f.dataType), nullable = true)))
-    case other => other
-  }
-
+    * pointer swap as every commit; creates the table if absent.
+    *
+    * An empty delta is a version no-op, but it is still
+    * schema-validated (a drifted schema, or a snapshot table without
+    * `_BUCKETS`, refuses) and pays one write job: emptiness is seen
+    * from the staged write itself, not from a probe that would
+    * evaluate the delta plan once more on every non-empty append. */
   def appendBucketed(spark: SparkSession, table: String, incoming: DataFrame,
       keys: Seq[String], numBuckets: Int = 32,
       sortWithin: Seq[String] = Nil): DataFrame = {
     require(numBuckets >= 1)
-    if (!exists(table))
-      createBucketed(spark, table, incoming, keys, numBuckets, sortWithin)._1
+    val prev = currentPointer(table)
+    if (prev.isEmpty)
+      publishBucketed(spark, table, incoming, keys, numBuckets, sortWithin,
+        None)._1
     else {
       val n = this.numBuckets(table).getOrElse(throw new IllegalStateException(
         s"table $table was created as a snapshot table; appends need " +
           "bucket partitions — adopt it via replaceBucketed first"))
-      val prev = currentPointer(table)
-      val curDir = tableDir(table).resolve(dirNameOf(prev.get))
+      val curDir = dirOf(table, prev.get)
       val storedSchema = readVersionFrame(spark, curDir)
         .drop(BucketCol).schema
       // compare nullability-relaxed forms: a file read forces
@@ -1998,63 +1848,53 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
         s"appendBucketed($table): incoming ${incoming.schema.simpleString} " +
           s"must equal stored ${storedSchema.simpleString} — " +
           "schema evolution goes through upsertBucketed")
-      val aligned = incoming.select(storedSchema.fieldNames.map(col): _*)
-      val staged = stagedDirName(versionOf(dirNameOf(prev.get)) + 1)
-      val nextDir = tableDir(table).resolve(tmpName(staged))
-      val laid = layoutBuckets(aligned, n, keys, sortWithin)
-      laid.write.mode("errorifexists")
-        .partitionBy(BucketCol).parquet(nextDir.toString)
-      // an empty delta is a NO-OP, never a version churn: a staged
-      // append of zero rows would link every file into a new version
-      // (retention pressure) and mix layouts. Emptiness is detected
-      // AFTER the write (did any kb= dir appear? — a free driver
-      // listing) rather than probed up front: the old limit(1).count
-      // probe scheduled a full job round evaluating the delta plan
-      // once more PER APPEND (the writeBucketedVersion rationale,
-      // guide §1.2 — remove work that isn't the algorithm).
-      val hasData = listDir(nextDir).exists(p => Files.isDirectory(p) &&
-        p.getFileName.toString.startsWith(s"$BucketCol="))
-      if (!hasData) {
-        deleteRecursively(nextDir)
-        return read(spark, table)
-      }
-      writeSchemaFile(nextDir, laid.schema)
-      // zone map, append shape: nothing is rewritten, so EVERY
-      // previous row carries and only the fresh delta files scan —
-      // written BEFORE the links land (post-link, old and new files
-      // share the touched dirs and the delta scan could no longer be
-      // isolated). A declared table with no previous map (declaration
-      // landed after the last write) backfills full, post-links.
-      val zcols = zoneColumns(table)
-      val carriedPm = zcols.flatMap(cols =>
-        prevZoneMap(spark, table, prev, cols))
-      for (cols <- zcols; pm <- carriedPm) {
-        val kb = regexp_extract(col("file"), s"$BucketCol=(\\d+)/", 1)
-        writeZoneMapFrame(nextDir,
-          zoneStats(spark, nextDir, cols, None)
-            .unionByName(pm.filter(kb =!= ""),
-              allowMissingColumns = true))
-      }
-      // manifest, append shape: list the staged DELTA pre-link (only
-      // fresh files exist now — post-link they mix with carried links
-      // in the same dirs) and carry EVERY previous bucket row; a
-      // previous version without a manifest recomputes full, post-link
-      val prevMan = manifestRowsDirect(curDir)
-      prevMan.foreach { pm =>
-        writeManifestRowsDriver(nextDir,
-          listedManifestRows(nextDir, None) ++
-            pm.filter(r => relBucketOf(r._1).isDefined))
-      }
-      // touched = none: every existing file links across (append-only
-      // — fresh part names are job-UUID-unique, so a bucket dir holds
-      // old links and new files side by side)
-      shareUntouchedBuckets(curDir, nextDir, Set.empty)
-      for (cols <- zcols if carriedPm.isEmpty)
-        writeZoneMapFrame(nextDir, zoneStats(spark, nextDir, cols, None))
-      if (prevMan.isEmpty) writeFullManifest(spark, nextDir)
-      finalizeStaged(table, staged)
-      publish(table, staged, prev)
-      readDir(spark, table, staged)
+      val laid = layoutBuckets(
+        incoming.select(storedSchema.fieldNames.map(col): _*), n, keys,
+        sortWithin)
+      stageAndPublish(spark, table, prev, s"append of $table") { dir =>
+        laid.write.mode("errorifexists")
+          .partitionBy(BucketCol).parquet(dir.toString)
+        // an empty delta is a NO-OP, never a version churn: a staged
+        // append of zero rows would link every file into a new
+        // version (retention pressure) and mix layouts
+        if (bucketDirs(dir).isEmpty) throw NothingStaged
+        writeSchemaFile(dir, laid.schema)
+        // zone map, append shape: nothing is rewritten, so EVERY
+        // previous row carries and only the fresh delta files scan —
+        // written BEFORE the links land (post-link, old and new files
+        // share the touched dirs and the delta scan could no longer
+        // be isolated). A declared table with no previous map
+        // (declaration landed after the last write) backfills full,
+        // post-links.
+        val zcols = zoneColumns(table)
+        val carriedPm = zcols.flatMap(cols =>
+          prevZoneMap(spark, table, prev, cols))
+        for (cols <- zcols; pm <- carriedPm) {
+          val kb = regexp_extract(col("file"), s"$BucketCol=(\\d+)/", 1)
+          writeZoneMapFrame(dir,
+            zoneStats(spark, dir, cols, None)
+              .unionByName(pm.filter(kb =!= ""),
+                allowMissingColumns = true))
+        }
+        // manifest, append shape: list the staged DELTA pre-link (only
+        // fresh files exist now — post-link they mix with carried
+        // links in the same dirs) and carry EVERY previous bucket row;
+        // a previous version without a manifest recomputes full,
+        // post-link
+        val prevMan = manifestRowsDirect(curDir)
+        prevMan.foreach { pm =>
+          writeManifestRowsDriver(dir,
+            listedManifestRows(dir, None) ++
+              pm.filter(r => relBucketOf(r._1).isDefined))
+        }
+        // touched = none: every existing file links across
+        // (append-only — fresh part names are job-UUID-unique, so a
+        // bucket dir holds old links and new files side by side)
+        shareUntouchedBuckets(curDir, dir, Set.empty)
+        for (cols <- zcols if carriedPm.isEmpty)
+          writeZoneMapFrame(dir, zoneStats(spark, dir, cols, None))
+        if (prevMan.isEmpty) writeFullManifest(dir)
+      }._1
     }
   }
 
@@ -2066,25 +1906,15 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * rebuilds after in-place corpus edits, bucket-count reshapes are
     * NOT supported — the count binds at creation). Creates the table
     * if absent; adopts an existing SNAPSHOT table as bucketed (safe —
-    * everything is rewritten; the conversion is one-way, later
-    * snapshot commits on it fail loudly). */
+    * everything is rewritten, so stamping `_BUCKETS` now is safe; the
+    * conversion is one-way, later snapshot commits on it fail
+    * loudly). */
   def replaceBucketed(spark: SparkSession, table: String, df: DataFrame,
       keys: Seq[String], numBuckets: Int = 32,
       sortWithin: Seq[String] = Nil): DataFrame = {
     require(numBuckets >= 1)
-    if (!exists(table))
-      createBucketed(spark, table, df, keys, numBuckets, sortWithin)._1
-    else {
-      // adopt a pre-existing snapshot table: the rewrite replaces all
-      // content, so stamping _BUCKETS now is safe (first writer wins)
-      val n = stampBuckets(table, numBuckets)
-      stampKeys(table, keys)
-      val prev = currentPointer(table)
-      val staged = writeBucketedVersion(spark, table,
-        layoutBuckets(df, n, keys, sortWithin), prev)
-      publish(table, staged, prev)
-      readDir(spark, table, staged)
-    }
+    publishBucketed(spark, table, df, keys, numBuckets, sortWithin,
+      currentPointer(table))._1
   }
 
   /** PRUNED read of a bucketed table: scan only the bucket partitions
@@ -2095,17 +1925,14 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * table is written with; its rows are the lookup keys (small — the
     * distinct bucket ids are collected to build the partition
     * filter). Returns the pruned frame plus the resolved version
-    * (cross-table consistency, see [[readWithVersion]]). */
+    * (cross-table consistency, see [[readVersioned]]). */
   def readBucketsOf(spark: SparkSession, table: String,
       keyValues: DataFrame): (DataFrame, Long) = {
     val n = numBuckets(table).getOrElse(throw new IllegalStateException(
       s"table $table is not bucketed — readBucketsOf needs bucket partitions"))
-    val p = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
-    val kbs = keyValues
-      .select(pmod(hash(keyValues.columns.map(col): _*), lit(n)).as("kb"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val vdir = tableDir(table).resolve(dirNameOf(p))
+    val p = headPointer(table)
+    val kbs = keyValues.select(bucketOf(keyValues.columns.toSeq, n))
+      .distinct().collect().map(_.getInt(0)).toSet
     // O(TOUCHED) METADATA, not O(table): a whole-version scan
     // filtered on the partition column still LISTS every file at
     // plan time (partition pruning happens after discovery) — at
@@ -2115,18 +1942,10 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     // versions hand Spark exactly the touched bucket DIRS, and
     // pre-schema versions fall back to the full scan
     // ([[readBucketRestricted]]).
-    (readBucketRestricted(spark, vdir, kbs.toSet)
-      .filter(col(BucketCol).isin(kbs: _*)).drop(BucketCol),
+    (readBucketRestricted(spark, dirOf(table, p), kbs).drop(BucketCol),
       versionOf(dirNameOf(p)))
   }
 
-  /** Share untouched bucket dirs from the previous version without
-    * rewriting them (hard links on POSIX, copies on object stores).
-    * If the base version vanishes mid-link, competitors advanced
-    * past the retention window — surface it as the retryable
-    * conflict it is, not a raw I/O error. (Deployments should size
-    * keepVersions comfortably above the concurrent-writer count so
-    * a merger's base version normally survives its operation.) */
   /** Directory listing with the stream CLOSED — Files.list holds an
     * open directory FD until closed, and a long-running streaming
     * driver pruning 3-4 tables per micro-batch would otherwise leak
@@ -2136,27 +1955,60 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     try s.iterator().asScala.toList finally s.close()
   }
 
+  /** The `__kb=N` bucket dirs directly under a version dir. */
+  private def bucketDirs(dir: Path): Seq[Path] =
+    listDir(dir).filter(p => Files.isDirectory(p) &&
+      p.getFileName.toString.startsWith(s"$BucketCol="))
+
+  private def bucketIdOf(bucketDir: Path): Int =
+    bucketDir.getFileName.toString.stripPrefix(s"$BucketCol=").toInt
+
+  /** Share untouched bucket dirs from the previous version without
+    * rewriting them (hard links on POSIX, copies on object stores).
+    * If the base version vanishes mid-link, competitors advanced
+    * past the retention window — surface it as the retryable
+    * conflict it is, not a raw I/O error. (Deployments should size
+    * keepVersions comfortably above the concurrent-writer count so
+    * a merger's base version normally survives its operation.) */
   private def shareUntouchedBuckets(curDir: Path, nextDir: Path,
-      touched: Set[Int]): Unit = {
-    try {
-      listDir(curDir)
-        .filter(p => Files.isDirectory(p))
-        .filter(p => p.getFileName.toString.startsWith(s"$BucketCol="))
-        .filterNot(p => touched.contains(
-          p.getFileName.toString.stripPrefix(s"$BucketCol=").toInt))
-        .foreach { src =>
-          val dst = nextDir.resolve(src.getFileName.toString)
-          Files.createDirectories(dst)
-          listDir(src)
-            .filter(f => Files.isRegularFile(f))
-            .foreach(f => io.shareFile(f, dst.resolve(f.getFileName.toString)))
-        }
-    } catch {
+      touched: Set[Int]): Unit =
+    try bucketDirs(curDir).filterNot(p => touched.contains(bucketIdOf(p)))
+      .foreach { src =>
+        val dst = nextDir.resolve(src.getFileName.toString)
+        Files.createDirectories(dst)
+        listDir(src)
+          .filter(f => Files.isRegularFile(f))
+          .foreach(f => io.shareFile(f, dst.resolve(f.getFileName.toString)))
+      }
+    catch {
       case _: java.nio.file.NoSuchFileException =>
-        deleteRecursively(nextDir)
         throw new ConcurrentCommitException(
           s"base version $curDir pruned during bucket linking — " +
             "concurrent commits advanced past retention; re-read and retry")
+    }
+
+  /** Per-bucket (file count, bytes) rows of the live version for the
+    * maintenance triggers — from one driver-side manifest parse, or
+    * (pre-manifest versions) a listing whose byte column is unknown.
+    * The listed dir can VANISH under us in exactly one legitimate
+    * window: a competitor's publish was gc-swept and its undo has not
+    * landed yet (_CURRENT transiently names a deleted dir) — surface
+    * that as the retryable conflict it is (the shareUntouchedBuckets
+    * discipline), never a raw I/O error. */
+  private def bucketFiles(table: String, prev: String,
+      what: String): Either[Map[Int, Int], Map[Int, Seq[Long]]] = {
+    val curDir = dirOf(table, prev)
+    try manifestRowsDirect(curDir) match {
+      case Some(rows) => Right(
+        rows.flatMap(r => relBucketOf(r._1).map(b => (b, r._2)))
+          .groupBy(_._1).map { case (b, fs) => b -> fs.map(_._2) })
+      case None => Left(bucketDirs(curDir)
+        .map(p => bucketIdOf(p) -> listDir(p).count(isDataFile)).toMap)
+    } catch {
+      case _: java.nio.file.NoSuchFileException =>
+        throw new ConcurrentCommitException(
+          s"current version $curDir vanished during $what — a " +
+            "competitor's swept publish is mid-undo; re-read and retry")
     }
   }
 
@@ -2176,7 +2028,9 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * pointer race to a concurrent upsert is always safe — the CAS
     * throws [[ConcurrentCommitException]], the staged dir is
     * dropped, and [[withCommitRetries]] re-reads the winner's base
-    * and re-compacts (or finds nothing left to do).
+    * and re-compacts (or finds nothing left to do). A base version
+    * pruned while the rewrite reads it is the same retryable
+    * conflict.
     *
     * Returns the bucket ids rewritten; empty = nothing fragmented,
     * NO new version published (maintenance never churns versions
@@ -2188,43 +2042,13 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     require(maxFilesPerBucket >= 1)
     numBuckets(table).getOrElse(throw new IllegalStateException(
       s"table $table is not bucketed; snapshot tables rewrite whole on commit"))
-    val prev = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
-    val curDir = tableDir(table).resolve(dirNameOf(prev))
-    // bucket -> parquet part-file count; a driver-side listing of
-    // ≤ numBuckets dirs (same scale contract as the touched-set).
-    // The listed dir can VANISH under us in exactly one legitimate
-    // window: a competitor's publish was gc-swept and its undo has
-    // not landed yet (_CURRENT transiently names a deleted dir) —
-    // surface that as the retryable conflict it is (the
-    // shareUntouchedBuckets discipline), never a raw I/O error.
-    val counts: Map[Int, Int] =
-      try manifestRowsDirect(curDir) match {
-        // manifest era: one driver-side sidecar parse, grouped in
-        // Scala — never a 10⁵-entry directory walk (nor, since this
-        // round, a Spark job round) per maintenance
-        case Some(rows) =>
-          rows.flatMap(r => relBucketOf(r._1))
-            .groupBy(identity).map { case (b, bs) => b -> bs.size }
-        case None => listDir(curDir)
-          .filter(p => Files.isDirectory(p) &&
-            p.getFileName.toString.startsWith(s"$BucketCol="))
-          .map { p =>
-            val b = p.getFileName.toString.stripPrefix(s"$BucketCol=").toInt
-            b -> listDir(p).count(isDataFile)
-          }.toMap
-      } catch {
-        case _: java.nio.file.NoSuchFileException =>
-          throw new ConcurrentCommitException(
-            s"current version $curDir vanished during compaction — a " +
-              "competitor's swept publish is mid-undo; re-read and retry")
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("PATH_NOT_FOUND") ||
-              e.getMessage.contains("does not exist") =>
-          throw new ConcurrentCommitException(
-            s"current version $curDir vanished during compaction — a " +
-              "competitor's swept publish is mid-undo; re-read and retry")
-      }
+    val prev = headPointer(table)
+    // bucket -> parquet part-file count; driver-side (≤ numBuckets
+    // rows, the same scale contract as the touched-set)
+    val counts = bucketFiles(table, prev, "compaction") match {
+      case Right(files) => files.map { case (b, fs) => b -> fs.size }
+      case Left(counts) => counts
+    }
     val rewrite = counts.filter(_._2 > maxFilesPerBucket).keySet
     compactBucketSet(spark, table, rewrite, prev, clusterBy,
       clusterRowsPerFile)
@@ -2253,9 +2077,8 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * the bucket every pass (idempotent rewrites — cost, not drift). */
   private def compactBucketSet(spark: SparkSession, table: String,
       rewrite: Set[Int], prev: String,
-      clusterBy: Option[String] = None,
-      clusterRowsPerFile: Long = 1L << 20): Set[Int] = {
-    val curDir = tableDir(table).resolve(dirNameOf(prev))
+      clusterBy: Option[String],
+      clusterRowsPerFile: Long): Set[Int] = {
     clusterBy.foreach { c =>
       require(clusterRowsPerFile >= 1)
       require(zoneColumns(table).exists(_.contains(c)),
@@ -2263,33 +2086,18 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
           s"(declared: ${zoneColumns(table).getOrElse(Seq.empty)}) — " +
           "clustering exists to tighten the zone map's per-file ranges")
     }
-    if (rewrite.isEmpty) Set.empty
-    else {
-      val base = readBucketRestricted(spark, curDir, rewrite)
-        .filter(col(BucketCol).isin(rewrite.toSeq: _*))
+    if (rewrite.nonEmpty) {
+      val base = readBucketRestricted(spark, dirOf(table, prev), rewrite)
         .repartition(rewrite.size, col(BucketCol))
-      val fragmented = clusterBy match {
-        case Some(c) => base.sortWithinPartitions(col(BucketCol), col(c))
-        case None => base
-      }
-      val staged = stagedDirName(versionOf(dirNameOf(prev)) + 1)
-      val nextDir = tableDir(table).resolve(tmpName(staged))
-      val writer = fragmented.write.mode("errorifexists")
-      clusterBy.foreach(_ =>
-        writer.option("maxRecordsPerFile", clusterRowsPerFile))
-      writer.partitionBy(BucketCol).parquet(nextDir.toString)
-      writeSchemaFile(nextDir, fragmented.schema)
-      shareUntouchedBuckets(curDir, nextDir, rewrite)
       // compaction rewrites whole buckets: same zone-map shape as the
       // merge path (rewritten buckets re-scan, the rest carries)
-      maintainZoneMapBucketed(spark, table, nextDir, Some(prev),
-        Some(rewrite))
-      maintainManifestBucketed(spark, table, nextDir, Some(prev),
-        Some(rewrite))
-      finalizeStaged(table, staged)
-      publish(table, staged, Some(prev))
-      rewrite
+      rewriteTouched(spark, table, prev, rewrite, "compaction",
+        clusterBy.fold(base)(c =>
+          base.sortWithinPartitions(col(BucketCol), col(c))),
+        clusterBy.map(_ =>
+          "maxRecordsPerFile" -> clusterRowsPerFile.toString).toMap)
     }
+    rewrite
   }
 
   /** AUTO-MAINTENANCE: the POLICY end of compaction — at 100 TB the
@@ -2318,46 +2126,20 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     require(maxFilesPerBucket >= 1 && minBytesPerFile >= 0)
     numBuckets(table).getOrElse(throw new IllegalStateException(
       s"table $table is not bucketed; snapshot tables rewrite whole on commit"))
-    val prev = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
-    val curDir = tableDir(table).resolve(dirNameOf(prev))
-    // same vanish window as compactBuckets' counts read: a gc-swept
-    // competitor publish mid-undo (or retention racing us) surfaces
-    // as the retryable conflict it is, never a raw I/O error
+    val prev = headPointer(table)
     val rewrite: Set[Int] =
-      try manifestRowsDirect(curDir) match {
-        case Some(rows) =>
-          rows.flatMap(r => relBucketOf(r._1).map(b => (b, r._2)))
-            .groupBy(_._1)
-            .collect { case (b, fs)
-                if fs.size > maxFilesPerBucket ||
-                  (fs.size > 1 &&
-                    // the Spark-frame era divided as DOUBLE
-                    // (Divide casts); keep that semantic exactly
-                    fs.map(_._2).sum.toDouble / fs.size
-                      < minBytesPerFile) => b }
+      bucketFiles(table, prev, "auto-maintenance") match {
+        case Right(files) =>
+          files.collect { case (b, fs)
+              if fs.size > maxFilesPerBucket ||
+                (fs.size > 1 &&
+                  // the Spark-frame era divided as DOUBLE (Divide
+                  // casts); keep that semantic exactly
+                  fs.sum.toDouble / fs.size < minBytesPerFile) => b }
             .toSet
-        case None =>
-          // pre-manifest version: count tier only, from the listing
-          listDir(curDir)
-            .filter(p => Files.isDirectory(p) &&
-              p.getFileName.toString.startsWith(s"$BucketCol="))
-            .map { p =>
-              p.getFileName.toString.stripPrefix(s"$BucketCol=").toInt ->
-                listDir(p).count(isDataFile)
-            }
-            .filter(_._2 > maxFilesPerBucket).map(_._1).toSet
-      } catch {
-        case _: java.nio.file.NoSuchFileException =>
-          throw new ConcurrentCommitException(
-            s"current version $curDir vanished during auto-maintenance " +
-              "— a competitor's swept publish is mid-undo; re-read and retry")
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("PATH_NOT_FOUND") ||
-              e.getMessage.contains("does not exist") =>
-          throw new ConcurrentCommitException(
-            s"current version $curDir vanished during auto-maintenance " +
-              "— a competitor's swept publish is mid-undo; re-read and retry")
+        // pre-manifest version: count tier only, from the listing
+        case Left(counts) =>
+          counts.filter(_._2 > maxFilesPerBucket).keySet
       }
     compactBucketSet(spark, table, rewrite, prev, clusterBy,
       clusterRowsPerFile)
@@ -2390,11 +2172,8 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * cloned data file shares its inode, nlink ≥ 2). */
   def cloneTable(spark: SparkSession, srcTable: String, dstTable: String,
       version: Option[Long] = None): DataFrame = {
-    val v = version.getOrElse(currentVersion(srcTable).getOrElse(
-      throw new IllegalStateException(
-        s"table $srcTable has no committed version")))
-    val srcName = versionDirNameOf(srcTable, v)
-    val srcDir = tableDir(srcTable).resolve(srcName)
+    val v = version.getOrElse(versionOf(dirNameOf(headPointer(srcTable))))
+    val srcDir = tableDir(srcTable).resolve(versionDirNameOf(srcTable, v))
     if (exists(dstTable))
       throw new ConcurrentCommitException(
         s"cloneTable: $dstTable already exists — a clone never " +
@@ -2413,19 +2192,15 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     val (srcBuckets, srcZoneCols) =
       try (numBuckets(srcTable), zoneColumns(srcTable))
       catch { case _: java.nio.file.NoSuchFileException => remap() }
-    // table stamps (first-writer-wins files, like createBucketed) —
-    // then VERIFY the read-back: a concurrent creator landing its
-    // own _BUCKETS/_ZONECOLS between our exists() check and the stamp
-    // would otherwise let this clone publish its data under the
-    // competitor's DIFFERENT bucket function, silently mis-bucketing
-    // every later upsert (losing the publish CAS is not enough — the
-    // stamp and the data must agree for the winner, whoever it is)
-    Files.createDirectories(tableDir(dstTable))
+    // table stamps — then VERIFY the read-back: a concurrent creator
+    // landing its own _BUCKETS/_ZONECOLS between our exists() check
+    // and the stamp would otherwise let this clone publish its data
+    // under the competitor's DIFFERENT bucket function, silently
+    // mis-bucketing every later upsert (losing the publish CAS is not
+    // enough — the stamp and the data must agree for the winner,
+    // whoever it is)
     srcBuckets.foreach { n =>
-      try Files.write(bucketsFile(dstTable),
-        n.toString.getBytes(StandardCharsets.UTF_8),
-        java.nio.file.StandardOpenOption.CREATE_NEW)
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
+      stampOnce(bucketsFile(dstTable), n.toString)
       if (!numBuckets(dstTable).contains(n))
         throw new ConcurrentCommitException(
           s"cloneTable: $dstTable's bucket stamp is " +
@@ -2433,48 +2208,43 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
             "data — a concurrent creator owns the name; pick another")
     }
     srcZoneCols.foreach { cols =>
-      try Files.write(zoneColsFile(dstTable),
-        cols.mkString(",").getBytes(StandardCharsets.UTF_8),
-        java.nio.file.StandardOpenOption.CREATE_NEW)
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
+      stampOnce(zoneColsFile(dstTable), cols.mkString(","))
       if (!zoneColumns(dstTable).contains(cols))
         throw new ConcurrentCommitException(
           s"cloneTable: $dstTable's zone columns are " +
             s"${zoneColumns(dstTable)} but the clone carries a map " +
             s"over $cols — a concurrent creator owns the name")
     }
-    val staged = stagedDirName(0L)
-    val nextDir = tableDir(dstTable).resolve(tmpName(staged))
-    Files.createDirectories(nextDir)
     // share the version's entire tree: data files link/copy, small
     // sidecars (_schema.json, _manifest, _zonemap parquet) too —
     // relative paths inside them stay valid in the clone's dir. This
     // walk READS the source, so a vanish here IS the retention race.
-    def shareTree(src: Path, dst: Path): Unit =
+    def shareTree(src: Path, dst: Path): Unit = {
+      Files.createDirectories(dst)
       listDir(src).foreach { p =>
         val d = dst.resolve(p.getFileName.toString)
-        if (Files.isDirectory(p)) { Files.createDirectories(d); shareTree(p, d) }
+        if (Files.isDirectory(p)) shareTree(p, d)
         else if (Files.isRegularFile(p)) io.shareFile(p, d)
       }
-    try shareTree(srcDir, nextDir)
-    catch { case e: java.nio.file.NoSuchFileException =>
-      deleteRecursively(nextDir)
-      // the walk touches BOTH trees: blame retention only when the
-      // source side can actually be mid-prune. Retention deletes a
-      // version tree BOTTOM-UP (files before the dir), so a racing
-      // prune vanishes descendants while srcDir still exists — the
-      // srcDir check alone misattributes that window as a raw I/O
-      // error. A version inside the plain keep window is NEVER
-      // pruned, so a vanish there (or on the dst side) surfaces raw;
-      // anything at or below the prune floor is the retention race.
-      val inPlainWindow = currentVersion(srcTable)
-        .exists(head => v > head - keepVersions)
-      if (Files.exists(srcDir) && inPlainWindow) throw e
-      remap()
     }
-    finalizeStaged(dstTable, staged)
-    publish(dstTable, staged, None)
-    readDir(spark, dstTable, staged)
+    try stageAndPublish(spark, dstTable, None, s"clone of $srcTable")(
+      shareTree(srcDir, _))._1
+    catch {
+      case e: ConcurrentCommitException
+          if e.getCause.isInstanceOf[java.nio.file.NoSuchFileException] =>
+        // the walk touches BOTH trees: blame retention only when the
+        // source side can actually be mid-prune. Retention deletes a
+        // version tree BOTTOM-UP (files before the dir), so a racing
+        // prune vanishes descendants while srcDir still exists — the
+        // srcDir check alone misattributes that window as a raw I/O
+        // error. A version inside the plain keep window is NEVER
+        // pruned, so a vanish there (or on the dst side) surfaces raw;
+        // anything at or below the prune floor is the retention race.
+        val inPlainWindow = currentVersion(srcTable)
+          .exists(head => v > head - keepVersions)
+        if (Files.exists(srcDir) && inPlainWindow) throw e.getCause
+        remap()
+    }
   }
 
   /** Tables with a committed version in this store (the catalog
@@ -2539,31 +2309,106 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * I/O error instead of a clean CAS conflict. After the move the
     * worst a concurrent prune can do is delete a COMPLETE staged dir
     * whose version already lost — and then the CAS must fail too,
-    * which is the clean retry path. (A crashed writer can orphan a
-    * tmp- dir; they are inert and cheap to sweep out-of-band.) */
+    * which is the clean retry path. (Only a crashed writer can
+    * orphan a tmp- dir — a failed write drops its own in
+    * [[stageAndPublish]]; orphans are inert and [[gc]] sweeps them.) */
   private def tmpName(staged: String): String = s"tmp-$staged"
 
   private def finalizeStaged(table: String, staged: String): Unit =
     Files.move(tableDir(table).resolve(tmpName(staged)),
       tableDir(table).resolve(staged))
 
-  private def writeVersion(spark: SparkSession, table: String, df: DataFrame,
-      prev: Option[String], partitioned: Boolean): String = {
-    val staged = stagedDirName(prev.map(p => versionOf(dirNameOf(p))).getOrElse(-1L) + 1)
+  /** Thrown by a staging body that found nothing to publish (an
+    * empty append): [[stageAndPublish]] drops the staged dir and
+    * reports the base version instead. */
+  private object NothingStaged extends scala.util.control.ControlThrowable
+
+  /** The staging shell behind every store write: names the unique
+    * staged dir for the version after `prev`, runs `write` into its
+    * `tmp-` form under [[guardedAction]] (a stored input pruned while
+    * the write reads it is the retryable [[ConcurrentCommitException]],
+    * never a raw I/O error), finalizes it into the `v=` namespace and
+    * publishes it against `prev` ([[publish]] drops it if the CAS
+    * loses). If anything fails before the publish, the staged dir is
+    * deleted here — a failed write never leaves a `tmp-` dir for
+    * [[gc]]'s 24 h crash sweep. Returns the re-read committed frame
+    * and its version. */
+  private def stageAndPublish(spark: SparkSession, table: String,
+      prev: Option[String], what: String)(
+      write: Path => Unit): (DataFrame, Long) = {
+    val staged = stagedDirName(prev.fold(0L)(p => versionOf(dirNameOf(p)) + 1))
     val dir = tableDir(table).resolve(tmpName(staged))
-    val w = df.write.mode("errorifexists")
-    guardedAction(s"commit of $table") {
-      (if (partitioned) w.partitionBy(BucketCol) else w).parquet(dir.toString)
+    try {
+      guardedAction(what)(write(dir))
+      finalizeStaged(table, staged)
+    } catch {
+      case NothingStaged =>
+        deleteRecursively(dir)
+        return (read(spark, table), versionOf(dirNameOf(prev.get)))
+      case e: Throwable =>
+        dropFailedStaging(spark, dir)
+        throw e
     }
-    writeSchemaFile(dir, df.schema)
-    // snapshot commits rewrite everything — the zone map (when
-    // declared) recomputes whole, version-atomically with the data
-    zoneColumns(table).foreach(cols =>
-      writeZoneMapFrame(dir, zoneStats(spark, dir, cols, None)))
-    writeFullManifest(spark, dir)
-    finalizeStaged(table, staged)
-    staged
+    publish(table, staged, prev)
+    (readDir(spark, table, staged), versionOf(staged))
   }
+
+  /** Delete a failed write's staged dir. A failed Spark job returns
+    * while the rest of its tasks are still being killed, and those
+    * can re-create the dir with their temporary output — so the
+    * delete repeats once no task is running (bounded: concurrent jobs
+    * may keep tasks running). Best effort: the write's own failure is
+    * what the caller sees. */
+  private def dropFailedStaging(spark: SparkSession, dir: Path): Unit = {
+    def attempt(body: => Unit): Unit =
+      try body catch { case scala.util.control.NonFatal(_) => () }
+    attempt(deleteRecursively(dir))
+    val tracker = spark.sparkContext.statusTracker
+    val deadline = System.currentTimeMillis() + 5000
+    attempt(while (tracker.getExecutorInfos.exists(_.numRunningTasks > 0) &&
+        System.currentTimeMillis() < deadline) Thread.sleep(20))
+    attempt(deleteRecursively(dir))
+  }
+
+  /** Publish `df` as a FULL rewrite against `prev` — a snapshot
+    * commit, or (when `df` carries the bucket column) a bucketed
+    * create/replace. The zone map (when declared) and the manifest
+    * recompute whole, version-atomically with the data.
+    *
+    * A ROWLESS frame written `partitionBy(kb)` produces no partition
+    * dirs and no part files — only _SUCCESS — and every later read of
+    * that version dies in schema inference, wedging the table. Empty
+    * bucketed versions therefore land UNPARTITIONED: one empty part
+    * file that carries the schema (bucket column included, as a plain
+    * column readDir still drops). A later non-empty version writes
+    * partition dirs as usual; the empty version's root file is never
+    * hard-linked forward (the sharing walk links bucket DIRS only),
+    * so layouts never mix within one version. Emptiness is detected
+    * AFTER the partitioned write (did any kb= dir appear? — a free
+    * driver listing) rather than probed up front: a limit(1) probe
+    * would evaluate the corpus-sized input plan twice per publish.
+    * Only the rare genuinely-empty frame pays a second (trivially
+    * cheap) write.
+    *
+    * Every merge path must capture `prev` BEFORE reading the snapshot
+    * it merges against: re-reading the pointer at publish time would
+    * let a competing commit that landed in between be silently
+    * overwritten (the lost update the CAS exists to prevent). */
+  private def publishFull(spark: SparkSession, table: String, df: DataFrame,
+      prev: Option[String]): (DataFrame, Long) =
+    stageAndPublish(spark, table, prev, s"commit of $table") { dir =>
+      if (df.columns.contains(BucketCol)) {
+        df.write.mode("errorifexists").partitionBy(BucketCol)
+          .parquet(dir.toString)
+        if (bucketDirs(dir).isEmpty) {
+          deleteRecursively(dir)
+          df.write.mode("errorifexists").parquet(dir.toString)
+        }
+      } else df.write.mode("errorifexists").parquet(dir.toString)
+      writeSchemaFile(dir, df.schema)
+      maintainZoneMap(spark, table, dir, None, None)
+      writeFullManifest(dir)
+    }
 
   /** Publish the staged dir with a compare-and-set on the pointer:
     * the expected previous content is exactly the pointer this commit
@@ -2752,9 +2597,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * `maxRetained` manifest sidecars with an anti-join — never a
     * directory walk, never file contents. */
   def cursorLag(spark: SparkSession, table: String): DataFrame = {
-    val head = currentVersion(table).getOrElse(
-      throw new IllegalStateException(
-        s"table $table has no committed version"))
+    val head = versionOf(dirNameOf(headPointer(table)))
     val retained = versions(table)
     val plainFloor = head - keepVersions + 1
     val d = tableDir(table).resolve(CursorsDir)

@@ -121,7 +121,7 @@ object Sketches {
     * into the base would turn that idempotent replay into a double
     * count. Rows strictly below the latest are checkpoint-committed
     * and can never replay. The read-fold-replace publishes through
-    * [[ParquetTableStore.readPinned]]/[[ParquetTableStore.commitPinned]]
+    * [[ParquetTableStore.readPinned]] and a pinned [[ParquetTableStore.commit]]
     * INSIDE the store's CAS retry, so the publish CAS is pinned to
     * the exact pointer the rows were read from: a concurrent batch
     * upsert landing between the read and the publish makes the CAS
@@ -150,9 +150,9 @@ object Sketches {
           .reduce { (a, b) => a.mergeInPlace(b); a }
         val out = new java.io.ByteArrayOutputStream()
         base.writeTo(out)
-        store.commitPinned(spark,
+        store.commit(spark, sketchTable,
           Seq((fold.last._1, out.toByteArray), keep)
-            .toDF("batch_id", "sketch"), pin)
+            .toDF("batch_id", "sketch"), Expect.Pinned(pin))
         fold.length - 1
       }
     }

@@ -332,7 +332,7 @@ object OpsQueries {
   /** U12: ZONE-MAP-PRUNED RANGE READ ≡ FULL-SCAN FILTER — the
     * read-side completion of the u11 publish: the z-ordered artifact
     * carries a per-file min/max sidecar on its curve columns
-    * ([[graft.ops.ParquetTableStore.commitZoneMapped]], written
+    * ([[graft.ops.ParquetTableStore.declareZoneColumns]], written
     * version-atomically inside the version dir), and a selective
     * range predicate on any curve column reads only the files whose
     * recorded range intersects it
@@ -1235,7 +1235,7 @@ object OpsQueries {
         keepVersions = 2)
       var pinnedV = -1L
       for (i <- 0 to 5) {
-        val (_, v) = store.upsertBucketedVersioned(s, "corpus",
+        val (_, v) = store.upsertBucketed(s, "corpus",
           d.filter(col("doc_id") % 6 === i), Seq("doc_id"), numBuckets = 8)
         if (i == 1) {
           pinnedV = v
@@ -1300,7 +1300,7 @@ object OpsQueries {
       val root = graft.ops.Scratch.tempDir("graft-u25-")
       val store = new graft.ops.ParquetTableStore(s"$root/store",
         keepVersions = 4)
-      val (_, v1) = store.upsertBucketedVersioned(s, "corpus", d,
+      val (_, v1) = store.upsertBucketed(s, "corpus", d,
         Seq("doc_id"), numBuckets = 8)
       store.upsertBucketed(s, "corpus",
         d.filter(col("doc_id") % 5 === 0)
@@ -1383,7 +1383,7 @@ object OpsQueries {
       val root = graft.ops.Scratch.tempDir("graft-u27-")
       val store = new graft.ops.ParquetTableStore(s"$root/store",
         keepVersions = 4)
-      val (_, v1) = store.upsertBucketedVersioned(s, "corpus", d,
+      val (_, v1) = store.upsertBucketed(s, "corpus", d,
         Seq("doc_id"), numBuckets = 8)
       Thread.sleep(5) // stamps are millis; keep v2's stamp strictly later
       store.upsertBucketed(s, "corpus",

@@ -3521,12 +3521,12 @@ object PipelineQueries {
         round(TextAnalysis.qualityScore(col("text")), 9))
       val store = new graft.ops.ParquetTableStore(
         graft.ops.Scratch.tempDir("graft-tp6-"))
-      val storedPairs = store.commit(s, "dup_pairs",
+      val (storedPairs, _) = store.commit(s, "dup_pairs",
         Dedup.minhashLshPairs(scored, "id", "text",
           shingleLen = 3, numHashes = NumHashes, bands = Bands,
           threshold = 0.6, bucketCap = CatalogCap)
           .select("id_a", "id_b"))
-      val storedClusters = store.commit(s, "dup_clusters",
+      val (storedClusters, _) = store.commit(s, "dup_clusters",
         ConnectedComponents.duplicateClusters(storedPairs))
       val kept = Dedup.keepBestWithClusters(scored, "id", storedClusters,
         col("q9"))

@@ -19,7 +19,7 @@ import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.ops.{ParquetTableStore, StoreScanSpec}
+import graft.ops.{Expect, ParquetTableStore, StoreScanSpec}
 
 /** [[ManifestFileIndex]] adapted to the `PartitioningAwareFileIndex`
   * shape Spark's DSv2 file sources plan through — what lets the V2
@@ -248,7 +248,7 @@ final class GraftTable(spark: SparkSession, store: ParquetTableStore,
                 "table — epoch replay after a restart re-folds the " +
                 "last batch, and only the keyed LWW merge makes that " +
                 "a no-op; for snapshot tables use foreachBatch with " +
-                "commitPinned"))
+                "a pinned commit"))
           val keys = store.keyColumns(tableName).getOrElse(
             throw new IllegalStateException(
               s"table $tableName has no _KEYS stamp — streaming " +
@@ -280,7 +280,8 @@ final class GraftTable(spark: SparkSession, store: ParquetTableStore,
                       // the read and this commit fails the CAS and
                       // the retry re-reads — never a lost update
                       val (stored, pin) = store.readPinned(s, tableName)
-                      store.commitPinned(s, stored.unionByName(data), pin)
+                      store.commit(s, tableName, stored.unionByName(data),
+                        Expect.Pinned(pin))
                     }
                 }
               }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 import graft.connectors.ConnectorRuntime
 import graft.functions.YtFunctions
 import graft.ingest.TranscriptFiles
-import graft.ops.{ParquetTableStore, Upserts}
+import graft.ops.{Expect, ParquetTableStore, Upserts}
 
 /** Structured-Streaming shapes for the reference's streaming-ish
   * patterns (SURVEY §2.9).
@@ -181,20 +181,17 @@ object Streams {
         // raises ConcurrentCommitException and the retry re-reads the
         // winner and re-merges, instead of silently overwriting it
         store.withCommitRetries() {
-          // create pins the CAS to ABSENCE (commitNew): a competitor
-          // creating the table between exists() and the publish raises
+          // an absent table pins the CAS to ABSENCE: a competitor
+          // creating the table between the read and the publish raises
           // ConcurrentCommitException and this retry re-reads + merges,
           // instead of silently replacing the competitor's rows
-          if (!store.exists(table)) store.commitNew(spark, table, incoming)
-          else {
-            val (stored, pin) = store.readPinned(spark, table)
-            store.commitPinned(spark,
-              Upserts.conditionalUpsert(stored, incoming,
-                Seq("video_id")) { (inc, old) =>
-                YtFunctions.hasTimestamps(inc("transcript")) ||
-                  !YtFunctions.hasTimestamps(old("transcript"))
-              }, pin)
-          }
+          val (stored, pin) = store.readPinnedOption(spark, table)
+          store.commit(spark, table, stored.fold(incoming)(
+            Upserts.conditionalUpsert(_, incoming,
+              Seq("video_id")) { (inc, old) =>
+              YtFunctions.hasTimestamps(inc("transcript")) ||
+                !YtFunctions.hasTimestamps(old("transcript"))
+            }), Expect.Pinned(pin))
           ()
         }
         ()
@@ -530,7 +527,7 @@ object Streams {
             // one dir under the checkpoint (overwritten per batch,
             // never leaked).
             store.withCommitRetries() {
-              // readPinnedOption + upsertBucketedPinned: the merge
+              // readPinnedOption + pinned upsertBucketed: the merge
               // derives from THIS snapshot (absence pins the create,
               // so a racing creator loses cleanly), and only the rows
               // whose label CHANGED (or are new) commit — an O(delta)
@@ -554,8 +551,8 @@ object Streams {
                   scratchDir = Some(s"$checkpointDir/cc-scratch"),
                   driverMaxEdges = 1 << 20)
               if (changed.limit(1).count() > 0) {
-                store.upsertBucketedPinned(spark, changed, Seq("id"),
-                  pin, numBuckets)
+                store.upsertBucketed(spark, clusterTable, changed, Seq("id"),
+                  numBuckets, Expect.Pinned(pin))
                 ()
               }
             }
@@ -1056,7 +1053,7 @@ object Streams {
           // downstream reads/anti-joins unconditional instead of
           // special-casing absence
           if (!store.exists(pairsTable))
-            try store.commitNew(spark, pairsTable, pairs.limit(0))
+            try store.commit(spark, pairsTable, pairs.limit(0), Expect.New)
             catch {
               // a competitor created it — the artifact exists, which
               // is all this guard needs
@@ -1175,14 +1172,14 @@ object Streams {
                     () => if (ded.limit(1).count() > 0)
                       Some(digestsTable ->
                         store.withCommitRetries()(
-                          store.upsertBucketedVersioned(spark, digestsTable,
+                          store.upsertBucketed(spark, digestsTable,
                             ded.select(col("fp"), col("id").as("keeper_id")),
                             Seq("fp"), numBuckets))._2)
                     else None,
                     () => if (survivors.limit(1).count() > 0)
                       Some(cleanTable ->
                         store.withCommitRetries()(
-                          store.upsertBucketedVersioned(spark, cleanTable,
+                          store.upsertBucketed(spark, cleanTable,
                             survivors, Seq("id"), numBuckets))._2)
                     else None)
                 // ledger+corpus marker (the generic multi-table

@@ -238,7 +238,7 @@ class CatalogSeamSpec extends SparkSpec {
     val root = tmpDir("v2cat-tt")
     val store = new graft.ops.ParquetTableStore(root, keepVersions = 4)
     store.declareZoneColumns("docs", Seq("grp"))
-    val (_, v1) = store.upsertBucketedVersioned(spark,
+    val (_, v1) = store.upsertBucketed(spark,
       "docs", (1 to 300).map(i => (i.toLong, s"text $i", i % 7))
         .toDF("id", "body", "grp"), Seq("id"), numBuckets = 4)
     store.upsertBucketed(spark, "docs",
@@ -301,7 +301,7 @@ class CatalogSeamSpec extends SparkSpec {
         .collect())
     val tightRoot = tmpDir("v2cat-tt2")
     val tight = new graft.ops.ParquetTableStore(tightRoot, keepVersions = 1)
-    val (_, w1) = tight.upsertBucketedVersioned(spark, "t",
+    val (_, w1) = tight.upsertBucketed(spark, "t",
       Seq((1L, "a")).toDF("id", "b"), Seq("id"), numBuckets = 2)
     tight.upsertBucketed(spark, "t", Seq((2L, "b")).toDF("id", "b"),
       Seq("id"))
@@ -320,7 +320,7 @@ class CatalogSeamSpec extends SparkSpec {
     import spark.implicits._
     val root = tmpDir("v2cat-ts")
     val store = new graft.ops.ParquetTableStore(root, keepVersions = 4)
-    val (_, v1) = store.upsertBucketedVersioned(spark, "docs",
+    val (_, v1) = store.upsertBucketed(spark, "docs",
       (1 to 100).map(i => (i.toLong, s"text $i")).toDF("id", "body"),
       Seq("id"), numBuckets = 2)
     Thread.sleep(5) // stamps are millis; keep v2's stamp strictly later

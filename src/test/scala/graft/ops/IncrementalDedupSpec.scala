@@ -72,9 +72,9 @@ class IncrementalDedupSpec extends SparkSpec {
 
   test("stored index + signatures probe identically (store round-trip)") {
     val store = new ParquetTableStore(tmpDir("inc-dedup-store"))
-    val sigs = store.commit(spark, "lsh_signatures",
+    val (sigs, _) = store.commit(spark, "lsh_signatures",
       Dedup.lshSignatures(corpus, "id", "text"))
-    val index = store.commit(spark, "lsh_band_index",
+    val (index, _) = store.commit(spark, "lsh_band_index",
       Dedup.lshBandIndex(sigs))
     val fromStore = Dedup.incrementalLshPairs(batch, "id", "text",
       store.read(spark, "lsh_band_index"),

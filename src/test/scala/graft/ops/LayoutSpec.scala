@@ -103,8 +103,8 @@ class LayoutSpec extends SparkSpec {
     val (keptZ, totZ) = store.zoneMapFileCounts(spark, "pub", "x",
       1000L, 5000L)
     assert(keptZ < totZ && totZ >= 8, s"kept $keptZ of $totZ")
-    store.commitZoneMapped(spark, "plain", fixture.repartition(16),
-      Seq("x", "y"))
+    store.declareZoneColumns("plain", Seq("x", "y"))
+    store.commit(spark, "plain", fixture.repartition(16))
     val (keptP, _) = store.zoneMapFileCounts(spark, "plain", "x",
       1000L, 5000L)
     assert(keptZ < keptP, s"z kept $keptZ, plain kept $keptP")

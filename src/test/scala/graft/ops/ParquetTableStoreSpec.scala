@@ -45,7 +45,7 @@ class ParquetTableStoreSpec extends SparkSpec {
   test("commit returns the re-read frame, reusable across a later commit") {
     import spark.implicits._
     val store = new ParquetTableStore(tmpDir("store")) // keepVersions = 2
-    val committed = store.commit(spark, "t", Seq((1, "a"), (2, "b")).toDF("k", "v"))
+    val (committed, _) = store.commit(spark, "t", Seq((1, "a"), (2, "b")).toDF("k", "v"))
     // a SECOND commit bumps the version; the returned frame must keep
     // working because it reads the published v=0 files (which
     // keepVersions=2 retains), not the caller's lazy input plan
@@ -122,7 +122,7 @@ class ParquetTableStoreSpec extends SparkSpec {
 
     // delta: one existing key updated + one new key
     val delta = Seq(("k1", "v1-new"), ("k999", "fresh")).toDF("k", "v")
-    val out = store.upsertBucketed(spark, "t", delta, Seq("k"))
+    val (out, _) = store.upsertBucketed(spark, "t", delta, Seq("k"))
     val v1 = verDir(root, "t", 1)
     val after = inodesUnder(v1)
 
@@ -244,10 +244,10 @@ class ParquetTableStoreSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters") &&
       plan.split("PartitionFilters", 2)(1).take(120).contains("__kb"),
       s"expected a __kb partition filter on the scan:\n$plan")
-    // version advances with an append and readWithVersion tracks it
+    // version advances with an append and readVersioned tracks it
     store.appendBucketed(spark, "idx",
       Seq(("termX", 999L)).toDF("term", "id"), Seq("term"))
-    val (all, v1) = store.readWithVersion(spark, "idx")
+    val (all, v1) = store.readVersioned(spark, "idx")
     assert(v1 == 1L && all.count() == 65)
     // snapshot tables refuse the bucket-pruned path
     store.commit(spark, "snap", Seq((1, "a")).toDF("k", "v"))
@@ -351,7 +351,7 @@ class ParquetTableStoreSpec extends SparkSpec {
     val v0 = verDir(root, "t", 0)
     val before = inodesUnder(v0)
 
-    val out = store.upsertBucketed(spark, "t",
+    val (out, _) = store.upsertBucketed(spark, "t",
       Seq(("k1", "v1-new"), ("k999", "fresh")).toDF("k", "v"), Seq("k"))
     val after = inodesUnder(verDir(root, "t", 1))
 
@@ -1088,7 +1088,8 @@ class ParquetTableStoreSpec extends SparkSpec {
     val store = new ParquetTableStore(root)
     val df = (1 to 200).map(i => (i.toLong, i % 7))
       .toDF("k", "g").repartition(4)
-    store.commitZoneMapped(spark, "t", df, Seq("k"))
+    store.declareZoneColumns("t", Seq("k"))
+    store.commit(spark, "t", df)
     // sanity: the healthy read works
     assert(store.readZonePruned(spark, "t", "k", 10, 60).count() == 51)
     // tamper: drop ONE data file's row from the manifest (the desync
@@ -1148,5 +1149,49 @@ class ParquetTableStoreSpec extends SparkSpec {
     store.upsertBucketed(spark, "t2", store.read(spark, "t"), Seq("k"),
       numBuckets = 2)
     assert(store.read(spark, "t2").count() == 40L)
+  }
+
+  test("failed writes drop their staging dir; compaction maps a vanished input to a conflict") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, concat, lit, raise_error}
+    def tmpEntries(root: String, t: String): Seq[String] =
+      Files.list(Paths.get(root, t)).iterator().asScala
+        .map(_.getFileName.toString).filter(_.startsWith("tmp-")).toList
+    val root = tmpDir("store-failed-write")
+    val store = new ParquetTableStore(root)
+    val base = (1 to 40).map(i => (i.toLong, s"v$i")).toDF("k", "v")
+    store.commit(spark, "snap", base)
+    store.upsertBucketed(spark, "buck", base, Seq("k"), numBuckets = 4)
+    // the payload column raises while the staged write evaluates it
+    // (the bucketed touched-set reads only the key, so it passes; a
+    // range, not a local relation, so the optimizer cannot evaluate
+    // it on the driver)
+    val poisoned = spark.range(39, 42).select(col("id").as("k"),
+      raise_error(concat(lit("boom "), col("id"))).cast("string").as("v"))
+    intercept[Exception](store.commit(spark, "snap", poisoned))
+    intercept[Exception](
+      store.upsertBucketed(spark, "buck", poisoned, Seq("k")))
+    for (t <- Seq("snap", "buck")) {
+      assert(store.currentVersion(t).contains(0L), t)
+      assert(store.read(spark, t).count() == 40L, t)
+      assert(tmpEntries(root, t).isEmpty,
+        s"$t: failed write left ${tmpEntries(root, t)}")
+    }
+    // compaction reading a bucket file that vanished under the
+    // version (a prune racing the rewrite) is the retryable conflict
+    (1 to 3).foreach(i => store.appendBucketed(spark, "buck",
+      Seq((100L + i, s"a$i")).toDF("k", "v"), Seq("k")))
+    val head = verDir(root, "buck", store.currentVersion("buck").get)
+    // a file of a bucket the compaction will rewrite (> 1 file)
+    val victim = Files.list(head).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("__kb="))
+      .map(d => Files.list(d).iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq)
+      .find(_.size > 1).get.head
+    Files.delete(victim)
+    val e = intercept[ConcurrentCommitException](
+      store.compactBuckets(spark, "buck", maxFilesPerBucket = 1))
+    assert(e.getMessage.contains("vanished mid-action"), e.getMessage)
+    assert(tmpEntries(root, "buck").isEmpty)
   }
 }

@@ -524,7 +524,7 @@ class PipelineSpec extends SparkSpec {
     // persist the label map through the store, consume the committed
     // frame — the tp6 discipline
     val store = new ParquetTableStore(tmpDir("keepbest-store"))
-    val stored = store.commit(spark, "clusters",
+    val (stored, _) = store.commit(spark, "clusters",
       ConnectedComponents.duplicateClusters(pairs))
     val viaStore = Dedup.keepBestWithClusters(docs, "id", stored, col("q"))
       .select("cluster_id", "id", "n_members").collect().toSet

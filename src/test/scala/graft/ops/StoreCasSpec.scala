@@ -2,6 +2,8 @@ package graft.ops
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -211,18 +213,17 @@ class StoreCasSpec extends SparkSpec {
     // a competitor lands between the read and the publish
     store.upsert(spark, "t", Seq((3L, "c")).toDF("id", "v"), Seq("id"))
     intercept[ConcurrentCommitException] {
-      store.commitPinned(spark, derived, pin)
+      store.commit(spark, "t", derived, Expect.Pinned(pin))
     }
     // nothing lost: the competitor's merge survives intact
     assert(store.read(spark, "t").select("id")
       .collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L))
     // the retry shape: re-read pinned (now over the winner) and publish
     val (snap2, pin2) = store.readPinned(spark, "t")
-    store.commitPinned(spark, snap2.filter(col("id") =!= 2L), pin2)
+    store.commit(spark, "t", snap2.filter(col("id") =!= 2L),
+      Expect.Pinned(pin2))
     assert(store.read(spark, "t").select("id")
       .collect().map(_.getLong(0)).toSet == Set(1L, 3L))
-    // the pin itself names the target table — a mismatch is
-    // unrepresentable (no separate table argument to get wrong)
   }
 
   test("upsertBucketedPinned: a commit landing after the pinned read fails; absence pin guards create") {
@@ -234,8 +235,8 @@ class StoreCasSpec extends SparkSpec {
     assert(none.isEmpty)
     store.upsertBucketed(spark, "t", Seq((1L, "a")).toDF("id", "v"), Seq("id"))
     intercept[ConcurrentCommitException] {
-      store.upsertBucketedPinned(spark, Seq((9L, "z")).toDF("id", "v"),
-        Seq("id"), pinAbsent)
+      store.upsertBucketed(spark, "t", Seq((9L, "z")).toDF("id", "v"),
+        Seq("id"), expect = Expect.Pinned(pinAbsent))
     }
     assert(store.read(spark, "t").count() == 1) // competitor intact
     // UPDATE path: derive from a pinned read, competitor lands, the
@@ -244,14 +245,14 @@ class StoreCasSpec extends SparkSpec {
     val (_, pin) = store.readPinnedOption(spark, "t")
     store.upsertBucketed(spark, "t", Seq((2L, "b")).toDF("id", "v"), Seq("id"))
     intercept[ConcurrentCommitException] {
-      store.upsertBucketedPinned(spark, Seq((3L, "c")).toDF("id", "v"),
-        Seq("id"), pin)
+      store.upsertBucketed(spark, "t", Seq((3L, "c")).toDF("id", "v"),
+        Seq("id"), expect = Expect.Pinned(pin))
     }
     assert(store.read(spark, "t").count() == 2) // ids 1, 2 — nothing lost
     store.withCommitRetries() {
       val (_, p2) = store.readPinnedOption(spark, "t")
-      store.upsertBucketedPinned(spark, Seq((3L, "c")).toDF("id", "v"),
-        Seq("id"), p2)
+      store.upsertBucketed(spark, "t", Seq((3L, "c")).toDF("id", "v"),
+        Seq("id"), expect = Expect.Pinned(p2))
     }
     assert(store.read(spark, "t").collect().map(_.getLong(0)).toSet ==
       Set(1L, 2L, 3L))
@@ -307,24 +308,100 @@ class StoreCasSpec extends SparkSpec {
     // the exists()-guarded create shape: checked absent here ...
     assert(!store.exists("t"))
     // ... competitor creates in between ...
-    store.commitNew(spark, "t", Seq((1L, "winner")).toDF("id", "v"))
+    store.commit(spark, "t", Seq((1L, "winner")).toDF("id", "v"), Expect.New)
     // ... and the guarded create must FAIL its CAS, not replace the
-    // winner (plain commit would CAS against the pointer read at
-    // commit time and silently overwrite — the lost-update this
-    // method exists to close)
+    // winner (a head-CAS commit would CAS against the pointer read at
+    // commit time and silently overwrite — the lost-update Expect.New
+    // exists to close)
     intercept[ConcurrentCommitException] {
-      store.commitNew(spark, "t", Seq((2L, "loser")).toDF("id", "v"))
+      store.commit(spark, "t", Seq((2L, "loser")).toDF("id", "v"), Expect.New)
     }
     assert(store.read(spark, "t").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq == Seq((1L, "winner")))
     // the retry shape re-checks existence and merges instead
     store.withCommitRetries() {
       if (!store.exists("t"))
-        store.commitNew(spark, "t", Seq((2L, "late")).toDF("id", "v"))
+        store.commit(spark, "t", Seq((2L, "late")).toDF("id", "v"), Expect.New)
       else
         store.upsert(spark, "t", Seq((2L, "late")).toDF("id", "v"), Seq("id"))
     }
     assert(store.read(spark, "t").count() == 2)
+  }
+
+  // The write surface's one CAS parameter, over both write families:
+  // every (op × expectation × competitor) cell either publishes —
+  // returning exactly the version now live — or refuses with the
+  // retryable conflict, leaving the competitor's version live, its row
+  // intact and no staged dir behind; a pinned retry then lands over
+  // the winner.
+  test("expectation table: commit/upsertBucketed x head/new/pinned x competitor") {
+    type Write = (ParquetTableStore, String, org.apache.spark.sql.DataFrame,
+      Expect) => (org.apache.spark.sql.DataFrame, Long)
+    val ops: Seq[(String, Write)] = Seq(
+      "commit" -> ((st, t, df, e) => st.commit(spark, t, df, e)),
+      "upsertBucketed" -> ((st, t, df, e) =>
+        st.upsertBucketed(spark, t, df, Seq("id"), numBuckets = 4, e)))
+    // expectation name, whether the table exists before the call, and
+    // how the expectation is captured (before any competitor lands)
+    val expectations: Seq[(String, Boolean,
+        (ParquetTableStore, String) => Expect)] = Seq(
+      ("head", true, (_, _) => Expect.Head),
+      ("new", false, (_, _) => Expect.New),
+      ("pinned", true, (st, t) => Expect.Pinned(st.readPinned(spark, t)._2)),
+      ("pinned-absent", false,
+        (st, t) => Expect.Pinned(st.readPinnedOption(spark, t)._2)))
+    def ids(st: ParquetTableStore, t: String): Set[Long] =
+      st.read(spark, t).select("id").collect().map(_.getLong(0)).toSet
+    // staged dirs that are not the live version: any tmp- dir, and any
+    // v= dir at or above the live number other than the pointed one
+    def leftovers(root: String, t: String): Seq[String] = {
+      def num(n: String) = n.stripPrefix("v=").takeWhile(_ != '-').toLong
+      val live = new String(Files.readAllBytes(ptr(s"$root/$t"))).trim
+      val s = Files.list(Paths.get(root, t))
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("tmp-") || (n.startsWith("v=") &&
+          n != live && num(n) >= num(live))).toList
+      finally s.close()
+    }
+    for ((opName, write) <- ops; (eName, preexisting, capture) <- expectations;
+         competitor <- Seq(false, true)) {
+      val cell = s"$opName/$eName/competitor=$competitor"
+      val root = tmpDir(s"cas-table-$opName-$eName-$competitor")
+      val st = new ParquetTableStore(root)
+      if (preexisting) write(st, "t", Seq((1L, "base")).toDF("id", "v"),
+        Expect.Head)
+      val expect = capture(st, "t")
+      if (competitor) write(st, "t", Seq((2L, "rival")).toDF("id", "v"),
+        Expect.Head)
+      val mine = Seq((9L, "mine")).toDF("id", "v")
+      val publishes = !competitor || eName == "head"
+      if (publishes) {
+        val (frame, v) = write(st, "t", mine, expect)
+        assert(st.currentVersion("t").contains(v), cell)
+        assert(frame.filter(col("id") === 9L).count() == 1, cell)
+        assert(leftovers(root, "t").isEmpty, cell)
+      } else {
+        val rival = st.currentVersion("t").get
+        intercept[ConcurrentCommitException](write(st, "t", mine, expect))
+        assert(st.currentVersion("t").contains(rival), cell)
+        assert(ids(st, "t").contains(2L), s"$cell: competitor lost")
+        assert(leftovers(root, "t").isEmpty,
+          s"$cell: refused publish left ${leftovers(root, "t")}")
+        // the retry shape: re-read pinned over the winner, re-derive
+        st.withCommitRetries() {
+          val (cur, pin) = st.readPinnedOption(spark, "t")
+          write(st, "t", cur.fold(mine)(_.unionByName(mine)),
+            Expect.Pinned(pin))
+        }
+        assert(ids(st, "t").contains(2L) && ids(st, "t").contains(9L), cell)
+      }
+    }
+    // a pin names the table it was read from
+    val st = new ParquetTableStore(tmpDir("cas-table-mismatch"))
+    st.commit(spark, "a", Seq((1L, "x")).toDF("id", "v"))
+    val (_, pinA) = st.readPinned(spark, "a")
+    intercept[IllegalArgumentException](
+      st.commit(spark, "b", Seq((1L, "x")).toDF("id", "v"), Expect.Pinned(pinA)))
   }
 
   test("snapshot-path writes on a bucketed table are refused symmetrically") {
@@ -341,7 +418,8 @@ class StoreCasSpec extends SparkSpec {
     }
     intercept[IllegalArgumentException] {
       val (_, pin) = store.readPinned(spark, "b")
-      store.commitPinned(spark, Seq((2L, "b")).toDF("id", "v"), pin)
+      store.commit(spark, "b", Seq((2L, "b")).toDF("id", "v"),
+        Expect.Pinned(pin))
     }
     // the bucketed path still works and the table is intact
     store.upsertBucketed(spark, "b", Seq((2L, "b")).toDF("id", "v"), Seq("id"))
@@ -589,25 +667,25 @@ class StoreCasSpec extends SparkSpec {
   test("versioned commits return the version the call published") {
     import spark.implicits._
     val store = new ParquetTableStore(tmpDir("store-versioned"))
-    val (_, v0) = store.upsertBucketedVersioned(spark, "t",
+    val (_, v0) = store.upsertBucketed(spark, "t",
       Seq((1L, "a")).toDF("id", "v"), Seq("id"), numBuckets = 4)
     assert(v0 == store.currentVersion("t").get)
-    val (_, v1) = store.upsertBucketedVersioned(spark, "t",
+    val (_, v1) = store.upsertBucketed(spark, "t",
       Seq((2L, "b")).toDF("id", "v"), Seq("id"))
     assert(v1 == v0 + 1 && v1 == store.currentVersion("t").get)
     // empty delta: a version NO-OP reports the base it checked
     // against, never a re-read head
-    val (_, vNoop) = store.upsertBucketedVersioned(spark, "t",
+    val (_, vNoop) = store.upsertBucketed(spark, "t",
       Seq.empty[(Long, String)].toDF("id", "v"), Seq("id"))
     assert(vNoop == v1)
     // snapshot paths
-    val (_, s0) = store.commitNewVersioned(spark, "s",
-      Seq((1L, "a")).toDF("id", "v"))
+    val (_, s0) = store.commit(spark, "s",
+      Seq((1L, "a")).toDF("id", "v"), Expect.New)
     assert(s0 == store.currentVersion("s").get)
     val (_, pin) = store.readPinned(spark, "s")
     assert(store.pinVersion(pin).contains(s0))
-    val (_, s1) = store.commitPinnedVersioned(spark,
-      Seq((2L, "b")).toDF("id", "v"), pin)
+    val (_, s1) = store.commit(spark, "s",
+      Seq((2L, "b")).toDF("id", "v"), Expect.Pinned(pin))
     assert(s1 == s0 + 1 && s1 == store.currentVersion("s").get)
   }
 
@@ -621,7 +699,7 @@ class StoreCasSpec extends SparkSpec {
     // together, never a competitor's head woven in.
     val store = new ParquetTableStore(tmpDir("store-group-own"),
       keepVersions = 4)
-    val (_, vMine) = store.upsertBucketedVersioned(spark, "m",
+    val (_, vMine) = store.upsertBucketed(spark, "m",
       Seq((1L, "mine")).toDF("id", "v"), Seq("id"), numBuckets = 2)
     // competitor lands between W's member commit and W's marker swap
     store.upsertBucketed(spark, "m",

@@ -190,7 +190,7 @@ class ZoneMapSpec extends SparkSpec {
       .count() == 50)
     // IsNotNull skipping never drops a file that has values, and a
     // range over an all-null column's file prunes it (null stats)
-    val evolved = store.upsertBucketed(spark, "t",
+    val (evolved, _) = store.upsertBucketed(spark, "t",
       Seq((301L, "d301", 7L)).toDF("k", "v", "extra"), Seq("k"))
     assert(evolved.filter(col("k") === 301L).head.getString(1) == "d301")
   }
