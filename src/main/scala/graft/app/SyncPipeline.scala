@@ -72,42 +72,53 @@ final class SyncPipeline(store: ParquetTableStore, connector: YouTubeConnector,
         .select(pl.columns.map(col).toIndexedSeq: _*)
     }
 
-    // work list: member videos never scraped or stale (U7 + J9)
+    // work list: member videos never scraped or stale (U7 + J9). It
+    // stays a lazy frame over the videos version read here — the scrape
+    // and every merge retry re-evaluate it — so a cursor protects that
+    // version from pruning until the sync ends, however many commits
+    // land on videos meanwhile
     val memberIds = memberships.select(col("video_id")).distinct()
-    val videosStored =
-      if (store.exists("videos")) store.read(spark, "videos") else null
-    val workList =
-      if (videosStored == null) memberIds
-      else {
-        val stale = Upserts.freshnessGate(videosStored
-          .join(memberIds, Seq("video_id"), "left_semi"),
-          "last_scraped_timestamp", now, refreshDays)
-          .select(col("video_id"))
-        val fresh = memberIds.join(videosStored, Seq("video_id"), "left_anti")
-        fresh.unionByName(stale).distinct()
+    val videosRead =
+      if (store.exists("videos")) Some(store.readVersioned(spark, "videos"))
+      else None
+    val cursor = s"_sync-${java.util.UUID.randomUUID.toString.take(8)}"
+    videosRead.foreach { case (_, v) =>
+      store.registerCursor("videos", cursor, v)
+    }
+    try {
+      val workList = videosRead match {
+        case None => memberIds
+        case Some((videosStored, _)) =>
+          val stale = Upserts.freshnessGate(videosStored
+            .join(memberIds, Seq("video_id"), "left_semi"),
+            "last_scraped_timestamp", now, refreshDays)
+            .select(col("video_id"))
+          val fresh = memberIds.join(videosStored, Seq("video_id"), "left_anti")
+          fresh.unionByName(stale).distinct()
       }
 
-    // S9 + U1: scrape and upsert videos + transcripts
-    val scraped = connector.scrapeVideos(spark, workList)
-      .withColumn("last_scraped_timestamp", now)
-    val nScraped = scraped.count()
-    val videoCols = Seq("video_id", "title", "description", "channel",
-      "publish_date", "duration_seconds", "view_count", "author",
-      "channel_id", "thumbnail_url", "video_url", "last_scraped_timestamp")
-    val videosNew = scraped.select(videoCols.map(col): _*)
-    mergeInto(spark, store, "videos")(_.fold(videosNew)(
-      Upserts.upsertLastWriteWins(_, videosNew, Seq("video_id"))))
+      // S9 + U1: scrape and upsert videos + transcripts
+      val scraped = connector.scrapeVideos(spark, workList)
+        .withColumn("last_scraped_timestamp", now)
+      val nScraped = scraped.count()
+      val videoCols = Seq("video_id", "title", "description", "channel",
+        "publish_date", "duration_seconds", "view_count", "author",
+        "channel_id", "thumbnail_url", "video_url", "last_scraped_timestamp")
+      val videosNew = scraped.select(videoCols.map(col): _*)
+      mergeInto(spark, store, "videos")(_.fold(videosNew)(
+        Upserts.upsertLastWriteWins(_, videosNew, Seq("video_id"))))
 
-    val transcriptsNew = scraped
-      .select(col("video_id"), col("language"), col("transcript"),
-        now.as("last_fetched_timestamp"))
-      .filter(col("transcript").isNotNull)
-    mergeInto(spark, store, "transcripts")(_.fold(transcriptsNew)(
-      Upserts.upsertLastWriteWins(_, transcriptsNew, Seq("video_id"))))
+      val transcriptsNew = scraped
+        .select(col("video_id"), col("language"), col("transcript"),
+          now.as("last_fetched_timestamp"))
+        .filter(col("transcript").isNotNull)
+      mergeInto(spark, store, "transcripts")(_.fold(transcriptsNew)(
+        Upserts.upsertLastWriteWins(_, transcriptsNew, Seq("video_id"))))
 
-    ping(spark, playlists2Committed.select(col("playlist_id")),
-      "completed", now)
-    SyncReport(nPlaylists, nAdds, nRemoves, nScraped)
+      ping(spark, playlists2Committed.select(col("playlist_id")),
+        "completed", now)
+      SyncReport(nPlaylists, nAdds, nRemoves, nScraped)
+    } finally if (videosRead.nonEmpty) store.unregisterCursor("videos", cursor)
   }
 
   /** U9: append ping events (never UPDATE; latest-status is a view).

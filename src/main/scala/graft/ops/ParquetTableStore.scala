@@ -1928,9 +1928,21 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * (cross-table consistency, see [[readVersioned]]). */
   def readBucketsOf(spark: SparkSession, table: String,
       keyValues: DataFrame): (DataFrame, Long) = {
+    val d = dirNameOf(headPointer(table))
+    (readBucketsIn(spark, table, d, keyValues), versionOf(d))
+  }
+
+  /** [[readBucketsOf]] at committed version `version` — the member
+    * version a group marker names ([[readGroup]]'s time-travel
+    * contract). */
+  def readBucketsOf(spark: SparkSession, table: String,
+      keyValues: DataFrame, version: Long): DataFrame =
+    readBucketsIn(spark, table, versionDirNameOf(table, version), keyValues)
+
+  private def readBucketsIn(spark: SparkSession, table: String,
+      dirName: String, keyValues: DataFrame): DataFrame = {
     val n = numBuckets(table).getOrElse(throw new IllegalStateException(
       s"table $table is not bucketed — readBucketsOf needs bucket partitions"))
-    val p = headPointer(table)
     val kbs = keyValues.select(bucketOf(keyValues.columns.toSeq, n))
       .distinct().collect().map(_.getInt(0)).toSet
     // O(TOUCHED) METADATA, not O(table): a whole-version scan
@@ -1942,8 +1954,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     // versions hand Spark exactly the touched bucket DIRS, and
     // pre-schema versions fall back to the full scan
     // ([[readBucketRestricted]]).
-    (readBucketRestricted(spark, dirOf(table, p), kbs).drop(BucketCol),
-      versionOf(dirNameOf(p)))
+    readBucketRestricted(spark, dirOf(table, dirName), kbs).drop(BucketCol)
   }
 
   /** Directory listing with the stream CLOSED — Files.list holds an
@@ -2356,17 +2367,25 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
   /** Delete a failed write's staged dir. A failed Spark job returns
     * while the rest of its tasks are still being killed, and those
     * can re-create the dir with their temporary output — so the
-    * delete repeats once no task is running (bounded: concurrent jobs
-    * may keep tasks running). Best effort: the write's own failure is
-    * what the caller sees. */
+    * delete repeats once no task is running, until the dir stays gone
+    * through a short quiet interval (the running-task count comes
+    * from listener events, which can lag a straggler's start).
+    * Bounded: concurrent jobs may keep tasks running. Best effort: the
+    * write's own failure is what the caller sees. */
   private def dropFailedStaging(spark: SparkSession, dir: Path): Unit = {
     def attempt(body: => Unit): Unit =
       try body catch { case scala.util.control.NonFatal(_) => () }
-    attempt(deleteRecursively(dir))
     val tracker = spark.sparkContext.statusTracker
     val deadline = System.currentTimeMillis() + 5000
-    attempt(while (tracker.getExecutorInfos.exists(_.numRunningTasks > 0) &&
-        System.currentTimeMillis() < deadline) Thread.sleep(20))
+    def pastDeadline = System.currentTimeMillis() >= deadline
+    var gone = false
+    while (!gone) {
+      attempt(deleteRecursively(dir))
+      attempt(while (tracker.getExecutorInfos.exists(_.numRunningTasks > 0) &&
+          !pastDeadline) Thread.sleep(20))
+      attempt(Thread.sleep(250))
+      gone = !Files.exists(dir) || pastDeadline
+    }
     attempt(deleteRecursively(dir))
   }
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -322,16 +322,221 @@ object SimilaritySearch {
       r.getSeq[Number](1).map(_.doubleValue()).toIndexedSeq))
     .toIndexedSeq
 
+  // ————— MUTABLE STORED INDEXES: one store group per family —————
+
+  /** A stored index written before its families became store groups
+    * (meta tables, no family marker). Such a store is never read or
+    * repaired in place: rebuild it with [[ivfBuildIndexStored]] /
+    * [[pqBuildIndexStored]]. */
+  final class IndexFormatException(msg: String)
+      extends IllegalStateException(msg)
+
+  /** Whether the stored index family `group` is built, i.e. its group
+    * marker is committed. The marker carries the name the family's
+    * meta table had before the index became a store group, so a TABLE
+    * under that name with no marker is a store in that layout: it is
+    * refused typed, never read and never rebuilt from one ingest
+    * batch. A family whose first build crashed before its marker swap
+    * is simply not built, and the build re-runs. */
+  def storedIndexBuilt(store: ParquetTableStore, group: String): Boolean =
+    store.groupVersions(group).isDefined || {
+      if (store.exists(group))
+        throw new IndexFormatException(s"stored index $group predates " +
+          "index groups (a meta table, no group marker) — rebuild the index")
+      false
+    }
+
+  private def requireBuilt(store: ParquetTableStore, group: String,
+      who: String): Unit =
+    require(storedIndexBuilt(store, group),
+      s"$who: index $group not built — build it first")
+
+  /** One mutable stored index family: a codebook, a bucketed row
+    * table keyed per vector by (`neighbor_id`, generation `gen`) —
+    * IVF cell members or PQ codes — and a tombstone table
+    * (neighbor_id, dead_below), published together by ONE group
+    * marker ([[ParquetTableStore.commitGroup]]).
+    *
+    * Every writer takes the marker pin first, derives from the
+    * versions it names, makes its per-table commits, and ends with
+    * one marker swap; readers resolve the marker
+    * ([[ParquetTableStore.readGroup]]). A torn family is therefore
+    * never observable: until the swap, every reader sees the previous
+    * marker's complete snapshot, whatever a crashed writer left at the
+    * table heads. Mutations on one index must be externally serialized
+    * (the bm25 contract); the marker CAS turns a violation into a
+    * [[ConcurrentCommitException]] instead of a silent overwrite. */
+  private final case class Family(group: String, codebook: String,
+      rows: String, tombstones: String, keys: Seq[String],
+      sortWithin: Seq[String], columns: Seq[String]) {
+    def tables: Seq[String] = Seq(codebook, rows, tombstones)
+  }
+
+  private def ivfFamily(group: String, codebook: String, members: String,
+      tombstones: String): Family = Family(group, codebook, members,
+    tombstones, Seq("centroid_id"), Seq("centroid_id", "neighbor_id"),
+    Seq("centroid_id", "neighbor_id", "gen"))
+
+  private def pqFamily(group: String, codebook: String, codes: String,
+      tombstones: String): Family = Family(group, codebook, codes,
+    tombstones, Seq("neighbor_id"), Seq("neighbor_id"),
+    Seq("neighbor_id", "codes", "gen"))
+
+  /** Rows whose generation no tombstone marks dead — one
+    * tombstone-sized broadcast. */
+  private def liveRows(rows: DataFrame, tombstones: DataFrame): DataFrame =
+    rows
+      .join(broadcast(
+        tombstones.select(col("neighbor_id"), col("dead_below"))),
+        Seq("neighbor_id"), "left")
+      .filter(col("dead_below").isNull ||
+        coalesce(col("gen"), lit(0L)) >= col("dead_below"))
+      .drop("dead_below")
+
+  /** Writes on one family are serialized, so a staged or above-head
+    * dir on a member table is a crashed writer's leftover: sweep it
+    * before committing, or its version number would become ambiguous
+    * to the marker's time-travel reads. */
+  private def sweepCrashed(store: ParquetTableStore, f: Family): Unit =
+    f.tables.foreach(store.gc(_, olderThanMs = 0L))
+
+  /** (Re)build family `f`: the codebook, the rows derived from the
+    * COMMITTED codebook frame (the [[ivfIndexFrames]] single-
+    * derivation rule), an empty tombstone table, one marker swap. Every commit is
+    * replace-style, so a build over any state — a crashed mutation, a
+    * crashed build, a store in the pre-group layout (whose meta table
+    * is dropped once the marker lands) — yields a fresh index. */
+  private def buildFamily(store: ParquetTableStore, f: Family,
+      codebookDf: DataFrame, numBuckets: Int)(
+      rowsOf: DataFrame => DataFrame): Unit = {
+    val spark = codebookDf.sparkSession
+    import spark.implicits._
+    val pin = store.groupPin(f.group)
+    sweepCrashed(store, f)
+    val (cb, cv) = store.withCommitRetries()(
+      store.commit(spark, f.codebook, codebookDf))
+    store.withCommitRetries()(store.replaceBucketed(spark, f.rows,
+      rowsOf(cb), f.keys, numBuckets, f.sortWithin))
+    val (_, tv) = store.withCommitRetries()(store.commit(spark,
+      f.tombstones, Seq.empty[(Long, Long)].toDF("neighbor_id", "dead_below")))
+    store.commitGroup(Map(f.codebook -> cv,
+      f.rows -> store.currentVersion(f.rows).get, f.tombstones -> tv), pin)
+    if (store.exists(f.group)) store.dropTable(f.group)
+  }
+
+  /** The marker pin a mutation of family `f` derives from. A member
+    * head ahead of the marker is a crashed mutation's leftover,
+    * invisible to readers: the family is first rewritten from the
+    * marker snapshot ([[compactFamily]]), so a fold never builds on
+    * half-applied commits. */
+  private def pinForMutation(spark: SparkSession, store: ParquetTableStore,
+      f: Family, who: String): GroupPin = {
+    requireBuilt(store, f.group, who)
+    sweepCrashed(store, f)
+    val pin = store.groupPin(f.group)
+    if (f.tables.forall(t => store.currentVersion(t) == pin.versions.get(t)))
+      pin
+    else {
+      compactFamily(spark, store, f, pin)
+      store.groupPin(f.group)
+    }
+  }
+
+  /** Rewrite family `f` from the snapshot its marker `pin` names: live
+    * rows re-written (dead generations dropped, live generations
+    * PRESERVED so a replayed reindex stays idempotent), tombstones
+    * cleared, the codebook re-committed at the marker's version if its
+    * head moved — then one marker swap. What already matches the
+    * marker is skipped, so compacting a clean index commits nothing.
+    * No crash shape is visible through the marker, so this repairs
+    * every one of them, a crashed rebuild included. */
+  private def compactFamily(spark: SparkSession, store: ParquetTableStore,
+      f: Family, pin: GroupPin): Unit = {
+    val v = pin.versions
+    def atMarker(t: String): Boolean = store.currentVersion(t).contains(v(t))
+    val tomb = store.readVersion(spark, f.tombstones, v(f.tombstones))
+    val clean = tomb.isEmpty
+    if (!clean || !f.tables.forall(atMarker)) {
+      val cv =
+        if (atMarker(f.codebook)) v(f.codebook)
+        else store.withCommitRetries()(store.commit(spark, f.codebook,
+          store.readVersion(spark, f.codebook, v(f.codebook))))._2
+      if (!clean || !atMarker(f.rows))
+        store.withCommitRetries()(store.replaceBucketed(spark, f.rows,
+          liveRows(store.readVersion(spark, f.rows, v(f.rows)), tomb)
+            .select(f.columns.map(col): _*),
+          f.keys, store.numBuckets(f.rows).get, f.sortWithin))
+      val tv =
+        if (clean && atMarker(f.tombstones)) v(f.tombstones)
+        else store.withCommitRetries()(
+          store.commit(spark, f.tombstones, tomb.limit(0)))._2
+      store.commitGroup(Map(f.codebook -> cv,
+        f.rows -> store.currentVersion(f.rows).get, f.tombstones -> tv), pin)
+    }
+  }
+
+  /** Fold `changed` into family `f` — the delete-and-re-append path:
+    * fresh rows (`encode` of the changed vectors against the marker's
+    * codebook frame, carrying `neighbor_id` and the payload columns)
+    * append insert-only under a bumped per-id GENERATION, a tombstone
+    * marks every prior generation of those ids dead, and one marker
+    * swap publishes both. One rows scan derives the generations (the
+    * ts28 honest price of an id-keyed lookup); everything else is
+    * delta-sized. */
+  private def reindexFamily(changed: DataFrame, idCol: String,
+      store: ParquetTableStore, f: Family, who: String)(
+      encode: DataFrame => DataFrame): Unit = {
+    val spark = changed.sparkSession
+    val nDup = changed.select(col(idCol).as("id")).groupBy("id")
+      .agg(count(lit(1)).as("c")).filter(col("c") > 1).limit(1).count()
+    require(nDup == 0,
+      s"$who: changed carries duplicate $idCol values — dedup the delta " +
+        "first")
+    val pin = pinForMutation(spark, store, f, who)
+    val v = pin.versions
+    val ids = changed.select(col(idCol).cast("long").as("neighbor_id"))
+    // generations derive from EVERY row of the changed ids (dead
+    // included — the ts28 resurrect rule). PINNED: the frame feeds
+    // the rows append, the tombstone-emptiness check and the
+    // tombstone upsert, and the rows scan behind it is the fold's one
+    // corpus-sized cost (the g3 lesson)
+    val gens = store.readVersion(spark, f.rows, v(f.rows))
+      .join(ids, Seq("neighbor_id"), "left_semi")
+      .groupBy("neighbor_id")
+      .agg((max(coalesce(col("gen"), lit(0L))) + 1L).as("gen"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val fresh = encode(store.readVersion(spark, f.codebook, v(f.codebook)))
+        .join(gens, Seq("neighbor_id"), "left")
+        .withColumn("gen", coalesce(col("gen"), lit(0L)))
+        .select(f.columns.map(col): _*)
+      store.withCommitRetries()(store.appendBucketed(spark, f.rows, fresh,
+        f.keys, sortWithin = f.sortWithin))
+      val deadMarks = gens.select(col("neighbor_id").cast("long"),
+        col("gen").as("dead_below"))
+      val tv =
+        if (deadMarks.limit(1).count() == 0) v(f.tombstones)
+        else {
+          store.withCommitRetries()(store.upsert(spark, f.tombstones,
+            deadMarks, Seq("neighbor_id")))
+          store.currentVersion(f.tombstones).get
+        }
+      store.commitGroup(Map(f.codebook -> v(f.codebook),
+        f.rows -> store.currentVersion(f.rows).get, f.tombstones -> tv), pin)
+    } finally gens.unpersist(blocking = false)
+  }
+
   /** Build the MUTABLE stored IVF index — the ts28 log-structured
     * discipline ([[graft.ops.TextAnalysis.bm25ReindexDocs]]) applied
     * to the vector family, closing the gap where
     * [[ivfIndexFrames]]/[[probeStoredIvf]] are append-only and one
-    * changed embedding forces a full rebuild. Four store tables:
+    * changed embedding forces a full rebuild. One store group
+    * (`group`, see [[Family]]) over three tables:
     *
     *  - `codebookTable` (cid, cvec): the deterministic sample
-    *    codebook, PINNED at build — reindexing vectors never
-    *    retrains it (cell geometry must stay comparable across
-    *    mutations; retraining is a rebuild);
+    *    codebook, fixed at build — reindexing vectors never retrains
+    *    it (cell geometry must stay comparable across mutations;
+    *    retraining is a rebuild);
     *  - `membersTable` (centroid_id, neighbor_id, gen): UNCAPPED
     *    cell membership, bucketed by centroid_id so a probe opens
     *    only its touched cells' bucket dirs. The per-cell cap is
@@ -340,274 +545,80 @@ object SimilaritySearch {
     *    could not be maintained incrementally without re-reading the
     *    cell);
     *  - `tombstoneTable` (neighbor_id, dead_below): generations
-    *    below the mark are dead (the reindex shape);
-    *  - `metaTable` (members_version, tombstones_version,
-    *    codebook_version): commits LAST, pinning the TRIPLE —
-    *    [[ivfTopKStored]] refuses a torn state retryably. The
-    *    codebook is pinned too: a rebuild commits the codebook
-    *    before the members, and a probe racing that window (or
-    *    landing after a crash between the two) would otherwise
-    *    assign queries against the NEW codebook while matching
-    *    members built under the OLD one — silently wrong neighbors
-    *    instead of a loud refusal. Rebuilding over an EXISTING index
-    *    therefore first commits an invalidating meta row (all pins
-    *    -2, matching no version), so every probe between that point
-    *    and the final re-pin refuses retryably.
+    *    below the mark are dead (the reindex shape); a build commits
+    *    it empty.
+    *
+    * The marker names all three versions, so a probe never assigns
+    * queries against one codebook while matching members built under
+    * another, and a rebuild over an existing index needs no
+    * invalidation step: until its marker swap, probes answer from the
+    * previous index.
     *
     * Assignment is per-id independent (probes = 1 nearest centroid
     * against the fixed codebook), so incremental reassignment of
     * only the changed ids reproduces EXACTLY the membership a full
     * rebuild over the mutated corpus would compute — the identity
-    * gate ss17 pins probe ≡ rebuild bit-exactly. Mutations on one
-    * index must be externally serialized (the bm25 contract). */
+    * gate ss17 pins probe ≡ rebuild bit-exactly. */
   def ivfBuildIndexStored(corpus: DataFrame, idCol: String, vecCol: String,
       store: ParquetTableStore, numCentroids: Int,
       codebookTable: String = "ivf_codebook",
       membersTable: String = "ivf_members",
-      metaTable: String = "ivf_meta",
+      group: String = "ivf_meta",
       tombstoneTable: String = "ivf_tombstones",
-      numBuckets: Int = 32): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    // REBUILD OVER AN EXISTING INDEX: the codebook commit below lands
-    // before the members commit, and a probe in that window would mix
-    // new-codebook assignments with old-codebook members — invalidate
-    // the pins FIRST (-2 matches no version, -1 included) so every
-    // probe until the final re-pin refuses retryably instead
-    if (store.exists(metaTable))
-      store.withCommitRetries()(store.commit(spark, metaTable,
-        Seq((-2L, -2L, -2L))
-          .toDF("members_version", "tombstones_version", "codebook_version")))
-    val codebookDf = corpus
-      .select(col(idCol).cast("long").as("cid"), col(vecCol).as("cvec"))
-      .orderBy("cid").limit(numCentroids)
-    store.withCommitRetries()(store.commit(spark, codebookTable, codebookDf))
-    // the driver copy comes from the COMMITTED frame (the
-    // ivfIndexFrames single-derivation rule)
-    val codebook = codebookOf(store.read(spark, codebookTable))
-    val members = Ivf.assignmentsWithCodebook(corpus, idCol, vecCol,
-      codebook, probes = 1)
-      .select(col("centroid_id"), col("id").as("neighbor_id"),
-        lit(0L).as("gen"))
-    store.withCommitRetries()(store.replaceBucketed(spark, membersTable,
-      members, Seq("centroid_id"), numBuckets,
-      sortWithin = Seq("centroid_id", "neighbor_id")))
-    // REBUILD OVER A MUTATED STORE: standing tombstones from a prior
-    // reindex would mark the fresh gen-0 members dead (dead_below >=
-    // 1 kills them all) and leave the meta pin torn forever — clear
-    // the table and pin its NEW version. Every commit here is
-    // replace-style, so a rebuild that crashes anywhere is repaired
-    // by re-running the rebuild (the pins refuse probes in between).
-    val tv =
-      if (store.exists(tombstoneTable)) {
-        store.withCommitRetries()(store.commit(spark, tombstoneTable,
-          store.read(spark, tombstoneTable).filter(lit(false))))
-        store.currentVersion(tombstoneTable).get
-      } else -1L
-    val mv = store.currentVersion(membersTable).get
-    val cv = store.currentVersion(codebookTable).get
-    store.withCommitRetries()(store.commit(spark, metaTable,
-      Seq((mv, tv, cv))
-        .toDF("members_version", "tombstones_version", "codebook_version")))
-    ()
-  }
+      numBuckets: Int = 32): Unit =
+    buildFamily(store,
+      ivfFamily(group, codebookTable, membersTable, tombstoneTable),
+      corpus.select(col(idCol).cast("long").as("cid"), col(vecCol).as("cvec"))
+        .orderBy("cid").limit(numCentroids), numBuckets) { cb =>
+      Ivf.assignmentsWithCodebook(corpus, idCol, vecCol, codebookOf(cb),
+        probes = 1)
+        .select(col("centroid_id"), col("id").as("neighbor_id"),
+          lit(0L).as("gen"))
+    }
 
-  /** REINDEX CHANGED VECTORS in the stored IVF index — the
-    * delete-and-re-append path: new cell assignments append
-    * insert-only under a bumped per-id GENERATION, a tombstone row
-    * marks every prior generation of that id dead, and the meta
-    * frame re-pins both versions LAST. One members scan derives the
-    * generations (the ts28 honest price of an id-keyed lookup in a
-    * cell-keyed artifact); everything else is delta-sized. A torn
-    * starting state (meta pins behind the live versions — a prior
-    * mutation crashed between commits) is refused loudly:
-    * [[ivfCompactIndex]] repairs the recoverable shapes. */
+  /** REINDEX CHANGED VECTORS in the stored IVF index: new cell
+    * assignments against the marker's codebook append under a bumped
+    * per-id generation, tombstones mark the prior generations dead,
+    * one marker swap publishes both ([[reindexFamily]]). A crashed
+    * earlier mutation is repaired from the marker snapshot first. */
   def ivfReindexVectors(changed: DataFrame, idCol: String, vecCol: String,
       store: ParquetTableStore,
       codebookTable: String = "ivf_codebook",
       membersTable: String = "ivf_members",
       tombstoneTable: String = "ivf_tombstones",
-      metaTable: String = "ivf_meta"): Unit = {
-    val spark = changed.sparkSession
-    import spark.implicits._
-    require(store.exists(codebookTable) && store.exists(membersTable) &&
-      store.exists(metaTable),
-      s"ivfReindexVectors: index ($codebookTable, $membersTable, " +
-        s"$metaTable) not built — run ivfBuildIndexStored first")
-    val nDup = changed.select(col(idCol).as("id")).groupBy("id")
-      .agg(count(lit(1)).as("c")).filter(col("c") > 1).limit(1).count()
-    require(nDup == 0,
-      s"ivfReindexVectors: changed carries duplicate $idCol values — " +
-        "dedup the delta first")
-    checkIvfPins(spark, store, membersTable, tombstoneTable, codebookTable,
-      metaTable, "ivfReindexVectors")
-    val ids = changed.select(col(idCol).as("neighbor_id"))
-    // generations derive from EVERY row of the changed ids (dead
-    // included — the ts28 resurrect rule). PINNED: the frame feeds
-    // the members append, the tombstone-emptiness check, and the
-    // tombstone upsert — unpinned, the members scan behind it would
-    // re-run per action (the g3 lesson; reads stay consistent either
-    // way because version dirs are immutable, but the scan is the
-    // fold's one corpus-sized cost and must be paid once)
-    val gens = store.read(spark, membersTable)
-      .join(ids, Seq("neighbor_id"), "left_semi")
-      .groupBy("neighbor_id")
-      .agg((max(coalesce(col("gen"), lit(0L))) + 1L).as("gen"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val codebook = codebookOf(store.read(spark, codebookTable))
-      val newAssign = Ivf.assignmentsWithCodebook(changed, idCol, vecCol,
-        codebook, probes = 1)
+      group: String = "ivf_meta"): Unit =
+    reindexFamily(changed, idCol, store,
+      ivfFamily(group, codebookTable, membersTable, tombstoneTable),
+      "ivfReindexVectors") { cb =>
+      Ivf.assignmentsWithCodebook(changed, idCol, vecCol, codebookOf(cb),
+        probes = 1)
         .select(col("centroid_id"), col("id").as("neighbor_id"))
-        .join(gens, Seq("neighbor_id"), "left")
-        .select(col("centroid_id"), col("neighbor_id"),
-          coalesce(col("gen"), lit(0L)).as("gen"))
-      // commit order: members append → tombstones → meta pins LAST
-      store.withCommitRetries()(store.appendBucketed(spark, membersTable,
-        newAssign, Seq("centroid_id"),
-        sortWithin = Seq("centroid_id", "neighbor_id")))
-      val deadMarks = gens.select(col("neighbor_id"),
-        col("gen").as("dead_below"))
-      if (deadMarks.limit(1).count() > 0)
-        store.withCommitRetries()(
-          store.upsert(spark, tombstoneTable, deadMarks, Seq("neighbor_id")))
-      val mv = store.currentVersion(membersTable).get
-      val tv = store.currentVersion(tombstoneTable).getOrElse(-1L)
-      val cv = store.currentVersion(codebookTable).get
-      store.withCommitRetries()(store.commit(spark, metaTable,
-        Seq((mv, tv, cv))
-          .toDF("members_version", "tombstones_version", "codebook_version")))
-      ()
-    } finally gens.unpersist(blocking = false)
-  }
+    }
 
-  /** COMPACT the mutable stored IVF index: rewrite members keeping
-    * only live generations (PRESERVED, not reset — re-running a
-    * crashed compaction must be idempotent under the standing
-    * tombstones), clear the tombstones, re-pin meta — and thereby
-    * REPAIR any crashed-mutation state whose data is consistent.
-    * The one unrepairable shape (an id with more than one live
-    * generation — a reindex crashed between its members append and
-    * its tombstone upsert) is refused loudly with a rebuild
-    * instruction, exactly the bm25CompactIndex discipline. */
-  def ivfCompactIndex(spark: org.apache.spark.sql.SparkSession,
-      store: ParquetTableStore,
+  /** COMPACT the mutable stored IVF index: rewrite the members the
+    * marker names keeping only live generations, clear the
+    * tombstones, swap the marker ([[compactFamily]]) — which also
+    * repairs whatever a crashed build or mutation left at the heads. */
+  def ivfCompactIndex(spark: SparkSession, store: ParquetTableStore,
       membersTable: String = "ivf_members",
       tombstoneTable: String = "ivf_tombstones",
-      metaTable: String = "ivf_meta",
-      numBuckets: Int = 32,
+      group: String = "ivf_meta",
       codebookTable: String = "ivf_codebook"): Unit = {
-    import spark.implicits._
-    require(store.exists(membersTable) && store.exists(metaTable),
-      s"ivfCompactIndex: index ($membersTable, $metaTable) not built")
-    // a compaction must never "repair" a crashed REBUILD: the members
-    // were assigned under the PREVIOUS codebook, and re-pinning them
-    // against the rebuild's new codebook would bless silently-wrong
-    // probes. A rebuild-in-flight is marked by the invalidating meta
-    // row (all pins -2) or by a codebook pin behind the live codebook
-    // version — both refuse with a rebuild instruction.
-    val metaDf = store.read(spark, metaTable)
-    requireCodebookPin(metaDf, metaTable, "ivfCompactIndex")
-    metaDf.select(col("codebook_version")).limit(1).collect()
-      .headOption.foreach { p =>
-        val curC = store.currentVersion(codebookTable).getOrElse(-1L)
-        if (p.getLong(0) < -1L || p.getLong(0) != curC)
-          throw new IllegalStateException(
-            "ivfCompactIndex: a rebuild crashed mid-flight (codebook " +
-              s"pin ${p.getLong(0)} vs live $codebookTable v$curC) — " +
-              "the members were assigned under a different codebook; " +
-              "rebuild with ivfBuildIndexStored")
-      }
-    val all = store.read(spark, membersTable)
-    val tomb =
-      if (store.exists(tombstoneTable))
-        Some(store.read(spark, tombstoneTable)) else None
-    val live = tomb match {
-      case None => all
-      case Some(t) => all
-        .join(broadcast(t.select(col("neighbor_id"), col("dead_below"))),
-          Seq("neighbor_id"), "left")
-        .filter(col("dead_below").isNull ||
-          coalesce(col("gen"), lit(0L)) >= col("dead_below"))
-        .select(col("centroid_id"), col("neighbor_id"), col("gen"))
-    }
-    val dupLiveGens = live
-      .select(col("neighbor_id"), coalesce(col("gen"), lit(0L)).as("g"))
-      .distinct().groupBy("neighbor_id").agg(count(lit(1)).as("c"))
-      .filter(col("c") > 1).limit(1).count()
-    if (dupLiveGens > 0)
-      throw new IllegalStateException(
-        s"ivfCompactIndex: $membersTable carries more than one LIVE " +
-          "generation for some id — a reindex crashed between its " +
-          "members append and its tombstone upsert. Rebuild with " +
-          "ivfBuildIndexStored")
-    val hasDead = tomb.exists(_.limit(1).count() > 0)
-    if (hasDead)
-      store.withCommitRetries()(store.replaceBucketed(spark, membersTable,
-        live, Seq("centroid_id"), numBuckets,
-        sortWithin = Seq("centroid_id", "neighbor_id")))
-    tomb.foreach { t =>
-      store.withCommitRetries()(
-        store.commit(spark, tombstoneTable, t.filter(lit(false))))
-    }
-    val mv = store.currentVersion(membersTable).get
-    val tv = store.currentVersion(tombstoneTable).getOrElse(-1L)
-    val cv = store.currentVersion(codebookTable).getOrElse(
-      throw new IllegalStateException(
-        s"ivfCompactIndex: $codebookTable missing — rebuild with " +
-          "ivfBuildIndexStored"))
-    store.withCommitRetries()(store.commit(spark, metaTable,
-      Seq((mv, tv, cv))
-        .toDF("members_version", "tombstones_version", "codebook_version")))
-    ()
+    val f = ivfFamily(group, codebookTable, membersTable, tombstoneTable)
+    compactFamily(spark, store, f,
+      pinForMutation(spark, store, f, "ivfCompactIndex"))
   }
 
-  /** The shared torn-state entry guard for mutable-IVF mutations. */
-  private def checkIvfPins(spark: org.apache.spark.sql.SparkSession,
-      store: ParquetTableStore, membersTable: String,
-      tombstoneTable: String, codebookTable: String, metaTable: String,
-      who: String): Unit = {
-    val meta = store.read(spark, metaTable)
-    requireCodebookPin(meta, metaTable, who)
-    meta
-      .select(col("members_version"), col("tombstones_version"),
-        col("codebook_version"))
-      .limit(1).collect().headOption.foreach { p =>
-      val curM = store.currentVersion(membersTable).getOrElse(-1L)
-      val curT = store.currentVersion(tombstoneTable).getOrElse(-1L)
-      val curC = store.currentVersion(codebookTable).getOrElse(-1L)
-      if (p.getLong(0) != curM || p.getLong(1) != curT ||
-          p.getLong(2) != curC)
-        throw new IllegalStateException(
-          s"$who: index torn — $metaTable pins members " +
-            s"v${p.getLong(0)}/tombstones v${p.getLong(1)}/codebook " +
-            s"v${p.getLong(2)} but the tables are at " +
-            s"v$curM/v$curT/v$curC; a prior mutation crashed between " +
-            "commits. Run ivfCompactIndex to repair, or " +
-            "ivfBuildIndexStored to rebuild")
-    }
-  }
-
-  /** A meta frame that predates codebook pinning can't prove the
-    * codebook matches the members — refuse rather than guess (the
-    * checkStoredN legacy discipline). */
-  private def requireCodebookPin(meta: DataFrame, metaTable: String,
-      who: String): Unit =
-    if (!meta.columns.contains("codebook_version"))
-      throw new IllegalStateException(
-        s"$who: $metaTable predates codebook pinning — rebuild the " +
-          "index with ivfBuildIndexStored to upgrade it")
-
-  /** Probe the MUTABLE stored IVF index: assign ONLY the query
-    * batch, open ONLY the touched cells' bucket dirs
-    * ([[ParquetTableStore.readBucketsOf]] — directory-level pruning,
-    * the bm25TopKStored shape), drop reindexed-away generations with
-    * one tombstone-sized broadcast, apply the per-cell cap over the
-    * LIVE rows, exact-cosine rank. `candidates` supplies the scoring
-    * vectors (the caller's corpus table — pass the MUTATED corpus
-    * after a reindex). Refuses a torn index state retryably via the
-    * meta pins. Bit-identical to a from-scratch capped IVF probe
-    * over the same corpus with the same (pinned) codebook. */
+  /** Probe the MUTABLE stored IVF index at its marker: assign ONLY the
+    * query batch, open ONLY the touched cells' bucket dirs
+    * ([[ParquetTableStore.readBucketsOf]] at the marker's members
+    * version — directory-level pruning, the bm25TopKStored shape),
+    * drop reindexed-away generations with one tombstone-sized
+    * broadcast, apply the per-cell cap over the LIVE rows,
+    * exact-cosine rank. `candidates` supplies the scoring vectors
+    * (the caller's corpus table — pass the MUTATED corpus after a
+    * reindex). Bit-identical to a from-scratch capped IVF probe over
+    * the same corpus with the same build-time codebook. */
   def ivfTopKStored(queries: DataFrame, candidates: DataFrame,
       idCol: String, vecCol: String, store: ParquetTableStore, k: Int,
       probes: Int = 4, cellCap: Int = 10000,
@@ -615,88 +626,49 @@ object SimilaritySearch {
       codebookTable: String = "ivf_codebook",
       membersTable: String = "ivf_members",
       tombstoneTable: String = "ivf_tombstones",
-      metaTable: String = "ivf_meta"): DataFrame = {
+      group: String = "ivf_meta"): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
-    val (cand, _) = ivfStoredCandidates(queries, idCol, vecCol, store,
-      probes, cellCap, excludeSelfPairs, codebookTable, membersTable,
-      tombstoneTable, metaTable)
+    requireBuilt(store, group, "ivfTopKStored")
+    val cand = ivfStoredCandidates(queries, idCol, vecCol, store, probes,
+      cellCap, excludeSelfPairs, store.readGroup(queries.sparkSession, group),
+      codebookTable, membersTable, tombstoneTable)
     rankTopK(cosineScored(cand, queries, candidates, idCol, vecCol),
       "cos", k)
   }
 
-  /** The candidate-generation half of [[ivfTopKStored]] — pinned-
-    * codebook query assignment, touched-cell bucket reads, tombstone
-    * filter, live per-cell cap — returning (query_id, neighbor_id)
-    * pairs for ANY scoring tail (exact cosine, or [[ivfPqTopKStored]]'s
-    * stored-code ADC). All three version pins resolve-then-verify. */
+  /** The candidate-generation half of [[ivfTopKStored]] over a
+    * resolved group snapshot `snap` (a family marker, or the pair
+    * marker of [[ivfPqTopKStored]]): query assignment against the
+    * snapshot's codebook, touched-cell bucket reads of its members
+    * version, tombstone filter, live per-cell cap — returning
+    * (query_id, neighbor_id) pairs for ANY scoring tail (exact
+    * cosine, or [[ivfPqTopKStored]]'s stored-code ADC). */
   private def ivfStoredCandidates(queries: DataFrame, idCol: String,
       vecCol: String, store: ParquetTableStore, probes: Int,
       cellCap: Int, excludeSelfPairs: Boolean,
-      codebookTable: String, membersTable: String,
-      tombstoneTable: String, metaTable: String): (DataFrame, Long) = {
+      snap: Map[String, (DataFrame, Long)], codebookTable: String,
+      membersTable: String, tombstoneTable: String): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val (metaDf, metaV) = store.readVersioned(spark, metaTable)
-    requireCodebookPin(metaDf, metaTable, "ivfTopKStored")
-    val pins = metaDf
-      .select(col("members_version"), col("tombstones_version"),
-        col("codebook_version"))
-      .limit(1).collect().headOption.getOrElse(
-        throw new IllegalStateException(
-          s"ivfTopKStored: $metaTable is empty — rebuild the index"))
-    // resolve-then-verify on the CODEBOOK too: a probe racing a
-    // rebuild (codebook committed, members not yet) must refuse
-    // retryably, never assign queries against a codebook the members
-    // weren't built under
-    val (codebookFrame, cbv) = store.readVersioned(spark, codebookTable)
-    if (pins.getLong(2) != cbv)
-      throw new IllegalStateException(
-        s"ivf index mid-update: $metaTable pins codebook " +
-          s"v${pins.getLong(2)} but $codebookTable resolved v$cbv — " +
-          "retry after the rebuild completes")
-    val codebook = codebookOf(codebookFrame)
+    val codebook = codebookOf(snap(codebookTable)._1)
     val queryAssign = Ivf.assignmentsWithCodebook(queries, idCol, vecCol,
       codebook, probes)
       .select(col("id").as("query_id"), col("centroid_id"))
     // touched cells to the driver: ≤ |batch|·probes longs by contract
     val touched = queryAssign.select("centroid_id").distinct()
       .collect().map(_.getLong(0)).toSeq
-    val (cells, mv) = store.readBucketsOf(spark, membersTable,
-      touched.toDF("centroid_id"))
-    if (pins.getLong(0) != mv)
-      throw new IllegalStateException(
-        s"ivf index mid-update: $metaTable pins members " +
-          s"v${pins.getLong(0)} but $membersTable resolved v$mv — " +
-          "retry after the index mutation completes")
-    // resolve-then-verify (the readBucketsOf discipline): bind the
-    // tombstone frame FIRST, then compare its resolved version to the
-    // pin — a commit landing between a version pre-check and the read
-    // would otherwise mix snapshots undetected
-    val tombResolved = if (store.exists(tombstoneTable))
-      Some(store.readVersioned(spark, tombstoneTable)) else None
-    val actualTomb = tombResolved.map(_._2).getOrElse(-1L)
-    if (pins.getLong(1) != actualTomb)
-      throw new IllegalStateException(
-        s"ivf index mid-update: $metaTable pins tombstones " +
-          s"v${pins.getLong(1)} but $tombstoneTable resolved " +
-          s"v$actualTomb — retry after the reindex completes")
-    val mine = cells.filter(col("centroid_id").isin(touched: _*))
-    val live = tombResolved.map(_._1) match {
-      case None => mine
-      case Some(t) => mine
-        .join(broadcast(t.select(col("neighbor_id"), col("dead_below"))),
-          Seq("neighbor_id"), "left")
-        .filter(col("dead_below").isNull ||
-          coalesce(col("gen"), lit(0L)) >= col("dead_below"))
-    }
+    val cells = store.readBucketsOf(spark, membersTable,
+      touched.toDF("centroid_id"), snap(membersTable)._2)
+    val live = liveRows(cells.filter(col("centroid_id").isin(touched: _*)),
+      snap(tombstoneTable)._1)
     // per-cell cap over LIVE rows — the probe-time twin of
     // cappedMembers (see ivfBuildIndexStored's scaladoc)
     val capped = capPerKey(
       live.select(col("centroid_id"), col("neighbor_id")),
       Seq("centroid_id"), cellCap)
-    (queryAssign.join(capped, Seq("centroid_id"))
+    queryAssign.join(capped, Seq("centroid_id"))
       .transform(dropSelfPairs(_, excludeSelfPairs))
-      .select("query_id", "neighbor_id").distinct(), metaV)
+      .select("query_id", "neighbor_id").distinct()
   }
 
   /** AUTO PQ geometry from corpus stats — the band-miner/IVF
@@ -888,21 +860,29 @@ object SimilaritySearch {
 
   /** Driver codebook from a stored PQ codebook frame ((j, c, cvec)
     * rows — m·ks of them, small by the PQ contract): the
-    * [[codebookOf]] twin for the product-quantized family. Refuses a
-    * frame with missing or duplicate (j, c) slots — a torn or
-    * foreign artifact must never silently encode. */
-  private def pqCodebookOf(df: DataFrame, m: Int,
-      ks: Int): Array[Array[Array[Double]]] = {
-    val out = Array.ofDim[Array[Double]](m, ks)
-    df.select(col("j"), col("c"), col("cvec")).collect().foreach { r =>
-      val (j, c) = (r.getInt(0), r.getInt(1))
-      require(j >= 0 && j < m && c >= 0 && c < ks,
-        s"stored PQ codebook slot ($j,$c) outside m=$m ks=$ks")
+    * [[codebookOf]] twin for the product-quantized family. The
+    * geometry is the frame's own — m and ks from the slot ranges, dim
+    * = m × the sub-vector width — so a probe never takes it from
+    * caller arguments (the round-12 DSIR lesson: unrecorded knobs
+    * drift silently). Refuses missing or duplicate (j, c) slots and
+    * ragged sub-vectors — a torn or foreign artifact must never
+    * silently encode. */
+  private def pqCodebookOf(df: DataFrame): Array[Array[Array[Double]]] = {
+    val rows = df.select(col("j"), col("c"), col("cvec")).collect()
+      .map(r => (r.getInt(0), r.getInt(1),
+        r.getSeq[Number](2).map(_.doubleValue()).toArray))
+    require(rows.nonEmpty, "stored PQ codebook is empty")
+    val out = Array.ofDim[Array[Double]](rows.map(_._1).max + 1,
+      rows.map(_._2).max + 1)
+    rows.foreach { case (j, c, v) =>
+      require(j >= 0 && c >= 0, s"stored PQ codebook slot ($j,$c) is negative")
       require(out(j)(c) == null, s"duplicate PQ codebook slot ($j,$c)")
-      out(j)(c) = r.getSeq[Number](2).map(_.doubleValue()).toArray
+      out(j)(c) = v
     }
-    require(out.forall(_.forall(_ != null)),
-      s"stored PQ codebook is missing slots (expected ${m * ks} rows)")
+    require(out.forall(_.forall(_ != null)), "stored PQ codebook is " +
+      s"missing slots (expected ${out.length * out(0).length} rows)")
+    require(rows.map(_._3.length).distinct.length == 1,
+      "stored PQ codebook has ragged sub-vectors")
     out
   }
 
@@ -920,417 +900,188 @@ object SimilaritySearch {
     * are the only corpus representation that shuffles at 100 TB: m
     * bytes per vector), closing the gap where [[pqTopK]]'s codes are
     * derived fresh per call and one changed embedding forced a full
-    * re-encode. Four store tables:
+    * re-encode. One store group (`group`, see [[Family]]) over three
+    * tables:
     *
-    *  - `codebookTable` (j, c, cvec): the m·ks sub-codebooks, PINNED
-    *    at build — the CODEBOOK-DRIFT CONTRACT: reindexing vectors
+    *  - `codebookTable` (j, c, cvec): the m·ks sub-codebooks, fixed at
+    *    build — the CODEBOOK-DRIFT CONTRACT: reindexing vectors
     *    re-encodes them against this frozen geometry and never
     *    retrains it (codes encoded under different codebooks are not
     *    comparable — one ADC table serves one codebook). When the
     *    corpus has drifted far enough that the frozen codebook's
     *    quantization error hurts recall, that is a REBUILD
     *    ([[pqBuildIndexStored]] again), not a reindex — the same
-    *    rule as IVF cell geometry, enforced by pinning
-    *    codebook_version in the meta row;
+    *    rule as IVF cell geometry. The frame also carries the
+    *    geometry (m, ks, dim), which every reader derives from it;
     *  - `codesTable` (neighbor_id, codes, gen): the encoded corpus,
     *    bucketed by neighbor_id so a delta re-encode appends/upserts
     *    O(delta) ([[ParquetTableStore.appendBucketed]]); probes scan
     *    all buckets BY DESIGN — ADC is the linear-scan stage, at m
     *    bytes/vector;
     *  - `tombstoneTable` (neighbor_id, dead_below): generations below
-    *    the mark are dead (the reindex shape);
-    *  - `metaTable` (codes_version, tombstones_version,
-    *    codebook_version, m, ks, dim): commits LAST, pinning the
-    *    version TRIPLE plus the geometry (the round-12 DSIR lesson:
-    *    unrecorded knobs drift silently — a probe derives m/ks/dim
-    *    from the index, never from caller arguments). Rebuilding over
-    *    an existing index first commits an invalidating row (pins -2)
-    *    so probes racing the rebuild refuse retryably.
+    *    the mark are dead (the reindex shape); a build commits it
+    *    empty.
     *
     * Encoding is per-id independent (argmin against the fixed
     * codebook), so incremental re-encoding of only the changed ids
     * reproduces EXACTLY the codes a full re-encode over the mutated
-    * corpus would compute — the identity gate ss20 pins bit-exactly.
-    * Mutations on one index must be externally serialized (the bm25/
-    * ivf contract). */
+    * corpus would compute — the identity gate ss20 pins bit-exactly. */
   def pqBuildIndexStored(corpus: DataFrame, idCol: String, vecCol: String,
       store: ParquetTableStore, m: Int, ks: Int, dim: Int,
       iters: Int = 0,
       codebookTable: String = "pq_codebook",
       codesTable: String = "pq_codes",
       tombstoneTable: String = "pq_tombstones",
-      metaTable: String = "pq_meta",
+      group: String = "pq_meta",
       numBuckets: Int = 32): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    // rebuild over an existing index: invalidate the pins FIRST (the
-    // ivfBuildIndexStored discipline — the codebook commit below must
-    // never pair with the old codes under still-valid pins)
-    if (store.exists(metaTable))
-      store.withCommitRetries()(store.commit(spark, metaTable,
-        Seq((-2L, -2L, -2L, m, ks, dim)).toDF("codes_version",
-          "tombstones_version", "codebook_version", "m", "ks", "dim")))
     val cb = pqCodebook(corpus, idCol, vecCol, m, ks, dim, iters)
     val cbRows = for (j <- cb.indices; c <- cb(j).indices)
       yield (j, c, cb(j)(c).toSeq)
-    store.withCommitRetries()(store.commit(spark, codebookTable,
-      cbRows.toDF("j", "c", "cvec")))
-    // the driver copy re-derives from the COMMITTED frame (the
-    // ivfIndexFrames single-derivation rule)
-    val cbStored = pqCodebookOf(store.read(spark, codebookTable), m, ks)
-    // codes cast to nullable-element array<int>: the kernel emits
-    // non-null elements, but parquet round-trips relax nullability —
-    // canonicalizing both write paths keeps appendBucketed's strict
-    // schema check honest
-    val codes = corpus.select(col(idCol).cast("long").as("neighbor_id"),
-      pqEncodeExpr(col(vecCol), cbStored).cast("array<int>").as("codes"),
-      lit(0L).as("gen"))
-    store.withCommitRetries()(store.replaceBucketed(spark, codesTable,
-      codes, Seq("neighbor_id"), numBuckets,
-      sortWithin = Seq("neighbor_id")))
-    val tv =
-      if (store.exists(tombstoneTable)) {
-        store.withCommitRetries()(store.commit(spark, tombstoneTable,
-          store.read(spark, tombstoneTable).filter(lit(false))))
-        store.currentVersion(tombstoneTable).get
-      } else -1L
-    val kv = store.currentVersion(codesTable).get
-    val cv = store.currentVersion(codebookTable).get
-    store.withCommitRetries()(store.commit(spark, metaTable,
-      Seq((kv, tv, cv, m, ks, dim)).toDF("codes_version",
-        "tombstones_version", "codebook_version", "m", "ks", "dim")))
-    ()
+    buildFamily(store,
+      pqFamily(group, codebookTable, codesTable, tombstoneTable),
+      cbRows.toDF("j", "c", "cvec"), numBuckets) { cbFrame =>
+      // codes cast to nullable-element array<int>: the kernel emits
+      // non-null elements, but parquet round-trips relax nullability —
+      // canonicalizing both write paths keeps appendBucketed's strict
+      // schema check honest
+      corpus.select(col(idCol).cast("long").as("neighbor_id"),
+        pqEncodeExpr(col(vecCol), pqCodebookOf(cbFrame))
+          .cast("array<int>").as("codes"),
+        lit(0L).as("gen"))
+    }
   }
 
-  /** The stored-PQ meta row: version pins + geometry, plus the meta
-    * TABLE's own resolved version (`metaV`) — what the pair-level
-    * consistency check in [[ivfPqTopKStored]] verifies against the
-    * pair pin. */
-  private final case class PqMeta(codesV: Long, tombV: Long, cbV: Long,
-      m: Int, ks: Int, dim: Int, metaV: Long)
-
-  private def pqMetaOf(spark: org.apache.spark.sql.SparkSession,
-      store: ParquetTableStore, metaTable: String, who: String): PqMeta = {
-    val (meta, metaV) = store.readVersioned(spark, metaTable)
-    val p = meta.select(col("codes_version"), col("tombstones_version"),
-      col("codebook_version"), col("m"), col("ks"), col("dim"))
-      .limit(1).collect().headOption.getOrElse(
-        throw new IllegalStateException(
-          s"$who: $metaTable is empty — rebuild the index"))
-    PqMeta(p.getLong(0), p.getLong(1), p.getLong(2),
-      p.getInt(3), p.getInt(4), p.getInt(5), metaV)
-  }
-
-  /** The shared torn-state entry guard for stored-PQ mutations. */
-  private def checkPqPins(spark: org.apache.spark.sql.SparkSession,
-      store: ParquetTableStore, codesTable: String,
-      tombstoneTable: String, codebookTable: String, metaTable: String,
-      who: String): PqMeta = {
-    val meta = pqMetaOf(spark, store, metaTable, who)
-    val curK = store.currentVersion(codesTable).getOrElse(-1L)
-    val curT = store.currentVersion(tombstoneTable).getOrElse(-1L)
-    val curC = store.currentVersion(codebookTable).getOrElse(-1L)
-    if (meta.codesV != curK || meta.tombV != curT || meta.cbV != curC)
-      throw new IllegalStateException(
-        s"$who: index torn — $metaTable pins codes v${meta.codesV}/" +
-          s"tombstones v${meta.tombV}/codebook v${meta.cbV} but the " +
-          s"tables are at v$curK/v$curT/v$curC; a prior mutation " +
-          "crashed between commits. Run pqCompactIndex to repair, or " +
-          "pqBuildIndexStored to rebuild")
-    meta
-  }
-
-  /** RE-ENCODE CHANGED VECTORS in the stored PQ index — the ss17
-    * delete-and-re-append path for the code family: fresh codes
-    * append insert-only under a bumped per-id generation, a tombstone
-    * row marks every prior generation dead, the meta row re-pins
-    * LAST. Geometry (m, ks, dim) and the codebook come from the INDEX
-    * (never caller arguments — drift refuses at the pin). One codes
-    * scan derives the generations (the ts28 honest price); everything
-    * else is delta-sized. */
+  /** RE-ENCODE CHANGED VECTORS in the stored PQ index: fresh codes
+    * against the marker's codebook append under a bumped per-id
+    * generation, tombstones mark the prior generations dead, one
+    * marker swap publishes both ([[reindexFamily]]). Geometry and
+    * codebook come from the INDEX, never caller arguments. */
   def pqReindexVectors(changed: DataFrame, idCol: String, vecCol: String,
       store: ParquetTableStore,
       codebookTable: String = "pq_codebook",
       codesTable: String = "pq_codes",
       tombstoneTable: String = "pq_tombstones",
-      metaTable: String = "pq_meta"): Unit = {
-    val spark = changed.sparkSession
-    import spark.implicits._
-    require(store.exists(codebookTable) && store.exists(codesTable) &&
-      store.exists(metaTable),
-      s"pqReindexVectors: index ($codebookTable, $codesTable, " +
-        s"$metaTable) not built — run pqBuildIndexStored first")
-    val nDup = changed.select(col(idCol).as("id")).groupBy("id")
-      .agg(count(lit(1)).as("c")).filter(col("c") > 1).limit(1).count()
-    require(nDup == 0,
-      s"pqReindexVectors: changed carries duplicate $idCol values — " +
-        "dedup the delta first")
-    val meta = checkPqPins(spark, store, codesTable, tombstoneTable,
-      codebookTable, metaTable, "pqReindexVectors")
-    val ids = changed.select(col(idCol).cast("long").as("neighbor_id"))
-    // generations derive from EVERY row of the changed ids (dead
-    // included — the ts28 resurrect rule); PINNED because the frame
-    // feeds three actions (the g3 lesson)
-    val gens = store.read(spark, codesTable)
-      .join(ids, Seq("neighbor_id"), "left_semi")
-      .groupBy("neighbor_id")
-      .agg((max(coalesce(col("gen"), lit(0L))) + 1L).as("gen"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val cbStored = pqCodebookOf(store.read(spark, codebookTable),
-        meta.m, meta.ks)
-      val newCodes = changed
-        .select(col(idCol).cast("long").as("neighbor_id"),
-          pqEncodeExpr(col(vecCol), cbStored).cast("array<int>").as("codes"))
-        .join(gens, Seq("neighbor_id"), "left")
-        .select(col("neighbor_id"), col("codes"),
-          coalesce(col("gen"), lit(0L)).as("gen"))
-      // commit order: codes append → tombstones → meta pins LAST
-      store.withCommitRetries()(store.appendBucketed(spark, codesTable,
-        newCodes, Seq("neighbor_id"), sortWithin = Seq("neighbor_id")))
-      val deadMarks = gens.select(col("neighbor_id"),
-        col("gen").as("dead_below"))
-      if (deadMarks.limit(1).count() > 0)
-        store.withCommitRetries()(
-          store.upsert(spark, tombstoneTable, deadMarks, Seq("neighbor_id")))
-      val kv = store.currentVersion(codesTable).get
-      val tv = store.currentVersion(tombstoneTable).getOrElse(-1L)
-      val cv = store.currentVersion(codebookTable).get
-      store.withCommitRetries()(store.commit(spark, metaTable,
-        Seq((kv, tv, cv, meta.m, meta.ks, meta.dim)).toDF("codes_version",
-          "tombstones_version", "codebook_version", "m", "ks", "dim")))
-      ()
-    } finally gens.unpersist(blocking = false)
-  }
+      group: String = "pq_meta"): Unit =
+    reindexFamily(changed, idCol, store,
+      pqFamily(group, codebookTable, codesTable, tombstoneTable),
+      "pqReindexVectors") { cb =>
+      changed.select(col(idCol).cast("long").as("neighbor_id"),
+        pqEncodeExpr(col(vecCol), pqCodebookOf(cb))
+          .cast("array<int>").as("codes"))
+    }
 
-  /** COMPACT the mutable stored PQ index: rewrite codes keeping only
-    * live generations (preserved, not reset — idempotent re-run),
-    * clear tombstones, re-pin meta — repairing any crashed-MUTATION
-    * state whose data is consistent. Refuses the two unrepairable
-    * shapes loudly with a rebuild instruction: an id with two live
-    * generations (a reindex crashed between append and tombstone),
-    * and a crashed REBUILD (invalidated pins or a codebook pin behind
-    * the live codebook — the codes were encoded under a different
-    * codebook and must never be re-blessed). */
-  def pqCompactIndex(spark: org.apache.spark.sql.SparkSession,
-      store: ParquetTableStore,
+  /** COMPACT the mutable stored PQ index: rewrite the codes the
+    * marker names keeping only live generations, clear the
+    * tombstones, swap the marker ([[compactFamily]]) — which also
+    * repairs whatever a crashed build or mutation left at the heads. */
+  def pqCompactIndex(spark: SparkSession, store: ParquetTableStore,
       codesTable: String = "pq_codes",
       tombstoneTable: String = "pq_tombstones",
-      metaTable: String = "pq_meta",
-      numBuckets: Int = 32,
+      group: String = "pq_meta",
       codebookTable: String = "pq_codebook"): Unit = {
-    import spark.implicits._
-    require(store.exists(codesTable) && store.exists(metaTable),
-      s"pqCompactIndex: index ($codesTable, $metaTable) not built")
-    val meta = pqMetaOf(spark, store, metaTable, "pqCompactIndex")
-    val curC = store.currentVersion(codebookTable).getOrElse(-1L)
-    if (meta.cbV < -1L || meta.cbV != curC)
-      throw new IllegalStateException(
-        "pqCompactIndex: a rebuild crashed mid-flight (codebook pin " +
-          s"${meta.cbV} vs live $codebookTable v$curC) — the codes " +
-          "were encoded under a different codebook; rebuild with " +
-          "pqBuildIndexStored")
-    val all = store.read(spark, codesTable)
-    val tomb =
-      if (store.exists(tombstoneTable))
-        Some(store.read(spark, tombstoneTable)) else None
-    val live = tomb match {
-      case None => all
-      case Some(t) => all
-        .join(broadcast(t.select(col("neighbor_id"), col("dead_below"))),
-          Seq("neighbor_id"), "left")
-        .filter(col("dead_below").isNull ||
-          coalesce(col("gen"), lit(0L)) >= col("dead_below"))
-        .select(col("neighbor_id"), col("codes"), col("gen"))
-    }
-    val dupLiveGens = live
-      .select(col("neighbor_id"), coalesce(col("gen"), lit(0L)).as("g"))
-      .distinct().groupBy("neighbor_id").agg(count(lit(1)).as("c"))
-      .filter(col("c") > 1).limit(1).count()
-    if (dupLiveGens > 0)
-      throw new IllegalStateException(
-        s"pqCompactIndex: $codesTable carries more than one LIVE " +
-          "generation for some id — a reindex crashed between its " +
-          "codes append and its tombstone upsert. Rebuild with " +
-          "pqBuildIndexStored")
-    val hasDead = tomb.exists(_.limit(1).count() > 0)
-    if (hasDead)
-      store.withCommitRetries()(store.replaceBucketed(spark, codesTable,
-        live, Seq("neighbor_id"), numBuckets,
-        sortWithin = Seq("neighbor_id")))
-    tomb.foreach { t =>
-      store.withCommitRetries()(
-        store.commit(spark, tombstoneTable, t.filter(lit(false))))
-    }
-    val kv = store.currentVersion(codesTable).get
-    val tv = store.currentVersion(tombstoneTable).getOrElse(-1L)
-    store.withCommitRetries()(store.commit(spark, metaTable,
-      Seq((kv, tv, curC, meta.m, meta.ks, meta.dim)).toDF("codes_version",
-        "tombstones_version", "codebook_version", "m", "ks", "dim")))
-    ()
+    val f = pqFamily(group, codebookTable, codesTable, tombstoneTable)
+    compactFamily(spark, store, f,
+      pinForMutation(spark, store, f, "pqCompactIndex"))
   }
 
-  /** Probe the MUTABLE stored PQ index: the query batch precomputes
-    * its ADC tables against the PINNED stored codebook, the code
+  /** Probe the MUTABLE stored PQ index at its marker: the query batch
+    * precomputes its ADC tables against the stored codebook, the code
     * column streams against the broadcast batch (pqTopK's scan — no
     * vector re-attach anywhere: the index IS the corpus
     * representation), reindexed-away generations drop via one
     * tombstone-sized broadcast, distances are the j-ordered lookup
-    * fold. Geometry comes from the meta row, never the caller.
-    * Refuses a torn state retryably via the version pins
-    * (resolve-then-verify on all three tables). Bit-identical to
-    * encoding the mutated corpus from scratch against the same
-    * pinned codebook (gate ss20). */
+    * fold. Bit-identical to encoding the mutated corpus from scratch
+    * against the same build-time codebook (gate ss20). */
   def pqTopKStored(queries: DataFrame, idCol: String, vecCol: String,
       store: ParquetTableStore, k: Int,
       excludeSelfPairs: Boolean = true,
       codebookTable: String = "pq_codebook",
       codesTable: String = "pq_codes",
       tombstoneTable: String = "pq_tombstones",
-      metaTable: String = "pq_meta"): DataFrame = {
+      group: String = "pq_meta"): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
-    val spark = queries.sparkSession
-    val (live, cbStored, meta) = pqStoredLive(spark, store,
-      codebookTable, codesTable, tombstoneTable, metaTable)
+    requireBuilt(store, group, "pqTopKStored")
+    val (live, cb) = pqStoredLive(store.readGroup(queries.sparkSession, group),
+      codebookTable, codesTable, tombstoneTable)
     val qt = queries
       .select(col(idCol).cast("long").as("query_id"),
-        graft.plans.PqKernels.pqAdcTable(col(vecCol), cbStored).as("__tbl"))
+        graft.plans.PqKernels.pqAdcTable(col(vecCol), cb).as("__tbl"))
     val scored = live
       .crossJoin(broadcast(qt))
       .transform(dropSelfPairs(_, excludeSelfPairs))
       .select(col("query_id"), col("neighbor_id"),
-        adcDist(meta.m, meta.ks).as("dist"))
+        adcDist(cb.length, cb(0).length).as("dist"))
     rankTopK(scored, "dist", k, asc = true)
   }
 
-  /** The meta-checked, tombstone-filtered LIVE stored codes
-    * ((neighbor_id, codes) — dead generations dropped) plus the
-    * pinned driver codebook and geometry — the shared read half of
-    * [[pqTopKStored]] and [[ivfPqTopKStored]]. Resolve-then-verify on
-    * all three version pins. */
-  private def pqStoredLive(spark: org.apache.spark.sql.SparkSession,
-      store: ParquetTableStore, codebookTable: String, codesTable: String,
-      tombstoneTable: String, metaTable: String)
-      : (DataFrame, Array[Array[Array[Double]]], PqMeta) = {
-    val meta = pqMetaOf(spark, store, metaTable, "pqTopKStored")
-    // resolve-then-verify each table against its pin (the
-    // readBucketsOf discipline): refuse a mid-mutation state
-    val (cbFrame, cbv) = store.readVersioned(spark, codebookTable)
-    if (meta.cbV != cbv)
-      throw new IllegalStateException(
-        s"pq index mid-update: $metaTable pins codebook v${meta.cbV} " +
-          s"but $codebookTable resolved v$cbv — retry after the " +
-          "rebuild completes")
-    val (codesAll, kv) = store.readVersioned(spark, codesTable)
-    if (meta.codesV != kv)
-      throw new IllegalStateException(
-        s"pq index mid-update: $metaTable pins codes v${meta.codesV} " +
-          s"but $codesTable resolved v$kv — retry after the mutation " +
-          "completes")
-    val tombResolved = if (store.exists(tombstoneTable))
-      Some(store.readVersioned(spark, tombstoneTable)) else None
-    val actualTomb = tombResolved.map(_._2).getOrElse(-1L)
-    if (meta.tombV != actualTomb)
-      throw new IllegalStateException(
-        s"pq index mid-update: $metaTable pins tombstones " +
-          s"v${meta.tombV} but $tombstoneTable resolved v$actualTomb " +
-          "— retry after the reindex completes")
-    val cbStored = pqCodebookOf(cbFrame, meta.m, meta.ks)
-    val live = tombResolved.map(_._1) match {
-      case None => codesAll
-      case Some(t) => codesAll
-        .join(broadcast(t.select(col("neighbor_id"), col("dead_below"))),
-          Seq("neighbor_id"), "left")
-        .filter(col("dead_below").isNull ||
-          coalesce(col("gen"), lit(0L)) >= col("dead_below"))
-    }
-    (live.select(col("neighbor_id"), col("codes")), cbStored, meta)
-  }
+  /** The tombstone-filtered LIVE stored codes ((neighbor_id, codes))
+    * plus the driver codebook of a resolved group snapshot `snap` —
+    * the shared read half of [[pqTopKStored]] and [[ivfPqTopKStored]]. */
+  private def pqStoredLive(snap: Map[String, (DataFrame, Long)],
+      codebookTable: String, codesTable: String, tombstoneTable: String)
+      : (DataFrame, Array[Array[Array[Double]]]) =
+    (liveRows(snap(codesTable)._1, snap(tombstoneTable)._1)
+      .select(col("neighbor_id"), col("codes")),
+      pqCodebookOf(snap(codebookTable)._1))
 
   /** THE DEPLOYMENT PROBE, stored and mutable end to end: the stored
     * IVF index generates candidates ([[ivfStoredCandidates]] —
-    * pinned-codebook assignment, touched-cell bucket reads, live
-    * per-cell cap) and the stored PQ codes rank them by ADC — no raw
-    * corpus vector is read ANYWHERE. This is [[ivfPqTopK]]'s stored
-    * twin and the shape a 100 TB vector service actually runs: both
-    * index families mutate independently under the same log-
-    * structured discipline (fold the same delta through
-    * [[ivfReindexVectors]] AND [[pqReindexVectors]]); each probe leg
-    * verifies its own version pins, so a torn state in EITHER family
-    * refuses retryably — and the PAIR pin closes the cross-family
-    * window: a probe landing between a paired mutator's IVF fold and
-    * PQ fold would otherwise see two self-consistent families at
-    * DIFFERENT corpus states (updated candidates ranked against stale
-    * codes; fresh inserts silently dropped by the code join), so the
-    * probe also verifies both resolved meta versions against the
-    * pair-pin row [[ivfPqPairPin]] commits after BOTH folds, and
-    * refuses retryably on divergence. The candidate re-attach carries
-    * m CODE BYTES per candidate through a pinned SHUFFLE_HASH join —
-    * never floats, never a corpus broadcast. Bit-identical to a
-    * from-scratch [[ivfPqTopK]] over the mutated corpus under both
-    * pinned codebooks (gate ss21). */
+    * assignment against the stored codebook, touched-cell bucket
+    * reads, live per-cell cap) and the stored PQ codes rank them by
+    * ADC — no raw corpus vector is read ANYWHERE. This is
+    * [[ivfPqTopK]]'s stored twin and the shape a 100 TB vector
+    * service actually runs: both index families mutate independently
+    * under the same log-structured discipline (fold the same delta
+    * through [[ivfReindexVectors]] AND [[pqReindexVectors]]).
+    *
+    * Both legs read ONE snapshot: the pair marker `pairGroup`, which
+    * [[ivfPqPairPin]] commits after BOTH folds, names all six member
+    * versions. A probe landing between a paired mutator's IVF fold
+    * and its PQ fold (or after a crash between them) therefore still
+    * sees both families at the same corpus state — never updated
+    * candidates ranked against stale codes, never fresh inserts
+    * silently dropped by the code join. The candidate re-attach
+    * carries m CODE BYTES per candidate through a pinned SHUFFLE_HASH
+    * join — never floats, never a corpus broadcast. Bit-identical to
+    * a from-scratch [[ivfPqTopK]] over the mutated corpus under both
+    * build-time codebooks (gate ss21). */
   def ivfPqTopKStored(queries: DataFrame, idCol: String, vecCol: String,
       store: ParquetTableStore, k: Int, probes: Int = 4,
       cellCap: Int = 10000, excludeSelfPairs: Boolean = true,
       ivfCodebookTable: String = "ivf_codebook",
       ivfMembersTable: String = "ivf_members",
       ivfTombstoneTable: String = "ivf_tombstones",
-      ivfMetaTable: String = "ivf_meta",
+      ivfGroup: String = "ivf_meta",
       pqCodebookTable: String = "pq_codebook",
       pqCodesTable: String = "pq_codes",
       pqTombstoneTable: String = "pq_tombstones",
-      pqMetaTable: String = "pq_meta",
-      pairMetaTable: String = "ivfpq_pair_meta"): DataFrame = {
+      pqGroup: String = "pq_meta",
+      pairGroup: String = "ivfpq_pair_meta"): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
-    val spark = queries.sparkSession
-    val (cand, ivfMetaV) = ivfStoredCandidates(queries, idCol, vecCol,
-      store, probes, cellCap, excludeSelfPairs, ivfCodebookTable,
-      ivfMembersTable, ivfTombstoneTable, ivfMetaTable)
-    val (liveCodes, cbStored, meta) = pqStoredLive(spark, store,
-      pqCodebookTable, pqCodesTable, pqTombstoneTable, pqMetaTable)
-    // PAIR-LEVEL consistency: both legs resolved self-consistent
-    // states — now prove they are the SAME corpus state. The pin is
-    // a store GROUP MARKER ([[graft.ops.ParquetTableStore
-    // .commitGroup]] — one CAS over both meta versions, the
-    // generalized multi-table commit) advanced only after both
-    // folds, so a probe racing a paired mutation (or landing after a
-    // crash between the folds) sees a marker behind at least one
-    // resolved meta and refuses retryably.
-    // marker first; a store written by the pre-group-marker revision
-    // carries the pin as a one-row TABLE (ivf_meta_version,
-    // pq_meta_version) instead — honor it as a read-only fallback so
-    // existing stores keep answering, and let the next ivfPqPairPin /
-    // ingest batch migrate it to the marker (which also drops the
-    // stale table). Marker-absent AND table-absent refuses as before.
-    val pairVs = store.groupVersions(pairMetaTable).getOrElse {
-      if (store.exists(pairMetaTable)) {
-        val r = store.read(spark, pairMetaTable)
-          .select("ivf_meta_version", "pq_meta_version").head
-        Map(ivfMetaTable -> r.getLong(0), pqMetaTable -> r.getLong(1))
-      } else throw new IllegalStateException(
-        s"ivfPqTopKStored: group marker $pairMetaTable missing — the " +
-          "paired probe needs the cross-family pin committed after " +
-          "BOTH folds (ivfPqPairPin; ivfPqIngest commits it every batch)")
-    }
-    val (pinIvf, pinPq) = (pairVs.getOrElse(ivfMetaTable, -1L),
-      pairVs.getOrElse(pqMetaTable, -1L))
-    if (pinIvf != ivfMetaV || pinPq != meta.metaV)
-      throw new IllegalStateException(
-        s"ivfpq pair mid-update: marker $pairMetaTable pins " +
-          s"$ivfMetaTable v$pinIvf/$pqMetaTable v$pinPq " +
-          s"but the metas resolved v$ivfMetaV/v${meta.metaV} — the two " +
-          "families are at different corpus states (a paired mutation " +
-          "is mid-flight, or crashed between its folds); retry after " +
-          "the fold completes, or complete it and re-pin with " +
-          "ivfPqPairPin")
+    Seq(ivfGroup, pqGroup).foreach(requireBuilt(store, _, "ivfPqTopKStored"))
+    val tables = Seq(ivfCodebookTable, ivfMembersTable, ivfTombstoneTable,
+      pqCodebookTable, pqCodesTable, pqTombstoneTable)
+    if (!store.groupVersions(pairGroup)
+        .exists(vs => tables.forall(vs.contains)))
+      throw new IllegalStateException(s"ivfPqTopKStored: pair marker " +
+        s"$pairGroup does not name the six index tables — commit it with " +
+        "ivfPqPairPin once both families are built")
+    val snap = store.readGroup(queries.sparkSession, pairGroup)
+    val cand = ivfStoredCandidates(queries, idCol, vecCol, store, probes,
+      cellCap, excludeSelfPairs, snap, ivfCodebookTable, ivfMembersTable,
+      ivfTombstoneTable)
+    val (liveCodes, cb) = pqStoredLive(snap, pqCodebookTable, pqCodesTable,
+      pqTombstoneTable)
     val qt = queries
       .select(col(idCol).cast("long").as("query_id"),
-        graft.plans.PqKernels.pqAdcTable(col(vecCol), cbStored).as("__tbl"))
+        graft.plans.PqKernels.pqAdcTable(col(vecCol), cb).as("__tbl"))
     val scored = cand
       .join(liveCodes.hint("shuffle_hash"), "neighbor_id")
       .join(broadcast(qt), "query_id")
       .select(col("query_id"), col("neighbor_id"),
-        adcDist(meta.m, meta.ks).as("dist"))
+        adcDist(cb.length, cb(0).length).as("dist"))
     rankTopK(scored, "dist", k, asc = true)
   }
 
@@ -1346,11 +1097,10 @@ object SimilaritySearch {
     * cosine rerank. [[cosineScored]]'s join discipline: query side
     * broadcast by stats, corpus side pinned SHUFFLE_HASH — the
     * corpus is never broadcast and never shuffled as floats beyond
-    * the shortlist rows. Inherits the pair-pin consistency refusals
-    * (a torn or mid-update index pair refuses retryably before any
-    * rerank work). Gate ss23 pins the whole chain bit-exact against
-    * the unrolled oracle; the recall-recovery property itself is
-    * ss22's spec. */
+    * the shortlist rows. Reads the pair marker's snapshot like
+    * [[ivfPqTopKStored]]. Gate ss23 pins the whole chain bit-exact
+    * against the unrolled oracle; the recall-recovery property itself
+    * is ss22's spec. */
   def ivfPqRerankTopKStored(queries: DataFrame, vectors: DataFrame,
       idCol: String, vecCol: String, store: ParquetTableStore, k: Int,
       shortlist: Int, probes: Int = 4, cellCap: Int = 10000): DataFrame = {
@@ -1363,44 +1113,30 @@ object SimilaritySearch {
       "cos", k)
   }
 
-  /** Commit the CROSS-FAMILY pair pin for the stored IVF-PQ index:
+  /** Commit the CROSS-FAMILY pair marker for the stored IVF-PQ index:
     * one GROUP MARKER ([[graft.ops.ParquetTableStore.commitGroup]])
-    * CASed over the current versions of BOTH families' meta tables —
-    * the store's generic multi-table commit, which this pin was the
-    * round-14 bespoke prototype of. A paired mutator (both-family
-    * build, both-family reindex, a compact of either family) calls
-    * this AFTER its last family fold lands — [[ivfPqTopKStored]]
-    * refuses retryably whenever either resolved meta diverges from
-    * the marker, closing the window where each family is
-    * self-consistent but the two sit at different corpus states.
-    * [[graft.streaming.Streams.ivfPqIngest]] commits it every batch;
-    * a crash before the pin leaves probes refusing until the
-    * replayed batch re-folds (idempotently) and pins. Mutations on
-    * one index pair are externally serialized (the bm25 contract);
-    * the marker CAS turns any violation of that contract into a
-    * retryable conflict instead of a silent overwrite. */
-  def ivfPqPairPin(spark: org.apache.spark.sql.SparkSession,
-      store: ParquetTableStore,
-      ivfMetaTable: String = "ivf_meta",
-      pqMetaTable: String = "pq_meta",
-      pairMetaTable: String = "ivfpq_pair_meta"): Unit = {
-    val iv = store.currentVersion(ivfMetaTable).getOrElse(
-      throw new IllegalStateException(
-        s"ivfPqPairPin: $ivfMetaTable missing — build the IVF family first"))
-    val pv = store.currentVersion(pqMetaTable).getOrElse(
-      throw new IllegalStateException(
-        s"ivfPqPairPin: $pqMetaTable missing — build the PQ family first"))
+    * naming the six member versions both family markers name right
+    * now. A paired mutator (both-family build, both-family reindex, a
+    * compact of either family) calls this AFTER its last family fold
+    * lands; until then [[ivfPqTopKStored]] keeps answering from the
+    * previous pair snapshot. [[graft.streaming.Streams.ivfPqIngest]]
+    * commits it every batch; a crash before the pin leaves probes on
+    * the previous batch until the replayed batch re-folds
+    * (idempotently) and pins. Mutations on one index pair are
+    * externally serialized (the bm25 contract); the marker CAS turns
+    * any violation of that contract into a retryable conflict instead
+    * of a silent overwrite. */
+  def ivfPqPairPin(spark: SparkSession, store: ParquetTableStore,
+      ivfGroup: String = "ivf_meta",
+      pqGroup: String = "pq_meta",
+      pairGroup: String = "ivfpq_pair_meta"): Unit = {
+    val versions = Seq(ivfGroup, pqGroup).flatMap { g =>
+      requireBuilt(store, g, "ivfPqPairPin")
+      store.groupVersions(g).get
+    }.toMap
     store.withCommitRetries() {
-      store.commitGroup(Map(ivfMetaTable -> iv, pqMetaTable -> pv),
-        store.groupPin(pairMetaTable))
+      store.commitGroup(versions, store.groupPin(pairGroup))
     }
-    // migrate-on-pin: a store written by the pre-marker revision kept
-    // the pin as a one-row table under the same name — the marker now
-    // supersedes it ([[ivfPqTopKStored]] resolves marker-first), so
-    // drop the stale table rather than leave a lingering shadow pin
-    // that a rollback could resurrect at an old corpus state
-    if (store.exists(pairMetaTable)) store.dropTable(pairMetaTable)
-    ()
   }
 
   /** BINARY SHORTLIST-AND-RERANK — the 1-bit member of the

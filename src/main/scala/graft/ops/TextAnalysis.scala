@@ -103,17 +103,20 @@ object TextAnalysis {
     // and its subtree re-evaluates under several model branches —
     // an exchange there multiplies fixed cost, not parallelism.
     val test = Par.fanOut(test0)
-    val labeled = train.select(col(langCol).as("lang"),
-      charTrigrams(col(textCol)).as("t"))
+    // a NULL training label names no language: dropped here, so the
+    // gram model, the per-lang stats, the priors and n all agree (kept,
+    // it scored as a language with tot = 0 and won every doc made of
+    // grams no labelled language saw)
+    val labeled = train.filter(col(langCol).isNotNull)
+      .select(col(langCol).as("lang"), charTrigrams(col(textCol)).as("t"))
     // explicit isnotnull pins on the gram stream: charTrigrams never
-    // yields null grams, and a NULL train label never matched the
-    // (lang, g) scoring join or the per-lang tot join anyway (NULL ≠
-    // NULL) — the filters only make every gm consumer branch
-    // canonically EQUAL, so the train-side gram pass plans ONE
-    // exchange reused by the model join, the per-lang totals, and V
-    // (each branch re-ran the whole pass before: inferred join
-    // filters + pruned aggregate columns forked the subtrees — the
-    // ts12/ts18 mechanism, plans/r17/ts26_*)
+    // yields null grams and `labeled` carries no NULL label — the
+    // filters only make every gm consumer branch canonically EQUAL,
+    // so the train-side gram pass plans ONE exchange reused by the
+    // model join, the per-lang totals, and V (each branch re-ran the
+    // whole pass before: inferred join filters + pruned aggregate
+    // columns forked the subtrees — the ts12/ts18 mechanism,
+    // plans/r17/ts26_*)
     val tx = labeled.select(col("lang"), explode(col("t")).as("g"))
       .filter(col("lang").isNotNull && col("g").isNotNull)
     val gm = tx.groupBy("lang", "g").agg(count(lit(1)).as("c"))

@@ -4875,8 +4875,10 @@ object PipelineQueries {
     * float arithmetic enters the gate), the delta re-assigns under a
     * bumped generation with tombstones marking the old rows dead,
     * and the probe over the mutated corpus must equal a from-scratch
-    * capped IVF probe with the SAME build-pinned codebook (original
+    * capped IVF probe with the SAME build-time codebook (original
     * first-32 sample — reindexing never retrains the geometry). The
+    * index is one store group: build and reindex each end with one
+    * marker swap, and the probe reads the marker's snapshot. The
     * oracle is that rebuild twin: original anchors, mutated
     * assignments, per-cell cap over the live membership. */
   private val ss17 = QueryDef(
@@ -5099,8 +5101,10 @@ object PipelineQueries {
     * mutation discipline applied to the DEPLOYMENT index (PQ codes
     * are the only corpus representation that shuffles at 100 TB):
     * every 7th embedding is replaced (reversed — a pure permutation),
-    * the delta RE-ENCODES against the build-pinned codebook under a
-    * bumped generation with tombstones marking the old codes dead,
+    * the delta RE-ENCODES against the build-time codebook under a
+    * bumped generation with tombstones marking the old codes dead
+    * (one store group: the probe reads the marker's snapshot, and the
+    * geometry comes from the stored codebook),
     * and the probe must equal a from-scratch encode of the mutated
     * corpus against the SAME frozen codebook (the codebook-drift
     * contract: reindexing never retrains; retraining is a rebuild).
@@ -5144,8 +5148,10 @@ object PipelineQueries {
     * shape (IVF cells prune, PQ codes rank) with BOTH index families
     * in the store and BOTH mutated: the same delta (every 7th vector
     * reversed) folds through [[SimilaritySearch.ivfReindexVectors]]
-    * AND [[SimilaritySearch.pqReindexVectors]] independently, then a
-    * query batch probes through touched-cell bucket reads + live
+    * AND [[SimilaritySearch.pqReindexVectors]] independently, then
+    * [[SimilaritySearch.ivfPqPairPin]] commits the pair marker naming
+    * all six member versions, and a query batch probes that one
+    * snapshot through touched-cell bucket reads + live
     * per-cell cap + ADC over the live stored codes — NO raw corpus
     * vector is read anywhere (the index pair IS the corpus). The
     * oracle composes the two mutation oracles: ss17's cell chain
@@ -6261,8 +6267,10 @@ object PipelineQueries {
     * re-emitted reversed — the tombstone path exercised INSIDE the
     * checkpointed loop, not just by the ss17 direct call). The probe
     * over the mutated corpus must equal a from-scratch capped IVF
-    * probe with the codebook batch 1 pinned (its lowest-32 ORIGINAL
-    * vectors — updates never retrain the geometry). */
+    * probe with the codebook batch 1 built (its lowest-32 ORIGINAL
+    * vectors — updates never retrain the geometry). Each batch ends
+    * with the family's marker swap, so the probe between runs reads
+    * one complete batch state. */
   private val st10 = QueryDef(
     "st10_stream_vector_index",
     "streamed IVF build+reindex ≡ from-scratch probe over the mutated corpus",
@@ -6335,7 +6343,8 @@ object PipelineQueries {
     * AND the PQ codes, batch 2 carries inserts + updates (every 9th
     * vector of batch 1 re-emitted reversed — both tombstone paths
     * exercised inside the checkpointed loop), and the probe goes
-    * through stored cells + stored codes with no raw corpus read.
+    * through stored cells + stored codes with no raw corpus read, at
+    * the pair marker each batch commits after both folds.
     * The oracle composes the st10 cell chain (batch-1-pinned anchors,
     * mutated assignments) with the ss20 code chain (batch-1-pinned
     * sub-codebooks, mutated encodes), ADC'd over the candidates —

@@ -783,7 +783,7 @@ object Streams {
     * embedding ARRAY<FLOAT>` parquet files); the first non-empty
     * batch BUILDS the mutable stored IVF index
     * ([[graft.ops.SimilaritySearch.ivfBuildIndexStored]] — codebook
-    * PINNED from that batch's deterministic sample), every later
+    * fixed from that batch's deterministic sample), every later
     * batch folds in as
     * [[graft.ops.SimilaritySearch.ivfReindexVectors]], which handles
     * both INSERTS (new ids land at generation 0) and UPDATES
@@ -794,22 +794,24 @@ object Streams {
     * needing no ledger: a reindex is replace-by-id, not an
     * accumulate, so a replayed batch re-tombstones and re-appends
     * the SAME live membership at a higher generation — effect-
-    * idempotent. A crash inside a fold leaves the meta pins behind
-    * the table versions and the replay is refused LOUDLY
-    * (ivfReindexVectors' torn-state check); recovery is
-    * [[graft.ops.SimilaritySearch.ivfCompactIndex]] for the
-    * repairable shapes, rebuild for the one that isn't. Feed ids
-    * must be unique per batch (the reindex contract). Probes
-    * ([[graft.ops.SimilaritySearch.ivfTopKStored]]) between runs see
-    * a consistent pair via the meta pins; gate st10 pins streamed ≡
-    * from-scratch over the concatenation-with-updates. */
+    * idempotent. The index is one store group: a crash inside a fold
+    * leaves the marker at the previous batch, so probes
+    * ([[graft.ops.SimilaritySearch.ivfTopKStored]]) never see it, and
+    * the replayed fold first rewrites the family from the marker
+    * snapshot. A crashed FIRST build leaves no marker, and the replay
+    * builds again. A store in the pre-group layout (meta tables, no
+    * marker) is refused with
+    * [[graft.ops.SimilaritySearch.IndexFormatException]] — never
+    * rebuilt from one batch. Feed ids must be unique per batch (the
+    * reindex contract); gate st10 pins streamed ≡ from-scratch over
+    * the concatenation-with-updates. */
   def vectorIndexIngest(spark: SparkSession, inputDir: String,
       checkpointDir: String, store: ParquetTableStore,
       numCentroids: Int = 32,
       codebookTable: String = "ivf_codebook",
       membersTable: String = "ivf_members",
       tombstoneTable: String = "ivf_tombstones",
-      metaTable: String = "ivf_meta"): StreamingQuery = {
+      group: String = "ivf_meta"): StreamingQuery = {
     val in = spark.readStream.schema("id BIGINT, embedding ARRAY<FLOAT>")
       .parquet(inputDir)
     in.writeStream
@@ -818,14 +820,14 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (batch.limit(1).count() > 0) {
-          if (!store.exists(metaTable))
+          if (!graft.ops.SimilaritySearch.storedIndexBuilt(store, group))
             graft.ops.SimilaritySearch.ivfBuildIndexStored(batch, "id",
               "embedding", store, numCentroids, codebookTable,
-              membersTable, metaTable, tombstoneTable)
+              membersTable, group, tombstoneTable)
           else
             graft.ops.SimilaritySearch.ivfReindexVectors(batch, "id",
               "embedding", store, codebookTable, membersTable,
-              tombstoneTable, metaTable)
+              tombstoneTable, group)
         }
         ()
       }
@@ -835,29 +837,32 @@ object Streams {
   /** Streaming maintenance for the FULL deployment index —
     * [[vectorIndexIngest]]'s loop extended to BOTH stored families:
     * every batch folds the IVF cell index AND the PQ code index
-    * (first non-empty batch builds each, pinning both codebooks from
+    * (first non-empty batch builds each, fixing both codebooks from
     * that batch's deterministic samples; later batches fold inserts +
     * updates through each family's tombstone reindex in one
-    * delta-sized pass apiece). Probes between runs go through
-    * [[graft.ops.SimilaritySearch.ivfPqTopKStored]] — stored cells
-    * prune, stored codes rank, no raw corpus vector read anywhere.
+    * delta-sized pass apiece), then commits the pair marker
+    * ([[graft.ops.SimilaritySearch.ivfPqPairPin]]). Probes between
+    * runs go through [[graft.ops.SimilaritySearch.ivfPqTopKStored]] —
+    * stored cells prune, stored codes rank, no raw corpus vector read
+    * anywhere.
     *
     * Crash-replay contract (the vectorIndexIngest discipline, per
     * family): a reindex is replace-by-id, so a replayed batch
     * re-lands the same live state at higher generations — effect-
-    * idempotent with NO ledger; a crash INSIDE either family's fold
-    * leaves that family's pins behind its tables and the replay is
-    * refused LOUDLY by that family's torn-state check (repair:
-    * compact, or rebuild). A crash BETWEEN the two folds (IVF landed,
-    * PQ didn't) converges on replay: the IVF re-fold is a no-op by
-    * idempotence and the PQ fold completes. The batch is persisted
-    * across the two folds so its files scan once. Gate st14 pins
-    * streamed ≡ from-scratch IVF-PQ over the mutated corpus under
-    * both batch-1-pinned codebooks. */
+    * idempotent with NO ledger. Probes read the pair marker, which
+    * moves only after BOTH folds, so a crash anywhere in the batch —
+    * inside a fold, or between the IVF and the PQ fold — leaves
+    * probes on the previous batch; the replay repairs each family
+    * from its marker and completes the batch. Both families' layouts
+    * are checked before either folds, so a pre-group store is refused
+    * whole. The batch is persisted across the two folds so its files
+    * scan once. Gate st14 pins streamed ≡ from-scratch IVF-PQ over the
+    * mutated corpus under both batch-1 codebooks. */
   def ivfPqIngest(spark: SparkSession, inputDir: String,
       checkpointDir: String, store: ParquetTableStore,
       numCentroids: Int = 32, m: Int = 8, ks: Int = 16,
       dim: Int = 64): StreamingQuery = {
+    import graft.ops.SimilaritySearch._
     val in = spark.readStream.schema("id BIGINT, embedding ARRAY<FLOAT>")
       .parquet(inputDir)
     in.writeStream
@@ -866,24 +871,18 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (batch.limit(1).count() > 0) {
+          val Seq(ivfBuilt, pqBuilt) =
+            Seq("ivf_meta", "pq_meta").map(storedIndexBuilt(store, _))
           val b = batch.persist(
             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
-            if (!store.exists("ivf_meta"))
-              graft.ops.SimilaritySearch.ivfBuildIndexStored(b, "id",
-                "embedding", store, numCentroids)
-            else
-              graft.ops.SimilaritySearch.ivfReindexVectors(b, "id",
-                "embedding", store)
-            if (!store.exists("pq_meta"))
-              graft.ops.SimilaritySearch.pqBuildIndexStored(b, "id",
-                "embedding", store, m, ks, dim)
-            else
-              graft.ops.SimilaritySearch.pqReindexVectors(b, "id",
-                "embedding", store)
-            // pair pin LAST: probes refuse the window between the two
-            // folds (and a crash before this line) retryably
-            graft.ops.SimilaritySearch.ivfPqPairPin(spark, store)
+            if (!ivfBuilt) ivfBuildIndexStored(b, "id", "embedding", store,
+              numCentroids)
+            else ivfReindexVectors(b, "id", "embedding", store)
+            if (!pqBuilt) pqBuildIndexStored(b, "id", "embedding", store,
+              m, ks, dim)
+            else pqReindexVectors(b, "id", "embedding", store)
+            ivfPqPairPin(spark, store)
           } finally b.unpersist(blocking = false)
         }
         ()

@@ -29,12 +29,16 @@ object StageProfile {
     // the JOB's callsite (captured at submission) survives
     val jobSite = new java.util.concurrent.ConcurrentHashMap[Int, String]()
     val jobGraftSite = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    // boxed values here and in jobStartT: a missing key reads as null,
+    // so the Option fallbacks below run instead of seeing job/time 0
+    val stageJob =
+      new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Integer]()
     // job timeline: start/end wall times expose DRIVER GAPS (planning,
     // commit protocol, sidecar I/O) that per-stage metrics can't see
     val jobLines = mutable.ArrayBuffer[String]()
     val lastJobEnd = new java.util.concurrent.atomic.AtomicLong(0L)
-    val jobStartT = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val jobStartT =
+      new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
@@ -46,7 +50,8 @@ object StageProfile {
       }
       override def onJobEnd(
           je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        val st = Option(jobStartT.get(je.jobId)).getOrElse(je.time)
+        val st = Option(jobStartT.get(je.jobId)).map(_.longValue)
+          .getOrElse(je.time)
         val prev = lastJobEnd.getAndSet(je.time)
         val gap = if (prev == 0L) 0.0 else (st - prev) / 1e3
         jobLines += f"JOB ${je.jobId}%4d wall=${(je.time - st) / 1e3}%7.2fs " +

@@ -66,9 +66,10 @@ class SyncPipelineSpec extends SparkSpec {
   test("sync merges pin the snapshot they derive from: a competing writer's rows survive") {
     import spark.implicits._
     val root = tmpDir("sync-race")
-    // retention above the competitor's extra commits: the sync's work
-    // list stays a lazy frame over the videos version it read
-    val plain = new ParquetTableStore(root, keepVersions = 4)
+    // default retention: the competitor's extra videos commits would
+    // prune the version the sync's lazy work list reads, but the sync
+    // protects it with a cursor for its duration
+    val plain = new ParquetTableStore(root)
     val t1 = to_timestamp(lit("2024-02-01 00:00:00"))
     new SyncPipeline(plain, new FakeYouTubeConnector(3))
       .syncChannel(spark, "chanA", t1)
@@ -122,11 +123,13 @@ class SyncPipelineSpec extends SparkSpec {
     }
     scrapes = 0
     val t3 = to_timestamp(lit("2024-03-01 00:00:00"))
-    new SyncPipeline(new ParquetTableStore(root, keepVersions = 4, io = racingIo),
+    new SyncPipeline(new ParquetTableStore(root, io = racingIo),
       racingConnector).syncChannel(spark, "chanA", t3)
     assert(raced && scrapes == 1, s"raced=$raced scrapes=$scrapes")
     assert(plain.read(spark, "transcripts")
       .filter(col("video_id") === "inbox2").count() == 1,
       "competitor's transcript row was overwritten")
+    // the sync released its work-list cursor
+    assert(plain.cursorLag(spark, "videos").count() == 0)
   }
 }

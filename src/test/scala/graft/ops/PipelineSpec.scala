@@ -1238,6 +1238,10 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("mutable stored IVF: torn states are refused; compaction repairs the recoverable shape") {
+    // a torn state is never observable: a crashed mutation's
+    // leftovers sit at the table heads, the probe reads the marker's
+    // snapshot, and compaction — or the next mutation — rewrites the
+    // family from that snapshot
     import spark.implicits._
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id").as("id"), col("embedding"))
@@ -1250,67 +1254,76 @@ class PipelineSpec extends SparkSpec {
     SimilaritySearch.ivfReindexVectors(delta, "id", "embedding", store)
     val mutated = mutatedCorpus(e)
     val healthy = probeRows(store, mutated)
-    // crash AFTER the tombstone upsert, BEFORE the meta re-pin:
-    // tombstone version advances past the pin → mutations and probes
-    // refuse retryably, compaction repairs
-    store.upsert(spark, "ivf_tombstones",
-      Seq((9999999L, 1L)).toDF("neighbor_id", "dead_below"),
-      Seq("neighbor_id"))
-    val ex1 = intercept[IllegalStateException] {
-      SimilaritySearch.ivfReindexVectors(delta, "id", "embedding", store)
+    def plantLeftovers(): Unit = {
+      // a reindex that crashed after its tombstone upsert ...
+      store.upsert(spark, "ivf_tombstones",
+        Seq((9999999L, 1L)).toDF("neighbor_id", "dead_below"),
+        Seq("neighbor_id"))
+      // ... and one that crashed between its members append and its
+      // tombstone upsert: a second LIVE generation for id 0 (the
+      // shape compaction used to refuse as unrepairable)
+      store.appendBucketed(spark, "ivf_members",
+        Seq((0L, 0L, 5L)).toDF("centroid_id", "neighbor_id", "gen"),
+        Seq("centroid_id"))
     }
-    assert(ex1.getMessage.contains("torn"))
-    val ex2 = intercept[IllegalStateException] { probeRows(store, mutated) }
-    assert(ex2.getMessage.contains("mid-update"))
-    SimilaritySearch.ivfCompactIndex(spark, store)
-    // repaired: probe answers, tombstones cleared, answer unchanged
-    // (the planted tombstone names a nonexistent id)
+    def leftovers(): Long =
+      store.read(spark, "ivf_members").filter(col("gen") === 5L).count() +
+        store.read(spark, "ivf_tombstones")
+          .filter(col("neighbor_id") === 9999999L).count()
+    def headsAtMarker(): Boolean = store.groupVersions("ivf_meta").get
+      .forall { case (t, v) => store.currentVersion(t).contains(v) }
+    plantLeftovers()
+    assert(leftovers() == 2 && !headsAtMarker())
     assert(probeRows(store, mutated) == healthy)
+    SimilaritySearch.ivfCompactIndex(spark, store)
+    // repaired: heads are the marker's, leftovers gone, tombstones
+    // cleared, answer unchanged
+    assert(headsAtMarker() && leftovers() == 0)
     assert(store.read(spark, "ivf_tombstones").count() == 0)
-    // compaction is idempotent on a clean index
-    SimilaritySearch.ivfCompactIndex(spark, store)
     assert(probeRows(store, mutated) == healthy)
-    // the UNREPAIRABLE shape: a reindex crashed between its members
-    // append and its tombstone upsert → two live generations for one
-    // id; compaction must refuse with a rebuild instruction
-    store.appendBucketed(spark, "ivf_members",
-      Seq((0L, 0L, 5L)).toDF("centroid_id", "neighbor_id", "gen"),
-      Seq("centroid_id"))
-    val ex3 = intercept[IllegalStateException] {
-      SimilaritySearch.ivfCompactIndex(spark, store)
-    }
-    assert(ex3.getMessage.contains("Rebuild"))
+    // compaction is idempotent on a clean index: it commits nothing
+    val clean = store.groupVersions("ivf_meta").get
+    SimilaritySearch.ivfCompactIndex(spark, store)
+    assert(store.groupVersions("ivf_meta").get == clean)
+    assert(probeRows(store, mutated) == healthy)
+    // a mutation over leftovers repairs first, then folds (the
+    // replayed delta is effect-idempotent)
+    plantLeftovers()
+    SimilaritySearch.ivfReindexVectors(delta, "id", "embedding", store)
+    assert(headsAtMarker() && leftovers() == 0)
+    assert(probeRows(store, mutated) == healthy)
   }
 
   test("mutable stored IVF: a probe racing a rebuild refuses on the codebook pin") {
-    import spark.implicits._
+    // the rebuild window: a NEW codebook is committed while the
+    // members still carry old-codebook assignments. The marker still
+    // names the old codebook, so a probe answers the pre-rebuild
+    // index exactly instead of mixing the two
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id").as("id"), col("embedding"))
     val root = Scratch.tempDir("ivf-race-")
     val store = new ParquetTableStore(s"$root/store")
     SimilaritySearch.ivfBuildIndexStored(e, "id", "embedding", store,
       numCentroids = 32)
-    // simulate the rebuild window the ADVICE finding named: the
-    // rebuild invalidated the pins and committed its NEW codebook,
-    // but the members still carry OLD-codebook assignments — a probe
-    // here must refuse retryably, never answer from the mix
-    store.commit(spark, "ivf_meta",
-      Seq((-2L, -2L, -2L))
-        .toDF("members_version", "tombstones_version", "codebook_version"))
-    store.commit(spark, "ivf_codebook",
+    val before = probeRows(store, e)
+    val codebook = store.read(spark, "ivf_codebook").collect().toSet
+    def crashRebuild(): Unit = store.commit(spark, "ivf_codebook",
       e.filter(col("id") >= 500).limit(32)
         .select(col("id").as("cid"), col("embedding").as("cvec")))
-    val ex = intercept[IllegalStateException] { probeRows(store, e) }
-    assert(ex.getMessage.contains("mid-update"), ex.getMessage)
-    // compaction must not "repair" a crashed rebuild either
-    val ex2 = intercept[IllegalStateException] {
-      SimilaritySearch.ivfCompactIndex(spark, store)
-    }
-    assert(ex2.getMessage.contains("rebuild crashed"), ex2.getMessage)
-    // re-running the rebuild IS the repair
+    crashRebuild()
+    assert(store.read(spark, "ivf_codebook").collect().toSet != codebook)
+    assert(probeRows(store, e) == before)
+    // compaction repairs a crashed rebuild: the marker's codebook is
+    // re-committed at the head
+    SimilaritySearch.ivfCompactIndex(spark, store)
+    assert(store.read(spark, "ivf_codebook").collect().toSet == codebook)
+    assert(probeRows(store, e) == before)
+    // re-running the rebuild over a crashed one yields the fresh index
+    crashRebuild()
     SimilaritySearch.ivfBuildIndexStored(e, "id", "embedding", store,
       numCentroids = 32)
-    assert(probeRows(store, e).nonEmpty)
+    assert(store.read(spark, "ivf_codebook").collect().toSet == codebook)
+    assert(probeRows(store, e) == before && before.nonEmpty)
   }
 
   test("chunk-grain near-dup catches boilerplate repeats doc-grain misses (tp15 probe)") {
@@ -1464,154 +1477,152 @@ class PipelineSpec extends SparkSpec {
     SimilaritySearch.pqCompactIndex(spark, store)
     assert(pqProbeRows(store, queries) == once)
     assert(store.read(spark, "pq_tombstones").count() == 0)
-    // torn state: tombstones advanced past the pin → reindex and
-    // probe refuse retryably; compaction repairs
-    store.upsert(spark, "pq_tombstones",
-      Seq((9999999L, 1L)).toDF("neighbor_id", "dead_below"),
-      Seq("neighbor_id"))
-    val ex1 = intercept[IllegalStateException] {
-      SimilaritySearch.pqReindexVectors(delta, "id", "embedding", store)
-    }
-    assert(ex1.getMessage.contains("torn"))
-    val ex2 = intercept[IllegalStateException] { pqProbeRows(store, queries) }
-    assert(ex2.getMessage.contains("mid-update"))
-    SimilaritySearch.pqCompactIndex(spark, store)
+    def headsAtMarker(st: ParquetTableStore, group: String): Boolean =
+      st.groupVersions(group).get
+        .forall { case (t, v) => st.currentVersion(t).contains(v) }
+    def plantTombstone(st: ParquetTableStore, table: String): Unit =
+      st.upsert(spark, table,
+        Seq((9999999L, 1L)).toDF("neighbor_id", "dead_below"),
+        Seq("neighbor_id"))
+    // a crashed reindex's tombstone upsert: invisible to the probe,
+    // and the next reindex repairs from the marker before folding
+    plantTombstone(store, "pq_tombstones")
+    assert(!headsAtMarker(store, "pq_meta"))
     assert(pqProbeRows(store, queries) == once)
-    // unrepairable: two live generations for one id → rebuild
+    SimilaritySearch.pqReindexVectors(delta, "id", "embedding", store)
+    assert(headsAtMarker(store, "pq_meta"))
+    assert(store.read(spark, "pq_tombstones")
+      .filter(col("neighbor_id") === 9999999L).count() == 0)
+    assert(pqProbeRows(store, queries) == once)
+    // the shape compaction used to refuse: two live generations for
+    // one id (a reindex crashed between its append and its tombstone
+    // upsert) — invisible, and compaction now repairs it
     store.appendBucketed(spark, "pq_codes",
       store.read(spark, "pq_codes").filter(col("neighbor_id") === 0L)
         .limit(1)
         .select(col("neighbor_id"), col("codes"), lit(99L).as("gen")),
       Seq("neighbor_id"))
-    val ex3 = intercept[IllegalStateException] {
-      SimilaritySearch.pqCompactIndex(spark, store)
+    assert(pqProbeRows(store, queries) == once)
+    SimilaritySearch.pqCompactIndex(spark, store)
+    assert(headsAtMarker(store, "pq_meta"))
+    assert(store.read(spark, "pq_codes").filter(col("gen") === 99L)
+      .count() == 0)
+    assert(pqProbeRows(store, queries) == once)
+    // the COMBINED stored probe (ss21): a torn state in EITHER family
+    // is invisible through the pair marker
+    def pairStore(prefix: String): ParquetTableStore = {
+      val st = new ParquetTableStore(s"${Scratch.tempDir(prefix)}/store")
+      SimilaritySearch.ivfBuildIndexStored(e, "id", "embedding", st,
+        numCentroids = 32)
+      SimilaritySearch.pqBuildIndexStored(e, "id", "embedding", st,
+        m = 8, ks = 16, dim = 64)
+      SimilaritySearch.ivfReindexVectors(delta, "id", "embedding", st)
+      SimilaritySearch.pqReindexVectors(delta, "id", "embedding", st)
+      SimilaritySearch.ivfPqPairPin(spark, st)
+      st
     }
-    assert(ex3.getMessage.contains("Rebuild"))
-    // the COMBINED stored probe (ss21): a torn state in EITHER index
-    // family refuses retryably, each with its own family's message
-    val root3 = Scratch.tempDir("ivfpq-torn-")
-    val store3 = new ParquetTableStore(s"$root3/store")
-    SimilaritySearch.ivfBuildIndexStored(e, "id", "embedding", store3,
-      numCentroids = 32)
-    SimilaritySearch.pqBuildIndexStored(e, "id", "embedding", store3,
-      m = 8, ks = 16, dim = 64)
-    SimilaritySearch.ivfReindexVectors(delta, "id", "embedding", store3)
-    SimilaritySearch.pqReindexVectors(delta, "id", "embedding", store3)
-    SimilaritySearch.ivfPqPairPin(spark, store3)
-    val combined = SimilaritySearch.ivfPqTopKStored(queries, "id",
-      "embedding", store3, k = 5, probes = 8, cellCap = 1000)
-      .collect().toSeq
+    def combinedOf(st: ParquetTableStore) =
+      SimilaritySearch.ivfPqTopKStored(queries, "id", "embedding", st,
+        k = 5, probes = 8, cellCap = 1000).collect().toSeq
+    val store3 = pairStore("ivfpq-torn-")
+    val combined = combinedOf(store3)
     assert(combined.nonEmpty)
-    store3.upsert(spark, "pq_tombstones",
-      Seq((9999999L, 1L)).toDF("neighbor_id", "dead_below"),
-      Seq("neighbor_id"))
-    val exPq = intercept[IllegalStateException] {
-      SimilaritySearch.ivfPqTopKStored(queries, "id", "embedding",
-        store3, k = 5, probes = 8, cellCap = 1000).collect()
-    }
-    assert(exPq.getMessage.contains("pq index mid-update"), exPq.getMessage)
+    plantTombstone(store3, "pq_tombstones")
+    assert(combinedOf(store3) == combined)
+    plantTombstone(store3, "ivf_tombstones")
+    assert(combinedOf(store3) == combined)
+    // the compacts move both family markers; the pair marker still
+    // names the pre-compaction snapshot, which stays readable
     SimilaritySearch.pqCompactIndex(spark, store3)
-    store3.upsert(spark, "ivf_tombstones",
-      Seq((9999999L, 1L)).toDF("neighbor_id", "dead_below"),
-      Seq("neighbor_id"))
-    val exIvf = intercept[IllegalStateException] {
-      SimilaritySearch.ivfPqTopKStored(queries, "id", "embedding",
-        store3, k = 5, probes = 8, cellCap = 1000).collect()
-    }
-    assert(exIvf.getMessage.contains("ivf index mid-update"), exIvf.getMessage)
     SimilaritySearch.ivfCompactIndex(spark, store3)
-    // the compacts re-versioned both metas: both legs are now
-    // self-consistent, but the PAIR pin is stale — the probe must
-    // refuse at the cross-family check, not answer
-    val exPair0 = intercept[IllegalStateException] {
-      SimilaritySearch.ivfPqTopKStored(queries, "id", "embedding",
-        store3, k = 5, probes = 8, cellCap = 1000).collect()
-    }
-    assert(exPair0.getMessage.contains("pair mid-update"), exPair0.getMessage)
+    assert(combinedOf(store3) == combined)
     SimilaritySearch.ivfPqPairPin(spark, store3)
-    assert(SimilaritySearch.ivfPqTopKStored(queries, "id", "embedding",
-      store3, k = 5, probes = 8, cellCap = 1000).collect().toSeq == combined)
-    // CROSS-FAMILY tear (the ADVICE window): one family folds a new
-    // delta, the other hasn't yet — each leg is SELF-consistent, so
-    // only the pair pin can catch it; the probe must refuse rather
-    // than rank fresh candidates against stale codes
+    assert(combinedOf(store3) == combined)
+    // CROSS-FAMILY tear: one family folds a new delta, the other
+    // hasn't yet — the probe keeps answering from the previous pair
+    // snapshot instead of ranking fresh candidates against stale codes
     val delta2 = e.filter(col("id") % 11 === 0)
       .select(col("id"), reverse(col("embedding")).as("embedding"))
     SimilaritySearch.ivfReindexVectors(delta2, "id", "embedding", store3)
-    val exPair = intercept[IllegalStateException] {
-      SimilaritySearch.ivfPqTopKStored(queries, "id", "embedding",
-        store3, k = 5, probes = 8, cellCap = 1000).collect()
-    }
-    assert(exPair.getMessage.contains("pair mid-update"), exPair.getMessage)
-    // completing the PQ fold and re-pinning heals the pair
+    assert(combinedOf(store3) == combined)
+    // completing the PQ fold and re-pinning publishes the new state,
+    // equal to a clean run of both deltas
     SimilaritySearch.pqReindexVectors(delta2, "id", "embedding", store3)
     SimilaritySearch.ivfPqPairPin(spark, store3)
-    assert(SimilaritySearch.ivfPqTopKStored(queries, "id", "embedding",
-      store3, k = 5, probes = 8, cellCap = 1000).collect().nonEmpty)
+    val clean = pairStore("ivfpq-clean-")
+    SimilaritySearch.ivfReindexVectors(delta2, "id", "embedding", clean)
+    SimilaritySearch.pqReindexVectors(delta2, "id", "embedding", clean)
+    SimilaritySearch.ivfPqPairPin(spark, clean)
+    assert(combinedOf(store3) == combinedOf(clean))
+    assert(combinedOf(store3) != combined)
 
-    // crashed REBUILD (invalidated pins + fresh codebook): probe and
-    // compact refuse; re-running the rebuild repairs
+    // crashed REBUILD (a fresh codebook committed, the codes still
+    // under the old one): the probe answers the pre-rebuild index,
+    // compaction restores the marker's codebook, the rebuild completes
     val root2 = Scratch.tempDir("pq-race-")
     val store2 = new ParquetTableStore(s"$root2/store")
     SimilaritySearch.pqBuildIndexStored(e, "id", "embedding", store2,
       m = 8, ks = 16, dim = 64)
-    store2.commit(spark, "pq_meta",
-      Seq((-2L, -2L, -2L, 8, 16, 64)).toDF("codes_version",
-        "tombstones_version", "codebook_version", "m", "ks", "dim"))
-    store2.commit(spark, "pq_codebook", store2.read(spark, "pq_codebook"))
-    val ex4 = intercept[IllegalStateException] { pqProbeRows(store2, queries) }
-    assert(ex4.getMessage.contains("mid-update"), ex4.getMessage)
-    val ex5 = intercept[IllegalStateException] {
-      SimilaritySearch.pqCompactIndex(spark, store2)
-    }
-    assert(ex5.getMessage.contains("rebuild crashed"), ex5.getMessage)
+    val pre = pqProbeRows(store2, e.filter(col("id") < 10))
+    store2.commit(spark, "pq_codebook", store2.read(spark, "pq_codebook")
+      .select(col("j"), col("c"), reverse(col("cvec")).as("cvec")))
+    assert(pqProbeRows(store2, e.filter(col("id") < 10)) == pre)
+    SimilaritySearch.pqCompactIndex(spark, store2)
+    assert(headsAtMarker(store2, "pq_meta"))
+    assert(pqProbeRows(store2, e.filter(col("id") < 10)) == pre)
     SimilaritySearch.pqBuildIndexStored(e, "id", "embedding", store2,
       m = 8, ks = 16, dim = 64)
-    assert(pqProbeRows(store2, e.filter(col("id") < 10)).nonEmpty)
+    assert(pqProbeRows(store2, e.filter(col("id") < 10)) == pre)
   }
 
   test("stored pair: legacy pair-TABLE pin honored; ivfPqPairPin migrates it") {
-    // a store written by the pre-group-marker revision carries the
-    // pair pin as a one-row TABLE — the probe must answer from it
-    // (read-only fallback), and the next ivfPqPairPin must migrate it
-    // to the marker and drop the stale shadow pin
+    // a store written before the index families became store groups
+    // keeps its pins in meta tables and the pair pin in a one-row
+    // TABLE. Nothing reads them any more: probes and the pair pin
+    // refuse typed, and rebuilding both families is the migration
     import spark.implicits._
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id").as("id"), col("embedding"))
     val queries = e.filter(col("id") < 5)
-    val root = Scratch.tempDir("ivfpq-legacy-")
-    val store = new ParquetTableStore(s"$root/store")
-    SimilaritySearch.ivfBuildIndexStored(e, "id", "embedding", store,
-      numCentroids = 16)
-    SimilaritySearch.pqBuildIndexStored(e, "id", "embedding", store,
-      m = 8, ks = 16, dim = 64)
-    SimilaritySearch.ivfPqPairPin(spark, store)
-    val expected = SimilaritySearch.ivfPqTopKStored(queries, "id",
-      "embedding", store, k = 5, probes = 8, cellCap = 1000)
-      .collect().toSeq
-    // rewind to the legacy layout: marker gone, one-row table instead
-    val iv = store.currentVersion("ivf_meta").get
-    val pv = store.currentVersion("pq_meta").get
-    assert(store.dropGroup("ivfpq_pair_meta"))
-    store.commit(spark, "ivfpq_pair_meta",
-      Seq((iv, pv)).toDF("ivf_meta_version", "pq_meta_version"))
-    assert(SimilaritySearch.ivfPqTopKStored(queries, "id", "embedding",
-      store, k = 5, probes = 8, cellCap = 1000).collect().toSeq == expected,
-      "probe did not answer from the legacy pair-table pin")
-    // a STALE legacy row still refuses at the cross-family check
-    store.commit(spark, "ivfpq_pair_meta",
-      Seq((iv + 7, pv)).toDF("ivf_meta_version", "pq_meta_version"))
-    val exStale = intercept[IllegalStateException] {
-      SimilaritySearch.ivfPqTopKStored(queries, "id", "embedding",
-        store, k = 5, probes = 8, cellCap = 1000).collect()
+    def pinned(st: ParquetTableStore): Unit = {
+      SimilaritySearch.ivfBuildIndexStored(e, "id", "embedding", st,
+        numCentroids = 16)
+      SimilaritySearch.pqBuildIndexStored(e, "id", "embedding", st,
+        m = 8, ks = 16, dim = 64)
+      SimilaritySearch.ivfPqPairPin(spark, st)
     }
-    assert(exStale.getMessage.contains("pair mid-update"), exStale.getMessage)
-    // migrate-on-pin: marker re-created, shadow table dropped
-    SimilaritySearch.ivfPqPairPin(spark, store)
-    assert(store.groupVersions("ivfpq_pair_meta").isDefined)
-    assert(!store.exists("ivfpq_pair_meta"),
-      "stale legacy pair table lingered after the marker migration")
-    assert(SimilaritySearch.ivfPqTopKStored(queries, "id", "embedding",
-      store, k = 5, probes = 8, cellCap = 1000).collect().toSeq == expected)
+    def probe(st: ParquetTableStore) =
+      SimilaritySearch.ivfPqTopKStored(queries, "id", "embedding", st,
+        k = 5, probes = 8, cellCap = 1000).collect().toSeq
+    val fresh = new ParquetTableStore(
+      s"${Scratch.tempDir("ivfpq-legacy-f-")}/store")
+    pinned(fresh)
+    val expected = probe(fresh)
+    // rewind to the parent layout: markers gone, meta + pair tables
+    val store = new ParquetTableStore(
+      s"${Scratch.tempDir("ivfpq-legacy-")}/store")
+    pinned(store)
+    Seq("ivf_meta", "pq_meta", "ivfpq_pair_meta")
+      .foreach(g => assert(store.dropGroup(g)))
+    store.commit(spark, "ivf_meta", Seq((2L, 0L, 0L))
+      .toDF("members_version", "tombstones_version", "codebook_version"))
+    store.commit(spark, "pq_meta", Seq((0L, 0L, 0L, 8, 16, 64))
+      .toDF("codes_version", "tombstones_version", "codebook_version",
+        "m", "ks", "dim"))
+    store.commit(spark, "ivfpq_pair_meta",
+      Seq((0L, 0L)).toDF("ivf_meta_version", "pq_meta_version"))
+    val exProbe = intercept[SimilaritySearch.IndexFormatException](
+      probe(store))
+    assert(exProbe.getMessage.contains("rebuild"), exProbe.getMessage)
+    intercept[SimilaritySearch.IndexFormatException](
+      SimilaritySearch.ivfPqPairPin(spark, store))
+    // rebuilding both families is the migration: the meta tables go,
+    // the pair pin becomes a marker, the answer is the fresh store's
+    pinned(store)
+    assert(!store.exists("ivf_meta") && !store.exists("pq_meta"))
+    assert(store.groupVersions("ivfpq_pair_meta").get.keySet ==
+      Set("ivf_codebook", "ivf_members", "ivf_tombstones",
+        "pq_codebook", "pq_codes", "pq_tombstones"))
+    assert(probe(store) == expected && expected.nonEmpty)
   }
 }

@@ -790,6 +790,32 @@ class TextPiiSpec extends SparkSpec {
     assert(scoredLangs.getString(1) == "en")
   }
 
+  test("trigramLangId: NULL training labels are dropped, never a winning language") {
+    import spark.implicits._
+    val train = Seq(
+      (Some("en"), "the quick brown fox jumps over the lazy dog"),
+      (Some("en"), "a small boat sails across the quiet bay"),
+      (Some("fr"), "le rapide renard brun saute par dessus le chien"),
+      (Some("fr"), "un petit bateau traverse la baie calme"),
+      (None, "an unlabelled line of training text"))
+      .toDF("lang", "text")
+    // grams no labelled language saw: every language scores its prior
+    // plus the smoothed ln(1/(tot+V)) per gram. A NULL label kept as a
+    // language (tot = 0) outscored them all and answered lang = NULL
+    val got = TextAnalysis.trigramLangId(train, "lang", "text",
+      Seq((1L, "qqqqqqqqqqqqqqqq")).toDF("id", "text"), "id", "text")
+      .collect()
+    assert(got.length == 1 && Set("en", "fr").contains(got.head.getString(1)),
+      got.mkString(","))
+    // the unlabelled row changes nothing: the same language and margin
+    // as training on the labelled rows alone
+    val labelledOnly = TextAnalysis.trigramLangId(
+      train.filter(col("lang").isNotNull), "lang", "text",
+      Seq((1L, "qqqqqqqqqqqqqqqq")).toDF("id", "text"), "id", "text")
+      .collect()
+    assert(got.toSeq == labelledOnly.toSeq)
+  }
+
   test("dsirWeights: target-like docs weigh positive, off-domain negative, coverage total") {
     import spark.implicits._
     val corpus = Seq(

@@ -324,37 +324,58 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("ivfPqIngest: a crash BETWEEN the two family folds converges on replay") {
-    import spark.implicits._
     val e = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id").as("id"), col("embedding"))
-    val in = tmpDir("ivfpq-in")
-    val store = new ParquetTableStore(tmpDir("ivfpq-store"))
-    // simulate the crash window: batch 1's IVF fold landed, the PQ
-    // fold did not (the loop builds IVF first) — the replayed batch
-    // must re-fold IVF idempotently and complete the PQ build
     val b1 = e.filter(col("id") % 3 === 0)
-    graft.ops.SimilaritySearch.ivfBuildIndexStored(b1, "id", "embedding",
-      store, numCentroids = 32)
-    b1.coalesce(1).write.mode("append").parquet(in)
-    val q1 = Streams.ivfPqIngest(spark, in, tmpDir("ivfpq-ck"), store)
-    q1.awaitTermination(120000)
-    if (q1.isActive) q1.stop()
-    // both families now probe-able and consistent with a clean
-    // two-phase run on a fresh store
-    val fresh = new ParquetTableStore(tmpDir("ivfpq-fresh"))
-    graft.ops.SimilaritySearch.ivfBuildIndexStored(b1, "id", "embedding",
-      fresh, numCentroids = 32)
-    graft.ops.SimilaritySearch.pqBuildIndexStored(b1, "id", "embedding",
-      fresh, m = 8, ks = 16, dim = 64)
-    graft.ops.SimilaritySearch.ivfPqPairPin(spark, fresh)
-    val queries = b1.filter(col("id") < 30)
+    val b2 = e.filter(col("id") % 3 =!= 0)
+      .unionByName(e.filter(col("id") % 9 === 0)
+        .select(col("id"), reverse(col("embedding")).as("embedding")))
+    val queries = e.filter(col("id") < 30)
     def probe(st: ParquetTableStore) =
       graft.ops.SimilaritySearch.ivfPqTopKStored(queries, "id",
         "embedding", st, k = 5, probes = 8, cellCap = 1000)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-        .toSet
-    assert(probe(store).nonEmpty && probe(store) == probe(fresh))
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+          r.getDouble(3))).toSet
+    def ingest(st: ParquetTableStore, in: String, ck: String): Unit = {
+      val q = Streams.ivfPqIngest(spark, in, ck, st)
+      q.awaitTermination(120000)
+      if (q.isActive) q.stop()
+    }
+    // the clean two-batch run on a fresh store
+    val fresh = new ParquetTableStore(tmpDir("ivfpq-fresh"))
+    val freshIn = tmpDir("ivfpq-fresh-in")
+    val freshCk = tmpDir("ivfpq-fresh-ck")
+    b1.coalesce(1).write.mode("append").parquet(freshIn)
+    ingest(fresh, freshIn, freshCk)
+    val afterB1 = probe(fresh)
+    b2.coalesce(1).write.mode("append").parquet(freshIn)
+    ingest(fresh, freshIn, freshCk)
+    val afterB2 = probe(fresh)
+    assert(afterB1.nonEmpty && afterB2 != afterB1)
+
+    // FIRST batch crashed between the folds: IVF built, PQ not, no
+    // pair marker — the paired probe refuses, the replay (re-folding
+    // IVF idempotently) completes the build
+    val in = tmpDir("ivfpq-in")
+    val ck = tmpDir("ivfpq-ck")
+    val store = new ParquetTableStore(tmpDir("ivfpq-store"))
+    graft.ops.SimilaritySearch.ivfBuildIndexStored(b1, "id", "embedding",
+      store, numCentroids = 32)
+    intercept[IllegalArgumentException](probe(store))
+    b1.coalesce(1).write.mode("append").parquet(in)
+    ingest(store, in, ck)
+    assert(probe(store) == afterB1)
+    // SECOND batch crashed between the folds: the IVF family marker
+    // moved, the PQ one and the pair marker did not. The tear is not
+    // observable — the probe answers batch 1's pair exactly — and the
+    // replayed batch converges on the clean run
+    graft.ops.SimilaritySearch.ivfReindexVectors(b2, "id", "embedding",
+      store)
+    assert(probe(store) == afterB1)
+    b2.coalesce(1).write.mode("append").parquet(in)
+    ingest(store, in, ck)
+    assert(probe(store) == afterB2)
   }
 
   test("cdcTokenCountConsumer: replayed fold is a no-op; a cursor behind retention refuses loudly") {
