@@ -140,13 +140,16 @@ object Main {
           .withColumn("last_fetched_timestamp", current_timestamp())
           .select("video_id", "language", "transcript", "last_fetched_timestamp")
         // both merges pin to the snapshot they derive from, so a
-        // concurrent sync writing the same tables is never overwritten
-        val committedTx = SyncPipeline.mergeInto(spark, store, "transcripts")(
-          _.fold(valid)(Upserts.conditionalUpsert(_, valid,
+        // concurrent sync writing the same tables is never overwritten;
+        // the table's row count is observed on the transcripts commit
+        val (_, txRows) = SyncPipeline.mergeCounted(spark, store,
+            "transcripts") { (cur, rows) =>
+          cur.fold(valid)(Upserts.conditionalUpsert(_, valid,
             Seq("video_id")) { (inc, old) =>
             YtFunctions.hasTimestamps(inc("transcript")) ||
               !YtFunctions.hasTimestamps(old("transcript"))
-          }))
+          }).observe(rows, count(lit(1)).as("rows"))
+        }
         // the reference also inserts a minimal videos row for inbox
         // files whose video is unknown (add_transcripts.py:145-155)
         val minimalVideos = parsed.filter(col("valid"))
@@ -166,7 +169,7 @@ object Main {
         val rejected = parsed.filter(!col("valid"))
           .select("path", "reject_reason").collect()
         rejected.foreach(r => println(s"rejected ${r.getString(0)}: ${r.getString(1)}"))
-        println(s"transcripts table now has ${committedTx.count()} rows")
+        println(s"transcripts table now has ${txRows("rows")} rows")
 
       case "dedup-transcripts" =>
         // re-upload detection over the stored corpus, in the

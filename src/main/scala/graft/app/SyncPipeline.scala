@@ -1,7 +1,8 @@
 package graft.app
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.connectors.YouTubeConnector
 import graft.ops.{Expect, ParquetTableStore, Upserts}
@@ -20,10 +21,18 @@ import graft.ops.{Expect, ParquetTableStore, Upserts}
   * with per-row SQLite statements, every step here is one dataflow
   * over ALL playlists at once: the connector fan-out (the network
   * boundary) is the only per-row work, and it runs on executors.
+  *
+  * Each piece of work runs once per sync. The scrape is persisted for
+  * the sync's duration (its count materializes it; both merges and
+  * any retry read the cached rows) and released on every exit path.
+  * The report's counts are observed on the commits that write them
+  * ([[SyncPipeline.mergeCounted]]): the playlists row count on the
+  * playlists commit, adds/removes on the membership commit — no job
+  * of their own, and a retried commit reports its winning attempt.
   */
 final class SyncPipeline(store: ParquetTableStore, connector: YouTubeConnector,
     refreshDays: Int = 7) {
-  import SyncPipeline.mergeInto
+  import SyncPipeline.{mergeCounted, mergeInto}
 
   final case class SyncReport(
       playlists: Long, added: Long, removed: Long, scraped: Long)
@@ -41,24 +50,25 @@ final class SyncPipeline(store: ParquetTableStore, connector: YouTubeConnector,
     val remotePl = connector.channelPlaylists(spark, channelRef)
       .withColumn("item_count", lit(null).cast("int"))
       .withColumn("last_updated", lit(null).cast("timestamp"))
-    val playlists = mergeInto(spark, store, "playlists")(_.fold(remotePl)(
-      Upserts.upsertLastWriteWins(_, remotePl, Seq("playlist_id"))))
-    val nPlaylists = playlists.count()
+    val (playlists, plRows) = mergeCounted(spark, store, "playlists") {
+      (cur, rows) => cur.fold(remotePl)(
+        Upserts.upsertLastWriteWins(_, remotePl, Seq("playlist_id")))
+        .observe(rows, count(lit(1)).as("rows"))
+    }
+    val nPlaylists = plRows("rows").asInstanceOf[Long]
     ping(spark, playlists.select(col("playlist_id")), "started", now)
 
     // S8 + U5: reconcile memberships for every playlist in one pass
-    // (the add/remove counts are taken against the pinned base, so a
-    // retry over a competitor's version reports its own diff)
+    // (the add/remove counts are observed on the winning attempt's
+    // commit, so a retry over a competitor's version reports its own
+    // diff)
     val remote = connector.playlistContents(spark, playlists)
-    val (memberships, nAdds, nRemoves) = store.withCommitRetries() {
-      val (stored, pin) = store.readPinnedOption(spark, "playlist_videos")
-      val sync = Upserts.diffSync(stored.getOrElse(remote.limit(0)), remote,
-        Seq("playlist_id", "video_id"))
-      val nAdds = sync.adds.count()
-      val nRemoves = sync.removes.count()
-      (store.commit(spark, "playlist_videos", sync.synced,
-        Expect.Pinned(pin))._1, nAdds, nRemoves)
+    val (memberships, diff) = mergeCounted(spark, store, "playlist_videos") {
+      (cur, counts) => Upserts.diffSync(cur.getOrElse(remote.limit(0)),
+        remote, Seq("playlist_id", "video_id")).syncedCounting(counts)
     }
+    val nAdds = diff("adds").asInstanceOf[Long]
+    val nRemoves = diff("removes").asInstanceOf[Long]
 
     // U3-equivalent: refresh item_count/last_updated from the sync
     val counts = memberships.groupBy("playlist_id")
@@ -73,10 +83,11 @@ final class SyncPipeline(store: ParquetTableStore, connector: YouTubeConnector,
     }
 
     // work list: member videos never scraped or stale (U7 + J9). It
-    // stays a lazy frame over the videos version read here — the scrape
-    // and every merge retry re-evaluate it — so a cursor protects that
-    // version from pruning until the sync ends, however many commits
-    // land on videos meanwhile
+    // stays a lazy frame over the videos version read here. The scrape
+    // below is pinned and evaluated once, but a cached block evicted
+    // under memory pressure is recomputed from this plan, so a cursor
+    // protects that version from pruning until the sync ends, however
+    // many commits land on videos meanwhile
     val memberIds = memberships.select(col("video_id")).distinct()
     val videosRead =
       if (store.exists("videos")) Some(store.readVersioned(spark, "videos"))
@@ -85,6 +96,7 @@ final class SyncPipeline(store: ParquetTableStore, connector: YouTubeConnector,
     videosRead.foreach { case (_, v) =>
       store.registerCursor("videos", cursor, v)
     }
+    var scraped: Option[DataFrame] = None
     try {
       val workList = videosRead match {
         case None => memberIds
@@ -97,18 +109,24 @@ final class SyncPipeline(store: ParquetTableStore, connector: YouTubeConnector,
           fresh.unionByName(stale).distinct()
       }
 
-      // S9 + U1: scrape and upsert videos + transcripts
-      val scraped = connector.scrapeVideos(spark, workList)
+      // S9 + U1: scrape and upsert videos + transcripts. The scrape is
+      // pinned and its count materializes it, so the connector and the
+      // work-list joins run once per sync: the count, both merges (an
+      // LWW merge reads its input twice, anti-join and union side) and
+      // any merge retry read the cached rows
+      val pinned = connector.scrapeVideos(spark, workList)
         .withColumn("last_scraped_timestamp", now)
-      val nScraped = scraped.count()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      scraped = Some(pinned)
+      val nScraped = pinned.count()
       val videoCols = Seq("video_id", "title", "description", "channel",
         "publish_date", "duration_seconds", "view_count", "author",
         "channel_id", "thumbnail_url", "video_url", "last_scraped_timestamp")
-      val videosNew = scraped.select(videoCols.map(col): _*)
+      val videosNew = pinned.select(videoCols.map(col): _*)
       mergeInto(spark, store, "videos")(_.fold(videosNew)(
         Upserts.upsertLastWriteWins(_, videosNew, Seq("video_id"))))
 
-      val transcriptsNew = scraped
+      val transcriptsNew = pinned
         .select(col("video_id"), col("language"), col("transcript"),
           now.as("last_fetched_timestamp"))
         .filter(col("transcript").isNotNull)
@@ -118,7 +136,10 @@ final class SyncPipeline(store: ParquetTableStore, connector: YouTubeConnector,
       ping(spark, playlists2Committed.select(col("playlist_id")),
         "completed", now)
       SyncReport(nPlaylists, nAdds, nRemoves, nScraped)
-    } finally if (videosRead.nonEmpty) store.unregisterCursor("videos", cursor)
+    } finally {
+      scraped.foreach(_.unpersist())
+      if (videosRead.nonEmpty) store.unregisterCursor("videos", cursor)
+    }
   }
 
   /** U9: append ping events (never UPDATE; latest-status is a view).
@@ -155,4 +176,20 @@ object SyncPipeline {
       val (stored, pin) = store.readPinnedOption(spark, table)
       store.commit(spark, table, derive(stored), Expect.Pinned(pin))._1
     }
+
+  /** [[mergeInto]] that also returns metrics of the committed rows:
+    * `derive` must observe them into the [[Observation]] it is given
+    * (or this waits forever). They are collected by the commit's own
+    * write, with no job of their own, and every attempt gets a fresh
+    * Observation, so a retry reports what the winning attempt wrote. */
+  private[app] def mergeCounted(spark: SparkSession, store: ParquetTableStore,
+      table: String)(derive: (Option[DataFrame], Observation) => DataFrame)
+      : (DataFrame, Map[String, Any]) = {
+    var metrics: Observation = null
+    val committed = mergeInto(spark, store, table) { stored =>
+      metrics = Observation()
+      derive(stored, metrics)
+    }
+    (committed, metrics.get)
+  }
 }

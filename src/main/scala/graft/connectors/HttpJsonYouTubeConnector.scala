@@ -52,10 +52,12 @@ final class HttpJsonYouTubeConnector(
   private def fanOut(requests: DataFrame, idCol: String,
       fetch: String => String): DataFrame = {
     // The fetch stage is PERSISTED by contract, not as a tuning knob:
-    // its output feeds multiple downstream actions (counts + commits
-    // in SyncPipeline, payload parse + lastFailures here), and a lazy
-    // recompute would re-hit the remote origin per action — wrong for
-    // side-effectful I/O at any scale, rate-limited or not.
+    // a lazy recompute would re-hit the remote origin per action —
+    // wrong for side-effectful I/O at any scale, rate-limited or not.
+    // SyncPipeline pins its scrape itself, so what this persist serves
+    // is [[lastFailures]] (a dead-letter sink reads it after the
+    // sync's own actions) and the playlist contents, which a retried
+    // membership commit evaluates again.
     val fetched = ConnectorRuntime.fetchWithPolicy(requests, idCol, fetch,
       ratePerSecPerPartition, maxAttempts, backoffMs, sleeper = sleeper)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

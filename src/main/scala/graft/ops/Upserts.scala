@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The upsert / merge / sync operator library — SURVEY §2.5 U1–U9.
   *
@@ -11,11 +12,15 @@ import org.apache.spark.sql.functions._
   * declarative dataflow over whole snapshots:
   *
   *  - every operator is a single equi-join or window on the key
-  *    columns — exactly one shuffle at any scale, and Catalyst
-  *    broadcasts the small side automatically (incoming batches are
-  *    typically tiny vs the stored table);
-  *  - anti-join forms are preferred over windows where both express
-  *    the semantics (no sort, map-side combinable);
+  *    columns — each input row crosses at most one shuffle at any
+  *    scale, and Catalyst broadcasts the small side of a join
+  *    automatically (incoming batches are typically tiny vs the
+  *    stored table);
+  *  - anti-join forms are preferred over windows where one anti-join
+  *    expresses the semantics (no sort, map-side combinable); where
+  *    it would take several joins over the same two inputs (U5), one
+  *    window over their union replaces them, and U6 is one full outer
+  *    join rather than four;
   *  - nothing collects to the driver.
   *
   * With a transactional table format these all become MERGE INTO
@@ -87,8 +92,44 @@ object Upserts {
     stored.join(removals.select(keys.map(col): _*).dropDuplicates(keys), keys, "left_anti")
 
   /** Result of a membership diff-sync: the delta sets plus the
-    * reconciled table. */
-  final case class DiffSync(adds: DataFrame, removes: DataFrame, synced: DataFrame)
+    * reconciled table, all three filters over one tagged frame (the
+    * union of both sides, `__stored` telling them apart, `__matched`
+    * whether the row's key is present on the other side). */
+  final class DiffSync private[Upserts] (flagged: DataFrame,
+      storedSchema: StructType, remoteSchema: StructType) {
+
+    private def rows(cond: Column, schema: StructType): DataFrame =
+      flagged.filter(cond).select(
+        schema.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
+
+    /** Remote rows whose key has no stored row, in remote's columns
+      * (keys first, as an anti-join orders them). */
+    def adds: DataFrame = rows(!col("__stored") && !col("__matched"), remoteSchema)
+
+    /** Stored rows whose key has no remote row, in stored's columns
+      * (keys first). */
+    def removes: DataFrame = rows(col("__stored") && !col("__matched"), storedSchema)
+
+    /** Each retained stored row once, plus the adds, in stored's
+      * columns (keys first; types widened across the two sides, like a
+      * union). */
+    def synced: DataFrame = syncedOf(flagged)
+
+    /** [[synced]] with the adds and removes it applies counted into
+      * `counts` (metrics `adds` and `removes`) by whichever action
+      * evaluates it — the commit that writes it, with no job of its
+      * own. An [[Observation]] serves one action, so each attempt of a
+      * retried commit needs a fresh one. */
+    def syncedCounting(counts: Observation): DataFrame =
+      syncedOf(flagged.observe(counts,
+        count_if(!col("__stored") && !col("__matched")).as("adds"),
+        count_if(col("__stored") && !col("__matched")).as("removes")))
+
+    // a stored row is kept iff matched, a remote row iff unmatched
+    private def syncedOf(df: DataFrame): DataFrame =
+      df.filter(col("__stored") === col("__matched"))
+        .select(storedSchema.fieldNames.toIndexedSeq.map(col): _*)
+  }
 
   /** U5 (main_scraper.py:144-179, scrape_my_channel.py:176-226): diff
     * sync — reconcile stored membership against the remote snapshot:
@@ -96,37 +137,63 @@ object Upserts {
     * removes = stored − remote (deleted), retained rows keep their
     * stored attributes (the reference leaves existing rows untouched).
     * Equivalent to MERGE ... WHEN NOT MATCHED BY SOURCE THEN DELETE.
+    *
+    * One shuffle: both sides are tagged and unioned (by name; a column
+    * only one side has is NULL on the other), and one window over the
+    * keys flags whether each key has a row on both sides. Semantics
+    * are those of the anti/semi joins it replaces, duplicates
+    * included: every stored row of a key remote also has is retained,
+    * every remote row of a key stored lacks is an add, and a key with
+    * a NULL component never matches (its rows are adds or removes).
     */
   def diffSync(stored: DataFrame, remote: DataFrame, keys: Seq[String]): DiffSync = {
-    val adds = remote.join(stored, keys, "left_anti")
-    val removes = stored.join(remote, keys, "left_anti")
-    val retained = stored.join(remote.select(keys.map(col): _*), keys, "left_semi")
-    DiffSync(adds, removes,
-      retained.unionByName(adds.select(stored.columns.map(col): _*)))
+    val tagged = stored.withColumn("__stored", lit(true))
+      .unionByName(remote.withColumn("__stored", lit(false)),
+        allowMissingColumns = true)
+    val w = Window.partitionBy(keys.map(col): _*)
+    // both sides present ⇔ the key group holds a true AND a false tag
+    val matched = keys.map(col(_).isNotNull).reduce(_ && _) &&
+      max(col("__stored")).over(w) && !min(col("__stored")).over(w)
+    // the anti/semi joins' column order: keys first, then the rest
+    def keysFirst(s: StructType) =
+      StructType(keys.map(s(_)) ++ s.filterNot(f => keys.contains(f.name)))
+    new DiffSync(tagged.withColumn("__matched", matched),
+      keysFirst(stored.schema), keysFirst(remote.schema))
   }
 
   /** U6 (add_transcripts.py:168-195): conditional upsert — a matched
     * row is replaced only when `incomingWins(inc, old)` holds (the
     * reference: "timestamped transcripts always win"); unmatched
     * incoming rows are inserted. `inc`/`old` resolve column names on
-    * the respective side. */
+    * the respective side.
+    *
+    * One full outer join on the keys (one shuffle per side): each
+    * matched pair emits the incoming row when the predicate is true,
+    * the stored row when it is false, and nothing when it is NULL;
+    * every unmatched row of either side is kept, NULL keys included
+    * (they never match). With duplicate keys each matched pair decides
+    * on its own. Output has stored's columns; a full outer join cannot
+    * prove a column non-NULL, so every output column is nullable. */
   def conditionalUpsert(stored: DataFrame, incoming: DataFrame, keys: Seq[String])(
       incomingWins: (String => Column, String => Column) => Column): DataFrame = {
-    val inc = incoming.alias("__inc")
-    val old = stored.alias("__old")
+    // each side's columns renamed apart, plus a presence flag named
+    // like the prefix: references resolve by name, so two sides of one
+    // lineage (a self-join to the analyzer) stay unambiguous
+    def side(df: DataFrame, p: String): DataFrame =
+      df.select(df.columns.toIndexedSeq.map(c => col(c).as(s"${p}_$c")) :+
+        lit(true).as(p): _*)
+    val inc = (c: String) => col(s"__inc_$c")
+    val old = (c: String) => col(s"__old_$c")
     val cond = keys.map(k => inc(k) === old(k)).reduce(_ && _)
-    val wins = incomingWins(inc.apply, old.apply)
-    // matched & wins → incoming row; matched & !wins → stored row
-    val matchedInc = inc.join(old, cond, "inner")
-      .filter(wins).select(stored.columns.map(inc(_)): _*)
-    val matchedOldKept = old.join(inc, cond, "inner")
-      .filter(!incomingWins(inc.apply, old.apply))
-      .select(stored.columns.map(old(_)): _*)
-    val unmatchedInc = incoming.join(stored, keys, "left_anti")
-      .select(stored.columns.map(col): _*)
-    val unmatchedOld = stored.join(incoming, keys, "left_anti")
-    unmatchedOld.unionByName(matchedOldKept)
-      .unionByName(matchedInc).unionByName(unmatchedInc)
+    // true → incoming row, false → stored row, NULL → drop the pair
+    val takeInc = when(col("__old").isNull, true)
+      .when(col("__inc").isNull, false)
+      .otherwise(incomingWins(inc, old))
+    side(incoming, "__inc").join(side(stored, "__old"), cond, "full_outer")
+      .withColumn("__take", takeInc)
+      .filter(col("__take").isNotNull)
+      .select(stored.columns.toIndexedSeq.map(c =>
+        when(col("__take"), inc(c)).otherwise(old(c)).as(c)): _*)
   }
 
   /** U7 (main_scraper.py:35-36,342-356): freshness-gated work list —

@@ -1,14 +1,19 @@
 package graft.app
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.connectors.FakeYouTubeConnector
 import graft.ops.ParquetTableStore
 
-/** The ingest-docs CLI command end-to-end: two invocations over a
-  * growing inbox — the checkpoint under the store dir makes the
+/** The ingest CLI commands end-to-end. ingest-docs: two invocations
+  * over a growing inbox — the checkpoint under the store dir makes the
   * second run process only the new files, and the incremental probe
-  * keeps the corpus near-dup-free across them. */
+  * keeps the corpus near-dup-free across them. ingest-inbox: one
+  * transcript-inbox batch merged into a synced store. */
 class MainIngestSpec extends SparkSpec {
   import spark.implicits._
 
@@ -97,5 +102,69 @@ class MainIngestSpec extends SparkSpec {
     val v = store.currentVersion("corpus")
     Main.run(spark, Array("compact", root, "corpus", "1"))
     assert(store.currentVersion("corpus") == v)
+  }
+
+  test("ingest-inbox: timestamped wins, minimal videos rows, rejects, reported row count") {
+    val root = tmpDir("maininbox")
+    val inbox = tmpDir("maininbox-in")
+    val store = new ParquetTableStore(root)
+    new SyncPipeline(store, new FakeYouTubeConnector(2))
+      .syncChannel(spark, "chanA", to_timestamp(lit("2024-02-01 00:00:00")))
+    // every synced transcript is timestamped; make one of them plain
+    val Seq(plainOld, timedOld, timedOld2) = store.read(spark, "transcripts")
+      .select("video_id").collect().map(_.getString(0)).sorted.take(3).toSeq
+    store.commit(spark, "transcripts", store.read(spark, "transcripts")
+      .withColumn("transcript", when(col("video_id") === plainOld,
+        lit("plain old")).otherwise(col("transcript"))))
+    val videosBefore = store.read(spark, "videos").collect().toSet
+    val txBefore = store.read(spark, "transcripts").count()
+
+    def file(name: String, content: String): Unit =
+      Files.write(Paths.get(inbox, name), content.getBytes(StandardCharsets.UTF_8))
+    def upload(id: String, body: String, title: String = "") =
+      (if (title.nonEmpty) s"TITLE: $title\n" else "") +
+        s"URL: https://www.youtube.com/watch?v=$id\n\n$body\n"
+    file("a.txt", upload(plainOld, "plain new"))        // wins: old is plain
+    file("b.txt", upload(timedOld, "plain new"))        // loses: old is timed
+    file("c.txt", upload(timedOld2, "[00:05] timed new")) // wins: new is timed
+    file("d.txt", upload("unknownVid1", "fresh body", "Fresh Title"))
+    file("e.srt", upload("unknownVid2", "[00:01] fresh timed"))
+    file("bad-noid.txt", "TITLE: orphan\n\nno id anywhere\n")
+    file("bad-empty.vtt", "ID: emptyBody01\n\n\n")
+    file("ignored.md", upload("unknownVid3", "not an inbox extension"))
+
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(Main.run(spark, Array("ingest-inbox", root, inbox)))
+    val lines = out.toString(StandardCharsets.UTF_8).linesIterator.toSeq
+
+    val tx = store.read(spark, "transcripts").collect()
+      .map(r => r.getAs[String]("video_id") -> r).toMap
+    assert(tx(plainOld).getAs[String]("transcript").trim == "plain new")
+    assert(tx(timedOld).getAs[String]("transcript") == s"[00:01] transcript of $timedOld")
+    assert(tx(timedOld2).getAs[String]("transcript").trim == "[00:05] timed new")
+    assert(tx("unknownVid1").getAs[String]("transcript").trim == "fresh body")
+    assert(tx("unknownVid1").getAs[String]("language") == "en")
+    assert(tx("unknownVid2").getAs[String]("transcript").trim == "[00:01] fresh timed")
+    assert(tx.size == txBefore + 2 && !tx.contains("unknownVid3"))
+
+    // unknown ids get a minimal videos row; known rows stay as they were
+    val videos = store.read(spark, "videos")
+    val fresh = videos.filter(col("video_id").startsWith("unknownVid")).collect()
+      .map(r => r.getAs[String]("video_id") -> r).toMap
+    assert(fresh.keySet == Set("unknownVid1", "unknownVid2"))
+    assert(fresh("unknownVid1").getAs[String]("title") == "Fresh Title")
+    assert(fresh("unknownVid2").getAs[String]("title") == "Video unknownVid2")
+    assert(fresh("unknownVid1").getAs[String]("video_url") ==
+      "https://www.youtube.com/watch?v=unknownVid1")
+    assert(fresh("unknownVid1").isNullAt(fresh("unknownVid1").fieldIndex("view_count")))
+    assert(videos.filter(!col("video_id").startsWith("unknownVid")).collect().toSet ==
+      videosBefore)
+
+    val rejected = lines.filter(_.startsWith("rejected "))
+    assert(rejected.size == 2, s"$lines")
+    assert(rejected.exists(l => l.contains("bad-noid.txt") && l.endsWith(": no video id")))
+    assert(rejected.exists(l =>
+      l.contains("bad-empty.vtt") && l.endsWith(": no transcript content")))
+    assert(lines.last == s"transcripts table now has ${store.read(spark, "transcripts").count()} rows")
   }
 }

@@ -132,4 +132,124 @@ class SyncPipelineSpec extends SparkSpec {
     // the sync released its work-list cursor
     assert(plain.cursorLag(spark, "videos").count() == 0)
   }
+
+  /** A StoreIo that runs `competitor(table)` once per named table, at
+    * that table's first pointer swap: after the sync read and derived
+    * from its pinned snapshot, before the publish (a competitor that
+    * throws fails that publish). */
+  private def racingIo(tables: Set[String])(competitor: String => Unit): StoreIo =
+    new StoreIo {
+      private var pending = tables
+      override def swapPointer(p: Path, c: String): Unit =
+        PosixStoreIo.swapPointer(p, c)
+      override def shareFile(s: Path, d: Path): Unit =
+        PosixStoreIo.shareFile(s, d)
+      override def deletePointerIfCurrent(p: Path, e: String): Unit =
+        PosixStoreIo.deletePointerIfCurrent(p, e)
+      override def swapPointerIfCurrent(p: Path, c: String,
+          e: Option[String]): Unit = {
+        val table = p.getParent.getFileName.toString
+        if (p.getFileName.toString == "_CURRENT" && pending.contains(table)) {
+          pending -= table
+          competitor(table)
+        }
+        PosixStoreIo.swapPointerIfCurrent(p, c, e)
+      }
+    }
+
+  test("each work-list video is scraped once per sync") {
+    val evaluated = spark.sparkContext.longAccumulator("scraped rows")
+    // counts every scraped row the connector produces, however many
+    // actions evaluate the frame
+    val tick = udf { (_: String) => evaluated.add(1); true }.asNondeterministic()
+    val counting = new YouTubeConnector {
+      private val inner = new FakeYouTubeConnector(3)
+      def channelPlaylists(s: SparkSession, ref: String) =
+        inner.channelPlaylists(s, ref)
+      def playlistContents(s: SparkSession, pl: DataFrame) =
+        inner.playlistContents(s, pl)
+      def scrapeVideos(s: SparkSession, ids: DataFrame) =
+        inner.scrapeVideos(s, ids).filter(tick(col("video_id")))
+    }
+    val sc = spark.sparkContext
+    val persistedBefore = sc.getPersistentRDDs.keySet
+    val root = tmpDir("sync-once")
+    val pipe = new SyncPipeline(new ParquetTableStore(root), counting)
+    // cold, then incremental with everything stale (the path that
+    // re-read the scrape most)
+    for (day <- Seq("2024-02-01", "2024-02-14")) {
+      evaluated.reset()
+      val r = pipe.syncChannel(spark, "chanA", to_timestamp(lit(s"$day 00:00:00")))
+      assert(r.scraped == 15)
+      assert(evaluated.value == r.scraped, s"$day: ${evaluated.value} rows scraped")
+      assert(sc.getPersistentRDDs.keySet == persistedBefore, s"$day: scrape left cached")
+    }
+    // a merge that throws after the scrape still releases it (and the
+    // work-list cursor)
+    val failing = racingIo(Set("videos")) { _ =>
+      throw new IllegalStateException("injected videos publish failure")
+    }
+    evaluated.reset()
+    val e = intercept[IllegalStateException](
+      new SyncPipeline(new ParquetTableStore(root, io = failing), counting)
+        .syncChannel(spark, "chanA", to_timestamp(lit("2024-03-01 00:00:00"))))
+    assert(e.getMessage.contains("injected"))
+    assert(evaluated.value == 15)
+    assert(sc.getPersistentRDDs.keySet == persistedBefore, "failed sync left its scrape cached")
+    assert(new ParquetTableStore(root).cursorLag(spark, "videos").count() == 0)
+  }
+
+  test("report counts come from the winning attempt") {
+    import spark.implicits._
+    val t1 = to_timestamp(lit("2024-02-01 00:00:00"))
+    val t2 = to_timestamp(lit("2024-02-11 00:00:00"))
+    // the competitor: one extra playlist, and memberships with two
+    // rows gone and one bogus row added — so the winning attempt's
+    // counts differ from the first attempt's
+    def compete(store: ParquetTableStore, table: String): Unit = table match {
+      case "playlists" =>
+        val pl = store.read(spark, "playlists")
+        store.commit(spark, "playlists", pl.unionByName(
+          Seq(("PL_extra", "Extra", "https://example.invalid/PL_extra"))
+            .toDF("playlist_id", "title", "url")
+            .withColumn("item_count", lit(null).cast("int"))
+            .withColumn("last_updated", lit(null).cast("timestamp"))))
+      case "playlist_videos" =>
+        val pv = store.read(spark, "playlist_videos")
+        val gone = pv.filter(col("playlist_id") === "PL_chanA_1")
+          .orderBy("position").limit(2)
+        store.commit(spark, "playlist_videos",
+          pv.join(gone.select("video_id"), Seq("video_id"), "left_anti")
+            .unionByName(Seq(("PL_chanA_1", "vbogus00001", 99))
+              .toDF("playlist_id", "video_id", "position")))
+    }
+    def report(r: SyncPipeline#SyncReport) = (r.playlists, r.added, r.removed, r.scraped)
+
+    val rootRaced = tmpDir("sync-counts-raced")
+    val plain = new ParquetTableStore(rootRaced)
+    new SyncPipeline(plain, new FakeYouTubeConnector(3)).syncChannel(spark, "chanA", t1)
+    var raced = Set.empty[String]
+    val io = racingIo(Set("playlists", "playlist_videos")) { table =>
+      raced += table
+      compete(plain, table)
+    }
+    val racedReport = new SyncPipeline(new ParquetTableStore(rootRaced, io = io),
+      new FakeYouTubeConnector(3)).syncChannel(spark, "chanA", t2)
+    assert(raced == Set("playlists", "playlist_videos"))
+
+    // a clean sync over the competitor's state
+    val rootClean = tmpDir("sync-counts-clean")
+    val clean = new ParquetTableStore(rootClean)
+    val cleanPipe = new SyncPipeline(clean, new FakeYouTubeConnector(3))
+    cleanPipe.syncChannel(spark, "chanA", t1)
+    compete(clean, "playlists")
+    compete(clean, "playlist_videos")
+    val cleanReport = cleanPipe.syncChannel(spark, "chanA", t2)
+
+    assert(report(racedReport) == report(cleanReport))
+    // the extra playlist's 3 members and the 2 dropped rows are added,
+    // the bogus row is removed
+    assert(report(racedReport) == ((6L, 5L, 1L, 18L)), s"$racedReport")
+    assert(plain.read(spark, "playlist_videos").count() == 18)
+  }
 }
