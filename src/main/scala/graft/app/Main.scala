@@ -1,6 +1,6 @@
 package graft.app
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.connectors.FakeYouTubeConnector
@@ -66,6 +66,67 @@ object Main {
 
   private def show(df: DataFrame, n: Int = 20): Unit = df.show(n, truncate = 60)
 
+  /** The `ingest-inbox` command over `inbox`, the inbox read through
+    * the `transcript-inbox` source: LWW-merge the valid files into
+    * `transcripts` (a timestamped body wins), add a minimal `videos`
+    * row for each unknown video, and print the rejected files and the
+    * transcripts row count. The inbox is parsed once: it is persisted
+    * already hash-partitioned on `video_id`, so both merges (and any
+    * commit retry) read it without a shuffle of their own, and it is
+    * released even when a merge throws. The rejected files and the
+    * row count are observed on the transcripts commit, with no job of
+    * their own. */
+  private[app] def ingestInbox(spark: SparkSession, store: ParquetTableStore,
+      inbox: DataFrame): Unit = {
+    val parsed = inbox.repartition(col("video_id"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      // both merges pin to the snapshot they derive from, so a
+      // concurrent sync writing the same tables is never overwritten;
+      // a fresh Observation per attempt, as mergeCounted's own
+      var rejects: Observation = null
+      val (_, txRows) = SyncPipeline.mergeCounted(spark, store,
+          "transcripts") { (cur, rows) =>
+        rejects = Observation()
+        val valid = Upserts.dedupKeepLast(
+          parsed.observe(rejects, collect_list(when(!col("valid"),
+              struct("path", "reject_reason"))).as("rejected"))
+            .filter(col("valid")).select("video_id", "transcript"),
+          Seq("video_id"), Seq(col("transcript")))
+          // align to the full transcripts schema (add_transcripts.py
+          // stamps language='en' and the fetch time on file ingest)
+          .withColumn("language", lit("en"))
+          .withColumn("last_fetched_timestamp", current_timestamp())
+          .select("video_id", "language", "transcript", "last_fetched_timestamp")
+        cur.fold(valid)(Upserts.conditionalUpsert(_, valid,
+          Seq("video_id")) { (inc, old) =>
+          YtFunctions.hasTimestamps(inc("transcript")) ||
+            !YtFunctions.hasTimestamps(old("transcript"))
+        }).observe(rows, count(lit(1)).as("rows"))
+      }
+      // the reference also inserts a minimal videos row for inbox
+      // files whose video is unknown (add_transcripts.py:145-155)
+      val minimalVideos = parsed.filter(col("valid"))
+        .select(col("video_id"), col("title"),
+          lit(null).cast("string").as("description"),
+          lit(null).cast("string").as("channel"),
+          lit(null).cast("date").as("publish_date"),
+          lit(null).cast("int").as("duration_seconds"),
+          lit(null).cast("long").as("view_count"),
+          lit(null).cast("string").as("author"),
+          lit(null).cast("string").as("channel_id"),
+          lit(null).cast("string").as("thumbnail_url"),
+          col("url").as("video_url"),
+          current_timestamp().as("last_scraped_timestamp"))
+      SyncPipeline.mergeInto(spark, store, "videos")(_.fold(minimalVideos)(
+        Upserts.insertIfAbsent(_, minimalVideos, Seq("video_id"))))
+      rejects.get("rejected").asInstanceOf[Seq[Row]]
+        .map(r => (r.getString(0), r.getString(1))).sorted
+        .foreach { case (path, reason) => println(s"rejected $path: $reason") }
+      println(s"transcripts table now has ${txRows("rows")} rows")
+    } finally parsed.unpersist(false)
+  }
+
   private[app] def run(spark: SparkSession, args: Array[String]): Unit = {
     val cmd = args(0)
     val store = new ParquetTableStore(args(1))
@@ -130,46 +191,8 @@ object Main {
         println(s"Wrote $n playlists to '${args(3)}'.")
 
       case "ingest-inbox" =>
-        val parsed = spark.read.format("transcript-inbox").load(args(2))
-        val valid = Upserts.dedupKeepLast(
-          parsed.filter(col("valid")).select("video_id", "transcript"),
-          Seq("video_id"), Seq(col("transcript")))
-          // align to the full transcripts schema (add_transcripts.py
-          // stamps language='en' and the fetch time on file ingest)
-          .withColumn("language", lit("en"))
-          .withColumn("last_fetched_timestamp", current_timestamp())
-          .select("video_id", "language", "transcript", "last_fetched_timestamp")
-        // both merges pin to the snapshot they derive from, so a
-        // concurrent sync writing the same tables is never overwritten;
-        // the table's row count is observed on the transcripts commit
-        val (_, txRows) = SyncPipeline.mergeCounted(spark, store,
-            "transcripts") { (cur, rows) =>
-          cur.fold(valid)(Upserts.conditionalUpsert(_, valid,
-            Seq("video_id")) { (inc, old) =>
-            YtFunctions.hasTimestamps(inc("transcript")) ||
-              !YtFunctions.hasTimestamps(old("transcript"))
-          }).observe(rows, count(lit(1)).as("rows"))
-        }
-        // the reference also inserts a minimal videos row for inbox
-        // files whose video is unknown (add_transcripts.py:145-155)
-        val minimalVideos = parsed.filter(col("valid"))
-          .select(col("video_id"), col("title"),
-            lit(null).cast("string").as("description"),
-            lit(null).cast("string").as("channel"),
-            lit(null).cast("date").as("publish_date"),
-            lit(null).cast("int").as("duration_seconds"),
-            lit(null).cast("long").as("view_count"),
-            lit(null).cast("string").as("author"),
-            lit(null).cast("string").as("channel_id"),
-            lit(null).cast("string").as("thumbnail_url"),
-            col("url").as("video_url"),
-            current_timestamp().as("last_scraped_timestamp"))
-        SyncPipeline.mergeInto(spark, store, "videos")(_.fold(minimalVideos)(
-          Upserts.insertIfAbsent(_, minimalVideos, Seq("video_id"))))
-        val rejected = parsed.filter(!col("valid"))
-          .select("path", "reject_reason").collect()
-        rejected.foreach(r => println(s"rejected ${r.getString(0)}: ${r.getString(1)}"))
-        println(s"transcripts table now has ${txRows("rows")} rows")
+        ingestInbox(spark, store,
+          spark.read.format("transcript-inbox").load(args(2)))
 
       case "dedup-transcripts" =>
         // re-upload detection over the stored corpus, in the

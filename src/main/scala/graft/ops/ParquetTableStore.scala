@@ -566,7 +566,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * [[ConcurrentCommitException]], never a silently-empty frame. */
   private def readBucketRestricted(spark: SparkSession, vdir: Path,
       kbs: Set[Int]): DataFrame = {
-    val restricted = try (storedSchemaOf(vdir),
+    val restricted = probing(vdir)((storedSchemaOf(vdir),
         Files.exists(vdir.resolve(ManifestDir))) match {
       case (Some(s), true) =>
         // bucket layout iff bucket dirs exist (the fileless-empty
@@ -584,29 +584,21 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
         val dirs = kbs.toSeq.sorted.map(b => vdir.resolve(s"$BucketCol=$b"))
           .filter(Files.isDirectory(_))
         if (dirs.isEmpty && !Files.exists(vdir))
-          throw new ConcurrentCommitException(
-            s"version $vdir pruned during bucket probe — a concurrent " +
-              "commit advanced past retention; re-read and retry")
+          throw new java.nio.file.NoSuchFileException(vdir.toString)
         if (dirs.isEmpty)
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
         else spark.read.option("basePath", vdir.toString).schema(s)
           .parquet(dirs.map(_.toString): _*)
       case _ => readVersionFrame(spark, vdir)
-    } catch {
-      case _: java.nio.file.NoSuchFileException |
-           _: java.io.FileNotFoundException =>
-        throw new ConcurrentCommitException(
-          s"version $vdir pruned during bucket probe — a concurrent " +
-            "commit advanced past retention; re-read and retry")
-    }
+    })
     restricted.filter(col(BucketCol).isin(kbs.toSeq: _*))
   }
 
   /** CANONICAL PER-VERSION SCHEMA — the table-format answer to
     * mixed-schema versions: an O(delta) bucketed upsert that EVOLVES
-    * the schema rewrites only its touched buckets, so the version's
-    * untouched buckets keep old-schema files via hard links, and
+    * the schema rewrites only the files holding its keys, so the
+    * version keeps every other old-schema file via hard links, and
     * parquet schema INFERENCE (one sampled footer, file-order
     * dependent) could silently drop the evolved column from reads —
     * measured, not theoretical (ParquetTableStoreSpec pins it).
@@ -1017,24 +1009,19 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     regexp_extract(input_file_name(),
       s"((?:$BucketCol=[^/]+/)?[^/]+)$$", 1)
 
-  /** Per-file min/max stats over (a partition-filtered view of) a
-    * staged dir. Files whose stats column is all-NULL carry null
-    * min/max — excluded by every range predicate, which is exactly
-    * right: NULL never satisfies a range. */
+  /** Per-file min/max stats over every data file of a (staged) dir.
+    * Files whose stats column is all-NULL carry null min/max —
+    * excluded by every range predicate, which is exactly right: NULL
+    * never satisfies a range. */
   private def zoneStats(spark: SparkSession, dir: Path,
-      statsCols: Seq[String], onlyBuckets: Option[Set[Int]]): DataFrame = {
+      statsCols: Seq[String]): DataFrame = {
     // under the dir's recorded schema (every write path records it
     // before computing stats): a post-evolution staged dir mixes file
     // schemas and inference is file-order dependent
-    val raw = readVersionFrame(spark, dir)
-    val data = onlyBuckets match {
-      case Some(bs) if raw.columns.contains(BucketCol) =>
-        raw.filter(col(BucketCol).isin(bs.toSeq: _*))
-      case _ => raw
-    }
     val aggs = statsCols.flatMap(c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    data.groupBy(relFileExpr.as("file")).agg(aggs.head, aggs.tail: _*)
+    readVersionFrame(spark, dir)
+      .groupBy(relFileExpr.as("file")).agg(aggs.head, aggs.tail: _*)
   }
 
   private def writeZoneMapFrame(stagedTmpDir: Path, zm: DataFrame): Unit =
@@ -1056,37 +1043,14 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
       }
     }
 
-  /** Maintain the sidecar for a staged version: stats for the
-    * rewritten buckets' files (a partition-pruned scan of the staged
-    * dir — by the write protocols, a touched bucket dir holds ONLY
-    * fresh files at this point) plus carried rows for every untouched
-    * bucket. `touched = None` means full recompute (snapshot commits,
-    * bucketed create/replace, backfill). Call AFTER
-    * [[shareUntouchedBuckets]] and BEFORE [[finalizeStaged]]. */
-  private def maintainZoneMap(spark: SparkSession, table: String,
-      nextDir: Path, prev: Option[String],
-      touched: Option[Set[Int]]): Unit =
-    zoneColumns(table).foreach { cols =>
-      val carried = touched.flatMap(ts =>
-        prevZoneMap(spark, table, prev, cols).map { pm =>
-          // only bucket-dir files hard-link forward (the sharing walk
-          // links kb= DIRS): a root-level file from an empty version
-          // never carries, and rewritten buckets' rows are replaced
-          val kb = regexp_extract(col("file"), s"$BucketCol=(\\d+)/", 1)
-          pm.filter(kb =!= "" && !kb.cast("int").isin(ts.toSeq: _*))
-        })
-      carried match {
-        case Some(c) =>
-          // schema evolution: a column declared after old files were
-          // written has null stats there (those files hold NULL for
-          // it — correctly excluded by any range predicate)
-          writeZoneMapFrame(nextDir,
-            zoneStats(spark, nextDir, cols, touched)
-              .unionByName(c, allowMissingColumns = true))
-        case None =>
-          writeZoneMapFrame(nextDir, zoneStats(spark, nextDir, cols, None))
-      }
-    }
+  /** Full-recompute zone map of a staged version (snapshot commits,
+    * bucketed create/replace, and the backfill of a table declared
+    * after its last write), when the table declares zone columns.
+    * Call when every data file is in place, BEFORE [[finalizeStaged]]. */
+  private def writeFullZoneMap(spark: SparkSession, table: String,
+      nextDir: Path): Unit =
+    zoneColumns(table).foreach(cols =>
+      writeZoneMapFrame(nextDir, zoneStats(spark, nextDir, cols)))
 
   /** The live version dir plus its zone-map-surviving file paths for
     * `lo <= column <= hi`. Refuses loudly (never a silent full scan)
@@ -1219,11 +1183,10 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * read whose rows never touch the driver (consumers aggregate it
     * distributedly, or collect the ≤ numBuckets rollup).
     *
-    * Maintained O(delta), the zone-map discipline: rewritten buckets'
-    * files re-list (touched dirs hold only fresh files post-link),
-    * untouched buckets' rows CARRY from the previous manifest
-    * (hard-linked files keep path and size); appends list the staged
-    * delta PRE-link and carry every previous row. Written inside the
+    * Maintained O(delta), the zone-map discipline: a bucketed write
+    * lists its fresh files PRE-link and carries the previous
+    * manifest's row of every file it links forward (hard-linked files
+    * keep path and size). Written inside the
     * staged dir, so it is version-atomic with the data. Versions from
     * before the manifest existed fall back to directory listing. */
   private val ManifestDir = "_manifest"
@@ -1329,29 +1292,6 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
   private val bucketOfRel = s"$BucketCol=(\\d+)/".r
   private def relBucketOf(rel: String): Option[Int] =
     bucketOfRel.findFirstMatchIn(rel).map(_.group(1).toInt)
-
-  /** O(delta) manifest for a staged BUCKETED version, post-link:
-    * `touched` buckets' files re-list (their dirs hold only fresh
-    * files), every other bucket's rows carry. Falls back to full
-    * recompute when the previous version predates manifests. */
-  private def maintainManifestBucketed(table: String,
-      nextDir: Path, prev: Option[String],
-      touched: Option[Set[Int]]): Unit = {
-    val carried = for {
-      p <- prev
-      ts <- touched
-      rows <- manifestRowsDirect(dirOf(table, p))
-    } yield
-      // only bucket-dir files link forward (the sharing walk links
-      // kb= DIRS); rewritten buckets' rows are replaced
-      rows.filter(r => relBucketOf(r._1).exists(b => !ts.contains(b)))
-    carried match {
-      case Some(c) =>
-        writeManifestRowsDriver(nextDir,
-          listedManifestRows(nextDir, touched) ++ c)
-      case None => writeFullManifest(nextDir)
-    }
-  }
 
   /** The live version's file manifest (file, bytes) — None for
     * versions from before manifests existed. Rows stay distributed;
@@ -1500,12 +1440,25 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     publishFull(spark, table, merged, prev)._1
   }
 
-  /** LWW-upsert into a key-bucketed table, rewriting only the buckets
-    * the delta touches; untouched buckets are hard-linked from the
-    * previous version (byte-identical, O(1) per file). `numBuckets`
-    * binds at table creation and is ignored afterwards. Returns the
-    * re-read frame and the version published — for an empty delta,
-    * the version the no-op was based on (never a re-read head).
+  /** LWW-upsert into a key-bucketed table, rewriting only the stored
+    * FILES that hold a key the delta replaces — the file-granular
+    * copy-on-write MERGE of Delta Lake (Armbrust et al., VLDB 2020).
+    * Every other file, including the untouched files inside touched
+    * buckets, is hard-linked from the previous version (byte-identical,
+    * O(1) per file), and each touched bucket gains exactly one fresh
+    * file ([[layoutBuckets]]). A touched bucket that already holds
+    * [[MaxFilesPerBucket]] files is rewritten whole, so a stream of
+    * new-key upserts never grows a bucket past that bound.
+    * `numBuckets` binds at table creation and is ignored afterwards.
+    * Returns the re-read frame and the version published — for an
+    * empty delta, the version the no-op was based on (never a re-read
+    * head).
+    *
+    * Two driver collects precede the write: the touched buckets (≤ n
+    * ints) and the matched files (≤ files rows: a semi-join of the
+    * touched buckets' stored keys against the delta's keys). The merge
+    * reads only the matched files; a delta of new keys alone matches
+    * none and reads nothing stored.
     *
     * `expect` is the publish CAS expectation, as for [[commit]].
     * [[Expect.Pinned]] serves DERIVED bucketed artifacts: the caller
@@ -1525,9 +1478,16 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
       case Some(prev) =>
         val n = this.numBuckets(table).getOrElse(throw new IllegalStateException(
           s"table $table was created as a snapshot table; use upsert"))
+        val prevDir = dirOf(table, prev)
+        // the delta under the version's CANONICAL schema (an inferred
+        // one could drop a previously-evolved column and the merge
+        // would lose its values), so the touched set, the key probe and
+        // the merge all hash and compare the types the merge writes
+        val incA = SchemaEvolution.align(
+          readFiles(spark, prevDir, Nil).drop(BucketCol), incoming)._2
         // which buckets does the delta touch? (≤ n ints — driver-safe)
         val touched = guardedAction(s"upsert touched-set of $table") {
-          incoming.select(bucketOf(keys, n)).distinct()
+          incA.select(bucketOf(keys, n)).distinct()
             .collect().map(_.getInt(0)).toSet
         }
         // empty delta → version no-op (free — the touched set already
@@ -1536,16 +1496,31 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
         // later read in schema inference
         if (touched.isEmpty) (read(spark, table), versionOf(dirNameOf(prev)))
         else {
-          // manifest-planned read of just the touched buckets — under
-          // the version's CANONICAL schema: an inferred one could drop
-          // a previously-evolved column and the merge would lose its
-          // values
-          val (stored, incA) = SchemaEvolution.align(
-            readBucketRestricted(spark, dirOf(table, prev), touched)
-              .drop(BucketCol), incoming)
-          val merged = Upserts.upsertLastWriteWins(stored, incA, keys)
-          rewriteTouched(spark, table, prev, touched, "upsert merge",
-            merged.withColumn(BucketCol, bucketOf(keys, n)))
+          val (whole, probed) = bucketFileRows(prevDir, touched)
+            .groupBy(r => relBucketOf(r._1).get).values
+            .partition(_.size >= MaxFilesPerBucket)
+          val candidates = probed.flatten.toSeq
+          val matched =
+            if (candidates.isEmpty) Set.empty[String]
+            else guardedAction(s"upsert matched files of $table") {
+              import spark.implicits._
+              // per-partition distinct instead of a distinct(): the
+              // collect stays ≤ files rows without a shuffle round
+              readFiles(spark, prevDir, candidates)
+                .select(keys.map(col) :+ relFileExpr.as("file"): _*)
+                .join(incA.select(keys.map(col): _*), keys, "left_semi")
+                .select("file").as[String]
+                .mapPartitions(_.toSet.iterator)
+                .collect().toSet
+            }
+          val replaced = whole.flatten.toSeq ++
+            candidates.filter(r => matched.contains(r._1))
+          val (stored, inc) = SchemaEvolution.align(
+            readFiles(spark, prevDir, replaced).drop(BucketCol), incoming)
+          rewriteTouched(spark, table, prev, replaced.map(_._1).toSet,
+            "upsert merge",
+            layoutBuckets(Upserts.upsertLastWriteWins(stored, inc, keys), n,
+              keys, Nil))
         }
     }
   }
@@ -1580,7 +1555,8 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
       val kept = readBucketRestricted(spark, dirOf(table, prev), touched)
         .drop(BucketCol)
         .join(rem, keys, "left_anti")
-      rewriteTouched(spark, table, prev, touched, "keyed delete",
+      rewriteTouched(spark, table, prev,
+        bucketFileSet(dirOf(table, prev), touched), "keyed delete",
         layoutBuckets(kept, n, keys, Nil))._1
     }
   }
@@ -1633,7 +1609,8 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
           val kept = readBucketRestricted(spark, dirOf(table, prev), touched)
             .drop(BucketCol)
             .filter(!victim)
-          rewriteTouched(spark, table, prev, touched, "predicate delete",
+          rewriteTouched(spark, table, prev,
+            bucketFileSet(dirOf(table, prev), touched), "predicate delete",
             layoutBuckets(kept, n, keys, Nil))._1
         }
     }
@@ -1712,51 +1689,139 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
         .drop(BucketCol), upserts)
     val merged = Upserts.upsertLastWriteWins(
       stored.join(delKeys, keys, "left_anti"), incA, keys)
-    rewriteTouched(spark, table, prev, touched, "change-feed apply",
+    rewriteTouched(spark, table, prev,
+      bucketFileSet(dirOf(table, prev), touched), "change-feed apply",
       layoutBuckets(merged, n, keys, Nil))._1
   }
 
-  /** The touched-bucket rewrite behind [[upsertBucketed]],
-    * [[deleteBucketed]], [[deleteWhere]], [[applyChangesBucketed]] and
-    * compaction: write `laid` (the caller's layout, bucket column
-    * included; `options` are the caller's writer options) partitioned
-    * by bucket, link every other bucket from `prev`, maintain zone map
-    * + manifest O(delta), and publish one version CAS'd against
-    * `prev`. A rewrite that leaves no row anywhere (a fileless
+  /** The file-granular rewrite behind every bucketed write after the
+    * first ([[upsertBucketed]], [[appendBucketed]], [[deleteBucketed]],
+    * [[deleteWhere]], [[applyChangesBucketed]] and compaction): write
+    * `laid` (the caller's layout, bucket column included; `options`
+    * are the caller's writer options) partitioned by bucket as the
+    * fresh files, link every file of `prev` except `replaced` (rel
+    * paths; the deletes, the change feed and compaction replace every
+    * file of their touched buckets), and publish one version CAS'd
+    * against `prev`. Zone map and manifest are maintained O(delta):
+    * only the fresh files are statted and listed — BEFORE the links
+    * land, while the staged dir holds nothing else — and the linked
+    * files' rows carry from the previous version's sidecars. A
+    * rewrite that changes nothing (no fresh file, nothing replaced)
+    * is a version no-op; one that leaves no row anywhere (a fileless
     * version) records the empty manifest and drops the zone map, so a
     * later [[readZonePruned]] refuses loudly rather than serving an
     * unmapped scan. */
   private def rewriteTouched(spark: SparkSession, table: String,
-      prev: String, touched: Set[Int], what: String, laid: DataFrame,
+      prev: String, replaced: Set[String], what: String, laid: DataFrame,
       options: Map[String, String] = Map.empty): (DataFrame, Long) = {
     val curDir = dirOf(table, prev)
     stageAndPublish(spark, table, Some(prev), s"$what of $table") { dir =>
       laid.write.mode("errorifexists").options(options)
         .partitionBy(BucketCol).parquet(dir.toString)
+      val fresh = listedManifestRows(dir, None)
+      if (fresh.isEmpty && replaced.isEmpty) throw NothingStaged
       writeSchemaFile(dir, laid.schema)
-      shareUntouchedBuckets(curDir, dir, touched)
-      // O(delta) map maintenance: the touched buckets' fresh files
-      // re-scan (a partition-pruned read — untouched dirs hold only
-      // links, touched dirs only fresh files), everything else
-      // carries from the previous version's map
-      if (bucketDirs(dir).nonEmpty) {
-        maintainZoneMap(spark, table, dir, Some(prev), Some(touched))
-        maintainManifestBucketed(table, dir, Some(prev), Some(touched))
-      } else writeManifestRowsDriver(dir, Seq.empty)
+      // only bucket-dir files link forward: a root-level file from an
+      // empty version never carries
+      val carried = manifestRowsDirect(curDir)
+        .getOrElse(listedManifestRows(curDir, None))
+        .filter(r => relBucketOf(r._1).isDefined && !replaced.contains(r._1))
+      if (fresh.isEmpty && carried.isEmpty)
+        writeManifestRowsDriver(dir, Seq.empty)
+      else {
+        val zcols = zoneColumns(table)
+        val prevZm = zcols.flatMap(cols =>
+          prevZoneMap(spark, table, Some(prev), cols))
+        for (cols <- zcols; pm <- prevZm) {
+          val kb = regexp_extract(col("file"), s"$BucketCol=(\\d+)/", 1)
+          val kept = pm.filter(kb =!= "" &&
+            !col("file").isin(replaced.toSeq: _*))
+          // schema evolution: a column declared after old files were
+          // written has null stats there (those files hold NULL for
+          // it — correctly excluded by any range predicate)
+          writeZoneMapFrame(dir,
+            if (fresh.isEmpty) kept
+            else zoneStats(spark, dir, cols)
+              .unionByName(kept, allowMissingColumns = true))
+        }
+        writeManifestRowsDriver(dir, fresh ++ carried)
+        shareUnreplaced(curDir, dir, replaced)
+        // a declared table with no previous map (declaration landed
+        // after the last write) backfills full, post-links
+        if (prevZm.isEmpty) writeFullZoneMap(spark, table, dir)
+      }
     }
   }
+
+  /** Rel paths of every data file in buckets `kbs` of the version at
+    * `vdir` — what a whole-bucket rewrite replaces. */
+  private def bucketFileSet(vdir: Path, kbs: Set[Int]): Set[String] =
+    bucketFileRows(vdir, kbs).map(_._1).toSet
+
+  /** (rel path, bytes) of the data files in buckets `kbs` of the
+    * version at `vdir`: the manifest's rows for those bucket prefixes
+    * (only the slices that can hold them are parsed), or an
+    * O(touched) listing for a pre-manifest version. A vanished version
+    * dir is the retryable [[ConcurrentCommitException]]. */
+  private def bucketFileRows(vdir: Path, kbs: Set[Int]): Seq[(String, Long)] =
+    probing(vdir)(manifestRowsSliced(vdir, Some(kbs.map(b => s"$BucketCol=$b/")))
+      .getOrElse(listedManifestRows(vdir, Some(kbs))))
+
+  /** The rows of exactly `files` (rel path, bytes) of the version at
+    * `vdir`, bucket column included, under the version's canonical
+    * schema (inferred for a pre-schema version). No files is an empty
+    * local relation, which the optimizer folds out of any join or
+    * union — nothing stored is read. */
+  private def readFiles(spark: SparkSession, vdir: Path,
+      files: Seq[(String, Long)]): DataFrame = probing(vdir) {
+    if (!Files.exists(vdir)) throw new java.nio.file.NoSuchFileException(vdir.toString)
+    val schema = storedSchemaOf(vdir)
+      .getOrElse(readVersionFrame(spark, vdir).schema)
+    if (files.isEmpty)
+      spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+    else graft.sources.ManifestFileIndex.storeFrame(spark,
+      vdir.toUri.toString, schema, files, BucketCol)
+  }
+
+  /** Plan-time reads of a base version: one that vanished (competitors
+    * advanced past retention) is the retryable
+    * [[ConcurrentCommitException]], never a raw I/O error or a
+    * silently-empty frame. */
+  private def probing[T](vdir: Path)(body: => T): T =
+    try body
+    catch {
+      case _: java.nio.file.NoSuchFileException |
+           _: java.io.FileNotFoundException =>
+        throw new ConcurrentCommitException(
+          s"version $vdir pruned during bucket probe — a concurrent " +
+            "commit advanced past retention; re-read and retry")
+    }
+
+  /** Parquet files a bucket may hold before a merge into it rewrites it
+    * whole — and [[compactBuckets]]' default trigger, which compacts a
+    * bucket past it. */
+  private val MaxFilesPerBucket = 4
 
   private def bucketOf(keys: Seq[String], n: Int): Column =
     pmod(hash(keys.map(col): _*), lit(n))
 
-  /** Deterministic write layout for a bucketed version: rows routed
-    * to their bucket (one exchange), optionally key-sorted within
+  /** Deterministic write layout for a bucketed version: rows routed to
+    * their bucket by ONE exchange into `min(n, defaultParallelism)`
+    * partitions on the bucket id, so every bucket lands whole in one
+    * task and the `partitionBy` write emits exactly one file per
+    * bucket, from as many tasks as the cluster runs at once. (An
+    * explicit partition count is never coalesced by adaptive
+    * execution: an AQE-coalesced layout collapses small writes into
+    * one task that writes every bucket in series, and one task per
+    * bucket pays a task round per file.) Optionally key-sorted within
     * each written file so parquet row-group min/max stats prune later
     * probes (the inverted-index discipline). */
   private def layoutBuckets(df: DataFrame, n: Int, keys: Seq[String],
       sortWithin: Seq[String]): DataFrame = {
     val rep = df.withColumn(BucketCol, bucketOf(keys, n))
-      .repartition(col(BucketCol))
+      .repartition(math.min(n, df.sparkSession.sparkContext.defaultParallelism),
+        col(BucketCol))
     if (sortWithin.isEmpty) rep
     else rep.sortWithinPartitions((BucketCol +: sortWithin).map(col): _*)
   }
@@ -1799,9 +1864,9 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * table size. This is the log-structured counterpart of
     * [[upsertBucketed]] for pure-insert deltas (an inverted index
     * absorbing new documents, an append-only ledger): a merge-upsert
-    * must READ and REWRITE every touched bucket, which for a
-    * high-vocabulary delta (text postings touch every bucket)
-    * degrades to a full-table rewrite.
+    * also probes the touched buckets' stored keys for the files it
+    * must replace, and rewrites a bucket whole once it holds
+    * [[MaxFilesPerBucket]] files.
     *
     * Contract: the caller guarantees the incoming keys are NEW — no
     * merge runs, so a re-appended key silently duplicates rows
@@ -1832,8 +1897,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
       val n = this.numBuckets(table).getOrElse(throw new IllegalStateException(
         s"table $table was created as a snapshot table; appends need " +
           "bucket partitions — adopt it via replaceBucketed first"))
-      val curDir = dirOf(table, prev.get)
-      val storedSchema = readVersionFrame(spark, curDir)
+      val storedSchema = readVersionFrame(spark, dirOf(table, prev.get))
         .drop(BucketCol).schema
       // compare nullability-relaxed forms: a file read forces
       // nullability up (array containsNull included), so an
@@ -1848,53 +1912,10 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
         s"appendBucketed($table): incoming ${incoming.schema.simpleString} " +
           s"must equal stored ${storedSchema.simpleString} — " +
           "schema evolution goes through upsertBucketed")
-      val laid = layoutBuckets(
-        incoming.select(storedSchema.fieldNames.map(col): _*), n, keys,
-        sortWithin)
-      stageAndPublish(spark, table, prev, s"append of $table") { dir =>
-        laid.write.mode("errorifexists")
-          .partitionBy(BucketCol).parquet(dir.toString)
-        // an empty delta is a NO-OP, never a version churn: a staged
-        // append of zero rows would link every file into a new
-        // version (retention pressure) and mix layouts
-        if (bucketDirs(dir).isEmpty) throw NothingStaged
-        writeSchemaFile(dir, laid.schema)
-        // zone map, append shape: nothing is rewritten, so EVERY
-        // previous row carries and only the fresh delta files scan —
-        // written BEFORE the links land (post-link, old and new files
-        // share the touched dirs and the delta scan could no longer
-        // be isolated). A declared table with no previous map
-        // (declaration landed after the last write) backfills full,
-        // post-links.
-        val zcols = zoneColumns(table)
-        val carriedPm = zcols.flatMap(cols =>
-          prevZoneMap(spark, table, prev, cols))
-        for (cols <- zcols; pm <- carriedPm) {
-          val kb = regexp_extract(col("file"), s"$BucketCol=(\\d+)/", 1)
-          writeZoneMapFrame(dir,
-            zoneStats(spark, dir, cols, None)
-              .unionByName(pm.filter(kb =!= ""),
-                allowMissingColumns = true))
-        }
-        // manifest, append shape: list the staged DELTA pre-link (only
-        // fresh files exist now — post-link they mix with carried
-        // links in the same dirs) and carry EVERY previous bucket row;
-        // a previous version without a manifest recomputes full,
-        // post-link
-        val prevMan = manifestRowsDirect(curDir)
-        prevMan.foreach { pm =>
-          writeManifestRowsDriver(dir,
-            listedManifestRows(dir, None) ++
-              pm.filter(r => relBucketOf(r._1).isDefined))
-        }
-        // touched = none: every existing file links across
-        // (append-only — fresh part names are job-UUID-unique, so a
-        // bucket dir holds old links and new files side by side)
-        shareUntouchedBuckets(curDir, dir, Set.empty)
-        for (cols <- zcols if carriedPm.isEmpty)
-          writeZoneMapFrame(dir, zoneStats(spark, dir, cols, None))
-        if (prevMan.isEmpty) writeFullManifest(dir)
-      }._1
+      // nothing replaced: every existing file links across
+      rewriteTouched(spark, table, prev.get, Set.empty, "append",
+        layoutBuckets(incoming.select(storedSchema.fieldNames.map(col): _*),
+          n, keys, sortWithin))._1
     }
   }
 
@@ -1974,24 +1995,32 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
   private def bucketIdOf(bucketDir: Path): Int =
     bucketDir.getFileName.toString.stripPrefix(s"$BucketCol=").toInt
 
-  /** Share untouched bucket dirs from the previous version without
-    * rewriting them (hard links on POSIX, copies on object stores).
-    * If the base version vanishes mid-link, competitors advanced
-    * past the retention window — surface it as the retryable
-    * conflict it is, not a raw I/O error. (Deployments should size
-    * keepVersions comfortably above the concurrent-writer count so
-    * a merger's base version normally survives its operation.) */
-  private def shareUntouchedBuckets(curDir: Path, nextDir: Path,
-      touched: Set[Int]): Unit =
-    try bucketDirs(curDir).filterNot(p => touched.contains(bucketIdOf(p)))
-      .foreach { src =>
-        val dst = nextDir.resolve(src.getFileName.toString)
-        Files.createDirectories(dst)
-        listDir(src)
-          .filter(f => Files.isRegularFile(f))
-          .foreach(f => io.shareFile(f, dst.resolve(f.getFileName.toString)))
-      }
-    catch {
+  /** Share every bucket file of the previous version except
+    * `replaced` (rel paths; a data file's `.crc` goes with it) without
+    * rewriting it (hard links on POSIX, copies on object stores) —
+    * fresh part names are job-UUID-unique, so a bucket dir may hold
+    * links and fresh files side by side. If the base version vanishes
+    * mid-link, competitors advanced past the retention window —
+    * surface it as the retryable conflict it is, not a raw I/O error.
+    * (Deployments should size keepVersions comfortably above the
+    * concurrent-writer count so a merger's base version normally
+    * survives its operation.) */
+  private def shareUnreplaced(curDir: Path, nextDir: Path,
+      replaced: Set[String]): Unit =
+    try bucketDirs(curDir).foreach { src =>
+      val b = src.getFileName.toString
+      def dataName(f: String): String =
+        if (f.startsWith(".") && f.endsWith(".crc")) f.drop(1).dropRight(4)
+        else f
+      listDir(src)
+        .filter(f => Files.isRegularFile(f) &&
+          !replaced.contains(s"$b/${dataName(f.getFileName.toString)}"))
+        .foreach { f =>
+          val dst = nextDir.resolve(b)
+          Files.createDirectories(dst)
+          io.shareFile(f, dst.resolve(f.getFileName.toString))
+        }
+    } catch {
       case _: java.nio.file.NoSuchFileException =>
         throw new ConcurrentCommitException(
           s"base version $curDir pruned during bucket linking — " +
@@ -2004,7 +2033,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * The listed dir can VANISH under us in exactly one legitimate
     * window: a competitor's publish was gc-swept and its undo has not
     * landed yet (_CURRENT transiently names a deleted dir) — surface
-    * that as the retryable conflict it is (the shareUntouchedBuckets
+    * that as the retryable conflict it is (the shareUnreplaced
     * discipline), never a raw I/O error. */
   private def bucketFiles(table: String, prev: String,
       what: String): Either[Map[Int, Int], Map[Int, Seq[Long]]] = {
@@ -2024,11 +2053,12 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
   }
 
   /** MAINTENANCE: compact a bucketed table's fragmented buckets.
-    * O(delta) upserts rewrite a touched bucket as one fresh file set
-    * per commit, and the shuffle that feeds each rewrite can emit
-    * several part files — so hot buckets accumulate files version
-    * over version, and scan cost drifts up even though the data
-    * volume doesn't (the classic lakehouse small-files problem).
+    * Every O(delta) write adds one fresh file to each bucket it
+    * touches: an upsert rewrites a bucket whole only once it holds
+    * [[MaxFilesPerBucket]] files, and appends never do — so hot
+    * buckets of an append-fed table accumulate files version over
+    * version, and scan cost drifts up even though the data volume
+    * doesn't (the classic lakehouse small-files problem).
     * Compaction rewrites every bucket whose parquet file count
     * exceeds `maxFilesPerBucket` down to ONE file (each bucket is
     * hash-routed to a single task, so `partitionBy` emits exactly
@@ -2047,7 +2077,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * NO new version published (maintenance never churns versions
     * for its own sake). */
   def compactBuckets(spark: SparkSession, table: String,
-      maxFilesPerBucket: Int = 4,
+      maxFilesPerBucket: Int = MaxFilesPerBucket,
       clusterBy: Option[String] = None,
       clusterRowsPerFile: Long = 1L << 20): Set[Int] = {
     require(maxFilesPerBucket >= 1)
@@ -2102,7 +2132,8 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
         .repartition(rewrite.size, col(BucketCol))
       // compaction rewrites whole buckets: same zone-map shape as the
       // merge path (rewritten buckets re-scan, the rest carries)
-      rewriteTouched(spark, table, prev, rewrite, "compaction",
+      rewriteTouched(spark, table, prev,
+        bucketFileSet(dirOf(table, prev), rewrite), "compaction",
         clusterBy.fold(base)(c =>
           base.sortWithinPartitions(col(BucketCol), col(c))),
         clusterBy.map(_ =>
@@ -2130,7 +2161,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * rewritten buckets; gate u16 pins auto ≡ manual through an
     * ingest run, ParquetTableStoreSpec pins trigger selection. */
   def autoMaintain(spark: SparkSession, table: String,
-      maxFilesPerBucket: Int = 4,
+      maxFilesPerBucket: Int = MaxFilesPerBucket,
       minBytesPerFile: Long = 8L << 20,
       clusterBy: Option[String] = None,
       clusterRowsPerFile: Long = 1L << 20): Set[Int] = {
@@ -2425,7 +2456,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
         }
       } else df.write.mode("errorifexists").parquet(dir.toString)
       writeSchemaFile(dir, df.schema)
-      maintainZoneMap(spark, table, dir, None, None)
+      writeFullZoneMap(spark, table, dir)
       writeFullManifest(dir)
     }
 

@@ -424,7 +424,12 @@ object Streams {
               store.withCommitRetries()(
                 store.upsert(spark, rejectTable, r, Seq("id")))
           }
-          if (acc.limit(1).count() > 0) {
+          // once all three tables exist an empty acceptance set needs
+          // no probe: each upsert's touched set is then empty, a
+          // version no-op. Before that, an empty first batch must not
+          // create the tables
+          if (Seq(corpusTable, signatureTable, indexTable).forall(store.exists) ||
+              acc.limit(1).count() > 0) {
             // two of the three commits derive from accSigs — pin it
             // so the semi-join runs once, not per commit thread
             val accSigs = sigs.join(acc.select("id"), Seq("id"), "left_semi")

@@ -1,13 +1,13 @@
 package graft.app
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.connectors.FakeYouTubeConnector
-import graft.ops.ParquetTableStore
+import graft.ops.{ParquetTableStore, PosixStoreIo, StoreIo}
 
 /** The ingest CLI commands end-to-end. ingest-docs: two invocations
   * over a growing inbox — the checkpoint under the store dir makes the
@@ -166,5 +166,57 @@ class MainIngestSpec extends SparkSpec {
     assert(rejected.exists(l =>
       l.contains("bad-empty.vtt") && l.endsWith(": no transcript content")))
     assert(lines.last == s"transcripts table now has ${store.read(spark, "transcripts").count()} rows")
+  }
+
+  test("ingest-inbox: each inbox file is parsed once, and the parse is released even when a merge throws") {
+    val root = tmpDir("maininbox-once")
+    val inbox = tmpDir("maininbox-once-in")
+    new SyncPipeline(new ParquetTableStore(root), new FakeYouTubeConnector(2))
+      .syncChannel(spark, "chanA", to_timestamp(lit("2024-02-01 00:00:00")))
+    def file(name: String, content: String): Unit =
+      Files.write(Paths.get(inbox, name), content.getBytes(StandardCharsets.UTF_8))
+    (1 to 6).foreach(i => file(s"f$i.txt",
+      s"URL: https://www.youtube.com/watch?v=onceVideo0$i\n\nbody $i\n"))
+    file("bad.txt", "TITLE: orphan\n\nno id anywhere\n")
+    // counts every parsed row, however many actions evaluate the frame
+    val parsedRows = spark.sparkContext.longAccumulator("parsed inbox rows")
+    val tick = udf { (_: String) => parsedRows.add(1); true }.asNondeterministic()
+    def countedInbox = spark.read.format("transcript-inbox").load(inbox)
+      .filter(tick(col("path")))
+    val sc = spark.sparkContext
+    val persistedBefore = sc.getPersistentRDDs.keySet
+
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(
+      Main.ingestInbox(spark, new ParquetTableStore(root), countedInbox))
+    assert(parsedRows.value == 7)
+    assert(sc.getPersistentRDDs.keySet == persistedBefore, "ingest left the inbox cached")
+    val lines = out.toString(StandardCharsets.UTF_8).linesIterator.toSeq
+    assert(lines.count(_.startsWith("rejected ")) == 1, s"$lines")
+    assert(new ParquetTableStore(root).read(spark, "videos")
+      .filter(col("video_id").startsWith("onceVideo")).count() == 6)
+
+    // the videos publish throws after the transcripts merge committed
+    val failing: StoreIo = new StoreIo {
+      override def swapPointer(p: Path, c: String): Unit =
+        PosixStoreIo.swapPointer(p, c)
+      override def shareFile(s: Path, d: Path): Unit = PosixStoreIo.shareFile(s, d)
+      override def deletePointerIfCurrent(p: Path, e: String): Unit =
+        PosixStoreIo.deletePointerIfCurrent(p, e)
+      override def swapPointerIfCurrent(p: Path, c: String,
+          e: Option[String]): Unit = {
+        if (p.getParent.getFileName.toString == "videos")
+          throw new IllegalStateException("injected videos publish failure")
+        PosixStoreIo.swapPointerIfCurrent(p, c, e)
+      }
+    }
+    parsedRows.reset()
+    val e = intercept[IllegalStateException](Console.withOut(out)(
+      Main.ingestInbox(spark, new ParquetTableStore(root, io = failing),
+        countedInbox)))
+    assert(e.getMessage.contains("injected"))
+    assert(parsedRows.value == 7)
+    assert(sc.getPersistentRDDs.keySet == persistedBefore,
+      "failed ingest left the inbox cached")
   }
 }

@@ -472,10 +472,12 @@ class ParquetTableStoreSpec extends SparkSpec {
     val store = new ParquetTableStore(root, keepVersions = 10)
     val base = (1 to 200).map(i => (s"k$i", s"v$i")).toDF("k", "v")
     store.upsertBucketed(spark, "t", base, Seq("k"), numBuckets = 4)
-    // fragment the hot buckets: repeated deltas each add part files
+    // fragment the buckets: each new-key delta adds a part file to
+    // every bucket it touches
     (1 to 6).foreach { r =>
       store.upsertBucketed(spark, "t",
-        (1 to 40).map(i => (s"k$i", s"v$i-r$r")).toDF("k", "v"), Seq("k"))
+        (1 to 40).map(i => (s"k${200 * r + i}", s"v$i-r$r")).toDF("k", "v"),
+        Seq("k"))
     }
     val vBefore = store.currentVersion("t").get
     val expected = store.read(spark, "t").collect()
