@@ -49,18 +49,8 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: <command> <storeDir> [args...]  (see scaladoc)")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_MASTER", "local[8]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // GRAFT_MASTER points the CLI at a deployment's cluster
+    val spark = graft.Session.build(master = sys.env.get("GRAFT_MASTER"))
     try run(spark, args) finally spark.stop()
   }
 

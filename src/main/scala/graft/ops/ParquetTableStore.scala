@@ -303,8 +303,8 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * the driver anyway. Large manifests are written as SLICES
     * ([[writeManifestRowsDriver]] — range-partitioned and sorted by rel
     * path, ~128k rows each) and parse in PARALLEL here: the bare
-    * Group reader runs ~6 s/10⁶ rows single-threaded (the
-    * ManifestProbe 10⁶ row), which a thread per slice collapses to
+    * Group reader runs ~6 s/10⁶ rows single-threaded (6.3 s, PLANS.md
+    * "Manifest at 10⁶ files"), which a thread per slice collapses to
     * ~1 s. Distributed consumers (maintenance rollups, [[fileStats]])
     * keep reading the same sidecar as a frame via [[manifestAt]].
     * None = the version predates manifests. */

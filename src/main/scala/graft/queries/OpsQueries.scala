@@ -561,8 +561,8 @@ object OpsQueries {
     * read-back content is the invariant the oracle checks. Auto ≡
     * manual compaction and the trigger tiers (count, small-file
     * bytes, no-debt ⇒ no churn) are spec-pinned
-    * (ParquetTableStoreSpec); the files-per-bucket collapse is a
-    * ScaleProbe row. */
+    * (ParquetTableStoreSpec); the files-per-bucket collapse (8 → 1 at
+    * ×1 and ×10) is recorded in PLANS.md "Auto-maintenance policy". */
   private val u16 = QueryDef(
     "u16_auto_maintenance",
     "size-tiered auto-compaction through an ingest run: content invariant",

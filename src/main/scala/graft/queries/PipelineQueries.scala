@@ -5333,8 +5333,9 @@ object PipelineQueries {
     * deterministic because ADC and cosine tie-break on id). The
     * oracle recomputes both sides: the ss21 stored-pair chain at
     * probes=8/k=10 and the exact cosine top-10, then counts the
-    * overlap. The ≥-band floor and the ×10 scale behavior are
-    * spec/probe-pinned (PipelineSpec, ScaleProbe). */
+    * overlap. The ≥-band floor is spec-pinned (PipelineSpec); the ×10
+    * scale behavior (recall 31/100 → 67/100 at ×1 → ×10) is recorded in
+    * PLANS.md "Stored-pair recall". */
   private val ss22 = QueryDef(
     "ss22_ivfpq_stored_recall",
     "recall@10 of the mutated stored IVF-PQ pair vs brute force",
@@ -5432,8 +5433,8 @@ object PipelineQueries {
     * fusion (from-scratch BM25 + brute-force cosine over the mutated
     * corpus) on ≥ 7 of its top 10 — a degenerate post-mutation index
     * (starved probes, poisoned postings) passes exactness against
-    * its own chain but reds here. The ×10 growth row is a ScaleProbe
-    * record. */
+    * its own chain but reds here. The ×10 growth row (7/10 → 10/10)
+    * is recorded in PLANS.md "Round-15 summary". */
   private val ss24 = QueryDef(
     "ss24_hybrid_recall_stored",
     "RRF over mutated stored BM25+IVF ≡ SQL fusion; recall band vs gold",
@@ -5924,8 +5925,8 @@ object PipelineQueries {
     * the same terms, so the gate pins stored-probe ≡ from-scratch
     * bit-exactly (shared scoring tree over equal integer inputs).
     * tp6 weight class: the index build runs INSIDE the gate; a
-    * deployment pays it once and probes many times (probe cost row in
-    * ScaleProbe). */
+    * deployment pays it once and probes many times (probe 0.76-1.42 s
+    * vs 6.5-13.2 s from scratch, PLANS.md "Round-9 continuation"). */
   private val ts21 = QueryDef(
     "ts21_stored_bm25_probe",
     "BM25 top-10 via stored inverted index ≡ from-scratch chain",

@@ -232,20 +232,18 @@ object Streams {
     * cron-ish re-run maps to Trigger.AvailableNow — process everything
     * new since the last checkpoint, then STOP. Each invocation is one
     * incremental batch over the files that appeared since the previous
-    * run (checkpointed offsets), with `process` applied per
-    * micro-batch — restart-safe incremental ETL without a resident
-    * stream. */
+    * run (checkpointed offsets), with `process(batch, batchId)` applied
+    * per micro-batch — restart-safe incremental ETL without a resident
+    * stream. Every ingest loop below runs through this one shell. */
   def availableNowRefresh(spark: SparkSession, inputDir: String,
       schemaDDL: String, checkpointDir: String)(
-      process: DataFrame => Unit): StreamingQuery = {
-    val in = spark.readStream.schema(schemaDDL).parquet(inputDir)
-    in.writeStream
+      process: (DataFrame, Long) => Unit): StreamingQuery =
+    spark.readStream.schema(schemaDDL).parquet(inputDir).writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) => process(batch); () }
+      .foreachBatch { (batch: DataFrame, batchId: Long) => process(batch, batchId) }
       .start()
-  }
 
   /** §2.9 × §3.2 end-to-end: the rate-limited INCREMENTAL scrape loop
     * (reference shape: main_scraper.py:342-377 — "re-scrape whatever
@@ -279,13 +277,9 @@ object Streams {
       now: org.apache.spark.sql.Column, days: Int,
       ratePerSecPerPartition: Double = 1.0, maxAttempts: Int = 3,
       backoffMs: Long = 1000L, numPartitions: Int = 0,
-      sleeper: Long => Unit = Thread.sleep(_)): StreamingQuery = {
-    val in = spark.readStream.schema("id STRING").parquet(inputDir)
-    in.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      sleeper: Long => Unit = Thread.sleep(_)): StreamingQuery =
+    availableNowRefresh(spark, inputDir, "id STRING", checkpointDir) {
+      (batch, _) =>
         val ids = batch.select("id").distinct()
         val withTs =
           if (store.exists(table))
@@ -314,10 +308,7 @@ object Streams {
             store.withCommitRetries()(
               store.upsert(spark, deadLetterTable, dead, Seq("id")))
         } finally fetched.unpersist(false)
-        ()
-      }
-      .start()
-  }
+    }
 
   /** Streaming INCREMENTAL near-dup ingest — the dedup twin of
     * [[incrementalScrape]]: one AvailableNow pass over a doc feed
@@ -358,13 +349,9 @@ object Streams {
       signatureTable: String = "lsh_signatures",
       indexTable: String = "lsh_band_index",
       rejectTable: String = "near_dup_rejects",
-      threshold: Double = 0.6, numBuckets: Int = 32): StreamingQuery = {
-    val in = spark.readStream.schema("id BIGINT, text STRING").parquet(inputDir)
-    in.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      threshold: Double = 0.6, numBuckets: Int = 32): StreamingQuery =
+    availableNowRefresh(spark, inputDir, "id BIGINT, text STRING", checkpointDir) {
+      (batch, _) =>
         // ONE text pass per micro-batch: signature the batch once,
         // pin it, and derive the in-batch mine, the cross-corpus
         // probe, AND the store commit from the pinned frame (a
@@ -459,10 +446,7 @@ object Streams {
           inBatch.unpersist(false)
           pinnedPairs.foreach(_.unpersist(false))
         }
-        ()
-      }
-      .start()
-  }
+    }
 
   /** Streaming KEEP-AND-LABEL ingest — the policy alternative to
     * [[nearDupIngest]]'s reject mode: every document is accepted
@@ -490,13 +474,9 @@ object Streams {
       signatureTable: String = "lsh_signatures",
       indexTable: String = "lsh_band_index",
       clusterTable: String = "dup_clusters",
-      threshold: Double = 0.6, numBuckets: Int = 32): StreamingQuery = {
-    val in = spark.readStream.schema("id BIGINT, text STRING").parquet(inputDir)
-    in.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      threshold: Double = 0.6, numBuckets: Int = 32): StreamingQuery =
+    availableNowRefresh(spark, inputDir, "id BIGINT, text STRING", checkpointDir) {
+      (batch, _) =>
         val b = batch.persist(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // one text pass per micro-batch (see nearDupIngest): the
@@ -581,10 +561,7 @@ object Streams {
           sigs.unpersist(false)
           pinnedPairs.foreach(_.unpersist(false))
         }
-        ()
-      }
-      .start()
-  }
+    }
 
   final case class UserEvent(user_id: Long, ts: Timestamp, event_type: String)
   final case class SessionState(start: Long, last: Long, n: Int)
@@ -730,13 +707,9 @@ object Streams {
       checkpointDir: String, store: ParquetTableStore,
       postingsTable: String = "bm25_postings",
       statsTable: String = "bm25_stats",
-      ledgerTable: String = "bm25_ingest_ledger"): StreamingQuery = {
-    val in = spark.readStream.schema("id BIGINT, text STRING").parquet(inputDir)
-    in.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      ledgerTable: String = "bm25_ingest_ledger"): StreamingQuery =
+    availableNowRefresh(spark, inputDir, "id BIGINT, text STRING", checkpointDir) {
+      (batch, batchId) =>
         import spark.implicits._
         val alreadyFolded = store.exists(ledgerTable) &&
           store.read(spark, ledgerTable)
@@ -777,10 +750,7 @@ object Streams {
             Seq(batchId).toDF("batch_id"), Seq("batch_id")))
           ()
         }
-        ()
-      }
-      .start()
-  }
+    }
 
   /** Streaming VECTOR-INDEX maintenance — [[lexicalIndexIngest]]'s
     * discipline for the vector family (the "daily-ingest ANN user"
@@ -816,14 +786,9 @@ object Streams {
       codebookTable: String = "ivf_codebook",
       membersTable: String = "ivf_members",
       tombstoneTable: String = "ivf_tombstones",
-      group: String = "ivf_meta"): StreamingQuery = {
-    val in = spark.readStream.schema("id BIGINT, embedding ARRAY<FLOAT>")
-      .parquet(inputDir)
-    in.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      group: String = "ivf_meta"): StreamingQuery =
+    availableNowRefresh(spark, inputDir, "id BIGINT, embedding ARRAY<FLOAT>", checkpointDir) {
+      (batch, _) =>
         if (batch.limit(1).count() > 0) {
           if (!graft.ops.SimilaritySearch.storedIndexBuilt(store, group))
             graft.ops.SimilaritySearch.ivfBuildIndexStored(batch, "id",
@@ -834,10 +799,7 @@ object Streams {
               "embedding", store, codebookTable, membersTable,
               tombstoneTable, group)
         }
-        ()
-      }
-      .start()
-  }
+    }
 
   /** Streaming maintenance for the FULL deployment index —
     * [[vectorIndexIngest]]'s loop extended to BOTH stored families:
@@ -868,13 +830,8 @@ object Streams {
       numCentroids: Int = 32, m: Int = 8, ks: Int = 16,
       dim: Int = 64): StreamingQuery = {
     import graft.ops.SimilaritySearch._
-    val in = spark.readStream.schema("id BIGINT, embedding ARRAY<FLOAT>")
-      .parquet(inputDir)
-    in.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    availableNowRefresh(spark, inputDir, "id BIGINT, embedding ARRAY<FLOAT>", checkpointDir) {
+      (batch, _) =>
         if (batch.limit(1).count() > 0) {
           val Seq(ivfBuilt, pqBuilt) =
             Seq("ivf_meta", "pq_meta").map(storedIndexBuilt(store, _))
@@ -890,9 +847,7 @@ object Streams {
             ivfPqPairPin(spark, store)
           } finally b.unpersist(blocking = false)
         }
-        ()
-      }
-      .start()
+    }
   }
 
   /** Streaming DSIR λ-MODEL maintenance — the st3 sketch discipline
@@ -921,14 +876,9 @@ object Streams {
       slotsTable: String = "dsir_slots",
       targetTable: String = "dsir_target",
       buckets: Int = 4096,
-      charNgrams: Option[Int] = None): StreamingQuery = {
-    val in = spark.readStream.schema("id BIGINT, text STRING")
-      .parquet(inputDir)
-    in.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      charNgrams: Option[Int] = None): StreamingQuery =
+    availableNowRefresh(spark, inputDir, "id BIGINT, text STRING", checkpointDir) {
+      (batch, batchId) =>
         if (!store.exists(targetTable)) {
           // the feature family (slot width, n-gram mode, hash) is
           // baked into every stored count: record it on the target
@@ -950,10 +900,7 @@ object Streams {
         if (bs.limit(1).count() > 0)
           store.withCommitRetries()(store.upsert(spark, slotsTable, bs,
             Seq("batch_id", "slot")))
-        ()
-      }
-      .start()
-  }
+    }
 
   /** Streaming hot-token SKETCH maintenance — the count-min
     * discipline ([[graft.ops.Sketches]]) kept current over an
@@ -979,14 +926,9 @@ object Streams {
       checkpointDir: String, store: ParquetTableStore,
       sketchTable: String = "token_cms",
       eps: Double = 1e-4, confidence: Double = 0.99,
-      seed: Int = 42): StreamingQuery = {
-    val in = spark.readStream.schema("id BIGINT, text STRING")
-      .parquet(inputDir)
-    in.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      seed: Int = 42): StreamingQuery =
+    availableNowRefresh(spark, inputDir, "id BIGINT, text STRING", checkpointDir) {
+      (batch, batchId) =>
         import spark.implicits._
         val toks = batch
           .select(explode(split(trim(lower(col("text"))), "\\s+")).as("item"))
@@ -999,10 +941,7 @@ object Streams {
           store.upsert(spark, sketchTable,
             Seq((batchId, sk)).toDF("batch_id", "sketch"),
             Seq("batch_id")))
-        ()
-      }
-      .start()
-  }
+    }
 
   /** Streaming DECONTAMINATION screening — benchmark hygiene kept
     * current over an append-only document inbox (the production
@@ -1033,14 +972,9 @@ object Streams {
       bench: DataFrame, benchId: String, benchText: String,
       gramsTable: String = "decontam_grams",
       pairsTable: String = "contamination",
-      n: Int = 8, minShared: Int = 2): StreamingQuery = {
-    val in = spark.readStream.schema("id BIGINT, text STRING")
-      .parquet(inputDir)
-    in.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      n: Int = 8, minShared: Int = 2): StreamingQuery =
+    availableNowRefresh(spark, inputDir, "id BIGINT, text STRING", checkpointDir) {
+      (batch, _) =>
         if (!store.exists(gramsTable))
           graft.ops.Decontamination.indexBenchmarks(bench, benchId,
             benchText, store, gramsTable, n)
@@ -1067,10 +1001,7 @@ object Streams {
             store.withCommitRetries()(store.upsert(spark, pairsTable,
               pairs, Seq("doc_id", "bench_id")))
         } finally pairs.unpersist(false)
-        ()
-      }
-      .start()
-  }
+    }
 
   /** Streaming CORPUS CURATION — tp2's batch training-prep chain as a
     * production ingest loop: every arriving document batch runs the
@@ -1119,14 +1050,9 @@ object Streams {
       digestsTable: String = "corpus_digests",
       cleanTable: String = "corpus_clean",
       n: Int = 8, minShared: Int = 2,
-      numBuckets: Int = 32): StreamingQuery = {
-    val in = spark.readStream.schema("id BIGINT, text STRING")
-      .parquet(inputDir)
-    in.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      numBuckets: Int = 32): StreamingQuery =
+    availableNowRefresh(spark, inputDir, "id BIGINT, text STRING", checkpointDir) {
+      (batch, _) =>
         if (batch.limit(1).count() > 0) {
           if (!store.exists(gramsTable))
             graft.ops.Decontamination.indexBenchmarks(bench, benchId,
@@ -1207,10 +1133,7 @@ object Streams {
             } finally ded.unpersist(false)
           } finally winners.unpersist(false)
         }
-        ()
-      }
-      .start()
-  }
+    }
 
   /** Streaming GRAPH-ARTIFACT maintenance — the g3/g4 folds kept
     * current over an append-only edge feed (`src BIGINT, dst BIGINT`
@@ -1242,14 +1165,9 @@ object Streams {
   def graphIngest(spark: SparkSession, inputDir: String,
       checkpointDir: String, store: ParquetTableStore,
       buildIterations: Int = 3, foldIterations: Int = 2,
-      damping: Double = 0.85, tol: Double = 0.0): StreamingQuery = {
-    val in = spark.readStream.schema("src BIGINT, dst BIGINT")
-      .parquet(inputDir)
-    in.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      damping: Double = 0.85, tol: Double = 0.0): StreamingQuery =
+    availableNowRefresh(spark, inputDir, "src BIGINT, dst BIGINT", checkpointDir) {
+      (batch, _) =>
         if (batch.limit(1).count() > 0) {
           // both folds scan the batch several times (canonicalize,
           // anti-join, case enumeration) — pin it for the duration
@@ -1289,10 +1207,7 @@ object Streams {
             }
           } finally b.unpersist(false)
         }
-        ()
-      }
-      .start()
-  }
+    }
 
   /** Streaming corpus maintenance, generic shape: each micro-batch
     * LWW-upserts (doc_id, text) rows into a bucketed store table —
@@ -1313,14 +1228,9 @@ object Streams {
       table: String = "corpus", numBuckets: Int = 8,
       autoMaintain: Boolean = false,
       maintainMaxFilesPerBucket: Int = 4,
-      maintainMinBytesPerFile: Long = 8L << 20): StreamingQuery = {
-    val in = spark.readStream.schema("doc_id BIGINT, text STRING")
-      .parquet(inputDir)
-    in.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      maintainMinBytesPerFile: Long = 8L << 20): StreamingQuery =
+    availableNowRefresh(spark, inputDir, "doc_id BIGINT, text STRING", checkpointDir) {
+      (batch, _) =>
         if (batch.limit(1).count() > 0) {
           store.withCommitRetries()(
             store.upsertBucketed(spark, table, batch, Seq("doc_id"),
@@ -1330,10 +1240,7 @@ object Streams {
               store.autoMaintain(spark, table,
                 maintainMaxFilesPerBucket, maintainMinBytesPerFile))
         }
-        ()
-      }
-      .start()
-  }
+    }
 
   /** The SECOND CONSUMER of a stored corpus, fed by the store's own
     * change feed ([[ParquetTableStore.changesBetween]]) — never by

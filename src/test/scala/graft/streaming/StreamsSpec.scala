@@ -150,7 +150,7 @@ class StreamsSpec extends SparkSpec {
     val ckpt = tmpDir("anckpt")
     val seen = new java.util.concurrent.atomic.AtomicLong(0)
     def runOnce(): Unit = {
-      val q = Streams.availableNowRefresh(spark, in, "k long", ckpt) { b =>
+      val q = Streams.availableNowRefresh(spark, in, "k long", ckpt) { (b, _) =>
         seen.addAndGet(b.count())
       }
       try q.awaitTermination(60000) finally if (q.isActive) q.stop()
