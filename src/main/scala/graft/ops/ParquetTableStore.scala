@@ -17,6 +17,25 @@ import org.apache.spark.sql.functions._
   * count, fixed at creation) and nest `kb=<N>/` partition dirs under
   * each version.
   *
+  * Version format (the only one this store reads):
+  *  - `_CURRENT` holds `v=<K>-<writer suffix>`, the live version's
+  *    directory name;
+  *  - every version dir carries `_schema.json` (the canonical schema
+  *    every read applies), `_manifest` (the (rel path, bytes) row of
+  *    every data file, which every read plans from) and `_commit_ts`
+  *    (the publish wall-clock), plus `_zonemap` when the table
+  *    declares zone columns.
+  * One resolver ([[layoutAt]]) reads the schema and manifest for every
+  * read path, and it states the refusal rule once. A missing version
+  * dir, or a missing `_schema.json`/`_manifest` on a version at or
+  * below `head − keepVersions` (retention may be deleting it), is the
+  * retryable [[ConcurrentCommitException]]. A missing `_schema.json`/
+  * `_manifest` inside that keep window, or a pointer without the `v=`
+  * prefix, is an `IllegalStateException` that names the table, the
+  * version and the missing file: the version was written in an older
+  * format (or damaged), and nothing migrates it in place — rebuild
+  * the table.
+  *
   * Commit protocol (optimistic concurrency):
   *   1. write the new snapshot to v=<K+1>-<unique writer suffix> (a
   *      fresh directory PER WRITER — concurrent committers can never
@@ -145,30 +164,30 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
   private def currentFile(table: String): Path = tableDir(table).resolve("_CURRENT")
   private def bucketsFile(table: String): Path = tableDir(table).resolve("_BUCKETS")
 
-  /** The pointer holds the live version DIRECTORY NAME
-    * (`v=<K>-<writer-suffix>`): each writer stages under a
-    * unique-suffixed dir, so two optimistic committers can never
-    * interleave part files in one directory — the pointer CAS is the
-    * single commit point, exactly the transactional-table-format
-    * discipline. (Pre-round-4 pointers held the bare number with
-    * un-suffixed `v=<K>` dirs; both forms still parse.) */
-  private def dirNameOf(pointer: String): String =
-    if (pointer.startsWith("v=")) pointer else s"v=$pointer"
-
-  /** The version dir a pointer names. */
-  private def dirOf(table: String, pointer: String): Path =
-    tableDir(table).resolve(dirNameOf(pointer))
-
   private def versionOf(dirName: String): Long = {
     val core = dirName.stripPrefix("v=")
     val dash = core.indexOf('-')
     (if (dash < 0) core else core.substring(0, dash)).toLong
   }
 
+  /** The live pointer: the live version's DIRECTORY NAME
+    * (`v=<K>-<writer-suffix>`). Each writer stages under a
+    * unique-suffixed dir, so two optimistic committers can never
+    * interleave part files in one directory — the pointer CAS is the
+    * single commit point, exactly the transactional-table-format
+    * discipline. A pointer that is not a `v=` dir name (an older
+    * format's bare number) refuses typed. */
   private def currentPointer(table: String): Option[String] =
     if (!exists(table)) None
-    else Some(new String(Files.readAllBytes(currentFile(table)),
-      StandardCharsets.UTF_8).trim)
+    else {
+      val p = new String(Files.readAllBytes(currentFile(table)),
+        StandardCharsets.UTF_8).trim
+      if (!p.startsWith("v=")) throw new IllegalStateException(
+        s"table $table: _CURRENT holds '$p', not a v=<K>-<suffix> " +
+          "version dir name — written in an older store format; " +
+          "rebuild the table")
+      Some(p)
+    }
 
   /** The live pointer, refusing a table with no committed version. */
   private def headPointer(table: String): String =
@@ -178,7 +197,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
   def exists(table: String): Boolean = Files.exists(currentFile(table))
 
   def currentVersion(table: String): Option[Long] =
-    currentPointer(table).map(p => versionOf(dirNameOf(p)))
+    currentPointer(table).map(versionOf)
 
   /** Bucket count for a bucketed table (absent → snapshot table). */
   def numBuckets(table: String): Option[Int] =
@@ -194,35 +213,101 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * [[read]] would silently mix snapshots ([[readBucketsOf]]'s
     * existing contract, generalized to snapshot tables). */
   def readVersioned(spark: SparkSession, table: String): (DataFrame, Long) = {
-    val d = dirNameOf(headPointer(table))
+    val d = headPointer(table)
     (readDir(spark, table, d), versionOf(d))
   }
 
   /** The live snapshot. The internal bucket column never escapes. */
   def read(spark: SparkSession, table: String): DataFrame =
-    readDir(spark, table, dirNameOf(headPointer(table)))
+    readDir(spark, table, headPointer(table))
 
   /** The live snapshot read through DIRECTORY LISTING (partition
-    * discovery under the canonical schema) — the pre-manifest
-    * planning path, kept public as the VERIFICATION TWIN of [[read]]:
-    * gate u20 pins manifest-planned ≡ listing-planned row-for-row
-    * across the full write surface, so a manifest that lost or
-    * invented a file can never pass silently. Never use this as a
-    * consumer path — it pays the O(files) metadata walk the manifest
-    * exists to remove. */
+    * discovery under the recorded schema), kept public as the
+    * VERIFICATION TWIN of [[read]]: gate u20 pins manifest-planned ≡
+    * listing-planned row-for-row across the full write surface, so a
+    * manifest that lost or invented a file can never pass silently.
+    * Never use this as a consumer path — it pays the O(files)
+    * metadata walk the manifest exists to remove. */
   def readLegacy(spark: SparkSession, table: String): DataFrame = {
-    val df = readVersionFrame(spark, dirOf(table, headPointer(table)))
+    val l = layoutAt(table, headPointer(table))
+    val df = spark.read.schema(l.schema).parquet(l.dir.toString)
     if (df.columns.contains(BucketCol)) df.drop(BucketCol) else df
   }
 
-  /** The version's consumer frame: planned from the `_manifest`
-    * sidecar when the version carries one — NO directory listing, no
-    * per-file stat, no footer sampling; at 10⁵-10⁶ files per version
-    * an object-store read otherwise pays O(files) LIST/HEAD RPCs at
-    * plan time ([[graft.sources.ManifestFileIndex]], the round-14
-    * verdict's item 1 residue) — falling back to the listing-based
-    * [[readVersionFrame]] for pre-manifest versions. The internal
-    * bucket column never escapes.
+  /** One version's on-disk format as [[layoutAt]] resolved it: the
+    * canonical schema (bucket column included for bucketed layouts),
+    * the manifest's (rel path, bytes) rows, and the zone-map stats
+    * (read on first use). */
+  private final class VersionLayout(table: String, val dirName: String,
+      val dir: Path, val schema: org.apache.spark.sql.types.StructType,
+      val rows: Seq[(String, Long)]) {
+    /** Every file sits under a `__kb=N/` dir (a fileless-empty
+      * bucketed version's one root file carries the column as data). */
+    def partitioned: Boolean = schema.fieldNames.contains(BucketCol) &&
+      rows.nonEmpty && rows.forall(_._1.startsWith(s"$BucketCol="))
+    lazy val skip: Option[graft.sources.ZoneSkip] =
+      sidecarOf(table, dirName, ZoneMapDir)(zoneSkipOf(table, dir, schema))
+  }
+
+  /** THE VERSION-FORMAT RESOLVER: every read path takes a version's
+    * schema, file list and zone skip from here — never from a
+    * directory listing or parquet schema inference. `buckets`
+    * restricts the manifest rows to those buckets' `__kb=N/` files
+    * (only the manifest slices that can hold them are parsed). A
+    * missing version dir or sidecar refuses by [[unreadable]]'s rule. */
+  private def layoutAt(table: String, dirName: String,
+      buckets: Option[Set[Int]] = None): VersionLayout = {
+    val vdir = tableDir(table).resolve(dirName)
+    val schema = sidecarOf(table, dirName, SchemaFile)(storedSchemaOf(vdir))
+    val rows = sidecarOf(table, dirName, ManifestDir)(
+      manifestRowsSliced(vdir, buckets.map(_.map(b => s"$BucketCol=$b/"))))
+    new VersionLayout(table, dirName, vdir, schema, rows)
+  }
+
+  /** Read sidecar `name` of a version, mapping a vanished file to
+    * [[unreadable]]'s refusal. */
+  private def sidecarOf[T](table: String, dirName: String, name: String)(
+      read: => T): T =
+    try read
+    catch {
+      case _: java.nio.file.NoSuchFileException |
+           _: java.io.FileNotFoundException =>
+        throw unreadable(table, dirName, name)
+    }
+
+  /** Is committed version `v` of `table` inside the plain keep window
+    * (`v > head − keepVersions`)? Retention never deletes there, so a
+    * file missing from such a version is not a prune in progress. */
+  private def inPlainWindow(table: String, v: Long): Boolean =
+    currentVersion(table).exists(head => v > head - keepVersions)
+
+  /** THE REFUSAL RULE for a version that lacks `missing`. A vanished
+    * version dir, or a version retention may be deleting (outside the
+    * plain keep window — prune deletes a tree bottom-up, so its
+    * sidecars go before its dir), is the retryable
+    * [[ConcurrentCommitException]]: re-read the head and retry. Inside
+    * the window the version was written in an older format or
+    * damaged: a typed refusal, never a listing or an inferred schema. */
+  private def unreadable(table: String, dirName: String,
+      missing: String): RuntimeException = {
+    val vdir = tableDir(table).resolve(dirName)
+    val v = versionOf(dirName)
+    if (!Files.exists(vdir) || !inPlainWindow(table, v))
+      new ConcurrentCommitException(
+        s"version $vdir lost its $missing during read planning — a " +
+          "concurrent commit advanced past retention; re-read and retry")
+    else new IllegalStateException(
+      s"table $table version $v ($dirName) has no $missing — written " +
+        "in an older store format or damaged; no in-place migration " +
+        "exists, rebuild the table")
+  }
+
+  /** The version's consumer frame, planned from its `_manifest` rows
+    * under its `_schema.json` ([[layoutAt]]) — NO directory listing,
+    * no per-file stat, no footer sampling; at 10⁵-10⁶ files per
+    * version an object-store read otherwise pays O(files) LIST/HEAD
+    * RPCs at plan time ([[graft.sources.ManifestFileIndex]]). The
+    * internal bucket column never escapes.
     *
     * Concurrency contract: a version pruned between the pointer
     * resolve and THIS call maps to the retryable
@@ -233,23 +318,9 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * act on a frame while its version is retained; `keepVersions` /
     * the cursor registry size that window). */
   private def readDir(spark: SparkSession, table: String, dirName: String): DataFrame = {
-    val vdir = tableDir(table).resolve(dirName)
-    val df =
-      try storedSchemaOf(vdir) match {
-        case Some(s) => manifestRowsDirect(vdir) match {
-          case Some(rows) => graft.sources.ManifestFileIndex.storeFrame(
-            spark, vdir.toUri.toString, s, rows, BucketCol,
-            zoneSkipOf(table, vdir, s))
-          case None => spark.read.schema(s).parquet(vdir.toString)
-        }
-        case None => spark.read.parquet(vdir.toString)
-      } catch {
-        case _: java.nio.file.NoSuchFileException |
-             _: java.io.FileNotFoundException =>
-          throw new ConcurrentCommitException(
-            s"version $vdir pruned during read planning — a concurrent " +
-              "commit advanced past retention; re-read and retry")
-      }
+    val l = layoutAt(table, dirName)
+    val df = graft.sources.ManifestFileIndex.storeFrame(spark,
+      l.dir.toUri.toString, l.schema, l.rows, BucketCol, l.skip)
     if (df.columns.contains(BucketCol)) df.drop(BucketCol) else df
   }
 
@@ -305,24 +376,22 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * path, ~128k rows each) and parse in PARALLEL here: the bare
     * Group reader runs ~6 s/10⁶ rows single-threaded (6.3 s, PLANS.md
     * "Manifest at 10⁶ files"), which a thread per slice collapses to
-    * ~1 s. Distributed consumers (maintenance rollups, [[fileStats]])
-    * keep reading the same sidecar as a frame via [[manifestAt]].
-    * None = the version predates manifests. */
-  private def manifestRowsDirect(vdir: Path): Option[Seq[(String, Long)]] =
-    manifestRowsSliced(vdir, None)
-
-  /** [[manifestRowsDirect]] restricted to rel-path `prefixes` (the
-    * bucket-restricted read): slices whose footer min/max rel-path
-    * range provably misses every prefix are SKIPPED without parsing
-    * a row — a touched-bucket read of a 10⁶-file version parses only
-    * its own slice(s), not the whole sidecar. Sliced manifests are
-    * sorted by rel path, so bucket prefixes concentrate in few
-    * slices; stats-less or anomalous slices parse conservatively. */
+    * ~1 s. Consumers (maintenance rollups, [[fileStats]]) get the
+    * same rows from [[layoutAt]]. A missing sidecar (or one with no
+    * slice — a prune mid-delete) is a NoSuchFileException.
+    *
+    * With rel-path `prefixes` (the bucket-restricted read), slices
+    * whose footer min/max rel-path range provably misses every prefix
+    * are SKIPPED without parsing a row — a touched-bucket read of a
+    * 10⁶-file version parses only its own slice(s), not the whole
+    * sidecar. Sliced manifests are sorted by rel path, so bucket
+    * prefixes concentrate in few slices; stats-less or anomalous
+    * slices parse conservatively. */
   private def manifestRowsSliced(vdir: Path,
-      prefixes: Option[Set[String]]): Option[Seq[(String, Long)]] =
+      prefixes: Option[Set[String]]): Seq[(String, Long)] =
     prefixes match {
       case None =>
-        cachedSidecar[Option[Seq[(String, Long)]]]("m", vdir)(
+        cachedSidecar[Seq[(String, Long)]]("m", vdir)(
           manifestRowsParse(vdir, None))
       case Some(ps) =>
         // a cached FULL parse serves any restriction by the same
@@ -333,40 +402,45 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
         }
         full match {
           case Some(v) if Files.exists(vdir) =>
-            v.asInstanceOf[Option[Seq[(String, Long)]]]
-              .map(_.filter(r => ps.exists(r._1.startsWith(_))))
+            v.asInstanceOf[Seq[(String, Long)]]
+              .filter(r => ps.exists(r._1.startsWith(_)))
           case _ => manifestRowsParse(vdir, prefixes)
         }
     }
 
   private def manifestRowsParse(vdir: Path,
-      prefixes: Option[Set[String]]): Option[Seq[(String, Long)]] = {
+      prefixes: Option[Set[String]]): Seq[(String, Long)] = {
     val mdir = vdir.resolve(ManifestDir)
-    if (!Files.exists(mdir)) None
-    else {
-      val parts = listDir(mdir)
-        .filter(p => Files.isRegularFile(p) &&
-          p.getFileName.toString.endsWith(".parquet"))
-      val kept = prefixes match {
-        case Some(ps) => parts.filter(p => sliceMayContain(p, ps))
-        case None => parts
+    val parts = listDir(mdir)
+      .filter(p => Files.isRegularFile(p) &&
+        p.getFileName.toString.endsWith(".parquet"))
+    // every write records at least one slice (an empty one for a
+    // fileless version): none left is a sidecar mid-delete
+    if (parts.isEmpty) throw new java.nio.file.NoSuchFileException(mdir.toString)
+    val kept = prefixes match {
+      case Some(ps) => parts.filter(p => sliceMayContain(p, ps))
+      case None => parts
+    }
+    val parsed: Seq[Seq[(String, Long)]] =
+      if (kept.size <= 1) kept.map(parseManifestSlice)
+      else {
+        val pool = java.util.concurrent.Executors
+          .newFixedThreadPool(math.min(8, kept.size))
+        try kept.map(p => pool.submit(
+            new java.util.concurrent.Callable[Seq[(String, Long)]] {
+              def call(): Seq[(String, Long)] = parseManifestSlice(p)
+            })).map { f =>
+            // a slice's own I/O failure, not the pool's wrapper
+            try f.get()
+            catch { case e: java.util.concurrent.ExecutionException =>
+              throw e.getCause }
+          }
+        finally pool.shutdown()
       }
-      val parsed: Seq[Seq[(String, Long)]] =
-        if (kept.size <= 1) kept.map(parseManifestSlice)
-        else {
-          val pool = java.util.concurrent.Executors
-            .newFixedThreadPool(math.min(8, kept.size))
-          try kept.map(p => pool.submit(
-              new java.util.concurrent.Callable[Seq[(String, Long)]] {
-                def call(): Seq[(String, Long)] = parseManifestSlice(p)
-              })).map(_.get())
-          finally pool.shutdown()
-        }
-      val rows = parsed.flatten
-      Some(prefixes match {
-        case Some(ps) => rows.filter(r => ps.exists(r._1.startsWith(_)))
-        case None => rows
-      })
+    val rows = parsed.flatten
+    prefixes match {
+      case Some(ps) => rows.filter(r => ps.exists(r._1.startsWith(_)))
+      case None => rows
     }
   }
 
@@ -486,7 +560,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * every None case reads simply don't skip; correctness never
     * depends on the cut because data filters re-apply per row. The
     * sidecar is one coalesced parquet file read driver-side, the
-    * manifestRowsDirect discipline. */
+    * manifestRowsSliced discipline. */
   private def zoneSkipOf(table: String, vdir: Path,
       schema: org.apache.spark.sql.types.StructType)
       : Option[graft.sources.ZoneSkip] = {
@@ -552,47 +626,21 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     }
   }
 
-  /** The rows of the version at `vdir` restricted to buckets `kbs`,
-    * WITH the bucket column (callers drop it) — planned from the
-    * manifest when present: the
-    * restriction selects files by their `__kb=N/` prefix on the
-    * driver, so only touched buckets' files enter the plan at all
-    * and the bucket column carries its REAL per-directory value
-    * ([[graft.sources.ManifestFileIndex.storeFrame]] — compaction's
-    * repartition-by-bucket works unchanged). Falls back to the
-    * basePath explicit-dir read (O(touched) listing) under the
-    * canonical schema, and to the full inference read for pre-schema
-    * versions. A vanished version dir maps to the retryable
-    * [[ConcurrentCommitException]], never a silently-empty frame. */
-  private def readBucketRestricted(spark: SparkSession, vdir: Path,
-      kbs: Set[Int]): DataFrame = {
-    val restricted = probing(vdir)((storedSchemaOf(vdir),
-        Files.exists(vdir.resolve(ManifestDir))) match {
-      case (Some(s), true) =>
-        // bucket layout iff bucket dirs exist (the fileless-empty
-        // version writes root files) — an O(buckets) listing, never
-        // O(files); the restricted parse then touches ONLY slices
-        // whose footer range intersects the requested buckets
-        val use =
-          if (bucketDirs(vdir).isEmpty) // root-file (empty) layout: kb is data
-            manifestRowsDirect(vdir).get
-          else manifestRowsSliced(vdir,
-            Some(kbs.map(b => s"$BucketCol=$b/"))).get
-        graft.sources.ManifestFileIndex.storeFrame(spark,
-          vdir.toUri.toString, s, use, BucketCol)
-      case (Some(s), false) if s.fieldNames.contains(BucketCol) =>
-        val dirs = kbs.toSeq.sorted.map(b => vdir.resolve(s"$BucketCol=$b"))
-          .filter(Files.isDirectory(_))
-        if (dirs.isEmpty && !Files.exists(vdir))
-          throw new java.nio.file.NoSuchFileException(vdir.toString)
-        if (dirs.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-        else spark.read.option("basePath", vdir.toString).schema(s)
-          .parquet(dirs.map(_.toString): _*)
-      case _ => readVersionFrame(spark, vdir)
-    })
-    restricted.filter(col(BucketCol).isin(kbs.toSeq: _*))
+  /** The rows of version `dirName` restricted to buckets `kbs`, WITH
+    * the bucket column (callers drop it), planned from the manifest
+    * rows of those buckets alone ([[layoutAt]]): only touched buckets'
+    * files enter the plan, and the bucket column carries its REAL
+    * per-directory value ([[graft.sources.ManifestFileIndex.storeFrame]]
+    * — compaction's repartition-by-bucket works unchanged). A
+    * fileless-empty version's one root file holds no rows, so it has
+    * nothing to restrict: no bucket prefix matches it and the frame is
+    * empty under the version's schema. */
+  private def readBucketRestricted(spark: SparkSession, table: String,
+      dirName: String, kbs: Set[Int]): DataFrame = {
+    val l = layoutAt(table, dirName, Some(kbs))
+    graft.sources.ManifestFileIndex.storeFrame(spark, l.dir.toUri.toString,
+      l.schema, l.rows, BucketCol)
+      .filter(col(BucketCol).isin(kbs.toSeq: _*))
   }
 
   /** CANONICAL PER-VERSION SCHEMA — the table-format answer to
@@ -606,8 +654,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * `_schema.json` INSIDE the staged version dir (version-atomic,
     * like the zone map), and every version read applies it —
     * old-schema files read the evolved columns as null, exactly the
-    * add-only evolution contract. Versions from before this existed
-    * carry no file and fall back to inference. */
+    * add-only evolution contract. */
   private val SchemaFile = "_schema.json"
 
   private def writeSchemaFile(stagedDir: Path,
@@ -617,14 +664,11 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     ()
   }
 
-  private def storedSchemaOf(dir: Path)
-      : Option[org.apache.spark.sql.types.StructType] =
-    cachedSidecar[Option[org.apache.spark.sql.types.StructType]]("s", dir) {
-      val f = dir.resolve(SchemaFile)
-      if (!Files.exists(f)) None
-      else Some(org.apache.spark.sql.types.DataType.fromJson(
-        new String(Files.readAllBytes(f), StandardCharsets.UTF_8))
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+  private def storedSchemaOf(dir: Path): org.apache.spark.sql.types.StructType =
+    cachedSidecar[org.apache.spark.sql.types.StructType]("s", dir) {
+      org.apache.spark.sql.types.DataType.fromJson(new String(
+        Files.readAllBytes(dir.resolve(SchemaFile)), StandardCharsets.UTF_8))
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
     }
 
   /** The PLAN INGREDIENTS of a table's CURRENT version, for the SQL
@@ -634,10 +678,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * bucket-partitioned, the zone-skip stats, and the resolved
     * version. Resolving this at `loadTable` time is what makes a
     * catalog read bind the CURRENT version at ANALYSIS time — the
-    * property session views can't have (they bind at registration).
-    * Requires the `_schema.json` + `_manifest` sidecars every version
-    * this store writes carries; a pre-sidecar version refuses typed
-    * (one rewriting commit migrates it). */
+    * property session views can't have (they bind at registration). */
   private[graft] def scanSpec(table: String): StoreScanSpec =
     scanSpecAt(table, None)
 
@@ -651,33 +692,14 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
       version: Option[Long]): StoreScanSpec = {
     val dirName = version match {
       case Some(v) => versionDirNameOf(table, v)
-      case None => dirNameOf(headPointer(table))
+      case None => headPointer(table)
     }
-    val vdir = tableDir(table).resolve(dirName)
-    def remap(e: Throwable): Nothing =
-      throw new ConcurrentCommitException(
-        s"version $vdir pruned during catalog resolution — a concurrent " +
-          "commit advanced past retention; re-read and retry", e)
-    try {
-      val schema = storedSchemaOf(vdir).getOrElse(
-        throw new IllegalStateException(
-          s"table $table version $vdir predates the _schema.json " +
-            "sidecar — rewrite it (any commit) before catalog reads"))
-      val rows = manifestRowsDirect(vdir).getOrElse(
-        throw new IllegalStateException(
-          s"table $table version $vdir predates the _manifest " +
-            "sidecar — rewrite it (any commit) before catalog reads"))
-      val partitioned = schema.fieldNames.contains(BucketCol) &&
-        rows.nonEmpty && rows.forall(_._1.startsWith(s"$BucketCol="))
-      StoreScanSpec(vdir.toUri.toString,
-        org.apache.spark.sql.types.StructType(
-          schema.fields.filterNot(_.name == BucketCol)),
-        rows, if (partitioned) Some(BucketCol) else None,
-        zoneSkipOf(table, vdir, schema), versionOf(dirName))
-    } catch {
-      case e: java.nio.file.NoSuchFileException => remap(e)
-      case e: java.io.FileNotFoundException => remap(e)
-    }
+    val l = layoutAt(table, dirName)
+    StoreScanSpec(l.dir.toUri.toString,
+      org.apache.spark.sql.types.StructType(
+        l.schema.fields.filterNot(_.name == BucketCol)),
+      l.rows, if (l.partitioned) Some(BucketCol) else None,
+      l.skip, versionOf(dirName))
   }
 
   /** Key columns stamped at bucketed-table creation (`_KEYS`,
@@ -703,14 +725,6 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
       java.nio.file.StandardOpenOption.CREATE_NEW)
     catch { case _: java.nio.file.FileAlreadyExistsException => () }
   }
-
-  /** A version dir as a frame, under its recorded canonical schema
-    * when present (inference otherwise — pre-schema-file versions). */
-  private def readVersionFrame(spark: SparkSession, dir: Path): DataFrame =
-    storedSchemaOf(dir) match {
-      case Some(s) => spark.read.schema(s).parquet(dir.toString)
-      case None => spark.read.parquet(dir.toString)
-    }
 
   /** Version numbers currently on disk for `table`, ascending — the
     * retention window [[readVersion]] can time-travel into (bounded
@@ -933,7 +947,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * and re-derives) instead of being silently overwritten. */
   def readPinned(spark: SparkSession, table: String): (DataFrame, CommitPin) = {
     val p = headPointer(table)
-    (readDir(spark, table, dirNameOf(p)), CommitPin(table, Some(p)))
+    (readDir(spark, table, p), CommitPin(table, Some(p)))
   }
 
   /** [[readPinned]] tolerating an ABSENT table: the pin then captures
@@ -944,14 +958,14 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
   def readPinnedOption(spark: SparkSession,
       table: String): (Option[DataFrame], CommitPin) = {
     val p = currentPointer(table)
-    (p.map(pp => readDir(spark, table, dirNameOf(pp))), CommitPin(table, p))
+    (p.map(pp => readDir(spark, table, pp)), CommitPin(table, p))
   }
 
   /** The version a [[CommitPin]] captured (None = pinned absence) —
     * lets a no-op fold report the version its state corresponds to
     * without re-reading the head. */
   def pinVersion(pin: CommitPin): Option[Long] =
-    pin.pointer.map(p => versionOf(dirNameOf(p)))
+    pin.pointer.map(versionOf)
 
   /** ZONE MAPS — a per-file min/max sidecar over DECLARED columns,
     * written INSIDE each staged version dir (`_zonemap/` —
@@ -1020,7 +1034,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     // schemas and inference is file-order dependent
     val aggs = statsCols.flatMap(c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    readVersionFrame(spark, dir)
+    spark.read.schema(storedSchemaOf(dir)).parquet(dir.toString)
       .groupBy(relFileExpr.as("file")).agg(aggs.head, aggs.tail: _*)
   }
 
@@ -1034,7 +1048,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
   private def prevZoneMap(spark: SparkSession, table: String,
       prev: Option[String], cols: Seq[String]): Option[DataFrame] =
     prev.flatMap { p =>
-      val zm = dirOf(table, p).resolve(ZoneMapDir)
+      val zm = tableDir(table).resolve(p).resolve(ZoneMapDir)
       if (!Files.exists(zm)) None
       else {
         val df = spark.read.parquet(zm.toString)
@@ -1052,14 +1066,16 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     zoneColumns(table).foreach(cols =>
       writeZoneMapFrame(nextDir, zoneStats(spark, nextDir, cols)))
 
-  /** The live version dir plus its zone-map-surviving file paths for
-    * `lo <= column <= hi`. Refuses loudly (never a silent full scan)
-    * when the version carries no zone map or the map doesn't cover
-    * `column` — at scale, a silently unpruned read IS the failure. */
+  /** The live version's layout plus its zone-map-surviving files for
+    * `lo <= column <= hi`, and the version's file count. Refuses loudly
+    * (never a silent full scan) when the version carries no zone map
+    * or the map doesn't cover `column` — at scale, a silently unpruned
+    * read IS the failure. */
   private def zonePrunedFiles(spark: SparkSession, table: String,
-      column: String, lo: Any, hi: Any): (Path, Seq[(String, Long)], Int) = {
-    val vdir = dirOf(table, headPointer(table))
-    val zmPath = vdir.resolve(ZoneMapDir)
+      column: String, lo: Any, hi: Any)
+      : (VersionLayout, Seq[(String, Long)], Int) = {
+    val l = layoutAt(table, headPointer(table))
+    val zmPath = l.dir.resolve(ZoneMapDir)
     // the compactBuckets discipline: _CURRENT can transiently name a
     // gc-swept dir (a competitor's publish mid-undo) or retention can
     // prune the version under us — both are retryable conflicts for
@@ -1070,18 +1086,18 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
         case _: java.nio.file.NoSuchFileException |
              _: java.io.FileNotFoundException =>
           throw new ConcurrentCommitException(
-            s"version $vdir pruned during zone-map read — a concurrent " +
+            s"version ${l.dir} pruned during zone-map read — a concurrent " +
               "commit advanced past retention; re-read and retry")
         case e: org.apache.spark.sql.AnalysisException
             if e.getMessage.contains("PATH_NOT_FOUND") ||
               e.getMessage.contains("does not exist") =>
           throw new ConcurrentCommitException(
-            s"version $vdir pruned during zone-map read — a concurrent " +
+            s"version ${l.dir} pruned during zone-map read — a concurrent " +
               "commit advanced past retention; re-read and retry")
       }
     if (!Files.exists(zmPath)) {
-      if (!Files.exists(vdir))
-        retryable(throw new java.nio.file.NoSuchFileException(vdir.toString))
+      if (!Files.exists(l.dir))
+        retryable(throw new java.nio.file.NoSuchFileException(l.dir.toString))
       throw new IllegalStateException(
         s"table $table's live version carries no zone map — declare " +
           "zone columns and commit (or Layout.zorderPublish)")
@@ -1102,32 +1118,19 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     // the scan, turning a zone-map/manifest desync into silently
     // narrowed results — the silent-data-loss class this store
     // refuses everywhere else, so it refuses loudly here too.
-    // Pre-manifest versions stat the kept files and walk for the
-    // total (legacy fallback).
     val keptNames = zm
       .filter(!(col(s"max_$column") < lit(lo) || col(s"min_$column") > lit(hi)))
       .select("file")
-    retryable {
-      manifestRowsDirect(vdir) match {
-        case Some(rows) =>
-          val bytesOf = rows.toMap
-          val kept = keptNames.collect().map(_.getString(0)).sorted
-          val missing = kept.filterNot(bytesOf.contains)
-          if (missing.nonEmpty)
-            throw new IllegalStateException(
-              s"zone map of $table keeps ${missing.size} file(s) absent " +
-                s"from the version manifest (e.g. ${missing.take(3)
-                  .mkString(", ")}) — a zone-map/manifest desync; " +
-                "refusing rather than silently narrowing the scan")
-          (vdir, kept.map(f => (f, bytesOf(f))).toSeq, rows.size)
-        case None =>
-          val kept = keptNames.collect().map(_.getString(0)).sorted
-            .map(f => (f, Files.size(vdir.resolve(f)))).toSeq
-          val total = listDir(vdir).count(isDataFile) +
-            bucketDirs(vdir).map(d => listDir(d).count(isDataFile)).sum
-          (vdir, kept, total)
-      }
-    }
+    val bytesOf = l.rows.toMap
+    val kept = retryable(keptNames.collect()).map(_.getString(0)).sorted
+    val missing = kept.filterNot(bytesOf.contains)
+    if (missing.nonEmpty)
+      throw new IllegalStateException(
+        s"zone map of $table keeps ${missing.size} file(s) absent " +
+          s"from the version manifest (e.g. ${missing.take(3)
+            .mkString(", ")}) — a zone-map/manifest desync; " +
+          "refusing rather than silently narrowing the scan")
+    (l, kept.map(f => (f, bytesOf(f))).toSeq, l.rows.size)
   }
 
   /** ZONE-MAP-PRUNED range read: scan only the files whose recorded
@@ -1138,27 +1141,14 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * ([[declareZoneColumns]] before the write). */
   def readZonePruned(spark: SparkSession, table: String, column: String,
       lo: Any, hi: Any): DataFrame = {
-    val (vdir, files, _) = zonePrunedFiles(spark, table, column, lo, hi)
-    val residual = col(column) >= lit(lo) && col(column) <= lit(hi)
-    val base =
-      if (files.isEmpty)
-        // nothing intersects: an empty frame with the table's schema
-        readVersionFrame(spark, vdir).where(lit(false))
-      else storedSchemaOf(vdir) match {
-        // canonical schema over the MANIFEST-FED file index: the scan
-        // plans from (path, size) rows the sidecar already holds — no
-        // re-listing, no per-file stat, no 10⁵ path literals in the
-        // plan tree (graft.sources.ManifestFileIndex; an inferred
-        // schema would be file-order dependent on mixed-schema
-        // versions). The partition column reads null from leaf files
-        // and is dropped. Pre-schema-file versions fall back to the
-        // explicit-path inferred read.
-        case Some(s) => graft.sources.ManifestFileIndex.frame(spark,
-          vdir.toUri.toString, s, files)
-        case None => spark.read.parquet(
-          files.map(f => vdir.resolve(f._1).toString): _*)
-      }
-    val out = base.filter(residual)
+    val (l, files, _) = zonePrunedFiles(spark, table, column, lo, hi)
+    // the kept files under the canonical schema through the
+    // MANIFEST-FED file index: no re-listing, no per-file stat, no
+    // 10⁵ path literals in the plan tree; nothing kept is an empty
+    // frame with the table's schema
+    val out = graft.sources.ManifestFileIndex.storeFrame(spark,
+      l.dir.toUri.toString, l.schema, files, BucketCol)
+      .filter(col(column) >= lit(lo) && col(column) <= lit(hi))
     if (out.columns.contains(BucketCol)) out.drop(BucketCol) else out
   }
 
@@ -1187,22 +1177,13 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * lists its fresh files PRE-link and carries the previous
     * manifest's row of every file it links forward (hard-linked files
     * keep path and size). Written inside the
-    * staged dir, so it is version-atomic with the data. Versions from
-    * before the manifest existed fall back to directory listing. */
+    * staged dir, so it is version-atomic with the data. */
   private val ManifestDir = "_manifest"
 
-  /** Write a version's `_manifest`: one coalesced file normally; at
-    * `estRows` ≳ 128k, SLICES — range-partitioned and sorted by rel
-    * path (≤ 32 files) — so [[manifestRowsDirect]] parses them in
-    * parallel and a bucket-restricted read skips non-intersecting
-    * slices by footer stats ([[sliceMayContain]]). Sorting makes each
-    * slice a tight disjoint rel-path range; bucket prefixes land in
-    * few slices. `estRows` comes from driver-known listings + the
-    * previous version's footer row count — never a Spark job. */
   /** Write the `_manifest` sidecar DRIVER-SIDE with the bare parquet
     * writer — no Spark job. The rows are driver-resident at every
     * call site anyway (a fresh listing walk, or the previous
-    * version's sidecar parsed by [[manifestRowsDirect]]), and the
+    * version's sidecar parsed by [[manifestRowsSliced]]), and the
     * old `toDF.coalesce(1).write` path scheduled a full job round
     * per COMMIT just to serialize them (measured: 2 of the ~4 jobs
     * every bucketed commit paid were manifest read+write — pure
@@ -1212,9 +1193,8 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * (~128k rows each) so [[manifestRowsSliced]]'s footer-range
     * slice skipping keeps working; the parquet schema matches what
     * the Spark writer produced (optional binary file (STRING),
-    * optional int64 bytes), so every existing reader — the bare
-    * Group reader, `spark.read.parquet` via [[manifestAt]] — reads
-    * both eras identically. */
+    * optional int64 bytes), so the bare Group reader and
+    * `spark.read.parquet` read both eras identically. */
   private def writeManifestRowsDriver(stagedTmpDir: Path,
       rows: Seq[(String, Long)]): Unit = {
     val mdir = stagedTmpDir.resolve(ManifestDir)
@@ -1251,40 +1231,24 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     }
   }
 
-  private def manifestAt(spark: SparkSession, vdir: Path): Option[DataFrame] = {
-    val m = vdir.resolve(ManifestDir)
-    if (!Files.exists(m)) None else Some(spark.read.parquet(m.toString))
-  }
-
   private def isDataFile(f: Path): Boolean = Files.isRegularFile(f) &&
     !f.getFileName.toString.startsWith("_") &&
     !f.getFileName.toString.startsWith(".")
 
-  /** (relative path, bytes) of data files by LISTING — bounded to the
-    * given bucket dirs when `buckets` is set (an O(delta) walk), the
-    * whole dir tree otherwise (create/replace/backfill, where every
-    * file was just written). */
-  private def listedManifestRows(dir: Path,
-      buckets: Option[Set[Int]]): Seq[(String, Long)] = {
-    def rowsIn(d: Path, prefix: String): Seq[(String, Long)] =
-      if (!Files.isDirectory(d)) Nil
-      else listDir(d).filter(isDataFile).map(f =>
-        (prefix + f.getFileName.toString, Files.size(f)))
-    buckets match {
-      case Some(bs) => bs.toSeq.sorted.flatMap(b =>
-        rowsIn(dir.resolve(s"$BucketCol=$b"), s"$BucketCol=$b/"))
-      case None =>
-        val entries = listDir(dir)
-        entries.filter(isDataFile)
-          .map(f => (f.getFileName.toString, Files.size(f))) ++
-          bucketDirs(dir).sortBy(_.getFileName.toString)
-            .flatMap(d => rowsIn(d, d.getFileName.toString + "/"))
-    }
-  }
+  /** (relative path, bytes) of every data file under a staged dir, by
+    * LISTING — the dir holds only files this write just wrote. */
+  private def listedManifestRows(dir: Path): Seq[(String, Long)] =
+    listDir(dir).filter(isDataFile)
+      .map(f => (f.getFileName.toString, Files.size(f))) ++
+      bucketDirs(dir).sortBy(_.getFileName.toString).flatMap { d =>
+        listDir(d).filter(isDataFile).map(f =>
+          (d.getFileName.toString + "/" + f.getFileName.toString,
+            Files.size(f)))
+      }
 
   /** Full-recompute manifest for a staged dir (everything fresh). */
   private def writeFullManifest(nextDir: Path): Unit =
-    writeManifestRowsDriver(nextDir, listedManifestRows(nextDir, None))
+    writeManifestRowsDriver(nextDir, listedManifestRows(nextDir))
 
   /** First bucket id in a manifest rel path, if any — the driver-side
     * twin of the `regexp_extract(file, "__kb=(\d+)/", 1)` the old
@@ -1293,24 +1257,18 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
   private def relBucketOf(rel: String): Option[Int] =
     bucketOfRel.findFirstMatchIn(rel).map(_.group(1).toInt)
 
-  /** The live version's file manifest (file, bytes) — None for
-    * versions from before manifests existed. Rows stay distributed;
-    * aggregate, don't collect. */
-  def fileManifest(spark: SparkSession, table: String): Option[DataFrame] =
-    manifestAt(spark, dirOf(table, headPointer(table)))
+  /** The live version's file manifest (file, bytes) as a frame over
+    * the driver-side sidecar rows ([[layoutAt]]). */
+  def fileManifest(spark: SparkSession, table: String): DataFrame =
+    spark.createDataFrame(layoutAt(table, headPointer(table)).rows)
+      .toDF("file", "bytes")
 
   /** (file count, total bytes) of the live version from the manifest
-    * — one sidecar read, O(1) driver rows; falls back to a directory
-    * walk for pre-manifest versions. */
+    * — one cached driver-side sidecar parse, no job round for two
+    * longs. */
   def fileStats(spark: SparkSession, table: String): (Long, Long) = {
-    val vdir = dirOf(table, headPointer(table))
-    // driver-side sidecar parse (cached) — no job round for two longs
-    manifestRowsDirect(vdir) match {
-      case Some(rows) => (rows.size.toLong, rows.map(_._2).sum)
-      case None =>
-        val rows = listedManifestRows(vdir, None)
-        (rows.size.toLong, rows.map(_._2).sum)
-    }
+    val rows = layoutAt(table, headPointer(table)).rows
+    (rows.size.toLong, rows.map(_._2).sum)
   }
 
   /** CHANGE-DATA-FEED between two retained versions: keyed
@@ -1329,8 +1287,8 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * key-diffed. A compaction between the versions touches its
     * rewritten buckets' file sets, so those buckets re-read and diff
     * EMPTY — cost without phantom changes, the honest price of a
-    * name-based fast path. Pre-manifest versions (or fileless-empty
-    * snapshot layouts) fall back to a full two-sided diff.
+    * name-based fast path. Fileless-empty and snapshot layouts (a
+    * changed file outside any bucket dir) take a full two-sided diff.
     *
     * Both versions must still be retained (size `keepVersions`) —
     * a feed that falls behind retention must rebase on a full read,
@@ -1345,13 +1303,8 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
   def changesBetween(spark: SparkSession, table: String,
       keys: Seq[String], vFrom: Long, vTo: Long): DataFrame = {
     require(vFrom <= vTo, s"changesBetween: vFrom=$vFrom > vTo=$vTo")
-    val fromName = versionDirNameOf(table, vFrom)
-    val toName = versionDirNameOf(table, vTo)
-    val fromDir = tableDir(table).resolve(fromName)
-    val toDir = tableDir(table).resolve(toName)
-    // the zonePrunedFiles discipline for the EAGER reads below (the
-    // manifest footers and the one-sided-file collect): a version
-    // pruned under us re-resolves to the loud behind-retention
+    // the zonePrunedFiles discipline for the sidecar reads below: a
+    // version pruned under us re-resolves to the loud behind-retention
     // refusal; anything else vanishing is a transient race — retryable
     def remap(): Nothing = {
       versionDirNameOf(table, vFrom) // throws RetentionLost if pruned
@@ -1360,49 +1313,30 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
         s"version dir of $table vanished during changesBetween " +
           s"($vFrom→$vTo) — a gc/publish race; re-read and retry")
     }
-    def guarded[T](body: => T): T =
-      try body
-      catch {
-        case _: java.nio.file.NoSuchFileException => remap()
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("PATH_NOT_FOUND") ||
-              e.getMessage.contains("does not exist") => remap()
-      }
-    // touched buckets from the manifests: a file present in exactly
-    // one version marks its bucket; identical sets ⇒ identical bytes
-    // (links never rewrite). A row outside a kb dir (fileless-empty
-    // layouts) defeats bucket granularity → full diff.
-    val touched: Option[Seq[Int]] = guarded {
-      // driver-side name-set diff over the two parsed sidecars (the
-      // StoreTail batch-planning discipline) — the old Spark
-      // union+groupBy+collect paid a full job round per CDC read for
-      // a computation the driver already held both inputs of
-      (manifestRowsDirect(fromDir), manifestRowsDirect(toDir)) match {
-        case (Some(rf), Some(rt)) =>
-          val sf = rf.map(_._1).toSet
-          val st = rt.map(_._1).toSet
-          val oneSided = (sf diff st) ++ (st diff sf)
-          val kbs = oneSided.toSeq.map(relBucketOf)
-          if (kbs.exists(_.isEmpty)) None
-          else Some(kbs.flatten.distinct)
-        case _ => None
-      }
+    def layout(v: Long): VersionLayout =
+      try layoutAt(table, versionDirNameOf(table, v))
+      catch { case _: ConcurrentCommitException => remap() }
+    val (from, to) = (layout(vFrom), layout(vTo))
+    // touched buckets from the manifests, a driver-side name-set diff:
+    // a file present in exactly one version marks its bucket;
+    // identical sets ⇒ identical bytes (links never rewrite). A row
+    // outside a kb dir (fileless-empty layouts) defeats bucket
+    // granularity → full diff.
+    val touched: Option[Seq[Int]] = {
+      val sf = from.rows.map(_._1).toSet
+      val st = to.rows.map(_._1).toSet
+      val kbs = ((sf diff st) ++ (st diff sf)).toSeq.map(relBucketOf)
+      if (kbs.exists(_.isEmpty)) None else Some(kbs.flatten.distinct)
     }
-    def side(dir: Path, name: String): DataFrame = {
-      val full = readDir(spark, table, name)
-      touched match {
-        case None => full
-        case Some(Nil) => full.where(lit(false))
-        case Some(kbs) => storedSchemaOf(dir) match {
-          case Some(schema) if schema.fieldNames.contains(BucketCol) =>
-            readBucketRestricted(spark, dir, kbs.toSet).drop(BucketCol)
-          case _ => full
-        }
-      }
+    def side(l: VersionLayout): DataFrame = touched match {
+      case Some(Nil) => readDir(spark, table, l.dirName).where(lit(false))
+      case Some(kbs) if l.schema.fieldNames.contains(BucketCol) =>
+        readBucketRestricted(spark, table, l.dirName, kbs.toSet)
+          .drop(BucketCol)
+      case _ => readDir(spark, table, l.dirName)
     }
     // pad the OLD side to the new schema (add-only evolution)
-    val (o, nw) = SchemaEvolution.align(
-      side(fromDir, fromName), side(toDir, toName))
+    val (o, nw) = SchemaEvolution.align(side(from), side(to))
     val outCols = nw.columns
     val nonKeys = outCols.filterNot(keys.contains)
     val oldRenamed = o.select(
@@ -1434,7 +1368,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
       case None => incoming
       case Some(p) =>
         val (stored, inc) = SchemaEvolution.align(
-          readDir(spark, table, dirNameOf(p)), incoming)
+          readDir(spark, table, p), incoming)
         Upserts.upsertLastWriteWins(stored, inc, keys)
     }
     publishFull(spark, table, merged, prev)._1
@@ -1478,25 +1412,23 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
       case Some(prev) =>
         val n = this.numBuckets(table).getOrElse(throw new IllegalStateException(
           s"table $table was created as a snapshot table; use upsert"))
-        val prevDir = dirOf(table, prev)
-        // the delta under the version's CANONICAL schema (an inferred
-        // one could drop a previously-evolved column and the merge
-        // would lose its values), so the touched set, the key probe and
-        // the merge all hash and compare the types the merge writes
+        val prevL = layoutAt(table, prev)
+        // the delta under the version's CANONICAL schema, so the
+        // touched set, the key probe and the merge all hash and
+        // compare the types the merge writes
         val incA = SchemaEvolution.align(
-          readFiles(spark, prevDir, Nil).drop(BucketCol), incoming)._2
+          readFiles(spark, prevL, Nil).drop(BucketCol), incoming)._2
         // which buckets does the delta touch? (≤ n ints — driver-safe)
         val touched = guardedAction(s"upsert touched-set of $table") {
           incA.select(bucketOf(keys, n)).distinct()
             .collect().map(_.getInt(0)).toSet
         }
         // empty delta → version no-op (free — the touched set already
-        // told us): onto an EMPTY table, the merged partitionBy write
-        // would otherwise produce a fileless version and wedge every
-        // later read in schema inference
-        if (touched.isEmpty) (read(spark, table), versionOf(dirNameOf(prev)))
+        // told us): no version churns for nothing
+        if (touched.isEmpty) (read(spark, table), versionOf(prev))
         else {
-          val (whole, probed) = bucketFileRows(prevDir, touched)
+          val (whole, probed) = prevL.rows
+            .filter(r => relBucketOf(r._1).exists(touched))
             .groupBy(r => relBucketOf(r._1).get).values
             .partition(_.size >= MaxFilesPerBucket)
           val candidates = probed.flatten.toSeq
@@ -1506,7 +1438,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
               import spark.implicits._
               // per-partition distinct instead of a distinct(): the
               // collect stays ≤ files rows without a shuffle round
-              readFiles(spark, prevDir, candidates)
+              readFiles(spark, prevL, candidates)
                 .select(keys.map(col) :+ relFileExpr.as("file"): _*)
                 .join(incA.select(keys.map(col): _*), keys, "left_semi")
                 .select("file").as[String]
@@ -1516,7 +1448,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
           val replaced = whole.flatten.toSeq ++
             candidates.filter(r => matched.contains(r._1))
           val (stored, inc) = SchemaEvolution.align(
-            readFiles(spark, prevDir, replaced).drop(BucketCol), incoming)
+            readFiles(spark, prevL, replaced).drop(BucketCol), incoming)
           rewriteTouched(spark, table, prev, replaced.map(_._1).toSet,
             "upsert merge",
             layoutBuckets(Upserts.upsertLastWriteWins(stored, inc, keys), n,
@@ -1552,11 +1484,11 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     }
     if (touched.isEmpty) read(spark, table)
     else {
-      val kept = readBucketRestricted(spark, dirOf(table, prev), touched)
+      val kept = readBucketRestricted(spark, table, prev, touched)
         .drop(BucketCol)
         .join(rem, keys, "left_anti")
       rewriteTouched(spark, table, prev,
-        bucketFileSet(dirOf(table, prev), touched), "keyed delete",
+        bucketFileSet(table, prev, touched), "keyed delete",
         layoutBuckets(kept, n, keys, Nil))._1
     }
   }
@@ -1600,17 +1532,17 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
         // zone-mapped delete key prices at its file cut, not a full
         // pass
         val touched = guardedAction(s"deleteWhere touched-set of $table") {
-          readDir(spark, table, dirNameOf(prev)).filter(victim)
+          readDir(spark, table, prev).filter(victim)
             .select(bucketOf(keys, n)).distinct()
             .collect().map(_.getInt(0)).toSet
         }
         if (touched.isEmpty) read(spark, table)
         else {
-          val kept = readBucketRestricted(spark, dirOf(table, prev), touched)
+          val kept = readBucketRestricted(spark, table, prev, touched)
             .drop(BucketCol)
             .filter(!victim)
           rewriteTouched(spark, table, prev,
-            bucketFileSet(dirOf(table, prev), touched), "predicate delete",
+            bucketFileSet(table, prev, touched), "predicate delete",
             layoutBuckets(kept, n, keys, Nil))._1
         }
     }
@@ -1685,12 +1617,12 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     val touched = probe.map(_.getInt(0)).toSet
     if (touched.isEmpty) return read(spark, table)
     val (stored, incA) = SchemaEvolution.align(
-      readBucketRestricted(spark, dirOf(table, prev), touched)
+      readBucketRestricted(spark, table, prev, touched)
         .drop(BucketCol), upserts)
     val merged = Upserts.upsertLastWriteWins(
       stored.join(delKeys, keys, "left_anti"), incA, keys)
     rewriteTouched(spark, table, prev,
-      bucketFileSet(dirOf(table, prev), touched), "change-feed apply",
+      bucketFileSet(table, prev, touched), "change-feed apply",
       layoutBuckets(merged, n, keys, Nil))._1
   }
 
@@ -1714,18 +1646,17 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
   private def rewriteTouched(spark: SparkSession, table: String,
       prev: String, replaced: Set[String], what: String, laid: DataFrame,
       options: Map[String, String] = Map.empty): (DataFrame, Long) = {
-    val curDir = dirOf(table, prev)
+    val prevL = layoutAt(table, prev)
+    // only bucket-dir files link forward: a root-level file from an
+    // empty version never carries
+    val carried = prevL.rows
+      .filter(r => relBucketOf(r._1).isDefined && !replaced.contains(r._1))
     stageAndPublish(spark, table, Some(prev), s"$what of $table") { dir =>
       laid.write.mode("errorifexists").options(options)
         .partitionBy(BucketCol).parquet(dir.toString)
-      val fresh = listedManifestRows(dir, None)
+      val fresh = listedManifestRows(dir)
       if (fresh.isEmpty && replaced.isEmpty) throw NothingStaged
       writeSchemaFile(dir, laid.schema)
-      // only bucket-dir files link forward: a root-level file from an
-      // empty version never carries
-      val carried = manifestRowsDirect(curDir)
-        .getOrElse(listedManifestRows(curDir, None))
-        .filter(r => relBucketOf(r._1).isDefined && !replaced.contains(r._1))
       if (fresh.isEmpty && carried.isEmpty)
         writeManifestRowsDriver(dir, Seq.empty)
       else {
@@ -1745,7 +1676,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
               .unionByName(kept, allowMissingColumns = true))
         }
         writeManifestRowsDriver(dir, fresh ++ carried)
-        shareUnreplaced(curDir, dir, replaced)
+        shareUnreplaced(prevL.dir, dir, replaced)
         // a declared table with no previous map (declaration landed
         // after the last write) backfills full, post-links
         if (prevZm.isEmpty) writeFullZoneMap(spark, table, dir)
@@ -1753,50 +1684,23 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     }
   }
 
-  /** Rel paths of every data file in buckets `kbs` of the version at
-    * `vdir` — what a whole-bucket rewrite replaces. */
-  private def bucketFileSet(vdir: Path, kbs: Set[Int]): Set[String] =
-    bucketFileRows(vdir, kbs).map(_._1).toSet
+  /** Rel paths of every data file in buckets `kbs` of version
+    * `dirName` — what a whole-bucket rewrite replaces. */
+  private def bucketFileSet(table: String, dirName: String,
+      kbs: Set[Int]): Set[String] =
+    layoutAt(table, dirName, Some(kbs)).rows.map(_._1).toSet
 
-  /** (rel path, bytes) of the data files in buckets `kbs` of the
-    * version at `vdir`: the manifest's rows for those bucket prefixes
-    * (only the slices that can hold them are parsed), or an
-    * O(touched) listing for a pre-manifest version. A vanished version
-    * dir is the retryable [[ConcurrentCommitException]]. */
-  private def bucketFileRows(vdir: Path, kbs: Set[Int]): Seq[(String, Long)] =
-    probing(vdir)(manifestRowsSliced(vdir, Some(kbs.map(b => s"$BucketCol=$b/")))
-      .getOrElse(listedManifestRows(vdir, Some(kbs))))
-
-  /** The rows of exactly `files` (rel path, bytes) of the version at
-    * `vdir`, bucket column included, under the version's canonical
-    * schema (inferred for a pre-schema version). No files is an empty
-    * local relation, which the optimizer folds out of any join or
-    * union — nothing stored is read. */
-  private def readFiles(spark: SparkSession, vdir: Path,
-      files: Seq[(String, Long)]): DataFrame = probing(vdir) {
-    if (!Files.exists(vdir)) throw new java.nio.file.NoSuchFileException(vdir.toString)
-    val schema = storedSchemaOf(vdir)
-      .getOrElse(readVersionFrame(spark, vdir).schema)
+  /** The rows of exactly `files` (rel path, bytes) of version `l`,
+    * bucket column included, under the version's canonical schema.
+    * No files is an empty local relation, which the optimizer folds
+    * out of any join or union — nothing stored is read. */
+  private def readFiles(spark: SparkSession, l: VersionLayout,
+      files: Seq[(String, Long)]): DataFrame =
     if (files.isEmpty)
       spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), l.schema)
     else graft.sources.ManifestFileIndex.storeFrame(spark,
-      vdir.toUri.toString, schema, files, BucketCol)
-  }
-
-  /** Plan-time reads of a base version: one that vanished (competitors
-    * advanced past retention) is the retryable
-    * [[ConcurrentCommitException]], never a raw I/O error or a
-    * silently-empty frame. */
-  private def probing[T](vdir: Path)(body: => T): T =
-    try body
-    catch {
-      case _: java.nio.file.NoSuchFileException |
-           _: java.io.FileNotFoundException =>
-        throw new ConcurrentCommitException(
-          s"version $vdir pruned during bucket probe — a concurrent " +
-            "commit advanced past retention; re-read and retry")
-    }
+      l.dir.toUri.toString, l.schema, files, BucketCol)
 
   /** Parquet files a bucket may hold before a merge into it rewrites it
     * whole — and [[compactBuckets]]' default trigger, which compacts a
@@ -1897,13 +1801,12 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
       val n = this.numBuckets(table).getOrElse(throw new IllegalStateException(
         s"table $table was created as a snapshot table; appends need " +
           "bucket partitions — adopt it via replaceBucketed first"))
-      val storedSchema = readVersionFrame(spark, dirOf(table, prev.get))
-        .drop(BucketCol).schema
-      // compare nullability-relaxed forms: a file read forces
-      // nullability up (array containsNull included), so an
-      // encoder-derived delta with containsNull=false is the SAME
-      // parquet shape, not an evolution — refusing it would reject
-      // every array-typed append
+      val storedSchema = org.apache.spark.sql.types.StructType(
+        layoutAt(table, prev.get).schema.fields.filterNot(_.name == BucketCol))
+      // compare nullability-relaxed forms: an encoder-derived delta
+      // with containsNull=false is the SAME parquet shape as the
+      // stored one, not an evolution — refusing it would reject every
+      // array-typed append
       require(
         storedSchema.fields.map(f => (f.name, relaxNulls(f.dataType)))
           .toSet ==
@@ -1949,7 +1852,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * (cross-table consistency, see [[readVersioned]]). */
   def readBucketsOf(spark: SparkSession, table: String,
       keyValues: DataFrame): (DataFrame, Long) = {
-    val d = dirNameOf(headPointer(table))
+    val d = headPointer(table)
     (readBucketsIn(spark, table, d, keyValues), versionOf(d))
   }
 
@@ -1971,11 +1874,9 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     // plan time (partition pruning happens after discovery) — at
     // 10⁵-10⁶ files per version that listing is the driver
     // bottleneck of every probe. The manifest rows restrict to the
-    // touched buckets' files by name (zero listing); pre-manifest
-    // versions hand Spark exactly the touched bucket DIRS, and
-    // pre-schema versions fall back to the full scan
+    // touched buckets' files by name, zero listing
     // ([[readBucketRestricted]]).
-    readBucketRestricted(spark, dirOf(table, dirName), kbs).drop(BucketCol)
+    readBucketRestricted(spark, table, dirName, kbs).drop(BucketCol)
   }
 
   /** Directory listing with the stream CLOSED — Files.list holds an
@@ -1991,9 +1892,6 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
   private def bucketDirs(dir: Path): Seq[Path] =
     listDir(dir).filter(p => Files.isDirectory(p) &&
       p.getFileName.toString.startsWith(s"$BucketCol="))
-
-  private def bucketIdOf(bucketDir: Path): Int =
-    bucketDir.getFileName.toString.stripPrefix(s"$BucketCol=").toInt
 
   /** Share every bucket file of the previous version except
     * `replaced` (rel paths; a data file's `.crc` goes with it) without
@@ -2027,30 +1925,14 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
             "concurrent commits advanced past retention; re-read and retry")
     }
 
-  /** Per-bucket (file count, bytes) rows of the live version for the
-    * maintenance triggers — from one driver-side manifest parse, or
-    * (pre-manifest versions) a listing whose byte column is unknown.
-    * The listed dir can VANISH under us in exactly one legitimate
-    * window: a competitor's publish was gc-swept and its undo has not
-    * landed yet (_CURRENT transiently names a deleted dir) — surface
-    * that as the retryable conflict it is (the shareUnreplaced
-    * discipline), never a raw I/O error. */
-  private def bucketFiles(table: String, prev: String,
-      what: String): Either[Map[Int, Int], Map[Int, Seq[Long]]] = {
-    val curDir = dirOf(table, prev)
-    try manifestRowsDirect(curDir) match {
-      case Some(rows) => Right(
-        rows.flatMap(r => relBucketOf(r._1).map(b => (b, r._2)))
-          .groupBy(_._1).map { case (b, fs) => b -> fs.map(_._2) })
-      case None => Left(bucketDirs(curDir)
-        .map(p => bucketIdOf(p) -> listDir(p).count(isDataFile)).toMap)
-    } catch {
-      case _: java.nio.file.NoSuchFileException =>
-        throw new ConcurrentCommitException(
-          s"current version $curDir vanished during $what — a " +
-            "competitor's swept publish is mid-undo; re-read and retry")
-    }
-  }
+  /** Bucket → file sizes of version `prev` for the maintenance
+    * triggers, from one driver-side manifest parse ([[layoutAt]]: a
+    * version that vanished under us — a competitor's gc-swept publish
+    * mid-undo, or a prune — is the retryable conflict). */
+  private def bucketFiles(table: String, prev: String): Map[Int, Seq[Long]] =
+    layoutAt(table, prev).rows
+      .flatMap(r => relBucketOf(r._1).map(b => (b, r._2)))
+      .groupBy(_._1).map { case (b, fs) => b -> fs.map(_._2) }
 
   /** MAINTENANCE: compact a bucketed table's fragmented buckets.
     * Every O(delta) write adds one fresh file to each bucket it
@@ -2086,11 +1968,8 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     val prev = headPointer(table)
     // bucket -> parquet part-file count; driver-side (≤ numBuckets
     // rows, the same scale contract as the touched-set)
-    val counts = bucketFiles(table, prev, "compaction") match {
-      case Right(files) => files.map { case (b, fs) => b -> fs.size }
-      case Left(counts) => counts
-    }
-    val rewrite = counts.filter(_._2 > maxFilesPerBucket).keySet
+    val rewrite = bucketFiles(table, prev)
+      .filter(_._2.size > maxFilesPerBucket).keySet
     compactBucketSet(spark, table, rewrite, prev, clusterBy,
       clusterRowsPerFile)
   }
@@ -2128,12 +2007,12 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
           "clustering exists to tighten the zone map's per-file ranges")
     }
     if (rewrite.nonEmpty) {
-      val base = readBucketRestricted(spark, dirOf(table, prev), rewrite)
+      val base = readBucketRestricted(spark, table, prev, rewrite)
         .repartition(rewrite.size, col(BucketCol))
       // compaction rewrites whole buckets: same zone-map shape as the
       // merge path (rewritten buckets re-scan, the rest carries)
       rewriteTouched(spark, table, prev,
-        bucketFileSet(dirOf(table, prev), rewrite), "compaction",
+        bucketFileSet(table, prev, rewrite), "compaction",
         clusterBy.fold(base)(c =>
           base.sortWithinPartitions(col(BucketCol), col(c))),
         clusterBy.map(_ =>
@@ -2170,19 +2049,13 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
       s"table $table is not bucketed; snapshot tables rewrite whole on commit"))
     val prev = headPointer(table)
     val rewrite: Set[Int] =
-      bucketFiles(table, prev, "auto-maintenance") match {
-        case Right(files) =>
-          files.collect { case (b, fs)
-              if fs.size > maxFilesPerBucket ||
-                (fs.size > 1 &&
-                  // the Spark-frame era divided as DOUBLE (Divide
-                  // casts); keep that semantic exactly
-                  fs.sum.toDouble / fs.size < minBytesPerFile) => b }
-            .toSet
-        // pre-manifest version: count tier only, from the listing
-        case Left(counts) =>
-          counts.filter(_._2 > maxFilesPerBucket).keySet
-      }
+      bucketFiles(table, prev).collect { case (b, fs)
+          if fs.size > maxFilesPerBucket ||
+            (fs.size > 1 &&
+              // the Spark-frame era divided as DOUBLE (Divide
+              // casts); keep that semantic exactly
+              fs.sum.toDouble / fs.size < minBytesPerFile) => b }
+        .toSet
     compactBucketSet(spark, table, rewrite, prev, clusterBy,
       clusterRowsPerFile)
   }
@@ -2214,7 +2087,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * cloned data file shares its inode, nlink ≥ 2). */
   def cloneTable(spark: SparkSession, srcTable: String, dstTable: String,
       version: Option[Long] = None): DataFrame = {
-    val v = version.getOrElse(versionOf(dirNameOf(headPointer(srcTable))))
+    val v = version.getOrElse(versionOf(headPointer(srcTable)))
     val srcDir = tableDir(srcTable).resolve(versionDirNameOf(srcTable, v))
     if (exists(dstTable))
       throw new ConcurrentCommitException(
@@ -2282,9 +2155,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
         // error. A version inside the plain keep window is NEVER
         // pruned, so a vanish there (or on the dst side) surfaces raw;
         // anything at or below the prune floor is the retention race.
-        val inPlainWindow = currentVersion(srcTable)
-          .exists(head => v > head - keepVersions)
-        if (Files.exists(srcDir) && inPlainWindow) throw e.getCause
+        if (Files.exists(srcDir) && inPlainWindow(srcTable, v)) throw e.getCause
         remap()
     }
   }
@@ -2378,7 +2249,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
   private def stageAndPublish(spark: SparkSession, table: String,
       prev: Option[String], what: String)(
       write: Path => Unit): (DataFrame, Long) = {
-    val staged = stagedDirName(prev.fold(0L)(p => versionOf(dirNameOf(p)) + 1))
+    val staged = stagedDirName(prev.fold(0L)(p => versionOf(p) + 1))
     val dir = tableDir(table).resolve(tmpName(staged))
     try {
       guardedAction(what)(write(dir))
@@ -2386,7 +2257,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     } catch {
       case NothingStaged =>
         deleteRecursively(dir)
-        return (read(spark, table), versionOf(dirNameOf(prev.get)))
+        return (read(spark, table), versionOf(prev.get))
       case e: Throwable =>
         dropFailedStaging(spark, dir)
         throw e
@@ -2569,7 +2440,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     val dir = tableDir(table)
     if (!Files.exists(dir)) Seq.empty
     else {
-      val pointed = currentPointer(table).map(dirNameOf)
+      val pointed = currentPointer(table)
       val ceiling = pointed.map(versionOf).getOrElse(-1L)
       val cutoff = System.currentTimeMillis() - olderThanMs
       listDir(dir)
@@ -2639,15 +2510,14 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     *    manifests but absent from every plain-window version's
     *    manifest: hard links preserve file names, so "absent from
     *    the surviving window" is exactly "these bytes free when this
-    *    protection lifts". Pre-manifest versions contribute no bytes
-    *    (undercount, never a walk).
+    *    protection lifts".
     *
     * Cost: registry + version listings are O(consumers + versions)
     * driver rows; the bytes term is one distributed union of ≤
     * `maxRetained` manifest sidecars with an anti-join — never a
     * directory walk, never file contents. */
   def cursorLag(spark: SparkSession, table: String): DataFrame = {
-    val head = versionOf(dirNameOf(headPointer(table)))
+    val head = versionOf(headPointer(table))
     val retained = versions(table)
     val plainFloor = head - keepVersions + 1
     val d = tableDir(table).resolve(CursorsDir)
@@ -2663,24 +2533,14 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     // all set math on DRIVER-SIDE sidecar parses (cached): the old
     // per-consumer distinct + anti-join + agg scheduled a Spark job
     // round per registry row for sets the driver already held
-    def manifests(vs: Seq[Long]): Option[Seq[(String, Long)]] = {
-      val ms = vs.flatMap(v => manifestRowsDirect(
-        tableDir(table).resolve(versionDirNameOf(table, v))))
-      if (ms.isEmpty) None else Some(ms.flatten)
-    }
-    val survivingFiles: Option[Set[String]] =
-      manifests(retained.filter(_ >= plainFloor)).map(_.map(_._1).toSet)
+    def manifests(vs: Seq[Long]): Seq[(String, Long)] =
+      vs.flatMap(v => layoutAt(table, versionDirNameOf(table, v)).rows)
+    val survivingFiles =
+      manifests(retained.filter(_ >= plainFloor)).map(_._1).toSet
     val rows = consumers.map { case (c, cur) =>
       val protVs = retained.filter(v => v >= cur && v < plainFloor)
-      val bytes = manifests(protVs) match {
-        case None => 0L
-        case Some(p) =>
-          val uniq = survivingFiles match {
-            case Some(s) => p.distinct.filterNot(r => s.contains(r._1))
-            case None => p.distinct
-          }
-          uniq.map(_._2).sum
-      }
+      val bytes = manifests(protVs).distinct
+        .filterNot(r => survivingFiles.contains(r._1)).map(_._2).sum
       (c, cur, head, head - cur, protVs.size.toLong, bytes,
         groupOfConsumer(c).orNull)
     }

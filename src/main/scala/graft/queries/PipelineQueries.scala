@@ -6601,7 +6601,7 @@ object PipelineQueries {
         s"st17: fold modes ($m1,$m2,$m3,$m4) — a true means a rebase; " +
           "the registered cursor must have kept every span answerable")
       // the in-loop policy bounded the writer's file debt
-      val maxFiles = store.fileManifest(s, "corpus").get
+      val maxFiles = store.fileManifest(s, "corpus")
         .selectExpr("regexp_extract(file, '__kb=(\\\\d+)/', 1) AS b")
         .filter(col("b") =!= "").groupBy("b").count()
         .agg(max("count")).head.getLong(0)

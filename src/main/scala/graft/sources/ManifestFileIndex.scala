@@ -147,25 +147,6 @@ final class ManifestFileIndex(rootDir: String,
 }
 
 object ManifestFileIndex {
-  /** A DataFrame scanning exactly `files` (relative to `rootDir`)
-    * under `schema` — the manifest-fed replacement for
-    * `spark.read.schema(s).parquet(paths: _*)`. Columns absent from
-    * a leaf file (evolved columns) read null, identical to the
-    * explicit-path read's semantics. */
-  def frame(spark: SparkSession, rootDir: String, schema: StructType,
-      files: Seq[(String, Long)]): DataFrame = {
-    // baseRelationToDataFrame lives on the classic session (the only
-    // runtime implementation in a local/yarn driver)
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.baseRelationToDataFrame(HadoopFsRelation(
-      new ManifestFileIndex(rootDir, files),
-      partitionSchema = new StructType(),
-      dataSchema = schema,
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat,
-      options = Map.empty)(classic))
-  }
-
   /** The manifest-fed read of a STORE VERSION under its canonical
     * `schema`: when the layout is bucket-partitioned (every rel path
     * under a `<bucketCol>=N/` dir and the schema carries the column),

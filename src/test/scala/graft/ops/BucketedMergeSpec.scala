@@ -19,7 +19,7 @@ class BucketedMergeSpec extends SparkSpec {
 
   private def liveDir(root: String, table: String): Path = {
     val p = new String(Files.readAllBytes(Paths.get(root, table, "_CURRENT"))).trim
-    Paths.get(root, table, if (p.startsWith("v=")) p else s"v=$p")
+    Paths.get(root, table, p)
   }
 
   /** Data files (`__kb=N/part-….parquet`) of a version dir → inode. */

@@ -20,16 +20,11 @@ class ParquetTableStoreSpec extends SparkSpec {
         Files.getAttribute(p, "unix:ino").asInstanceOf[Long])
       .toMap
 
-  /** Version K's dir (`v=K-<writer suffix>` since the optimistic-
-    * concurrency layout; bare `v=K` accepted for compat). */
+  /** Version K's dir (`v=K-<writer suffix>`). */
   private def verDir(root: String, table: String, v: Long): Path =
     Files.list(Paths.get(root, table)).iterator().asScala
-      .filter { p =>
-        val n = p.getFileName.toString
-        n == s"v=$v" || n.startsWith(s"v=$v-")
-      }
-      .toSeq.headOption
-      .getOrElse(Paths.get(root, table, s"v=$v")) // absent → old name
+      .filter(_.getFileName.toString.startsWith(s"v=$v-"))
+      .toSeq.head
 
   test("commit/read round-trip and version bump") {
     import spark.implicits._
@@ -530,7 +525,7 @@ class ParquetTableStoreSpec extends SparkSpec {
         .map(p => verDir(root, table, v).relativize(p).toString ->
           Files.size(p)).toMap
     def manifested(store: ParquetTableStore, table: String): Map[String, Long] =
-      store.fileManifest(spark, table).get.collect()
+      store.fileManifest(spark, table).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
     def check(store: ParquetTableStore, root: String, table: String): Unit = {
       val v = store.currentVersion(table).get
@@ -594,7 +589,7 @@ class ParquetTableStoreSpec extends SparkSpec {
         rel.startsWith(d + "/") && !before.get(rel).contains(ino) } }
     assert(rewritten.size <= 2, rewritten)
     // the manifest stayed == the tree
-    val m = store.fileManifest(spark, "t").get.collect()
+    val m = store.fileManifest(spark, "t").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(m.keySet == after.keySet)
     // idempotent re-delete (absent keys): a version no-op? no — it
@@ -637,7 +632,7 @@ class ParquetTableStoreSpec extends SparkSpec {
         rel.startsWith(d + "/") && !before.get(rel).contains(ino) } }
     assert(rewritten.size <= 2, rewritten)
     // manifest stayed == the tree
-    val m = store.fileManifest(spark, "t").get.collect()
+    val m = store.fileManifest(spark, "t").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(m.keySet == after.keySet)
     // SQL semantics: NULL-predicate rows survive an equality delete
@@ -671,7 +666,7 @@ class ParquetTableStoreSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     def maxFilesPerBucket(store: ParquetTableStore): Int =
-      store.fileManifest(spark, "t").get
+      store.fileManifest(spark, "t")
         .selectExpr("regexp_extract(file, '__kb=(\\\\d+)/', 1) AS b")
         .filter(col("b") =!= "").groupBy("b").count()
         .agg(org.apache.spark.sql.functions.max("count")).head
@@ -1069,7 +1064,7 @@ class ParquetTableStoreSpec extends SparkSpec {
     assert(bytes > 0L, "protected window holds rewritten-away files")
     // the unique-files claim: protected bytes < the windows' total
     // (hard-linked survivors excluded), not a naive manifest sum
-    val total = store.fileManifest(spark, "t").get
+    val total = store.fileManifest(spark, "t")
       .agg(org.apache.spark.sql.functions.sum("bytes")).head.getLong(0)
     assert(bytes < total, s"bytes=$bytes should exclude linked survivors")
     // advancing the cursor releases the debt at the next publish

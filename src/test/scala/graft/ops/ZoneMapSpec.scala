@@ -19,8 +19,7 @@ class ZoneMapSpec extends SparkSpec {
   private def versionDir(root: String, table: String): String = {
     val p = new String(Files.readAllBytes(
       Paths.get(root, table, "_CURRENT"))).trim
-    val dir = if (p.startsWith("v=")) p else s"v=$p"
-    Paths.get(root, table, dir).toString
+    Paths.get(root, table, p).toString
   }
 
   /** Ground truth: per-file min/max recomputed from the files
